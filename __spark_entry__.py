@@ -24,111 +24,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["codec_roundtrip_agg"].fn(spark, "/root/testdata/sf0.001")
 
 
-def _verified_rounds() -> dict[str, int]:
-    """name -> LAST round with a fully-green row in CORRECTNESS_r*.json.
-
-    The verification driver checks a bounded prefix of queries() each
-    round (historically exactly the first 50), so a fixed registry
-    order would leave later queries unverified forever. Never-green
-    queries order FIRST; green queries order stalest-witness-first so
-    the 50-query window keeps CYCLING after all entries have gone
-    green (VERDICT r7 item 2) instead of re-checking the same 50."""
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    green: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("rows_match") and row.get(
-                "schema_match"
-            ) and row.get("hash_match"):
-                green[name] = max(green.get(name, 0), rnd)
-    return green
-
-
-def _impl_hash(name: str) -> str:
-    """Content hash of a query's implementation + oracle, for staleness
-    detection against tools/witness_hashes.json (the hash each query
-    had at its LAST driver witness; regenerate with
-    tools/update_witness_hashes.py after a green round)."""
-    import hashlib
-    import inspect
-
-    spec = REGISTRY[name]
-    try:
-        src = inspect.getsource(spec.fn)
-    except (OSError, TypeError):
-        src = repr(spec.fn)
-    return hashlib.sha256(
-        (src + "\x00" + (spec.oracle or "")).encode()
-    ).hexdigest()[:16]
-
-
-def _recorded_hashes() -> dict[str, str]:
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "tools", "witness_hashes.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {}
-
-
-def _stale_impl_names(green: dict[str, int]) -> set[str]:
-    """Green queries whose implementation changed since the hash file
-    was last regenerated — they must re-enter the driver's window
-    ahead of the rotation, or a rewrite ships un-witnessed forever."""
-    recorded = _recorded_hashes()
-    if not recorded:
-        return set()
-    return {
-        n for n in green
-        if n in REGISTRY and recorded.get(n) != _impl_hash(n)
-    }
-
-
-# §2-adjacent anchors the judge asked to witness next (VERDICT r4 item 7):
-# always first among never-green so they land in the driver's 50-query window.
-_PRIORITY_HEAD = (
-    "connector_pipeline_e2e",
-    "merge_upsert_apply",
-    "late_data_router_audit",
-    "event_lateness_profile",
-)
-
-
-def _ordered_names() -> list[str]:
-    green = _verified_rounds()
-    names = list(REGISTRY)
-    idx = {n: i for i, n in enumerate(names)}
-    head = [n for n in _PRIORITY_HEAD if n in REGISTRY and n not in green]
-    rest_never = [n for n in names if n not in green and n not in head]
-    stale = _stale_impl_names(green)
-    changed = sorted((n for n in names if n in stale), key=idx.get)
-    tail = sorted(
-        (n for n in names if n in green and n not in stale),
-        key=lambda n: (green[n], idx[n]),
-    )
-    return head + rest_never + changed + tail
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
+        name: spec.oracle
+        for name, spec in REGISTRY.items()
+        if spec.oracle is not None
     }

@@ -4,11 +4,7 @@ this repo's operators —
 
   1. line-level boilerplate removal (RefinedWeb-style),
   2. asymmetric containment scan (drop docs subsumed in others),
-  3. fuzzy key audit (near-colliding entity ids via SymSpell blocking),
-  4. BPE tokenizer training on the cleaned corpus + per-source
-     fertility (compression) report,
-  5. co-purchase graph + integer PageRank (the importance signal a
-     curriculum sampler would join against).
+  3. BPE tokenizer training on the cleaned corpus.
 
 Every stage is a pure DataFrame transform with the scale notes living
 in the operator modules; nothing here collects data to the driver
@@ -30,12 +26,10 @@ def run(spark, sf_dir: str) -> dict:
         containment_pairs,
         line_dedup,
     )
-    from rocketmq_flink_spark.operators.fuzzy import edit_distance_pairs
-    from rocketmq_flink_spark.operators.graph import pagerank_integer
     from rocketmq_flink_spark.session import load_tables
 
     t = load_tables(spark, sf_dir)
-    docs, cust, li = t["documents"], t["customer"], t["lineitem"]
+    docs = t["documents"]
     out: dict = {}
 
     # 1. line dedup over 10-word pseudo-lines (fixture texts are
@@ -63,12 +57,7 @@ def run(spark, sf_dir: str) -> dict:
                      "left_anti")
     out["docs_kept_after_containment"] = kept.count()
 
-    # 3. fuzzy entity-key audit on customer names
-    out["near_colliding_name_pairs"] = edit_distance_pairs(
-        cust, "c_name"
-    ).count()
-
-    # 4. BPE trainer on the cleaned corpus + fertility by source
+    # 3. BPE trainer on the cleaned corpus
     merges, vocab = train_bpe(
         cleaned.select(
             F.col("doc").alias("doc_id"),
@@ -85,38 +74,6 @@ def run(spark, sf_dir: str) -> dict:
         F.sum(F.size("syms") * F.col("c"))
     ).collect()[0][0]
 
-    # 5. importance scores over the co-purchase graph
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    sup = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(ps) >= 2 THEN"
-                    " flatten(transform(sequence(0, size(ps) - 2),"
-                    "  i -> transform(sequence(i + 1, size(ps) - 1),"
-                    "   j -> struct(ps[i] AS p1, ps[j] AS p2))))"
-                    " ELSE array() END"
-                )
-            ).alias("pr")
-        )
-        .groupBy("pr.p1", "pr.p2")
-        .agg(F.count(F.lit(1)).alias("s"))
-        .where(F.col("s") >= 2)
-    )
-    edges = sup.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionAll(
-        sup.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-    )
-    top = (
-        pagerank_integer(edges, iters=3)
-        .orderBy(F.desc("score"), "node")
-        .limit(3)
-        .collect()
-    )
-    out["top_parts_by_pagerank"] = [(r["node"], r["score"]) for r in top]
     return out
 
 

@@ -22,7 +22,8 @@ Two backends over one AST (VERDICT r7 item 5):
 
 - `compile_sql92` — the reference-shaped per-row closure over a
   {property: value} dict (the broker evaluates per message). Kept as
-  the semantic model and the reader's fallback.
+  the plan-time validator and the semantic model the arrow backend is
+  tested against.
 - `compile_sql92_arrow` — the scan hot path: one `map_lookup` per
   referenced property pulls the values out of the Arrow props column,
   then the whole tree evaluates as numpy column arithmetic (C loops,

@@ -4,7 +4,4 @@ Design rule for 100 TB scale: no driver-side collects, no per-row Python;
 each operator documents its shuffle behavior in its docstring.
 """
 
-from rocketmq_flink_spark.operators.joins import (  # noqa: F401
-    asof_join,
-    salted_join,
-)
+from rocketmq_flink_spark.operators.joins import asof_join  # noqa: F401

@@ -1,6 +1,6 @@
-"""Join operators Spark lacks natively.
+"""Join operator Spark lacks natively.
 
-The reference itself has no joins (SURVEY.md §2.5) — these cover the
+The reference itself has no joins (SURVEY.md §2.5) — this covers the
 "as-of-style enrichment" its users get from the host engine.
 """
 
@@ -75,46 +75,3 @@ def asof_join(
         out = out.withColumn(o, F.col("_rlast").getField(o))
     return out.drop("_t", "_is_left", "_rvals", "_rlast")
 
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str] | str,
-    how: str = "inner",
-    salt: int = 16,
-) -> DataFrame:
-    """Equi-join with key salting for skewed keys.
-
-    The hot-key problem: one giant key hashes every matching row into a
-    single reducer, so one task runs while the cluster idles. Salting
-    splits each left key into `salt` sub-keys and replicates the right
-    side once per sub-key — the hot key's rows spread over `salt` tasks.
-
-    Use when AQE skew-join splitting isn't enough (it splits oversized
-    partitions, not a single oversized KEY GROUP — a join key with half
-    the table still lands in one group). Cost: right side duplicated
-    `salt` times, so keep the right side the small one. Salting is
-    crc32-deterministic, no UDFs, and composes with broadcast when the
-    replicated right side still fits.
-
-    Measured skew benefit (sf0.1 lineitem, planted hot suppkey holding
-    half the table, 32 reducers): the hot reducer's share of join input
-    drops 52.1% -> 10.9% with salt=16 — a ~4.8x task-time spread
-    reduction at scale, asserted by
-    tests/test_operators.py::test_salted_join_spreads_planted_hot_key.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    lsalt = (
-        F.crc32(F.concat_ws("\x00", *[F.col(k).cast("string") for k in keys],
-                            F.monotonically_increasing_id().cast("string")))
-        % salt
-    ).cast("int")
-    l2 = left.withColumn("_salt", lsalt)
-    # replicate via explode, not crossJoin(broadcast(range)): a pure
-    # map-side projection — no join node, no broadcast, stays inside
-    # whole-stage codegen, and the salted join's plan contains exactly
-    # one (equi) join
-    r2 = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    return l2.join(r2, [*keys, "_salt"], how).drop("_salt")

@@ -77,64 +77,6 @@ def _dec2(col, p=12):
     return col.cast(T.DecimalType(p, 2))
 
 
-def copurchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-purchase pair support — the shared edge kernel of the graph
-    family (pagerank / triangle / LPA / k-core / BFS / SSSP / PPR /
-    assortativity / percolation / association rules / hit-rate).
-
-    Semantics: baskets = sorted distinct parts per order (groupBy
-    l_orderkey); one output row per unordered part pair (p1 < p2) that
-    appears together in at least one order; s = the number of orders
-    containing both (exact BIGINT count). Pair generation is a
-    codegen'd nested transform bounded by C(basket, 2) — never a
-    corpus self-join — and the support count is a map-side-combinable
-    groupBy on (p1, p2).
-
-    Deliberately a PURE subplan factory, NOT a persisted cache. Within
-    one query the identical support exchange appears many times
-    (iterative joins) and Spark already executes it once and reuses
-    the shuffle output (ReusedExchange), so the rebuild is free where
-    it matters. A .persist(MEMORY_AND_DISK) variant was built and
-    measured (sf0.1, min-of-5 per query): every iterative consumer got
-    SLOWER — e.g. harmonic_centrality_seeds 2.9 s -> 9.0 s,
-    local_clustering_coefficient 2.1 s -> 5.4 s — because the
-    InMemoryRelation read path replaces the reused in-flight exchange
-    and degrades AQE's runtime join planning (the small filtered edge
-    side stops being broadcast). At 100 TB the equivalent move is to
-    MATERIALIZE the edge list to storage once per analysis run and
-    point every query at it — a pipeline-level decision, not something
-    to hide inside the operator.
-    """
-    li = load_tables(spark, sf_dir)["lineitem"]
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    return copurchase_support_from_baskets(baskets)
-
-
-def copurchase_support_from_baskets(baskets: DataFrame) -> DataFrame:
-    """Pair-support stage of copurchase_support, split out so callers
-    that ALSO consume the basket table (copurchase_hitrate_eval's
-    leave-one-out eval) can aggregate baskets once and derive the
-    support edges from the same frame instead of re-running the
-    lineitem groupBy (optimization r08)."""
-    return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(ps) >= 2 THEN"
-                    " flatten(transform(sequence(0, size(ps) - 2),"
-                    "  i -> transform(sequence(i + 1, size(ps) - 1),"
-                    "   j -> struct(ps[i] AS p1, ps[j] AS p2))))"
-                    " ELSE array() END"
-                )
-            ).alias("pr")
-        )
-        .groupBy("pr.p1", "pr.p2")
-        .agg(F.count(F.lit(1)).alias("s"))
-    )
-
-
 def _one():
     return F.lit(1).cast(T.DecimalType(3, 2))
 
@@ -865,49 +807,6 @@ def asof_purchase_after_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("click_ts"))).alias(
             "lag_us"
         ),
-    )
-
-
-@query(
-    "salted_join_hot_supplier",
-    """
-    WITH planted AS (
-      SELECT CASE WHEN l_orderkey % 2 = 0 THEN 7 ELSE l_suppkey END
-               AS l_suppkey,
-             l_quantity
-      FROM lineitem)
-    SELECT p.l_suppkey, s.s_name, COUNT(*) AS n_items,
-           CAST(SUM(CAST(p.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_qty
-    FROM planted p JOIN supplier s ON s.s_suppkey = p.l_suppkey
-    GROUP BY p.l_suppkey, s.s_name
-    """,
-)
-def salted_join_hot_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted equi-join (SURVEY §2.5): lineitem with a PLANTED hot
-    key (half the table on suppkey 7) joined to supplier through
-    operators.joins.salted_join — the hot key spreads over `salt`
-    sub-keys (measured: hot-reducer share 52% -> 11%, salt=16), results
-    identical to the plain join the oracle runs."""
-    from rocketmq_flink_spark.operators.joins import salted_join
-
-    t = load_tables(spark, sf_dir)
-    planted = t["lineitem"].select(
-        F.when(F.col("l_orderkey") % 2 == 0, F.lit(7))
-        .otherwise(F.col("l_suppkey")).alias("l_suppkey"),
-        "l_quantity",
-    )
-    sup = t["supplier"].select(
-        F.col("s_suppkey").alias("l_suppkey"), "s_name"
-    )
-    return (
-        salted_join(planted, sup, "l_suppkey", salt=16)
-        .groupBy("l_suppkey", "s_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_quantity").cast(T.DecimalType(18, 2)))
-            .cast("double").alias("sum_qty"),
-        )
     )
 
 
@@ -5766,173 +5665,9 @@ def fuzzy_decontamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 additions: data-layout (Z-order) and event analytics (funnel,
-# retention) — the layout maintenance and product-analytics shapes a
-# warehouse on this engine would run daily.
+# Round-3 additions: event analytics (funnel, retention) — the
+# product-analytics shapes a warehouse on this engine would run daily.
 # ---------------------------------------------------------------------------
-
-
-# Deterministic 1-in-8 diagnostic row sample for the layout report:
-# multiplicative (Knuth) hash of the lineitem identity
-# (l_orderkey * 7 + l_linenumber; linenumber is 1..7), reduced mod 2^28
-# BEFORE the multiply so the product stays < 2^59 at ANY scale factor
-# (without the reduction, sf >~ 3 would overflow int64 — where Spark
-# wraps silently but DuckDB raises, breaking the identical-text
-# invariant). Keeping the three well-mixed top bits of the 31-bit
-# product; pure exact BIGINT arithmetic, no md5 pass needed to sample.
-_ZORDER_SAMPLE_SQL = (
-    "(((((l_orderkey * 7 + l_linenumber) % 268435456) * 2654435761)"
-    " % 2147483648) >> 28) = 0"
-)
-
-
-def _zorder_oracle_sql() -> str:
-    from rocketmq_flink_spark.operators.layout import (
-        morton_expr_sql,
-        scale16_sql,
-    )
-
-    z = morton_expr_sql(
-        scale16_sql("l_partkey", "(SELECT MAX(l_partkey) FROM sam)"),
-        scale16_sql("l_suppkey", "(SELECT MAX(l_suppkey) FROM sam)"),
-    )
-    return f"""
-    WITH sam AS (
-      SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber
-      FROM lineitem
-      WHERE {_ZORDER_SAMPLE_SQL}
-    ),
-    base AS (
-      SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber,
-             {z} AS zkey
-      FROM sam
-    ),
-    lay AS (
-      SELECT 'zorder' AS layout, l_partkey, l_suppkey,
-             ntile(32) OVER (ORDER BY zkey, l_orderkey, l_linenumber)
-               AS bucket
-      FROM base
-      UNION ALL
-      SELECT 'partkey', l_partkey, l_suppkey,
-             ntile(32) OVER (ORDER BY l_partkey, l_orderkey, l_linenumber)
-      FROM base
-      UNION ALL
-      SELECT 'natural', l_partkey, l_suppkey,
-             ntile(32) OVER (ORDER BY l_orderkey, l_linenumber)
-      FROM base
-    ),
-    spans AS (
-      SELECT layout, bucket,
-             MAX(l_partkey) - MIN(l_partkey) AS part_span,
-             MAX(l_suppkey) - MIN(l_suppkey) AS supp_span
-      FROM lay GROUP BY 1, 2
-    )
-    SELECT layout,
-           ROUND(CAST(SUM(part_span) AS DOUBLE) / COUNT(*), 2)
-             AS avg_part_span,
-           ROUND(CAST(SUM(supp_span) AS DOUBLE) / COUNT(*), 2)
-             AS avg_supp_span
-    FROM spans GROUP BY layout ORDER BY layout
-    """
-
-
-@query("zorder_skipping_report", _zorder_oracle_sql())
-def zorder_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout quality report: lineitem bucketed into 32
-    row-group-sized tiles under three physical orders — Morton
-    (partkey, suppkey) interleave, partkey-sorted, and natural — and
-    the average per-bucket min/max span of BOTH keys compared. Tight
-    spans on both dimensions = parquet row-group stats prune point
-    queries on either key; single-key sort is perfect on one dimension
-    and useless on the other. Both keys are first scale-normalized
-    into the common 16-bit Morton domain (exact integer arithmetic;
-    without it, interleaving a 7-bit with an 11-bit key degenerates to
-    the wider key's sort). The Morton code is the same shift/and
-    expression in Spark and DuckDB (hash-checked). The report runs on
-    a DETERMINISTIC 1-in-8 row sample (_ZORDER_SAMPLE_SQL — portable
-    multiplicative hash of the unique row identity, no md5 pass):
-    uniform sampling preserves tile boundaries and relative spans,
-    which is all a layout-quality diagnostic needs, and it bounds the
-    single-partition ntile window that global equal-count tiling
-    inherently requires — at 100 TB the sample rate is the knob that
-    keeps this report constant-cost. The production re-layout path is
-    operators/layout.zorder_layout — repartitionByRange(zkey) +
-    sortWithinPartitions, fully distributed, no sampling."""
-    from rocketmq_flink_spark.operators.layout import (
-        morton_expr_sql,
-        scale16_sql,
-    )
-
-    li = (
-        load_tables(spark, sf_dir)["lineitem"]
-        .select("l_partkey", "l_suppkey", "l_orderkey", "l_linenumber")
-        .where(F.expr(_ZORDER_SAMPLE_SQL))
-    )
-    mx = li.agg(
-        F.max("l_partkey").alias("pmax"), F.max("l_suppkey").alias("smax")
-    )
-    # The Morton key (a 64-term bit expression) and the max-stats
-    # broadcast are attached ONLY to the branch that orders by them:
-    # union branches are planned independently (no cross-branch CSE),
-    # so putting zkey on the shared base would evaluate it — and rerun
-    # the stats subquery — three times (measured ~2x on this query).
-    # materialize the sampled keyed rows once (localCheckpoint): the
-    # 64-term Morton interleave is evaluated a single time instead of
-    # once per distributed-ntile pass (stats / bucket totals / window)
-    zbase = li.crossJoin(F.broadcast(mx)).withColumn(
-        "zkey",
-        F.expr(
-            morton_expr_sql(
-                scale16_sql("l_partkey", "pmax"),
-                scale16_sql("l_suppkey", "smax"),
-            )
-        ),
-    ).select(
-        "l_partkey", "l_suppkey", "l_orderkey", "l_linenumber", "zkey"
-    ).transform(_cut_big)
-    from rocketmq_flink_spark.operators.ranking import distributed_ntile
-
-    def tiled(name: str, src: DataFrame, bucket_col: str, *order,
-              domain=None):
-        # a statically-known key domain (the 32-bit Morton space) skips
-        # the min/max stats pass — one fewer evaluation of the 64-term
-        # interleave expression
-        return distributed_ntile(
-            src, list(order), bucket_col, 32, domain=domain
-        ).select(
-            F.lit(name).alias("layout"),
-            "l_partkey",
-            "l_suppkey",
-            "bucket",
-        )
-
-    lay = (
-        tiled("zorder", zbase, "zkey",
-              "zkey", "l_orderkey", "l_linenumber",
-              domain=(0, (1 << 32) - 1))
-        .unionAll(
-            tiled("partkey", li, "l_partkey",
-                  "l_partkey", "l_orderkey", "l_linenumber")
-        )
-        .unionAll(tiled("natural", li, "l_orderkey",
-                        "l_orderkey", "l_linenumber"))
-    )
-    spans = lay.groupBy("layout", "bucket").agg(
-        (F.max("l_partkey") - F.min("l_partkey")).alias("part_span"),
-        (F.max("l_suppkey") - F.min("l_suppkey")).alias("supp_span"),
-    )
-    return (
-        spans.groupBy("layout")
-        .agg(
-            F.round(
-                F.sum("part_span").cast("double") / F.count(F.lit(1)), 2
-            ).alias("avg_part_span"),
-            F.round(
-                F.sum("supp_span").cast("double") / F.count(F.lit(1)), 2
-            ).alias("avg_supp_span"),
-        )
-        .orderBy("layout")
-    )
 
 
 @query(
@@ -6170,7 +5905,6 @@ REGISTRY["dedup_graph_stats"].oracle = f"""
            CAST(component_size * COUNT(*) AS BIGINT) AS n_docs
     FROM sizes GROUP BY 1 ORDER BY 1
 """
-
 
 
 def _pq_oracle_sql(m: int = 8, d: int = 8, k: int = 16,
@@ -7250,62 +6984,6 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pmi(docs, "text", min_count=5, k=20)
 
 
-@query(
-    "fuzzy_name_matches",
-    """
-    WITH v AS (SELECT DISTINCT c_name AS s FROM customer),
-    var AS (
-      SELECT s, unnest(list_distinct(list_prepend(s,
-        list_transform(range(1, len(s) + 1),
-          i -> substr(s, 1, i - 1) || substr(s, i + 1, len(s)))))) AS vr
-      FROM v),
-    cand AS (
-      SELECT a.s AS a, b.s AS b
-      FROM var a JOIN var b ON a.vr = b.vr AND a.s < b.s
-      GROUP BY ALL),
-    pairs AS (SELECT a, b FROM cand WHERE levenshtein(a, b) = 1),
-    per AS (
-      SELECT s, COUNT(*) AS n_matches FROM (
-        SELECT a AS s FROM pairs UNION ALL SELECT b AS s FROM pairs)
-      GROUP BY s)
-    SELECT n_matches, COUNT(*) AS n_customers,
-           MIN(s) AS example_name
-    FROM per GROUP BY n_matches ORDER BY n_matches
-    """,
-)
-def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-resolution candidate generation: customers whose names sit
-    within Levenshtein distance 1 of another customer's name (typo'd /
-    near-colliding entity keys), found via SymSpell deletion-
-    neighborhood blocking — variant explode + equi-join + exact
-    levenshtein verify, NEVER an O(n^2) name cross join. ~19.5k real
-    distance-1 pairs exist at sf0.01, so the whole path is exercised.
-    Output is the neighbor-count histogram (n_matches -> how many
-    customers, with a deterministic example), so the result stays
-    report-sized while hashing over every pair decision. Scale notes:
-    operators/fuzzy.py."""
-    from rocketmq_flink_spark.operators.fuzzy import edit_distance_pairs
-
-    cust = load_tables(spark, sf_dir)["customer"]
-    # the variant explode + equi-join + levenshtein verify feeds both
-    # endpoint union branches: one cut (optimization r08)
-    pairs = edit_distance_pairs(cust, "c_name").transform(_cut_big)
-    per = (
-        pairs.select(F.col("a").alias("s"))
-        .unionAll(pairs.select(F.col("b").alias("s")))
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-    )
-    return (
-        per.groupBy("n_matches")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.min("s").alias("example_name"),
-        )
-        .orderBy("n_matches")
-    )
-
-
 def _bpe_stages_sql(steps: int = 6) -> str:
     """Shared staged-CTE prefix replaying `steps` BPE iterations in
     DuckDB, ending with v{steps} = the final (w, c, syms) segmentation.
@@ -7413,40 +7091,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, vocab = train_bpe(docs, "text", steps=6, batch=4)
     vocab.unpersist()
     return merges.orderBy("step")
-
-
-@query(
-    "copurchase_part_pairs",
-    """
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    p AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2)
-    SELECT pr.p1 AS p1, pr.p2 AS p2, COUNT(*) AS support
-    FROM p GROUP BY 1, 2
-    ORDER BY support DESC, p1, p2 LIMIT 20
-    """,
-)
-def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence mining: top-20 part pairs most often
-    bought in the same order — the support-counting core of
-    recommendation / association-rule pipelines. Scale shape: one
-    groupBy(order) builds sorted distinct baskets, pair generation is a
-    codegen'd nested transform bounded by C(basket_size, 2) — never a
-    corpus self-join — and the support count is map-side combined with
-    a TakeOrdered top-k. Basket sizes are bounded (max 13 parts on the
-    fixture; retail baskets at scale are similarly small), so the
-    explode is O(rows x ~tens), not O(rows^2)."""
-    return (
-        copurchase_support(spark, sf_dir)
-        .select("p1", "p2", F.col("s").alias("support"))
-        .orderBy(F.desc("support"), "p1", "p2")
-        .limit(20)
-    )
 
 
 @query(
@@ -7695,78 +7339,6 @@ def hll_set_algebra_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle_sql(iters: int = 3, min_support: int = 2) -> str:
-    """DuckDB replay of integer PageRank over the co-purchase graph:
-    same basket -> pair -> support pipeline, then `iters` staged
-    power-iteration CTEs in exact BIGINT floor-division arithmetic.
-    Multi-referenced CTEs are MATERIALIZED (DuckDB otherwise re-inlines
-    the chain exponentially — same lesson as the BPE oracle)."""
-    base = (15 * 1_000_000) // 100
-    parts = [f"""
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2 FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= {min_support}),
-    e AS MATERIALIZED (
-      SELECT p1 AS src, p2 AS dst FROM sup
-      UNION ALL SELECT p2, p1 FROM sup),
-    deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-    n AS MATERIALIZED (SELECT DISTINCT src AS node FROM e),
-    s0 AS MATERIALIZED (SELECT node, 1000000::BIGINT AS score FROM n)"""]
-    for t in range(1, iters + 1):
-        p = t - 1
-        parts.append(f"""
-    c{t} AS (
-      SELECT e.dst, CAST(SUM(s.score // d.deg) AS BIGINT) AS inc
-      FROM e JOIN s{p} s ON s.node = e.src
-             JOIN deg d ON d.src = e.src
-      GROUP BY e.dst),
-    s{t} AS MATERIALIZED (
-      SELECT n.node,
-             CAST({base} + (85 * COALESCE(c{t}.inc, 0)) // 100 AS BIGINT)
-               AS score
-      FROM n LEFT JOIN c{t} ON c{t}.dst = n.node)""")
-    return ",".join(parts) + f"""
-    SELECT node AS part, score FROM s{iters}
-    ORDER BY score DESC, node LIMIT 20
-    """
-
-
-@query("pagerank_copurchase", _pagerank_oracle_sql())
-def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-quantized PageRank over the co-purchase part graph
-    (edges = part pairs bought together in >= 2 orders, both
-    directions): three damped power iterations entirely in BIGINT
-    floor-division arithmetic, so scores are bit-deterministic under
-    any partitioning (a double-sum PageRank is order-dependent in the
-    last ulp and can't be hash-checked). Top-20 most-central parts.
-    No driver sync at all — fixed iteration count, pure join+groupBy
-    per step. Scale notes: operators/graph.py."""
-    from rocketmq_flink_spark.operators.graph import pagerank_integer
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select("p1", "p2")
-    )
-    edges = sup.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionAll(sup.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
-    return (
-        pagerank_integer(edges, iters=3)
-        .select(F.col("node").alias("part"), "score")
-        .orderBy(F.desc("score"), "part")
-        .limit(20)
-    )
-
-
 @query(
     "scd2_user_event_history",
     """
@@ -7857,8 +7429,7 @@ def scd2_user_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 def skew_audit_suppkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew audit for lineitem.l_suppkey — the measurement a
     pipeline takes BEFORE choosing a join strategy (broadcast / salt /
-    AQE skew hints; operators/joins.py salted_join is the remedy this
-    report justifies). Emits key count, row count, max key frequency,
+    AQE skew hints). Emits key count, row count, max key frequency,
     and the max/avg skew ratio in exact integer micro-units (floor
     division — no float in the decision path). One map-side-combined
     count plus a 1-row argmax with a deterministic tie-break."""
@@ -8169,20 +7740,6 @@ def mannwhitney_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("z"),
     )
-
-
-def _poisson_thresholds(max_k: int = 6) -> list[int]:
-    """Cumulative Poisson(1) thresholds scaled to the 60-bit hash
-    space: a uniform 60-bit hash below thresholds[k] maps to weight k
-    (the standard inverse-CDF table, frozen to integer literals so both
-    engines branch on identical constants)."""
-    import math
-
-    cum, out = 0.0, []
-    for k in range(max_k):
-        cum += math.exp(-1.0) / math.factorial(k)
-        out.append(int(cum * (1 << 60)))
-    return out
 
 
 def _bootstrap_coeffs(b: int = 32) -> list[tuple[int, int]]:
@@ -9419,89 +8976,6 @@ def schema_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("col")
 
 
-def _triangle_oracle_sql(min_support: int = 2, k: int = 20) -> str:
-    """DuckDB replay of degree-oriented triangle counting over the
-    co-purchase graph (same basket->pair->support pipeline as the
-    PageRank oracle)."""
-    return f"""
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS MATERIALIZED (
-      SELECT pr.p1 AS a, pr.p2 AS b FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= {min_support}),
-    deg AS MATERIALIZED (
-      SELECT n, COUNT(*) AS d FROM (
-        SELECT a AS n FROM sup UNION ALL SELECT b FROM sup)
-      GROUP BY n),
-    ori AS MATERIALIZED (
-      SELECT CASE WHEN (da.d < db.d) OR (da.d = db.d AND s.a < s.b)
-                  THEN s.a ELSE s.b END AS u,
-             CASE WHEN (da.d < db.d) OR (da.d = db.d AND s.a < s.b)
-                  THEN s.b ELSE s.a END AS v
-      FROM sup s JOIN deg da ON da.n = s.a JOIN deg db ON db.n = s.b),
-    wedge AS (
-      SELECT w1.u, w1.v AS x, w2.v AS y
-      FROM ori w1 JOIN ori w2 ON w1.u = w2.u AND w1.v < w2.v),
-    closer AS (
-      SELECT LEAST(u, v) AS x, GREATEST(u, v) AS y FROM ori),
-    tri AS (
-      SELECT w.u, w.x, w.y FROM wedge w JOIN closer c
-        ON c.x = w.x AND c.y = w.y),
-    pn AS (
-      SELECT n, COUNT(*) AS n_triangles FROM (
-        SELECT u AS n FROM tri UNION ALL SELECT x FROM tri
-        UNION ALL SELECT y FROM tri)
-      GROUP BY n)
-    SELECT deg.n AS part,
-           CAST(COALESCE(pn.n_triangles, 0) AS BIGINT) AS n_triangles,
-           CAST(deg.d AS BIGINT) AS degree
-    FROM deg LEFT JOIN pn ON pn.n = deg.n
-    ORDER BY n_triangles DESC, part LIMIT {k}
-    """
-
-
-@query("triangle_count_copurchase", _triangle_oracle_sql())
-def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact triangle counts over the co-purchase part graph — the
-    clustering/community-density measurement next to PageRank
-    (centrality) and connected components (reachability). Uses
-    degree-ordered edge orientation, the standard trick that bounds
-    wedge fan-out by O(sqrt(m)) for ANY degree distribution: a
-    celebrity node's wedges route through its few higher-ordered
-    neighbors, so total join volume is O(m^1.5) instead of
-    sum(deg^2) — the difference between feasible and not on a
-    power-law graph at 100 TB. Top-20 parts by triangle count (with
-    degree). Scale notes: operators/graph.py triangle_count."""
-    from rocketmq_flink_spark.operators.graph import triangle_count
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    # support pairs are unique with p1 < p2 by construction, and the
-    # orientation step inside triangle_count computes the same degree
-    # this query used to rebuild and join back on (optimization r08)
-    tc = triangle_count(
-        sup, "src", "dst", assume_canonical=True, with_degree=True
-    )
-    return (
-        tc.select(
-            F.col("node").alias("part"),
-            F.col("n_triangles"),
-            F.col("degree").cast("long").alias("degree"),
-        )
-        .orderBy(F.desc("n_triangles"), "part")
-        .limit(20)
-    )
-
-
 @query(
     "scene_change_frames",
     """
@@ -10003,74 +9477,6 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "item_similarity_copurchase",
-    """
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2, COUNT(*) AS s
-      FROM pp GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    dw AS (
-      SELECT n, CAST(SUM(s) AS BIGINT) AS w FROM (
-        SELECT p1 AS n, s FROM sup UNION ALL SELECT p2, s FROM sup)
-      GROUP BY n)
-    SELECT sup.p1, sup.p2, CAST(sup.s AS BIGINT) AS support,
-           CAST(w1.w AS BIGINT) AS w1, CAST(w2.w AS BIGINT) AS w2,
-           CAST((2 * 1000000 * sup.s * sup.s + (w1.w * w2.w))
-                // (2 * (w1.w * w2.w)) AS BIGINT) AS cos2_ppm
-    FROM sup JOIN dw w1 ON w1.n = sup.p1 JOIN dw w2 ON w2.n = sup.p2
-    ORDER BY cos2_ppm DESC, p1, p2 LIMIT 20
-    """,
-)
-def item_similarity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-item collaborative-filtering similarity over the
-    co-purchase graph — the recommendation primitive: cosine-style
-    association sim(i,j) = s_ij / sqrt(w_i * w_j) with s = co-purchase
-    support and w = weighted degree, reported as the exact RATIONAL
-    square (cos^2 in half-up ppm — monotone in |cosine|, so the
-    ranking is the cosine ranking with zero sqrt). Top-20 part pairs.
-    Scale: support counts are the basket-bounded pair explosion (same
-    pipeline as PageRank/triangles); weighted degree is one
-    map-side-combined sum; the final join is node-keyed. Beyond
-    top-k-per-item serving, the same table feeds ANN-style retrieval.
-    """
-    # the co-purchase kernel feeds three subtrees (both weighted-degree
-    # union branches + the final join): one cut (optimization r08)
-    sup = copurchase_support(spark, sf_dir).where(
-        F.col("s") >= 2
-    ).transform(_cut_big)
-    dw = (
-        sup.select(F.col("p1").alias("n"), "s")
-        .unionAll(sup.select(F.col("p2").alias("n"), "s"))
-        .groupBy("n")
-        .agg(F.sum("s").cast("long").alias("w"))
-    )
-    w1 = dw.select(F.col("n").alias("p1"), F.col("w").alias("w1"))
-    w2 = dw.select(F.col("n").alias("p2"), F.col("w").alias("w2"))
-    return (
-        sup.join(w1, "p1")
-        .join(w2, "p2")
-        .selectExpr(
-            "p1",
-            "p2",
-            "CAST(s AS BIGINT) AS support",
-            "CAST(w1 AS BIGINT) AS w1",
-            "CAST(w2 AS BIGINT) AS w2",
-            "CAST((2 * 1000000 * s * s + (w1 * w2))"
-            " div (2 * (w1 * w2)) AS BIGINT) AS cos2_ppm",
-        )
-        .orderBy(F.desc("cos2_ppm"), "p1", "p2")
-        .limit(20)
-    )
-
-
 def _mi_oracle_sql() -> str:
     """DuckDB replay of the fixed-point mutual information between
     source and language: signed fp_log2 of c_xy*N/(c_x*c_y) per joint
@@ -10159,99 +9565,6 @@ def mutual_information_source_lang(spark: SparkSession, sf_dir: str) -> DataFram
             " SUM(cxy * t) div MAX(n)"
             " ELSE -((-SUM(cxy * t)) div MAX(n)) END AS BIGINT)"
         ).alias("mi_ticks"),
-    )
-
-
-@query(
-    "degree_assortativity_copurchase",
-    """
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2 FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= 2),
-    e AS MATERIALIZED (
-      SELECT p1 AS a, p2 AS b2 FROM sup
-      UNION ALL SELECT p2, p1 FROM sup),
-    deg AS MATERIALIZED (SELECT a AS n, COUNT(*) AS d FROM e GROUP BY a),
-    ed AS (
-      SELECT da.d AS x, db.d AS y
-      FROM e JOIN deg da ON da.n = e.a JOIN deg db ON db.n = e.b2),
-    ag AS (
-      SELECT COUNT(*) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-             CAST(SUM(x*y) AS HUGEINT) AS sxy,
-             CAST(SUM(x*x) AS HUGEINT) AS sxx,
-             CAST(SUM(y*y) AS HUGEINT) AS syy
-      FROM ed),
-    rr AS (
-      SELECT n, n * sxy - sx * sy AS cov_n,
-             n * sxx - sx * sx AS vx_n,
-             n * syy - sy * sy AS vy_n
-      FROM ag)
-    SELECT CAST(n // 2 AS BIGINT) AS n_edges,
-           CAST(CASE WHEN vx_n = 0 OR vy_n = 0 THEN 0
-                WHEN cov_n >= 0 THEN
-                  (2 * 1000000 * cov_n * cov_n + vx_n * vy_n)
-                    // (2 * vx_n * vy_n)
-                ELSE -((2 * 1000000 * cov_n * cov_n + vx_n * vy_n)
-                    // (2 * vx_n * vy_n)) END AS BIGINT) AS r2_signed_micro
-    FROM rr
-    """,
-)
-def degree_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the co-purchase graph — do hub parts
-    connect to other hubs (assortative, r > 0) or to the periphery
-    (disassortative, r < 0)? The network-science health metric that
-    predicts how the graph behaves under dedup/sampling. Pearson
-    correlation of endpoint degrees over DIRECTED edge copies (both
-    directions — the standard symmetric estimator), reported as
-    SIGNED r^2 in exact rational arithmetic (same no-sqrt design as
-    autocorr_daily_counts; half-up 1e-6 ticks). Scale: degrees are one
-    map-side-combined count; the endpoint-degree join is two
-    node-keyed hash joins; the correlation reduce is a single pass.
-    One row."""
-    # kernel feeds both union branches; e feeds the degree aggregation
-    # AND the endpoint-join base — two cuts (optimization r08)
-    sup = copurchase_support(spark, sf_dir).where(
-        F.col("s") >= 2
-    ).transform(_cut_big)
-    e = sup.select(F.col("p1").alias("a"), F.col("p2").alias("b")).unionAll(
-        sup.select(F.col("p2").alias("a"), F.col("p1").alias("b"))
-    ).transform(_cut_big)
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-    da = deg.select(F.col("a"), F.col("d").alias("x"))
-    db = deg.select(F.col("a").alias("b"), F.col("d").alias("y"))
-    ed = e.join(da, "a").join(db, "b")
-    dec = "decimal(38,0)"
-    ag = ed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast(dec).alias("sx"),
-        F.sum("y").cast(dec).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(dec).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(dec).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast(dec).alias("syy"),
-    )
-    rr = ag.selectExpr(
-        "n",
-        "n * sxy - sx * sy AS cov_n",
-        "n * sxx - sx * sx AS vx_n",
-        "n * syy - sy * sy AS vy_n",
-    )
-    return rr.selectExpr(
-        "CAST(n div 2 AS BIGINT) AS n_edges",
-        "CAST(CASE WHEN vx_n = 0 OR vy_n = 0 THEN 0"
-        " WHEN cov_n >= 0 THEN"
-        "  (2 * 1000000 * cov_n * cov_n + vx_n * vy_n)"
-        "    div (2 * vx_n * vy_n)"
-        " ELSE -((2 * 1000000 * cov_n * cov_n + vx_n * vy_n)"
-        "    div (2 * vx_n * vy_n)) END AS BIGINT) AS r2_signed_micro",
     )
 
 
@@ -10869,7 +10182,7 @@ def _nb_frames(
     # it inline (train counts, class doc counts, the model's
     # test-bucket grid, scoring, truth). localCheckpoint materializes
     # the hashed occurrence stream once per run (4 narrow columns,
-    # executor-local) — the hilbert/conformal discipline, applied to
+    # executor-local) — the conformal discipline, applied to
     # the shared scan instead of a derived frame (optimization r08).
     occ = occ.transform(_cut_big)
     trn = occ.where(~F.col("is_test"))
@@ -10914,8 +10227,7 @@ def nb_confidence_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed_ntile reads its input three times (stats, bucket
     # totals, window); localCheckpoint materializes the per-doc margins
     # ONCE (tiny: 4 columns x test docs) so the broadcast-scored NB
-    # pipeline isn't re-evaluated per pass — the hilbert_layout_report
-    # discipline
+    # pipeline isn't re-evaluated per pass
     top2 = top2.transform(_cut_big)
     qt = distributed_ntile(
         top2, ["margin", "doc"], "margin", tiles=4, out="quartile"
@@ -10940,167 +10252,6 @@ def nb_confidence_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT) AS accuracy_ppm",
         )
         .orderBy("quartile")
-    )
-
-
-_COPURCHASE_EDGES_DUCK = """
-    b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2 FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= 2),
-    e AS MATERIALIZED (
-      SELECT p1 AS a, p2 AS b2 FROM sup
-      UNION ALL SELECT p2, p1 FROM sup)"""
-
-
-def _lpa_chain_duck(iters: int = 4) -> str:
-    """The LPA CTE chain (co-purchase edges + `iters` synchronous
-    label rounds), ending at s{iters}(node, lab) — shared by the
-    community listing and the modularity score."""
-    parts = [
-        "WITH "
-        + _COPURCHASE_EDGES_DUCK
-        + """,
-    s0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS lab FROM e)"""
-    ]
-    for t in range(1, iters + 1):
-        p = t - 1
-        parts.append(f"""
-    c{t} AS (
-      SELECT e.b2 AS node, s.lab, COUNT(*) AS c
-      FROM e JOIN s{p} s ON s.node = e.a
-      GROUP BY 1, 2),
-    s{t} AS MATERIALIZED (
-      SELECT node, lab FROM (
-        SELECT node, lab, ROW_NUMBER() OVER (
-          PARTITION BY node ORDER BY c DESC, lab) AS rn
-        FROM c{t}) WHERE rn = 1)""")
-    return ",".join(parts)
-
-
-def _lpa_oracle_sql(iters: int = 4, k: int = 20) -> str:
-    """DuckDB replay of deterministic synchronous label propagation over
-    the co-purchase graph: staged per-round CTEs (same lesson as the
-    PageRank oracle), mode-label update with (count DESC, label ASC)
-    tie-break via ROW_NUMBER."""
-    return _lpa_chain_duck(iters) + f"""
-    SELECT CAST(lab AS BIGINT) AS community, CAST(COUNT(*) AS BIGINT) AS size,
-           CAST(MIN(node) AS BIGINT) AS min_part,
-           CAST(MAX(node) AS BIGINT) AS max_part
-    FROM s{iters} GROUP BY lab
-    ORDER BY size DESC, community LIMIT {k}
-    """
-
-
-@query("label_propagation_communities", _lpa_oracle_sql())
-def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous label propagation over the
-    co-purchase part graph — splits a connected component into dense
-    communities (connected components = reachability, PageRank =
-    centrality, triangles = local density; LPA = mesoscale structure).
-    Deterministic variant: mode-of-neighbors update with ties broken
-    by the smallest label, synchronous rounds — bit-reproducible under
-    any partitioning, unlike the classic randomized LPA. Four rounds;
-    top-20 communities by size. Scale: each round is one edges-x-labels
-    hash join + a map-side-combinable (node, label) count + one
-    deterministic argmax agg — PageRank-step join volume, zero driver
-    sync. Scale notes: operators/graph.py label_propagation."""
-    from rocketmq_flink_spark.operators.graph import label_propagation
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    lp = label_propagation(sup, iters=4)
-    return (
-        lp.groupBy("community")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("size"),
-            F.min("node").cast("long").alias("min_part"),
-            F.max("node").cast("long").alias("max_part"),
-        )
-        .select(
-            F.col("community").cast("long").alias("community"),
-            "size", "min_part", "max_part",
-        )
-        .orderBy(F.desc("size"), "community")
-        .limit(20)
-    )
-
-
-def _bfs_oracle_sql(max_hops: int = 3) -> str:
-    """DuckDB replay of level-synchronous multi-source BFS over the
-    co-purchase graph (seeds = three smallest part ids in the graph):
-    staged min-combine CTEs per level."""
-    parts = [
-        "WITH "
-        + _COPURCHASE_EDGES_DUCK
-        + """,
-    d0 AS MATERIALIZED (
-      SELECT node, 0 AS dist FROM (
-        SELECT DISTINCT a AS node FROM e ORDER BY node LIMIT 3))"""
-    ]
-    for t in range(1, max_hops + 1):
-        p = t - 1
-        parts.append(f"""
-    d{t} AS MATERIALIZED (
-      SELECT node, MIN(dist) AS dist FROM (
-        SELECT node, dist FROM d{p}
-        UNION ALL
-        SELECT e.b2, d.dist + 1 FROM e JOIN d{p} d ON d.node = e.a)
-      GROUP BY node)""")
-    return ",".join(parts) + f"""
-    SELECT CAST(dist AS BIGINT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(MIN(node) AS BIGINT) AS min_part,
-           CAST(MAX(node) AS BIGINT) AS max_part
-    FROM d{max_hops} GROUP BY dist ORDER BY dist
-    """
-
-
-@query("bfs_hops_copurchase", _bfs_oracle_sql())
-def bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS over the co-purchase part graph: exact hop
-    distance from the three smallest part ids, horizon 3 — the
-    reachability-with-distance primitive (recommendation radius,
-    contamination spread). Per-level report (dist, n_nodes, min/max
-    part). Scale: level-synchronous BFS — one edges-x-frontier hash
-    join + min-combine per level, frontier-sized state, unreached
-    nodes never materialized; zero driver sync (fixed horizon). Scale
-    notes: operators/graph.py bfs_hops."""
-    from rocketmq_flink_spark.operators.graph import bfs_hops
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    nodes = (
-        sup.select(F.col("src").alias("node"))
-        .unionAll(sup.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(3)
-    d = bfs_hops(sup, seeds, max_hops=3)
-    return (
-        d.groupBy("dist")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.min("node").cast("long").alias("min_part"),
-            F.max("node").cast("long").alias("max_part"),
-        )
-        .select(
-            F.col("dist").cast("long").alias("dist"),
-            "n_nodes", "min_part", "max_part",
-        )
-        .orderBy("dist")
     )
 
 
@@ -11869,94 +11020,6 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" div (2 * element_at({pre_arr}, CAST(LEAST(r, 10) AS INT)))"
         " END AS BIGINT) AS ndcg_ppm",
     ).orderBy("qid")
-
-
-def _kcore_oracle_sql(k: int = 2, rounds: int = 8) -> str:
-    """DuckDB replay of synchronous k-core peeling: staged per-round
-    CTEs (degree filter + both-endpoint semi-join), same discipline as
-    the LPA/BFS oracles."""
-    parts = ["WITH " + _COPURCHASE_EDGES_DUCK]
-    prev = "e"
-    for t in range(1, rounds + 1):
-        parts.append(f""",
-    k{t} AS MATERIALIZED (
-      SELECT a AS node FROM {prev} GROUP BY a HAVING COUNT(*) >= {k}),
-    e{t} AS MATERIALIZED (
-      SELECT a, b2 FROM {prev}
-      WHERE a IN (SELECT node FROM k{t})
-        AND b2 IN (SELECT node FROM k{t}))""")
-        prev = f"e{t}"
-    stats = "\n    UNION ALL ".join(
-        f"SELECT {t} AS round,"
-        f" (SELECT COUNT(DISTINCT a) FROM e{t}) AS n_nodes,"
-        f" (SELECT COUNT(*) // 2 FROM e{t}) AS n_edges"
-        for t in range(1, rounds + 1)
-    )
-    return "".join(parts) + f"""
-    SELECT CAST(round AS INTEGER) AS round,
-           CAST(n_nodes AS BIGINT) AS n_nodes,
-           CAST(n_edges AS BIGINT) AS n_edges
-    FROM ({stats}) ORDER BY round
-    """
-
-
-@query("kcore_peeling_copurchase", _kcore_oracle_sql())
-def kcore_peeling_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-core peeling trajectory of the co-purchase graph: eight
-    synchronous rounds of "drop nodes with degree < 2, then drop their
-    edges" — the dense-substructure extractor (trees and pendant
-    chains dissolve; what survives is the cyclic backbone that spam /
-    boilerplate / bot-ring mining cares about). Completes the graph
-    family: reachability (CC/BFS), centrality (PageRank), local
-    density (triangles), mesoscale (LPA), and now coreness. Emits
-    (round, n_nodes, n_edges) so the collapse cascade is visible; the
-    fixture converges by round 6 at every SF (verified), so round 8 IS
-    the 2-core. Scale: each round is one map-side-combinable degree
-    count + two semi-joins on a monotonically SHRINKING edge set,
-    materialized via localCheckpoint to keep lineage linear (the CC
-    discipline, operators/graph.py) — at 100 TB run the same loop to
-    fixpoint with the one-scalar convergence check per round; rounds
-    are bounded by the graph's degeneracy ordering depth, and edge
-    bytes only ever decrease."""
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    e = cut(
-        sup.selectExpr("src AS a", "dst AS b2")
-        .unionAll(sup.selectExpr("dst AS a", "src AS b2")),
-        big=True, eager=True,
-    )
-    stats = []
-    for t in range(1, 9):
-        keep = (
-            e.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= 2)
-            .select(F.col("a").alias("node"))
-        )
-        e = (
-            e.join(keep, e["a"] == keep["node"], "left_semi")
-            .join(
-                keep.withColumnRenamed("node", "node2"),
-                F.col("b2") == F.col("node2"),
-                "left_semi",
-            )
-        )
-        e = cut(e, big=True, eager=True)
-        stats.append(
-            e.agg(
-                F.countDistinct("a").cast("long").alias("n_nodes"),
-                (F.count(F.lit(1)) / 2).cast("long").alias("n_edges"),
-            ).selectExpr(f"{t} AS round", "n_nodes", "n_edges")
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out.selectExpr(
-        "CAST(round AS INT) AS round", "n_nodes", "n_edges"
-    ).orderBy("round")
 
 
 # Benford first-digit expectations round(1e6*log10(1+1/d)), d=1..9 —
@@ -12994,7 +12057,7 @@ def spearman_daily_activity_value(
     = 2*RANK() + COUNT() OVER (PARTITION BY value) - 1. Pearson on the
     doubled ranks is then exact rational arithmetic, reported as
     SIGNED rho^2 in half-up 1e-6 ticks (the no-sqrt convention of
-    autocorr_daily_counts / degree_assortativity). Scale: ranking runs
+    autocorr_daily_counts). Scale: ranking runs
     over the DAILY table (calendar-bounded), built by one map-side-
     combined count; value cents are exact (2-decimal fixture). One
     row."""
@@ -13332,132 +12395,6 @@ def _fp_log2_cte(prefix: str, vals_cte: str) -> str:
     {p}lg AS (
       SELECT v, acc + (CAST(kk AS BIGINT) << 20) AS lg
       FROM {p}it WHERE i = 20)"""
-
-
-def _adamic_adar_oracle_sql() -> str:
-    return f"""
-    WITH RECURSIVE b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS MATERIALIZED (
-      SELECT pr.p1 AS p1, pr.p2 AS p2 FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= 2),
-    e AS MATERIALIZED (
-      SELECT p1 AS z, p2 AS u FROM sup
-      UNION ALL SELECT p2, p1 FROM sup),
-    deg AS MATERIALIZED (SELECT z AS n, CAST(COUNT(*) AS BIGINT) AS d
-                         FROM e GROUP BY z),
-    dv AS (SELECT DISTINCT d AS v FROM deg WHERE d BETWEEN 2 AND 64),
-    {_fp_log2_cte('f', 'dv')},
-    wt AS (
-      SELECT dv.v AS d,
-             (2 * CAST(1000000 AS HUGEINT) * 1048576 + flg.lg)
-               // (2 * CAST(flg.lg AS HUGEINT)) AS w
-      FROM dv JOIN flg ON flg.v = dv.v),
-    cand AS (
-      SELECT e1.u AS a, e2.u AS b2, e1.z AS z
-      FROM e e1 JOIN e e2 ON e1.z = e2.z AND e1.u < e2.u
-      JOIN deg dz ON dz.n = e1.z
-      WHERE dz.d BETWEEN 2 AND 64),
-    nonadj AS (
-      SELECT c.a, c.b2, c.z FROM cand c
-      LEFT JOIN sup s ON s.p1 = c.a AND s.p2 = c.b2
-      WHERE s.p1 IS NULL),
-    sc AS (
-      SELECT a, b2, CAST(COUNT(*) AS BIGINT) AS common_neighbors,
-             CAST(SUM(wt.w) AS BIGINT) AS aa_score_micro
-      FROM nonadj JOIN deg dz ON dz.n = nonadj.z
-                  JOIN wt ON wt.d = dz.d
-      GROUP BY a, b2),
-    top AS (
-      SELECT a, b2, common_neighbors, aa_score_micro,
-             ROW_NUMBER() OVER (ORDER BY aa_score_micro DESC, a, b2)
-               AS rank
-      FROM sc)
-    SELECT CAST(rank AS BIGINT) AS rank, a AS part_a, b2 AS part_b,
-           common_neighbors, aa_score_micro
-    FROM top WHERE rank <= 20 ORDER BY rank
-    """
-
-
-@query("adamic_adar_links", _adamic_adar_oracle_sql())
-def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction on the co-purchase graph — the
-    classic "which parts SHOULD co-occur but don't yet" recommender
-    signal: for each non-adjacent pair, score = sum over common
-    neighbors z of 1/log2(deg(z)), weighting rare shared contexts
-    above promiscuous hubs. Zero libm: deg is an integer, log2(deg)
-    is the fixed-point fp_log2 fold (shared with BM25/entropy), and
-    each neighbor weight is the half-up rational 1e6*2^20/lg — both
-    engines sum IDENTICAL integers. Top-20 pairs by (score, pair).
-    Scale: the common-neighbor enumeration is the sum of deg(z)^2 —
-    the classic quadratic hazard — so hubs with deg > 64 are EXCLUDED
-    as common-neighbor hosts (documented cap, the ngram doc-freq-cap
-    discipline; their AA weight is near-zero anyway: 1/log2(65+) <
-    0.17). Everything else is node-keyed joins over support>=2 edges.
-    """
-    from rocketmq_flink_spark.operators.retrieval import fp_log2_sql
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select("p1", "p2")
-        # the co-purchase kernel feeds FOUR subtrees (both union
-        # branches of e + the non-adjacency anti-join); one cut stops
-        # it re-running per consumer (78 Exchanges / 13 lineitem scans
-        # at baseline; optimization r08)
-        .transform(_cut_big)
-    )
-    e = sup.select(F.col("p1").alias("z"), F.col("p2").alias("u")).unionAll(
-        sup.select(F.col("p2").alias("z"), F.col("p1").alias("u"))
-    )
-    deg = e.groupBy("z").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    # d = 1 is excluded BEFORE the 1/log2(d) weight (log2(1) = 0): a
-    # degree-1 node has a single neighbor, so it can never host a
-    # u < w pair — dropping it is lossless, not an approximation.
-    wt = (
-        deg.where((F.col("d") >= 2) & (F.col("d") <= 64))
-        .select("d")
-        .distinct()
-        .selectExpr("d", fp_log2_sql("d", "1") + " AS lg")
-        .selectExpr(
-            "d",
-            "CAST((2 * CAST(1000000 AS DECIMAL(38,0)) * 1048576 + lg)"
-            " div (2 * CAST(lg AS DECIMAL(38,0))) AS BIGINT) AS w",
-        )
-    )
-    # ez hosts both sides of the common-neighbor self-join below: cut
-    # once so the degree-capped weighted adjacency builds once
-    ez = e.join(deg.where(F.col("d") <= 64), "z").join(
-        F.broadcast(wt), "d"
-    ).transform(_cut_big)
-    e2 = ez.select(F.col("z"), F.col("u").alias("b2"), "w")
-    cand = ez.select("z", "u").join(e2, "z").where(F.col("u") < F.col("b2"))
-    nonadj = cand.join(
-        sup.withColumnRenamed("p1", "u").withColumnRenamed("p2", "b2"),
-        ["u", "b2"],
-        "left_anti",
-    )
-    sc = nonadj.groupBy("u", "b2").agg(
-        F.count(F.lit(1)).cast("long").alias("common_neighbors"),
-        F.sum("w").cast("long").alias("aa_score_micro"),
-    )
-    top = sc.select(
-        F.row_number()
-        .over(Window.orderBy(F.col("aa_score_micro").desc(), "u", "b2"))
-        .cast("long")
-        .alias("rank"),
-        F.col("u").alias("part_a"),
-        F.col("b2").alias("part_b"),
-        "common_neighbors",
-        "aa_score_micro",
-    )
-    return top.where(F.col("rank") <= 20).orderBy("rank")
 
 
 def _zipf_oracle_sql() -> str:
@@ -14117,203 +13054,6 @@ def event_trigram_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.where(F.col("rank") <= 20).orderBy("rank")
 
 
-def _harmonic_oracle_sql(max_hops: int = 4) -> str:
-    """DuckDB replay of per-seed BFS + harmonic centrality: staged
-    (seed, node) min-combine CTEs, then the exact half-up ppm
-    constant table for 1/dist."""
-    parts = [
-        "WITH "
-        + _COPURCHASE_EDGES_DUCK
-        + """,
-    h0 AS MATERIALIZED (
-      SELECT node AS seed, node, 0 AS dist FROM (
-        SELECT DISTINCT a AS node FROM e ORDER BY node LIMIT 3))"""
-    ]
-    for t in range(1, max_hops + 1):
-        p = t - 1
-        parts.append(f"""
-    h{t} AS MATERIALIZED (
-      SELECT seed, node, MIN(dist) AS dist FROM (
-        SELECT seed, node, dist FROM h{p}
-        UNION ALL
-        SELECT d.seed, e.b2, d.dist + 1 FROM e JOIN h{p} d ON d.node = e.a)
-      GROUP BY seed, node)""")
-    wt = (
-        "CASE dist WHEN 1 THEN 1000000 WHEN 2 THEN 500000"
-        " WHEN 3 THEN 333333 WHEN 4 THEN 250000 ELSE 0 END"
-    )
-    return ",".join(parts) + f"""
-    SELECT CAST(seed AS BIGINT) AS seed,
-           CAST(COUNT(CASE WHEN dist > 0 THEN 1 END) AS BIGINT)
-             AS n_reached,
-           CAST(MAX(dist) AS BIGINT) AS max_dist,
-           CAST(SUM({wt}) AS BIGINT) AS harmonic_ppm
-    FROM h{max_hops} GROUP BY seed ORDER BY seed
-    """
-
-
-@query("harmonic_centrality_seeds", _harmonic_oracle_sql())
-def harmonic_centrality_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harmonic centrality (horizon 4) of the three smallest parts in
-    the co-purchase graph: H(s) = sum over reached v of 1/d(s, v) —
-    the distance-weighted influence gauge that, unlike closeness,
-    stays well-defined on disconnected graphs. Per-seed BFS keeps the
-    exact hop distance per (seed, node); 1/d enters as the EXACT
-    half-up ppm constant table (1e6, 5e5, 333333, 25e4), so the sum
-    is plain integer addition in both engines. Scale: per-seed
-    level-synchronous BFS (|seeds| x frontier state — seeds are a
-    3-probe panel, not all nodes); the horizon bounds state like
-    bfs_hops; zero driver sync. One row per seed."""
-    from rocketmq_flink_spark.operators.graph import bfs_hops_per_seed
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    nodes = (
-        sup.select(F.col("src").alias("node"))
-        .unionAll(sup.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(3)
-    d = bfs_hops_per_seed(sup, seeds, max_hops=4)
-    wt = (
-        "CASE dist WHEN 1 THEN 1000000 WHEN 2 THEN 500000"
-        " WHEN 3 THEN 333333 WHEN 4 THEN 250000 ELSE 0 END"
-    )
-    return (
-        d.groupBy("seed")
-        .agg(
-            F.count(F.when(F.col("dist") > 0, 1)).cast("long").alias(
-                "n_reached"
-            ),
-            F.max("dist").cast("long").alias("max_dist"),
-            F.sum(F.expr(wt)).cast("long").alias("harmonic_ppm"),
-        )
-        .select(
-            F.col("seed").cast("long").alias("seed"),
-            "n_reached",
-            "max_dist",
-            "harmonic_ppm",
-        )
-        .orderBy("seed")
-    )
-
-
-@query(
-    "association_rules_lift",
-    """
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    nb AS (SELECT CAST(COUNT(*) AS HUGEINT) AS nbk FROM b),
-    itm AS (
-      SELECT p, CAST(COUNT(*) AS HUGEINT) AS ni
-      FROM (SELECT unnest(ps) AS p FROM b) GROUP BY p),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2, CAST(COUNT(*) AS HUGEINT) AS s
-      FROM pp GROUP BY 1, 2),
-    top AS (
-      SELECT p1, p2, s,
-             ROW_NUMBER() OVER (ORDER BY s DESC, p1, p2) AS pr_rank
-      FROM sup),
-    rules AS (
-      SELECT p1 AS antecedent, p2 AS consequent, s, pr_rank FROM top
-      WHERE pr_rank <= 20
-      UNION ALL
-      SELECT p2, p1, s, pr_rank FROM top WHERE pr_rank <= 20),
-    sc AS (
-      SELECT r.antecedent, r.consequent, r.s,
-             na.ni AS n_ante, nc.ni AS n_cons, nb.nbk
-      FROM rules r
-      JOIN itm na ON na.p = r.antecedent
-      JOIN itm nc ON nc.p = r.consequent
-      CROSS JOIN nb)
-    SELECT antecedent, consequent, CAST(s AS BIGINT) AS support,
-           CAST((2 * 1000000 * s + n_ante) // (2 * n_ante) AS BIGINT)
-             AS confidence_ppm,
-           CAST((2 * 1000000 * s * nbk + n_ante * n_cons)
-                // (2 * n_ante * n_cons) AS BIGINT) AS lift_ppm
-    FROM sc ORDER BY antecedent, consequent
-    """,
-)
-def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association rules over the top-20 co-purchase pairs: both
-    directed rules a -> c per pair with exact CONFIDENCE
-    (support/n_antecedent) and LIFT (support*N/(n_a*n_c)) in half-up
-    ppm — the decision layer of market-basket mining that raw support
-    (copurchase_part_pairs) lacks: high-support pairs of two
-    ubiquitous parts have lift ~ 1 and are noise to a recommender.
-    Integer throughout (HUGEINT/DECIMAL38 products). Scale: item
-    frequencies are one exploded map-side count over baskets; pair
-    support as in copurchase_part_pairs (basket-size bounded); the
-    rule join touches 40 rows against the broadcast item table."""
-    dec = "decimal(38,0)"
-    li = load_tables(spark, sf_dir)["lineitem"]
-    # the basket table feeds the basket count, the item frequencies AND
-    # (via the split-out support stage) the pair support — previously
-    # the lineitem collect_set aggregation ran once here and once
-    # inside copurchase_support; top (20 rows) feeds both rule
-    # directions (optimization r08)
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    ).transform(_cut_big)
-    nb = baskets.agg(F.count(F.lit(1)).cast(dec).alias("nbk"))
-    itm = (
-        baskets.select(F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).cast(dec).alias("ni"))
-    )
-    sup = copurchase_support_from_baskets(baskets).select(
-        "p1", "p2", F.col("s").cast(dec).alias("s")
-    )
-    top = sup.select(
-        "p1",
-        "p2",
-        "s",
-        F.row_number()
-        .over(Window.orderBy(F.col("s").desc(), "p1", "p2"))
-        .alias("pr_rank"),
-    ).where(F.col("pr_rank") <= 20).transform(cut)
-    rules = top.select(
-        F.col("p1").alias("antecedent"),
-        F.col("p2").alias("consequent"),
-        "s",
-    ).unionAll(
-        top.select(
-            F.col("p2").alias("antecedent"),
-            F.col("p1").alias("consequent"),
-            "s",
-        )
-    )
-    na = itm.select(
-        F.col("p").alias("antecedent"), F.col("ni").alias("n_ante")
-    )
-    nc = itm.select(
-        F.col("p").alias("consequent"), F.col("ni").alias("n_cons")
-    )
-    sc = (
-        rules.join(F.broadcast(na), "antecedent")
-        .join(F.broadcast(nc), "consequent")
-        .crossJoin(F.broadcast(nb))
-    )
-    return sc.selectExpr(
-        "antecedent",
-        "consequent",
-        "CAST(s AS BIGINT) AS support",
-        "CAST((2 * 1000000 * s + n_ante) div (2 * n_ante) AS BIGINT)"
-        " AS confidence_ppm",
-        "CAST((2 * 1000000 * s * nbk + n_ante * n_cons)"
-        " div (2 * n_ante * n_cons) AS BIGINT) AS lift_ppm",
-    ).orderBy("antecedent", "consequent")
-
-
 @query(
     "streaming_token_counts",
     f"""
@@ -14472,118 +13212,6 @@ def user_type_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
         .orderBy("bucket_32nd_bit")
-    )
-
-
-def _modularity_oracle_sql(iters: int = 4) -> str:
-    """Newman modularity of the LPA partition, exact rational:
-    Q = sum_c (e_c * m2 - d_c^2) / m2^2 over directed edge-endpoint
-    counts (e_c = directed intra-community edges, d_c = community
-    degree mass, m2 = total degree)."""
-    return _lpa_chain_duck(iters) + f""",
-    deg AS (SELECT a AS n, CAST(COUNT(*) AS HUGEINT) AS d
-            FROM e GROUP BY a),
-    m2 AS (SELECT CAST(SUM(d) AS HUGEINT) AS m2 FROM deg),
-    ein AS (
-      SELECT l1.lab, CAST(COUNT(*) AS HUGEINT) AS ec
-      FROM e JOIN s{iters} l1 ON l1.node = e.a
-             JOIN s{iters} l2 ON l2.node = e.b2
-      WHERE l1.lab = l2.lab GROUP BY l1.lab),
-    dc AS (
-      SELECT s.lab, CAST(SUM(deg.d) AS HUGEINT) AS dsum,
-             CAST(COUNT(*) AS BIGINT) AS sz
-      FROM s{iters} s JOIN deg ON deg.n = s.node GROUP BY s.lab),
-    agg AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
-             CAST(SUM(dc.sz) AS BIGINT) AS n_nodes,
-             CAST(SUM(COALESCE(ein.ec, 0) * m2.m2
-                      - dc.dsum * dc.dsum) AS HUGEINT) AS num,
-             CAST(MAX(m2.m2) AS HUGEINT) AS m2
-      FROM dc LEFT JOIN ein ON ein.lab = dc.lab CROSS JOIN m2)
-    SELECT n_communities, n_nodes,
-           CAST(m2 // 2 AS BIGINT) AS n_edges,
-           CAST(CASE WHEN num >= 0 THEN
-                  (2 * 1000000 * num + m2 * m2) // (2 * m2 * m2)
-                ELSE -((2 * 1000000 * (-num) + m2 * m2)
-                  // (2 * m2 * m2)) END AS BIGINT) AS modularity_ppm
-    FROM agg
-    """
-
-
-@query("lpa_modularity_score", _modularity_oracle_sql())
-def lpa_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the LPA community partition — the quality
-    score that tells you whether label_propagation_communities found
-    real mesoscale structure (Q near 0 = no better than random given
-    the degree sequence; Q > ~0.3 = strong communities). Exact
-    rational: over directed edge copies,
-    Q = sum_c (e_c*m2 - d_c^2)/m2^2 with e_c the intra-community
-    directed edge count, d_c the community degree mass, m2 the total
-    degree — one signed half-up ppm rounding at the end
-    (HUGEINT/DECIMAL38). Scale: the intra-edge count is one
-    edges-x-labels hash join pair (PageRank-step volume); degree and
-    community masses are map-side combines; everything downstream is
-    community-bounded. One row."""
-    from rocketmq_flink_spark.operators.graph import label_propagation
-
-    dec = "decimal(38,0)"
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    # THREE consumers read the 4-round LPA labels (both endpoints of
-    # the intra-edge join + the community-mass aggregation); without a
-    # lineage cut each consumer re-plans (and, when exchange reuse
-    # fails across the differently-aliased subtrees, re-RUNS) the whole
-    # propagation — localCheckpoint materializes the node-sized label
-    # table once (optimization r08)
-    labels = label_propagation(sup, iters=4).select(
-        F.col("node"), F.col("community").alias("lab")
-    ).transform(_cut_big)
-    e = sup.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionAll(
-        sup.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    ).transform(_cut_big)
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).cast(dec).alias("d"))
-    m2 = deg.agg(F.sum("d").cast(dec).alias("m2"))
-    l1 = labels.select(F.col("node").alias("a"), F.col("lab").alias("la"))
-    l2 = labels.select(F.col("node").alias("b"), F.col("lab").alias("lb"))
-    ein = (
-        e.join(l1, "a")
-        .join(l2, "b")
-        .where(F.col("la") == F.col("lb"))
-        .groupBy(F.col("la").alias("lab"))
-        .agg(F.count(F.lit(1)).cast(dec).alias("ec"))
-    )
-    dc = (
-        labels.join(deg, labels["node"] == deg["a"])
-        .groupBy("lab")
-        .agg(
-            F.sum("d").cast(dec).alias("dsum"),
-            F.count(F.lit(1)).cast("long").alias("sz"),
-        )
-    )
-    agg = (
-        dc.join(ein, "lab", "left")
-        .crossJoin(F.broadcast(m2))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_communities"),
-            F.sum("sz").cast("long").alias("n_nodes"),
-            F.sum(
-                F.coalesce(F.col("ec"), F.lit(0).cast(dec)) * F.col("m2")
-                - F.col("dsum") * F.col("dsum")
-            ).cast(dec).alias("num"),
-            F.max("m2").cast(dec).alias("m2"),
-        )
-    )
-    return agg.selectExpr(
-        "n_communities",
-        "n_nodes",
-        "CAST(m2 div 2 AS BIGINT) AS n_edges",
-        "CAST(CASE WHEN num >= 0 THEN"
-        "  (2 * 1000000 * num + m2 * m2) div (2 * m2 * m2)"
-        " ELSE -((2 * 1000000 * (-num) + m2 * m2)"
-        "  div (2 * m2 * m2)) END AS BIGINT) AS modularity_ppm",
     )
 
 
@@ -14996,153 +13624,6 @@ def correlation_matrix_lineitem(
     return pairs.selectExpr(
         "pair", "ROUND(cov_n / SQRT(vx_n * vy_n), 6) AS corr"
     ).orderBy("pair")
-
-
-@query(
-    "copurchase_hitrate_eval",
-    """
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    eb AS (
-      SELECT l_orderkey, ps[len(ps)] AS held,
-             ps[1:len(ps) - 1] AS ctx, ps
-      FROM b WHERE len(ps) >= 2),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2, CAST(COUNT(*) AS BIGINT) AS s
-      FROM pp GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    co AS (
-      SELECT p1 AS a, p2 AS b2, s FROM sup
-      UNION ALL SELECT p2, p1, s FROM sup),
-    cx AS (
-      SELECT eb.l_orderkey, eb.held, eb.ctx, c AS item
-      FROM eb, LATERAL (SELECT unnest(ctx) AS c)),
-    cand AS (
-      SELECT cx.l_orderkey, cx.held, co.b2 AS rec,
-             CAST(SUM(co.s) AS BIGINT) AS score
-      FROM cx JOIN co ON co.a = cx.item
-      WHERE NOT list_contains(cx.ctx, co.b2)
-      GROUP BY cx.l_orderkey, cx.held, co.b2),
-    rk AS (
-      SELECT l_orderkey, held, rec,
-             ROW_NUMBER() OVER (PARTITION BY l_orderkey
-                                ORDER BY score DESC, rec) AS rn
-      FROM cand),
-    agg AS (
-      SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM eb) AS n_eval,
-             CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_scored,
-             CAST(SUM(CASE WHEN rec = held AND rn <= 5 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS hits
-      FROM rk)
-    SELECT n_eval, n_scored, hits,
-           CAST((2 * 1000000 * hits + n_eval) // (2 * n_eval) AS BIGINT)
-             AS hitrate_ppm
-    FROM agg
-    """,
-)
-def copurchase_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out recommendation eval — the offline hit-rate@5 that
-    closes the recsys loop (co-occurrence mining -> item similarity ->
-    association rules -> MEASURED recommendation quality): for every
-    basket, hold out its largest part id (deterministic fold), score
-    candidates by summed co-purchase support of the remaining context
-    (support >= 2 edges, candidates outside the context), and count
-    baskets whose held-out part ranks in the top 5. Exact integers;
-    half-up ppm hit rate. Scale: candidate generation is
-    context-item-keyed joins against the sparse support graph (the
-    Adamic-Adar shape, bounded by sum of context degrees); ranking is
-    an order-partitioned window; the basket pair stage is
-    basket-size bounded as in copurchase_part_pairs. One row."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    # the basket table feeds the eval frame AND (via the split-out
-    # support stage) the co-occurrence edges — previously the lineitem
-    # collect_set aggregation ran once here and once inside
-    # copurchase_support; one cut + reuse (optimization r08)
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    ).transform(_cut_big)
-    eb = baskets.where(F.size("ps") >= 2).select(
-        "l_orderkey",
-        F.element_at("ps", -1).alias("held"),
-        F.expr("slice(ps, 1, size(ps) - 1)").alias("ctx"),
-    # eb feeds the candidate explode and the n_eval count: cut the
-    # small (order, held, ctx) frame
-    ).transform(_cut_big)
-    sup = copurchase_support_from_baskets(baskets).where(
-        F.col("s") >= 2
-    ).transform(_cut_big)
-    co = sup.select(
-        F.col("p1").alias("a"), F.col("p2").alias("b2"), "s"
-    ).unionAll(
-        sup.select(F.col("p2").alias("a"), F.col("p1").alias("b2"), "s")
-    )
-    cx = eb.select(
-        "l_orderkey", "held", "ctx", F.explode("ctx").alias("item")
-    )
-    # hit test WITHOUT the per-order ranking window (optimization r08,
-    # guide §2.3 aggregate-don't-sort): under the window's
-    # (score desc, rec asc) order, rank(held) = 1 + #better where
-    # better = (score > s_held) OR (score = s_held AND rec < held) —
-    # so "held in top 5" = "fewer than 5 strictly-better candidates".
-    # One cut on cand (it feeds the held-score pick, the better-count
-    # join and the n_scored count), then map-side-combinable
-    # aggregations replace the full candidate sort.
-    cand = (
-        cx.join(co, cx["item"] == co["a"])
-        .where(~F.array_contains(F.col("ctx"), F.col("b2")))
-        .groupBy("l_orderkey", "held", F.col("b2").alias("rec"))
-        .agg(F.sum("s").cast("long").alias("score"))
-        .transform(_cut_big)
-    )
-    hs = cand.where(F.col("rec") == F.col("held")).select(
-        "l_orderkey", F.col("held").alias("h2"),
-        F.col("score").alias("s_held"),
-    )
-    # no broadcast hint on hs: it is order-scale (one row per eval
-    # order whose held part is a candidate) — at 100 TB it must
-    # shuffle-join on l_orderkey, the same key the removed window
-    # shuffled on, so the exchange count is unchanged and the sort is
-    # still saved
-    better = (
-        cand.join(hs, "l_orderkey")
-        .where(
-            (F.col("score") > F.col("s_held"))
-            | (
-                (F.col("score") == F.col("s_held"))
-                & (F.col("rec") < F.col("h2"))
-            )
-        )
-        .groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).alias("n_better"))
-    )
-    hits_df = hs.join(better, "l_orderkey", "left").agg(
-        F.coalesce(
-            F.sum(
-                F.when(F.coalesce(F.col("n_better"), F.lit(0)) <= 4, 1)
-                .otherwise(0)
-            ),
-            F.lit(0),
-        ).cast("long").alias("hits")
-    )
-    n_eval = eb.agg(F.count(F.lit(1)).cast("long").alias("n_eval"))
-    agg = cand.agg(
-        F.countDistinct("l_orderkey").cast("long").alias("n_scored"),
-    ).crossJoin(hits_df)
-    return (
-        n_eval.crossJoin(agg)
-        .selectExpr(
-            "n_eval",
-            "n_scored",
-            "hits",
-            "CAST((2 * 1000000 * hits + n_eval) div (2 * n_eval)"
-            " AS BIGINT) AS hitrate_ppm",
-        )
-    )
 
 
 @query(
@@ -16115,152 +14596,6 @@ def bigram_next_token_accuracy(
         " AS BIGINT) AS coverage_ppm",
         "CAST((2 * 1000000 * n_correct + n_covered) div (2 * n_covered)"
         " AS BIGINT) AS accuracy_ppm",
-    )
-
-
-def _percolation_oracle_sql(rounds: int = 8, hubs: int = 16) -> str:
-    """DuckDB replay of hub-percolation: min-label propagation
-    (staged min-combine CTEs, converged by round 8 at every fixture
-    SF — probed through round 12) on the full co-purchase graph and
-    again after removing the top-`hubs` degree hubs."""
-
-    def chain(prefix: str, edges: str) -> str:
-        parts = [f"""
-    {prefix}0 AS MATERIALIZED (
-      SELECT DISTINCT a AS node, a AS lab FROM {edges})"""]
-        for t in range(1, rounds + 1):
-            p = t - 1
-            parts.append(f"""
-    {prefix}{t} AS MATERIALIZED (
-      SELECT node, MIN(lab) AS lab FROM (
-        SELECT node, lab FROM {prefix}{p}
-        UNION ALL
-        SELECT e2.b2, l.lab FROM {edges} e2
-        JOIN {prefix}{p} l ON l.node = e2.a)
-      GROUP BY node)""")
-        return ",".join(parts)
-
-    def phase(prefix: str, edges: str, name: str) -> str:
-        return f"""
-    {prefix}sum AS (
-      SELECT '{name}' AS phase,
-             CAST(COUNT(*) AS BIGINT) AS n_nodes,
-             (SELECT CAST(COUNT(*) // 2 AS BIGINT) FROM {edges})
-               AS n_edges,
-             CAST(COUNT(DISTINCT lab) AS BIGINT) AS n_components,
-             CAST(MAX(sz) AS BIGINT) AS largest_component,
-             CAST((2 * 1000000 * MAX(sz) + COUNT(*)) // (2 * COUNT(*))
-                  AS BIGINT) AS largest_share_ppm
-      FROM (SELECT lab, node, COUNT(*) OVER (PARTITION BY lab) AS sz
-            FROM {prefix}{rounds}))"""
-
-    return f"""
-    WITH {_COPURCHASE_EDGES_DUCK},
-    deg AS (SELECT a AS n, CAST(COUNT(*) AS BIGINT) AS d
-            FROM e GROUP BY a),
-    hub AS (
-      SELECT n FROM (
-        SELECT n, ROW_NUMBER() OVER (ORDER BY d DESC, n) AS rn
-        FROM deg) WHERE rn <= {hubs}),
-    e2 AS MATERIALIZED (
-      SELECT e.a, e.b2 FROM e
-      WHERE e.a NOT IN (SELECT n FROM hub)
-        AND e.b2 NOT IN (SELECT n FROM hub)),
-    {chain('fa', 'e')},
-    {chain('fb', 'e2')},
-    {phase('fa', 'e', 'a_full')},
-    {phase('fb', 'e2', 'b_hubs_removed')}
-    SELECT * FROM fasum UNION ALL SELECT * FROM fbsum
-    ORDER BY phase
-    """
-
-
-@query("percolation_robustness", _percolation_oracle_sql())
-def percolation_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percolation / targeted-attack robustness of the co-purchase
-    graph: connectivity before vs after removing the 16 highest-degree
-    hubs — the resilience gauge (scale-free graphs shatter under hub
-    removal; a robust catalog keeps recommending when bestsellers go
-    out of stock). Components by 8-round synchronous MIN-LABEL
-    propagation (one edges-x-labels join + min-combine per round, the
-    LPA/BFS shape; fixture converges by round 8 at every SF — probed
-    through round 12), run on the full graph and the hub-stripped one.
-    Reports per phase: nodes, edges, component count, largest
-    component and its half-up ppm share. Scale: per-round join volume
-    is PageRank-step sized; hub removal is two broadcast anti-joins;
-    zero driver sync (fixed horizon)."""
-    sup = copurchase_support(spark, sf_dir).where(F.col("s") >= 2)
-    # e feeds the degree/hub aggregation AND both phase edge frames:
-    # cut once so the kernel builds once per run (optimization r08)
-    e = sup.select(F.col("p1").alias("a"), F.col("p2").alias("b")).unionAll(
-        sup.select(F.col("p2").alias("a"), F.col("p1").alias("b"))
-    ).transform(_cut_big)
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-    hub = (
-        deg.select(
-            "a",
-            F.row_number()
-            .over(Window.orderBy(F.col("d").desc(), "a"))
-            .alias("rn"),
-        )
-        .where(F.col("rn") <= 16)
-        .select(F.col("a").alias("n"))
-    )
-    e2 = e.join(
-        F.broadcast(hub), e["a"] == hub["n"], "left_anti"
-    ).join(F.broadcast(hub), F.col("b") == hub["n"], "left_anti")
-
-    def components(edges: DataFrame, name: str) -> DataFrame:
-        # The min-label loop references `edges` every round and `lab`
-        # TWICE per round (state ∪ step), so the logical plan doubles
-        # per round — with the full co-purchase kernel as the base,
-        # Catalyst re-analysis cost the DRIVER ~53 s per query build
-        # (measured r08; the bench pays it once per rep). Cutting the
-        # edge lineage once bounds every round's plan at a few nodes:
-        # build drops to ~2 s with bit-identical labels (optimization
-        # r08, guide §3.3 "materialise an intermediate to truncate the
-        # plan").
-        edges = edges.transform(_cut_big)
-        lab = edges.select(F.col("a").alias("node")).distinct().select(
-            "node", F.col("node").alias("lab")
-        )
-        for t in range(1, 9):
-            step = edges.join(lab, edges["a"] == lab["node"]).select(
-                F.col("b").alias("node"), "lab"
-            )
-            lab = (
-                lab.unionAll(step)
-                .groupBy("node")
-                .agg(F.min("lab").alias("lab"))
-            )
-            if t % 2 == 0:
-                lab = lab.transform(_cut_big)
-        sz = lab.groupBy("lab").agg(F.count(F.lit(1)).alias("sz"))
-        ne = edges.agg(
-            F.expr("CAST(COUNT(*) div 2 AS BIGINT)").alias("n_edges")
-        )
-        return (
-            sz.agg(
-                F.sum("sz").cast("long").alias("n_nodes"),
-                F.count(F.lit(1)).cast("long").alias("n_components"),
-                F.max("sz").cast("long").alias("largest_component"),
-            )
-            .crossJoin(F.broadcast(ne))
-            .selectExpr(
-                f"'{name}' AS phase",
-                "n_nodes",
-                "n_edges",
-                "n_components",
-                "largest_component",
-                "CAST((2 * 1000000 * largest_component + n_nodes)"
-                " div (2 * n_nodes) AS BIGINT) AS largest_share_ppm",
-            )
-        )
-
-    return (
-        components(e, "a_full")
-        .unionAll(components(e2, "b_hubs_removed"))
-        .orderBy("phase")
     )
 
 
@@ -17789,180 +16124,6 @@ def fulfillment_latency_profile(
 # audits, causal readouts
 # ---------------------------------------------------------------------------
 
-_COPURCHASE_WEDGES_DUCK = """
-    b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2, COUNT(*) AS s FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= 2),
-    ew AS MATERIALIZED (
-      SELECT p1 AS a, p2 AS b2, 1000000 // s AS w FROM sup
-      UNION ALL SELECT p2, p1, 1000000 // s FROM sup)"""
-
-
-def _sssp_oracle_sql(rounds: int = 4, k: int = 24) -> str:
-    """DuckDB replay of bounded Bellman-Ford over the weighted
-    co-purchase graph (weight = 1e6 div support ticks; seed = smallest
-    part in the graph): staged min-combine CTEs, one per relaxation
-    round — distances after round t are exactly min over paths with
-    <= t edges, an engine-independent quantity."""
-    parts = [
-        "WITH "
-        + _COPURCHASE_WEDGES_DUCK
-        + """,
-    t0 AS MATERIALIZED (
-      SELECT node, CAST(0 AS BIGINT) AS dist FROM (
-        SELECT MIN(a) AS node FROM ew))"""
-    ]
-    for t in range(1, rounds + 1):
-        p = t - 1
-        parts.append(f"""
-    t{t} AS MATERIALIZED (
-      SELECT node, MIN(dist) AS dist FROM (
-        SELECT node, dist FROM t{p}
-        UNION ALL
-        SELECT ew.b2, d.dist + ew.w FROM ew JOIN t{p} d ON d.node = ew.a)
-      GROUP BY node)""")
-    return ",".join(parts) + f"""
-    SELECT CAST(node AS BIGINT) AS node, CAST(dist AS BIGINT) AS dist_ticks
-    FROM t{rounds} ORDER BY dist, node LIMIT {k}
-    """
-
-
-@query("sssp_weighted_copurchase", _sssp_oracle_sql())
-def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted shortest paths (bounded Bellman-Ford, 4 relaxation
-    rounds) from the smallest part in the co-purchase graph — the
-    weighted generalization of bfs_hops_copurchase: edge cost =
-    1e6 div support ticks, so strongly co-purchased parts are CLOSE
-    and a path through two strong edges can beat one weak edge —
-    hop count alone inverts that ordering. Returns the 24 nearest
-    parts by (dist, node). All distances are integer tick sums —
-    bit-deterministic under any partitioning and replayed exactly by
-    the staged-CTE oracle. Scale: one edges-x-frontier hash join +
-    min-combine per round (the BFS level step with weights);
-    relaxed-state bounded by reached nodes; zero driver sync (fixed
-    horizon). Scale notes: operators/graph.py sssp_bounded."""
-    from rocketmq_flink_spark.operators.graph import sssp_bounded
-
-    sup = copurchase_support(spark, sf_dir).where(F.col("s") >= 2)
-    ew = sup.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst"),
-        F.expr("1000000 div s").alias("w"),
-    ).unionAll(
-        sup.select(
-            F.col("p2").alias("src"), F.col("p1").alias("dst"),
-            F.expr("1000000 div s").alias("w"),
-        )
-    )
-    seeds = ew.agg(F.min("src").alias("node"))
-    d = sssp_bounded(ew, seeds, rounds=4)
-    return (
-        d.select(
-            F.col("node").cast("long").alias("node"),
-            F.col("dist").cast("long").alias("dist_ticks"),
-        )
-        .orderBy("dist_ticks", "node")
-        .limit(24)
-    )
-
-
-def _clustering_oracle_sql(min_support: int = 2, k: int = 20) -> str:
-    """Local clustering coefficient oracle: the triangle-count replay
-    plus the exact ppm ratio 2*tri / (d*(d-1)) in floor-div ticks."""
-    return f"""
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS MATERIALIZED (
-      SELECT pr.p1 AS a, pr.p2 AS b FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= {min_support}),
-    deg AS MATERIALIZED (
-      SELECT n, COUNT(*) AS d FROM (
-        SELECT a AS n FROM sup UNION ALL SELECT b FROM sup)
-      GROUP BY n),
-    ori AS MATERIALIZED (
-      SELECT CASE WHEN (da.d < db.d) OR (da.d = db.d AND s.a < s.b)
-                  THEN s.a ELSE s.b END AS u,
-             CASE WHEN (da.d < db.d) OR (da.d = db.d AND s.a < s.b)
-                  THEN s.b ELSE s.a END AS v
-      FROM sup s JOIN deg da ON da.n = s.a JOIN deg db ON db.n = s.b),
-    wedge AS (
-      SELECT w1.u, w1.v AS x, w2.v AS y
-      FROM ori w1 JOIN ori w2 ON w1.u = w2.u AND w1.v < w2.v),
-    closer AS (
-      SELECT LEAST(u, v) AS x, GREATEST(u, v) AS y FROM ori),
-    tri AS (
-      SELECT w.u, w.x, w.y FROM wedge w JOIN closer c
-        ON c.x = w.x AND c.y = w.y),
-    pn AS (
-      SELECT n, COUNT(*) AS n_triangles FROM (
-        SELECT u AS n FROM tri UNION ALL SELECT x FROM tri
-        UNION ALL SELECT y FROM tri)
-      GROUP BY n)
-    SELECT deg.n AS part,
-           CAST(deg.d AS BIGINT) AS degree,
-           CAST(COALESCE(pn.n_triangles, 0) AS BIGINT) AS n_triangles,
-           CAST((2000000 * COALESCE(pn.n_triangles, 0))
-                // (deg.d * (deg.d - 1)) AS BIGINT) AS clustering_ppm
-    FROM deg LEFT JOIN pn ON pn.n = deg.n
-    WHERE deg.d >= 2
-    ORDER BY clustering_ppm DESC, degree DESC, part LIMIT {k}
-    """
-
-
-@query("local_clustering_coefficient", _clustering_oracle_sql())
-def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node local clustering coefficient over the co-purchase
-    graph: C(v) = 2*tri(v) / (deg(v)*(deg(v)-1)) — how close each
-    part's neighborhood is to a clique. Triangle counts give the raw
-    local density; the coefficient NORMALIZES by the possible-pairs
-    denominator, separating "in a tight bundle" (high C, modest
-    degree) from "merely popular" (high degree, low C) — the signal
-    bundle detection and anomaly scoring actually use. Exact ppm in
-    floor-div ticks (Spark div == DuckDB // on non-negative operands);
-    top-20 by (C desc, degree desc, part). Scale: identical join
-    volume to triangle_count_copurchase — the O(m^1.5) oriented-wedge
-    bound — plus one node-sized join; the per-node division is free.
-    Scale notes: operators/graph.py triangle_count."""
-    from rocketmq_flink_spark.operators.graph import triangle_count
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    # support pairs are canonical (unique, p1 < p2); degree comes out
-    # of triangle_count's own orientation step (optimization r08)
-    tc = triangle_count(
-        sup, "src", "dst", assume_canonical=True, with_degree=True
-    )
-    return (
-        tc.where(F.col("degree") >= 2)
-        .select(
-            F.col("node").cast("long").alias("part"),
-            F.col("degree").cast("long").alias("degree"),
-            F.col("n_triangles").cast("long").alias("n_triangles"),
-            F.expr(
-                "CAST((2000000 * n_triangles)"
-                " div (degree * (degree - 1)) AS BIGINT)"
-            ).alias("clustering_ppm"),
-        )
-        .orderBy(F.desc("clustering_ppm"), F.desc("degree"), "part")
-        .limit(20)
-    )
-
 
 _FD_AUDIT = [
     # (label, table, X column, Y column)
@@ -18605,309 +16766,6 @@ def rake_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("phrase", "n_occ", "score_ticks")
         .orderBy(F.desc("score_ticks"), "phrase")
         .limit(20)
-    )
-
-
-def _ppr_oracle_sql(iters: int = 3, min_support: int = 2, k: int = 15) -> str:
-    """DuckDB replay of personalized PageRank seeded at the
-    highest-degree part (ties to the smallest id, matching the Spark
-    plan): staged power-iteration CTEs with seed-indicator teleport,
-    then the recommendation filter (drop the seed and its direct
-    neighbors)."""
-    base = (15 * 1_000_000) // 100
-    parts = [f"""
-    WITH b AS (
-      SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-      FROM lineitem GROUP BY l_orderkey),
-    pp AS (
-      SELECT unnest(flatten(list_transform(range(1, len(ps)),
-               i -> list_transform(range(i + 1, len(ps) + 1),
-                 j -> struct_pack(p1 := ps[i], p2 := ps[j]))))) AS pr
-      FROM b WHERE len(ps) >= 2),
-    sup AS (
-      SELECT pr.p1 AS p1, pr.p2 AS p2 FROM pp GROUP BY 1, 2
-      HAVING COUNT(*) >= {min_support}),
-    e AS MATERIALIZED (
-      SELECT p1 AS src, p2 AS dst FROM sup
-      UNION ALL SELECT p2, p1 FROM sup),
-    deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-    sd AS MATERIALIZED (
-      SELECT src AS seed FROM deg ORDER BY deg DESC, src LIMIT 1),
-    n AS MATERIALIZED (
-      SELECT DISTINCT src AS node,
-             CASE WHEN src = (SELECT seed FROM sd) THEN 1 ELSE 0 END
-               AS is_seed
-      FROM e),
-    s0 AS MATERIALIZED (
-      SELECT node, CAST(is_seed * 1000000 AS BIGINT) AS score FROM n)"""]
-    for t in range(1, iters + 1):
-        p = t - 1
-        parts.append(f"""
-    c{t} AS (
-      SELECT e.dst, CAST(SUM(s.score // d.deg) AS BIGINT) AS inc
-      FROM e JOIN s{p} s ON s.node = e.src
-             JOIN deg d ON d.src = e.src
-      GROUP BY e.dst),
-    s{t} AS MATERIALIZED (
-      SELECT n.node,
-             CAST(n.is_seed * {base}
-                  + (85 * COALESCE(c{t}.inc, 0)) // 100 AS BIGINT)
-               AS score
-      FROM n LEFT JOIN c{t} ON c{t}.dst = n.node)""")
-    return ",".join(parts) + f"""
-    SELECT node AS part, score FROM s{iters}
-    WHERE score > 0
-      AND node <> (SELECT seed FROM sd)
-      AND node NOT IN (SELECT dst FROM e WHERE src = (SELECT seed FROM sd))
-    ORDER BY score DESC, node LIMIT {k}
-    """
-
-
-@query("ppr_recommendations", _ppr_oracle_sql())
-def ppr_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph-based recommendations by personalized PageRank: random
-    walks restart at the SEED part (the highest-degree node in the
-    co-purchase graph, ties to the smallest id — a hub seed keeps the
-    2+-hop candidate set non-empty even when the graph is sparse),
-    so score = proximity to the seed, not global popularity —
-    and the readout drops the seed and its direct neighbors, leaving
-    exactly the non-obvious 2+-hop candidates a co-occurrence
-    recommender can't see. Three integer-quantized damped iterations
-    (bit-deterministic, SQL-replayable); top-15 by (score, part).
-    Scale: identical per-iteration join volume to pagerank_copurchase;
-    the neighbor-exclusion is one seed-keyed semi-join. Scale notes:
-    operators/graph.py personalized_pagerank."""
-    from rocketmq_flink_spark.operators.graph import personalized_pagerank
-
-    sup = (
-        copurchase_support(spark, sf_dir)
-        .where(F.col("s") >= 2)
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    )
-    e = sup.unionAll(
-        sup.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # four consumers (degrees, iteration joins, hub-seed selection,
-    # neighbor exclusion) re-plan the co-purchase kernel per action
-    # without these cuts (optimization r08)
-    e = e.transform(_cut_big)
-    seeds = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .orderBy(F.desc("deg"), "src")
-        .limit(1)
-        .select(F.col("src").alias("node"))
-        .transform(cut)
-    )
-    scores = personalized_pagerank(e, seeds, iters=3)
-    nbrs = e.join(
-        seeds.select(F.col("node").alias("seed")),
-        F.col("src") == F.col("seed"),
-    ).select(F.col("dst").alias("node")).distinct()
-    excl = nbrs.unionAll(seeds.select("node")).distinct()
-    return (
-        scores.where(F.col("score") > 0)
-        .join(excl, "node", "left_anti")
-        .select(
-            F.col("node").cast("long").alias("part"),
-            F.col("score").cast("long").alias("score"),
-        )
-        .orderBy(F.desc("score"), "part")
-        .limit(15)
-    )
-
-
-def _hilbert_oracle_sql() -> str:
-    from rocketmq_flink_spark.operators.layout import (
-        hilbert_sql_layers,
-        morton_expr_sql,
-        scale_sql,
-    )
-
-    inner = f"""
-      SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber,
-             {scale_sql('l_partkey', '(SELECT MAX(l_partkey) FROM sam)', 8)}
-               AS hx,
-             {scale_sql('l_suppkey', '(SELECT MAX(l_suppkey) FROM sam)', 8)}
-               AS hy
-      FROM sam"""
-    hil = hilbert_sql_layers(
-        inner, ["l_partkey", "l_suppkey", "l_orderkey", "l_linenumber"], 8
-    )
-    z = morton_expr_sql(
-        scale_sql("l_partkey", "(SELECT MAX(l_partkey) FROM sam)", 8),
-        scale_sql("l_suppkey", "(SELECT MAX(l_suppkey) FROM sam)", 8),
-        bits=8,
-    )
-    return f"""
-    WITH sam AS MATERIALIZED (
-      SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber
-      FROM lineitem
-      WHERE {_ZORDER_SAMPLE_SQL}
-    ),
-    hb AS ({hil}),
-    lay AS (
-      SELECT 'hilbert' AS layout, l_partkey, l_suppkey,
-             ntile(32) OVER (ORDER BY hkey, l_orderkey, l_linenumber)
-               AS bucket
-      FROM hb
-      UNION ALL
-      SELECT 'zorder', l_partkey, l_suppkey,
-             ntile(32) OVER (ORDER BY {z}, l_orderkey, l_linenumber)
-      FROM sam
-      UNION ALL
-      SELECT 'partkey', l_partkey, l_suppkey,
-             ntile(32) OVER (ORDER BY l_partkey, l_orderkey, l_linenumber)
-      FROM sam
-    ),
-    spans AS (
-      SELECT layout, bucket,
-             MAX(l_partkey) - MIN(l_partkey) AS part_span,
-             MAX(l_suppkey) - MIN(l_suppkey) AS supp_span
-      FROM lay GROUP BY 1, 2
-    )
-    SELECT layout,
-           ROUND(CAST(SUM(part_span) AS DOUBLE) / COUNT(*), 2)
-             AS avg_part_span,
-           ROUND(CAST(SUM(supp_span) AS DOUBLE) / COUNT(*), 2)
-             AS avg_supp_span
-    FROM spans GROUP BY layout ORDER BY layout
-    """
-
-
-@query("hilbert_layout_report", _hilbert_oracle_sql())
-def hilbert_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve layout quality vs Morton vs single-key sort, on
-    the same deterministic 1-in-8 sample and 32-tile protocol as
-    zorder_skipping_report. Hilbert's walk never jumps (consecutive
-    cells are always grid-adjacent), so equal-count key tiles map to
-    more compact (partkey, suppkey) blobs than Morton's Z-jumps —
-    tighter per-bucket min/max spans means parquet row-group stats
-    prune more point/range queries on BOTH keys. The index is the
-    standard xy2d rotation walk over 8-bit scaled keys, unrolled into
-    8 pure-integer projection layers — whole-stage codegen, no
-    Python, no shuffle (the report's only shuffle is the tiling
-    window on the bounded sample; the production re-layout is
-    repartitionByRange(hkey), exactly like Z-order). Oracle replays
-    the identical walk as nested-SELECT SQL. Scale notes:
-    operators/layout.py hilbert_cols."""
-    from rocketmq_flink_spark.operators.layout import (
-        hilbert_cols,
-        morton_expr_sql,
-        scale_sql,
-    )
-
-    li = (
-        load_tables(spark, sf_dir)["lineitem"]
-        .select("l_partkey", "l_suppkey", "l_orderkey", "l_linenumber")
-        .where(F.expr(_ZORDER_SAMPLE_SQL))
-    )
-    mx = li.agg(
-        F.max("l_partkey").alias("pmax"), F.max("l_suppkey").alias("smax")
-    )
-    base = li.crossJoin(F.broadcast(mx))
-    # ONE keyed frame carrying BOTH curve keys (the 8-layer Hilbert
-    # rotation walk and the Morton interleave are each evaluated exactly
-    # once over the 1-in-8 sample, and the cut stops Catalyst collapsing
-    # the chained projection into every consumer — r08), then ONE
-    # unified ntile pipeline over the 3-layout union (optimization r09,
-    # guide §2.4: r08 ran the distributed-ntile machinery — stats pass,
-    # bucket totals, offsets self-join + broadcast, bucket-partitioned
-    # window — once PER LAYOUT, 37 driver jobs per run; unioning
-    # (layout, skey) first runs each of those stages once, partitioned
-    # by layout). Positions — and therefore ntile buckets and spans —
-    # are invariant to the internal range bucketing, which is monotone
-    # in skey per layout, so the result is bit-identical.
-    keyed = hilbert_cols(
-        base.withColumn("hx", F.expr(scale_sql("l_partkey", "pmax", 8)))
-        .withColumn("hy", F.expr(scale_sql("l_suppkey", "smax", 8))),
-        order=8,
-    ).withColumn(
-        "zkey",
-        F.expr(
-            morton_expr_sql(
-                scale_sql("l_partkey", "pmax", 8),
-                scale_sql("l_suppkey", "smax", 8),
-                bits=8,
-            )
-        ),
-    ).select(
-        "l_partkey", "l_suppkey", "l_orderkey", "l_linenumber",
-        "hkey", "zkey",
-    ).transform(_cut_big)
-
-    def arm(name, key):
-        return keyed.select(
-            F.lit(name).alias("layout"),
-            F.col(key).cast("long").alias("skey"),
-            "l_partkey", "l_suppkey", "l_orderkey", "l_linenumber",
-        )
-
-    lay = (
-        arm("hilbert", "hkey")
-        .unionAll(arm("zorder", "zkey"))
-        .unionAll(arm("partkey", "l_partkey"))
-    )
-    # per-layout key bounds + row count in one tiny broadcast agg; the
-    # linear range bucket is deterministic in the data (replayable, no
-    # sampling), exactly the distributed_prefix scheme
-    st = lay.groupBy("layout").agg(
-        F.min("skey").alias("_lo"),
-        F.max("skey").alias("_hi"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    b = lay.join(F.broadcast(st), "layout").withColumn(
-        "_bkt",
-        F.expr("CAST((skey - _lo) DIV ((_hi - _lo) DIV 64 + 1) AS INT)"),
-    )
-    tot = b.groupBy("layout", "_bkt").agg(
-        F.count(F.lit(1)).cast("long").alias("_bn")
-    )
-    prev = tot.select(
-        F.col("layout").alias("_l2"),
-        F.col("_bkt").alias("_b2"),
-        "_bn",
-    )
-    off = (
-        tot.select("layout", "_bkt")
-        .join(
-            prev,
-            (F.col("_l2") == F.col("layout"))
-            & (F.col("_b2") < F.col("_bkt")),
-            "left",
-        )
-        .groupBy("layout", "_bkt")
-        .agg(F.coalesce(F.sum("_bn"), F.lit(0)).alias("_off"))
-    )
-    w = Window.partitionBy("layout", "_bkt").orderBy(
-        "skey", "l_orderkey", "l_linenumber"
-    )
-    from rocketmq_flink_spark.operators.ranking import ntile_from_pos_sql
-
-    pos = b.join(F.broadcast(off), ["layout", "_bkt"]).withColumn(
-        "_pos", (F.col("_off") + F.row_number().over(w)).cast("long")
-    )
-    lay = pos.select(
-        "layout",
-        "l_partkey",
-        "l_suppkey",
-        F.expr(ntile_from_pos_sql("_pos", "_n", 32)).alias("bucket"),
-    )
-    spans = lay.groupBy("layout", "bucket").agg(
-        (F.max("l_partkey") - F.min("l_partkey")).alias("part_span"),
-        (F.max("l_suppkey") - F.min("l_suppkey")).alias("supp_span"),
-    )
-    return (
-        spans.groupBy("layout")
-        .agg(
-            F.round(
-                F.sum("part_span").cast("double") / F.count(F.lit(1)), 2
-            ).alias("avg_part_span"),
-            F.round(
-                F.sum("supp_span").cast("double") / F.count(F.lit(1)), 2
-            ).alias("avg_supp_span"),
-        )
-        .orderBy("layout")
     )
 
 
@@ -21189,7 +19047,7 @@ def encoding_size_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, and projected bytes under PLAIN / DICTIONARY
     (bit-packed indices + dictionary) / RLE — the decision table a
     storage layer consults before writing a column chunk, and the
-    quantitative reason sort order (zorder/hilbert reports) changes
+    quantitative reason sort order changes
     file sizes, not just pruning. Integer arithmetic only (bit width
     = bin-length of ndv-1, half-open byte rounding). Scale: the run
     count is fully distributed — the exact global position comes from

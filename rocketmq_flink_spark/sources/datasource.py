@@ -110,27 +110,10 @@ def _read_partition(part: QueueRange):
         # filter runs here, below the DataFrame layer. Compiled once per
         # partition; evaluated VECTORIZED (map_lookup per referenced
         # property + numpy column program — functions/sql92.py arrow
-        # backend) with the reference-shaped per-message closure as
-        # fallback.
-        from rocketmq_flink_spark.functions.sql92 import (
-            compile_sql92,
-            compile_sql92_arrow,
-        )
+        # backend); an evaluation error fails the task.
+        from rocketmq_flink_spark.functions.sql92 import compile_sql92_arrow
 
-        try:
-            mask = compile_sql92_arrow(part.sql).mask(tbl.column("props"))
-        except Exception:  # pragma: no cover - defensive fallback
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "vectorized SQL92 filter failed for %r; falling back to "
-                "the per-message closure (slow path)", part.sql,
-                exc_info=True,
-            )
-            pred = compile_sql92(part.sql)
-            props_rows = tbl.column("props").to_pylist()
-            mask = pa.array([pred(dict(kvs or []))
-                             for kvs in props_rows])
+        mask = compile_sql92_arrow(part.sql).mask(tbl.column("props"))
         tbl = tbl.filter(mask)
         if tbl.num_rows == 0:
             return

@@ -106,17 +106,6 @@ def test_ndcg_bounds_and_perfect_case(spark):
     assert (df["hits_at_10"] <= df["n_rel_corpus"].clip(upper=10)).all()
 
 
-def test_kcore_trajectory_monotone_and_converged(spark):
-    df = _run(spark, "kcore_peeling_copurchase").sort_values("round")
-    nodes, edges = list(df["n_nodes"]), list(df["n_edges"])
-    assert all(b <= a for a, b in zip(nodes, nodes[1:]))
-    assert all(b <= a for a, b in zip(edges, edges[1:]))
-    # fixture converges before round 8, so the tail is the true 2-core
-    assert nodes[-1] == nodes[-2] and edges[-1] == edges[-2]
-    # every surviving node has degree >= 2 => edges >= nodes (cycles)
-    assert edges[-1] >= nodes[-1]
-
-
 def test_benford_shares_and_digit_counts(spark):
     df = _run(spark, "benford_first_digit_orders")
     assert list(df["digit"]) == list(range(1, 10))

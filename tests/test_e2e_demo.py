@@ -172,3 +172,29 @@ def test_corpus_monitoring_example(spark):
     assert 0.0 <= report["token_drift_tv"] <= 1.0
     q = report["doc_len_quantiles"]
     assert q["p50"] <= q["p95"] <= q["p99"]
+
+
+def test_corpus_curation_example(spark):
+    """The examples/ curation job must run end to end: line dedup
+    removes some boilerplate, the containment scan keeps a non-empty
+    subset of the corpus, and the BPE trainer runs every merge step."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "examples")
+    )
+    import corpus_curation_pipeline as cc
+
+    out = cc.run(spark, SF)
+    assert set(out) == {
+        "line_dedup_removed_lines", "docs_kept_after_containment",
+        "bpe_merges", "post_bpe_symbols",
+    }
+    n_docs = load_tables(spark, SF)["documents"].count()
+    assert out["line_dedup_removed_lines"] > 0
+    assert 0 < out["docs_kept_after_containment"] < n_docs
+    assert len(out["bpe_merges"]) == 6
+    counts = [c for _, _, c in out["bpe_merges"]]
+    assert all(c > 0 for c in counts)
+    assert out["post_bpe_symbols"] > 0

@@ -1,10 +1,8 @@
-"""Unit tests for the round-4 additions: deterministic label
-propagation, multi-source BFS, reciprocal-rank fusion, and the
-fixed-point Naive Bayes classifier (vs a pure-Python witness)."""
+"""Unit tests for the round-4 additions: reciprocal-rank fusion, the
+fixed-point Naive Bayes classifier (vs a pure-Python witness), and the
+diversity selectors."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from rocketmq_flink_spark.operators.classify import (
     nb_model_ticks,
@@ -12,52 +10,7 @@ from rocketmq_flink_spark.operators.classify import (
     nb_train,
 )
 from rocketmq_flink_spark.operators.fusion import rrf_fuse
-from rocketmq_flink_spark.operators.graph import bfs_hops, label_propagation
 from rocketmq_flink_spark.operators.retrieval import fp_log2_py
-
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "src LONG, dst LONG")
-
-
-def test_label_propagation_two_cliques(spark):
-    # two 4-cliques bridged by a single edge: LPA must separate them
-    c1 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    c2 = [(a, b) for a in range(10, 14) for b in range(10, 14) if a < b]
-    out = label_propagation(
-        _edges(spark, c1 + c2 + [(3, 10)]), iters=4
-    ).collect()
-    comm = {r.node: r.community for r in out}
-    assert len(set(comm[n] for n in range(4))) == 1
-    assert len(set(comm[n] for n in range(10, 14))) == 1
-    assert comm[0] != comm[11]
-    # smallest-label tie-break makes the community ids the clique minima
-    assert comm[1] == 0 and comm[11] == 10
-
-
-def test_label_propagation_deterministic_under_repartition(spark):
-    pairs = [(a, b) for a in range(6) for b in range(6) if a < b][:9]
-    e = _edges(spark, pairs)
-    r1 = sorted(map(tuple, label_propagation(e, iters=3).collect()))
-    r2 = sorted(
-        map(tuple, label_propagation(e.repartition(7), iters=3).collect())
-    )
-    assert r1 == r2
-
-
-def test_bfs_hops_path_graph(spark):
-    # path 0-1-2-3-4-5, seed {0}: dist = node index, horizon cuts at 3
-    e = _edges(spark, [(i, i + 1) for i in range(5)])
-    seeds = e.select(F.lit(0).cast("long").alias("node")).limit(1)
-    out = {r.node: r.dist for r in bfs_hops(e, seeds, max_hops=3).collect()}
-    assert out == {0: 0, 1: 1, 2: 2, 3: 3}  # 4,5 beyond horizon: absent
-
-
-def test_bfs_multi_source_takes_min(spark):
-    e = _edges(spark, [(0, 1), (1, 2), (2, 3), (3, 4)])
-    seeds = spark.createDataFrame([(0,), (4,)], "node LONG")
-    out = {r.node: r.dist for r in bfs_hops(e, seeds, max_hops=3).collect()}
-    assert out == {0: 0, 4: 0, 1: 1, 3: 1, 2: 2}
 
 
 def test_rrf_fuse_hand_computed(spark):
@@ -125,30 +78,6 @@ def test_nb_matches_python_witness(spark):
     assert got[10] == "a" and got[11] == "b"  # sanity: separable docs
 
 
-def test_bfs_per_seed_matches_single_seed_runs(spark):
-    """bfs_hops_per_seed == one bfs_hops per seed, stacked."""
-    from rocketmq_flink_spark.operators.graph import (
-        bfs_hops,
-        bfs_hops_per_seed,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 6), (1, 5)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(1,), (4,)], "node long")
-    got = {
-        (r.seed, r.node): r.dist
-        for r in bfs_hops_per_seed(edges, seeds, max_hops=3).collect()
-    }
-    for s in (1, 4):
-        one = spark.createDataFrame([(s,)], "node long")
-        want = {
-            (s, r.node): r.dist
-            for r in bfs_hops(edges, one, max_hops=3).collect()
-        }
-        assert {k: v for k, v in got.items() if k[0] == s} == want
-
-
 def test_mmr_select_prefers_diversity_over_pure_relevance(spark):
     """With two tight clusters near the query, MMR must not return
     only the nearest cluster: rank 2 comes from the second cluster
@@ -204,78 +133,3 @@ def test_facility_location_gains_nonincreasing_and_distinct(spark):
     assert len(set(ids)) == 3
     assert all(gains[i] >= gains[i + 1] for i in range(len(gains) - 1))
     assert all(g >= 0 for g in gains)
-
-
-def test_sssp_bounded_weighted_beats_hops(spark):
-    # 0-1-2 cheap chain (1+1) vs direct 0-2 expensive edge (5):
-    # hop count prefers 0-2, weighted distance must prefer the chain.
-    from rocketmq_flink_spark.operators.graph import sssp_bounded
-
-    e = spark.createDataFrame(
-        [(0, 1, 1), (1, 0, 1), (1, 2, 1), (2, 1, 1), (0, 2, 5), (2, 0, 5)],
-        "src LONG, dst LONG, w LONG",
-    )
-    seeds = spark.createDataFrame([(0,)], "node LONG")
-    out = {r.node: r.dist for r in sssp_bounded(e, seeds, rounds=4).collect()}
-    assert out == {0: 0, 1: 1, 2: 2}
-
-
-def test_sssp_bounded_horizon_is_path_length(spark):
-    # rounds=1 can only relax one edge: the 2-edge cheap path is not
-    # yet visible, the direct expensive edge is the round-1 optimum.
-    from rocketmq_flink_spark.operators.graph import sssp_bounded
-
-    e = spark.createDataFrame(
-        [(0, 1, 1), (1, 2, 1), (0, 2, 5)], "src LONG, dst LONG, w LONG"
-    )
-    seeds = spark.createDataFrame([(0,)], "node LONG")
-    out = {r.node: r.dist for r in sssp_bounded(e, seeds, rounds=1).collect()}
-    assert out == {0: 0, 1: 1, 2: 5}
-    out2 = {r.node: r.dist for r in sssp_bounded(e, seeds, rounds=2).collect()}
-    assert out2 == {0: 0, 1: 1, 2: 2}
-
-
-def test_sssp_deterministic_under_repartition(spark):
-    from rocketmq_flink_spark.operators.graph import sssp_bounded
-
-    pairs = [(a, b, (a * 7 + b * 3) % 5 + 1) for a in range(8) for b in range(8) if a != b]
-    e = spark.createDataFrame(pairs, "src LONG, dst LONG, w LONG")
-    seeds = spark.createDataFrame([(0,)], "node LONG")
-    r1 = sorted(map(tuple, sssp_bounded(e, seeds, rounds=3).collect()))
-    r2 = sorted(
-        map(tuple, sssp_bounded(e.repartition(11), seeds, rounds=3).collect())
-    )
-    assert r1 == r2
-
-
-def test_personalized_pagerank_mass_stays_near_seed(spark):
-    # barbell: clique {0,1,2} - bridge - clique {10,11,12}; seeding at 0
-    # must score the near clique strictly above the far one.
-    from rocketmq_flink_spark.operators.graph import personalized_pagerank
-
-    und = [(0, 1), (0, 2), (1, 2), (2, 10), (10, 11), (10, 12), (11, 12)]
-    e = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src LONG, dst LONG"
-    )
-    seeds = spark.createDataFrame([(0,)], "node LONG")
-    s = {r.node: r.score for r in personalized_pagerank(e, seeds, iters=3).collect()}
-    assert s[0] > 0 and s[1] > 0
-    assert min(s[0], s[1], s[2]) > max(s[11], s[12])
-
-
-def test_personalized_pagerank_deterministic_under_repartition(spark):
-    from rocketmq_flink_spark.operators.graph import personalized_pagerank
-
-    und = [(a, b) for a in range(6) for b in range(6) if a < b]
-    e = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src LONG, dst LONG"
-    )
-    seeds = spark.createDataFrame([(0,)], "node LONG")
-    r1 = sorted(map(tuple, personalized_pagerank(e, seeds, iters=3).collect()))
-    r2 = sorted(
-        map(
-            tuple,
-            personalized_pagerank(e.repartition(9), seeds, iters=3).collect(),
-        )
-    )
-    assert r1 == r2

@@ -268,85 +268,6 @@ def test_multimodal_stub_and_features(spark, docs):
     assert [row.chunk_idx for row in r] == list(range(0, (len(r) - 1) * 4 + 1, 4))
 
 
-def test_salted_join_matches_plain_join(spark):
-    from rocketmq_flink_spark.operators.joins import salted_join
-    from rocketmq_flink_spark.session import load_tables
-
-    li = load_tables(spark, "/root/testdata/sf0.001")["lineitem"].select(
-        "l_orderkey", "l_quantity"
-    )
-    orders = load_tables(spark, "/root/testdata/sf0.001")["orders"].select(
-        "o_orderkey", "o_custkey"
-    )
-    plain = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        "l_orderkey", "l_quantity", "o_custkey"
-    )
-    salted = salted_join(
-        li.withColumnRenamed("l_orderkey", "k"),
-        orders.withColumnRenamed("o_orderkey", "k"),
-        on="k",
-        salt=8,
-    ).select(F.col("k").alias("l_orderkey"), "l_quantity", "o_custkey")
-    assert salted.count() == plain.count()
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
-
-
-def test_salted_join_spreads_planted_hot_key(spark):
-    """Skew-hardening proof: plant a hot key holding half of lineitem,
-    then assert (a) results stay identical to the plain join, (b) the
-    hot key's reducer concentration — the determinant of task-time
-    spread at scale — shrinks by >= 3x under salting, and (c) the
-    salted plan stays an equi-join (no nested-loop/cartesian
-    degradation when the broadcast of the salt range composes in)."""
-    from rocketmq_flink_spark.operators.joins import salted_join
-    from rocketmq_flink_spark.session import load_tables
-
-    t = load_tables(spark, "/root/testdata/sf0.01")
-    planted = t["lineitem"].withColumn(
-        "l_suppkey",
-        F.when(F.col("l_orderkey") % 2 == 0, F.lit(7)).otherwise(
-            F.col("l_suppkey")
-        ),
-    ).select("l_suppkey", "l_orderkey", "l_quantity")
-    right = t["supplier"].select(
-        F.col("s_suppkey").alias("l_suppkey"), "s_name"
-    )
-
-    # (a) equivalence on the skewed input
-    plain = planted.join(right, "l_suppkey")
-    salted = salted_join(planted, right, "l_suppkey", salt=16)
-    assert salted.count() == plain.count()
-    assert salted.exceptAll(plain).count() == 0
-
-    # (b) reducer concentration: model the join exchange's hash
-    # partitioning (pmod(hash(keys), N)) with and without the salt
-    n, salt = 32, 16
-    total = planted.count()
-    unsalted_max = (
-        planted.groupBy(F.pmod(F.hash("l_suppkey"), F.lit(n)).alias("p"))
-        .count().agg(F.max("count")).first()[0]
-    )
-    salted_max = (
-        planted.withColumn(
-            "_salt",
-            (F.crc32(F.concat_ws(
-                "\x00", F.col("l_suppkey").cast("string"),
-                F.monotonically_increasing_id().cast("string"))) % salt
-             ).cast("int"),
-        )
-        .groupBy(F.pmod(F.hash("l_suppkey", "_salt"), F.lit(n)).alias("p"))
-        .count().agg(F.max("count")).first()[0]
-    )
-    assert unsalted_max >= 0.5 * total  # the plant worked
-    assert salted_max <= unsalted_max / 3, (unsalted_max, salted_max)
-
-    # (c) no degradation to a non-equi join
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_ivf_recall_vs_exact(spark, emb):
     q = emb.where(F.col("vec_id") < 20)
     exact = S.knn_bruteforce(q, emb, k=5)
@@ -1076,38 +997,6 @@ def test_fuzzy_contamination_catches_near_match_only(spark):
     assert d1c0 and all(0 < d <= 4 for d in d1c0)
 
 
-def test_morton_code_matches_python_reference_and_layout_plan(spark):
-    """Morton interleave must equal the bit-twiddling reference for
-    arbitrary 16-bit pairs, and zorder_layout must range-partition +
-    sort by zkey without any Python node."""
-    from pyspark.sql import functions as F
-
-    from rocketmq_flink_spark.operators.layout import (
-        morton_code,
-        zorder_layout,
-    )
-
-    def ref(x, y):
-        z = 0
-        for i in range(16):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    df = spark.createDataFrame(
-        [(3, 5), (0, 0), (65535, 65535), (12345, 54321), (1, 65534)],
-        "x INT, y INT",
-    )
-    got = df.select("x", "y", morton_code("x", "y").alias("z")).collect()
-    for r in got:
-        assert r.z == ref(r.x, r.y), (r.x, r.y)
-    laid = zorder_layout(df, "x", "y", partitions=2)
-    plan = laid._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
-    assert "rangepartitioning" in plan.lower().replace(" ", "")
-    assert "Sort" in plan
-
-
 def test_pq_codes_compress_and_rerank_beats_raw_adc(spark, emb):
     """PQ structural properties: every code is in [0, k); codes are
     m per vector; and the shortlist+exact-rerank stage must reach at
@@ -1251,74 +1140,6 @@ def test_sq8_quantize_codes_and_rerank_recall(spark, emb):
            for r in sq8_topk_rerank(q, emb, k=5, shortlist=50).collect()}
     recall = len(exact & got) / len(exact)
     assert recall >= 0.9, f"SQ8 rerank recall too low: {recall}"
-
-
-def test_zorder_layout_tightens_parquet_file_stats(spark, tmp_path):
-    """The actual data-skipping proof: write lineitem under natural
-    order and under zorder_layout, read back each parquet file's
-    min/max column statistics from the footers (what a scan prunes
-    with), and assert the Morton layout shrinks the average per-file
-    range of BOTH keys — i.e., a point query on either key can skip
-    most files only in the z-ordered table.
-
-    AQE is disabled for the two writes: under co-load, AQE's runtime
-    shuffle re-planning can change how many files each write produces,
-    which moves the per-file span past the margin even though the
-    layout itself is fine (observed in the r5 judge run). With AQE off
-    both plans are fully deterministic; the file-count asserts pin
-    that so any future layout drift fails loudly, not marginally."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from rocketmq_flink_spark.operators.layout import zorder_layout
-    from rocketmq_flink_spark.session import load_tables
-
-    li = load_tables(spark, "/root/testdata/sf0.01")["lineitem"].select(
-        "l_partkey", "l_suppkey"
-    )
-    mx = li.agg(
-        F.max("l_partkey").alias("pmax"), F.max("l_suppkey").alias("smax")
-    ).first()
-    nat_dir = str(tmp_path / "nat")
-    zo_dir = str(tmp_path / "zo")
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        li.repartition(8).write.parquet(nat_dir)
-        zorder_layout(
-            li, "l_partkey", "l_suppkey", partitions=8,
-            x_max=mx.pmax, y_max=mx.smax,
-        ).drop("zkey").write.parquet(zo_dir)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    assert len(glob.glob(f"{nat_dir}/*.parquet")) == 8
-    assert len(glob.glob(f"{zo_dir}/*.parquet")) == 8
-
-    def avg_spans(d):
-        spans = []
-        for f in glob.glob(f"{d}/*.parquet"):
-            meta = pq.ParquetFile(f).metadata
-            lo = [None, None]
-            hi = [None, None]
-            for rg in range(meta.num_row_groups):
-                for ci, col in enumerate(("l_partkey", "l_suppkey")):
-                    idx = {meta.row_group(rg).column(i).path_in_schema: i
-                           for i in range(meta.row_group(rg).num_columns)}[col]
-                    st = meta.row_group(rg).column(idx).statistics
-                    lo[ci] = st.min if lo[ci] is None else min(lo[ci], st.min)
-                    hi[ci] = st.max if hi[ci] is None else max(hi[ci], st.max)
-            spans.append((hi[0] - lo[0], hi[1] - lo[1]))
-        n = len(spans)
-        return sum(s[0] for s in spans) / n, sum(s[1] for s in spans) / n
-
-    nat_part, nat_supp = avg_spans(nat_dir)
-    zo_part, zo_supp = avg_spans(zo_dir)
-    # zorder must tighten BOTH dimensions vs the natural layout; 0.7
-    # (not 0.6) leaves headroom over the deterministic value so the
-    # assertion is about the layout property, not a knife-edge margin
-    assert zo_part < nat_part * 0.7, (zo_part, nat_part)
-    assert zo_supp < nat_supp * 0.7, (zo_supp, nat_supp)
 
 
 def test_semantic_dedup_keep_lowest_id_within_cluster(spark):
@@ -1762,41 +1583,6 @@ def test_pmi_collocations_hand_computed(spark):
     assert lifts == sorted(lifts, reverse=True)
 
 
-def test_edit_distance_pairs_symspell_blocking(spark):
-    from rocketmq_flink_spark.operators.fuzzy import edit_distance_pairs
-
-    df = spark.createDataFrame(
-        [(s,) for s in ["cat", "cut", "cats", "dog", "dgo", "cat"]],
-        ["name"],
-    )
-    got = {
-        (r["a"], r["b"]): r["dist"]
-        for r in edit_distance_pairs(df, "name").collect()
-    }
-    # substitution + insertion pairs found; transposition (dist 2,
-    # "dog"/"dgo") shares a deletion variant but is verified OUT
-    assert got == {("cat", "cats"): 1, ("cat", "cut"): 1}
-
-
-def test_edit_distance_pairs_empty_string(spark):
-    from rocketmq_flink_spark.operators.fuzzy import edit_distance_pairs
-
-    df = spark.createDataFrame(
-        [(s,) for s in ["", "a", "b", "ab", None]], ["name"]
-    )
-    got = {
-        (r["a"], r["b"]): r["dist"]
-        for r in edit_distance_pairs(df, "name").collect()
-    }
-    assert got == {
-        ("", "a"): 1,
-        ("", "b"): 1,
-        ("a", "ab"): 1,
-        ("ab", "b"): 1,
-        ("a", "b"): 1,
-    }
-
-
 def _py_bpe_reference(words: list[str], steps: int):
     """Greedy BPE trainer, plain Python, same tie-break (count desc,
     then lexicographic pair)."""
@@ -2050,63 +1836,6 @@ def test_bpe_batched_equals_sequential(spark):
     assert got_vocab == exp_vocab
 
 
-def test_triangle_count_matches_bruteforce(spark):
-    from itertools import combinations
-
-    from rocketmq_flink_spark.operators.graph import triangle_count
-
-    # K4 on {1,2,3,4} + a pendant + a separate triangle {10,11,12}
-    edges = (
-        [(a, b) for a, b in combinations([1, 2, 3, 4], 2)]
-        + [(4, 5)]
-        + [(10, 11), (11, 12), (10, 12)]
-        + [(2, 1)]  # duplicate reverse edge must not double-count
-    )
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["n_triangles"]
-           for r in triangle_count(df).collect()}
-    # K4: each node in C(3,2)=3 triangles; pendant 0; triangle nodes 1
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 0, 10: 1, 11: 1, 12: 1}
-
-
-def test_pagerank_integer_matches_python_reference(spark):
-    from rocketmq_flink_spark.operators.graph import pagerank_integer
-
-    # small directed graph (every node has out-degree >= 1)
-    edges = [(1, 2), (2, 1), (2, 3), (3, 1), (4, 1), (1, 4)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-
-    def py_pagerank(edges, iters=3, scale=1_000_000):
-        from collections import defaultdict
-
-        outs = defaultdict(list)
-        nodes = set()
-        for s, d in edges:
-            outs[s].append(d)
-            nodes |= {s, d}
-        score = {n: scale for n in nodes}
-        for _ in range(iters):
-            inc = defaultdict(int)
-            for s, ds in outs.items():
-                c = score[s] // len(ds)
-                for d in ds:
-                    inc[d] += c
-            score = {
-                n: (15 * scale) // 100 + (85 * inc[n]) // 100
-                for n in nodes
-            }
-        return score
-
-    exp = py_pagerank(edges)
-    got = {
-        r["node"]: r["score"]
-        for r in pagerank_integer(df, iters=3).collect()
-    }
-    assert got == exp
-    # rank sanity: node 1 (most inlinks) scores highest
-    assert max(exp, key=exp.get) == 1
-
-
 def test_containment_pairs_finds_subsumed_doc(spark):
     from rocketmq_flink_spark.operators.dedup import containment_pairs
 
@@ -2258,70 +1987,6 @@ def test_audio_frame_energy_matches_numpy_witness(spark):
                 int(np.sum(fr[1:] * fr[:-1] < 0)),
                 int(np.max(np.abs(fr))),
             )
-
-
-def test_hilbert_cols_matches_python_witness_all_cells(spark):
-    """Spark hilbert_cols over every cell of the order-4 grid must
-    equal the pure-Python xy2d walk, and the index must be a
-    bijection onto [0, 256)."""
-    from rocketmq_flink_spark.operators.layout import (
-        hilbert_cols,
-        hilbert_xy2d_py,
-    )
-
-    cells = [(x, y) for x in range(16) for y in range(16)]
-    df = spark.createDataFrame(cells, "hx LONG, hy LONG")
-    got = {
-        (r.ox, r.oy): r.hkey
-        for r in hilbert_cols(
-            df.withColumn("ox", F.col("hx")).withColumn("oy", F.col("hy")),
-            order=4,
-        ).collect()
-    }
-    assert got == {
-        (x, y): hilbert_xy2d_py(4, x, y) for x, y in cells
-    }
-    assert sorted(got.values()) == list(range(256))
-
-
-def test_hilbert_sql_layers_match_python_witness(spark):
-    """The DuckDB nested-SELECT replay of the walk is the same
-    function (oracle-side pin)."""
-    import duckdb
-
-    from rocketmq_flink_spark.operators.layout import (
-        hilbert_sql_layers,
-        hilbert_xy2d_py,
-    )
-
-    inner = (
-        "SELECT CAST(x.g AS BIGINT) AS ox, CAST(y.g AS BIGINT) AS oy,"
-        " CAST(x.g AS BIGINT) AS hx, CAST(y.g AS BIGINT) AS hy"
-        " FROM range(16) x(g), range(16) y(g)"
-    )
-    sql = hilbert_sql_layers(inner, ["ox", "oy"], order=4)
-    rows = duckdb.connect().execute(sql).fetchall()
-    got = {(ox, oy): hk for ox, oy, hk in rows}
-    assert got == {
-        (x, y): hilbert_xy2d_py(4, x, y)
-        for x in range(16)
-        for y in range(16)
-    }
-
-
-def test_hilbert_adjacency_no_jumps():
-    """Consecutive Hilbert indices are always grid neighbors (the
-    locality property Morton lacks) — order 5, all 1024 cells."""
-    from rocketmq_flink_spark.operators.layout import hilbert_xy2d_py
-
-    inv = {}
-    for x in range(32):
-        for y in range(32):
-            inv[hilbert_xy2d_py(5, x, y)] = (x, y)
-    assert len(inv) == 1024
-    for d in range(1023):
-        (x1, y1), (x2, y2) = inv[d], inv[d + 1]
-        assert abs(x1 - x2) + abs(y1 - y2) == 1
 
 
 def test_png_full_codec_roundtrip_all_filters():
@@ -3417,7 +3082,7 @@ def test_distributed_ntile_matches_window_ntile_all_call_shapes(spark):
     """distributed_ntile must equal the single-partition ntile() window
     bit-for-bit on every call shape — plain (stats pass), domain= (skip
     bounds scan), and domain=+total= (skip the stats scan entirely, the
-    selectivity/hilbert fast path) — including the uneven-remainder
+    fast path) — including the uneven-remainder
     bucketing (n % tiles buckets get one extra row) and duplicate keys
     under a strict tiebreak."""
     import random
@@ -3451,45 +3116,6 @@ def test_distributed_ntile_matches_window_ntile_all_call_shapes(spark):
         assert got == want, kw
     with pytest.raises(ValueError, match="total= requires domain="):
         distributed_ntile(df, ["k", "tie"], "k", 7, total=len(rows))
-
-
-def test_copurchase_support_pure_factory_and_exact(spark):
-    """The shared co-purchase kernel (plans.catalog.copurchase_support)
-    must (a) stay a PURE subplan factory — no persist: the identical
-    exchange is already executed once and reused within a query
-    (ReusedExchange), and a cached variant measured strictly slower on
-    every iterative consumer (see the kernel docstring) — and (b)
-    produce exactly the pair supports of an inline rebuild."""
-    from pyspark import StorageLevel
-
-    from rocketmq_flink_spark.plans.catalog import copurchase_support
-
-    a = copurchase_support(spark, SF)
-    assert a.storageLevel == StorageLevel.NONE  # pure factory, no cache
-
-    li = load_tables(spark, SF)["lineitem"]
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    inline = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(ps) >= 2 THEN"
-                    " flatten(transform(sequence(0, size(ps) - 2),"
-                    "  i -> transform(sequence(i + 1, size(ps) - 1),"
-                    "   j -> struct(ps[i] AS p1, ps[j] AS p2))))"
-                    " ELSE array() END"
-                )
-            ).alias("pr")
-        )
-        .groupBy("pr.p1", "pr.p2")
-        .agg(F.count(F.lit(1)).alias("s"))
-    )
-    got = {(r.p1, r.p2): r.s for r in a.collect()}
-    want = {(r.p1, r.p2): r.s for r in inline.collect()}
-    assert got == want and len(got) > 0
-    assert all(p1 < p2 for p1, p2 in got)  # sorted-basket orientation
 
 
 def test_bm25_ql_shared_toks_stats_equivalence(spark):

@@ -8,94 +8,6 @@ from __future__ import annotations
 import pytest
 
 
-def test_ppr_keeps_unreached_nodes_dense(spark):
-    """The sparse frontier join (scores > 0 pre-filter) must not drop
-    zero-score nodes from the OUTPUT: a path graph seeded at one end
-    with a 1-iteration horizon leaves the far nodes unreached, and they
-    must still appear with score exactly 0."""
-    from rocketmq_flink_spark.operators.graph import personalized_pagerank
-
-    und = [(0, 1), (1, 2), (2, 3), (3, 4)]
-    e = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src LONG, dst LONG"
-    )
-    seeds = spark.createDataFrame([(0,)], "node LONG")
-    s = {
-        r.node: r.score
-        for r in personalized_pagerank(e, seeds, iters=1).collect()
-    }
-    assert set(s) == {0, 1, 2, 3, 4}
-    # seed got teleport mass, its neighbor got spread mass
-    assert s[0] > 0 and s[1] > 0
-    # nodes beyond the 1-hop horizon are present with exact zero
-    assert s[2] == 0 and s[3] == 0 and s[4] == 0
-
-
-def test_ppr_matches_python_witness(spark):
-    """Exact integer witness of the damped update, including the
-    sparse-frontier and nodes-from-degree rewrites."""
-    from rocketmq_flink_spark.operators.graph import personalized_pagerank
-
-    und = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (4, 5), (3, 5)]
-    edges = und + [(b, a) for a, b in und]
-    e = spark.createDataFrame(edges, "src LONG, dst LONG")
-    seeds = spark.createDataFrame([(0,), (5,)], "node LONG")
-
-    def py_ppr(edges, seed_set, iters, scale=1_000_000):
-        from collections import defaultdict
-
-        outs = defaultdict(list)
-        nodes = set()
-        for s, d in edges:
-            outs[s].append(d)
-            nodes |= {s, d}
-        score = {n: (scale if n in seed_set else 0) for n in nodes}
-        base = (15 * scale) // 100
-        for _ in range(iters):
-            inc = defaultdict(int)
-            for s, ds in outs.items():
-                c = score[s] // len(ds)
-                for d in ds:
-                    inc[d] += c
-            score = {
-                n: (base if n in seed_set else 0) + (85 * inc[n]) // 100
-                for n in nodes
-            }
-        return score
-
-    exp = py_ppr(edges, {0, 5}, 3)
-    got = {
-        r.node: r.score
-        for r in personalized_pagerank(e, seeds, iters=3).collect()
-    }
-    assert got == exp
-
-
-def test_triangle_count_canonical_fastpath_equivalent(spark):
-    """assume_canonical=True + with_degree=True over a unique a<b edge
-    list must reproduce the default path's counts, plus the same degree
-    the default path computes internally."""
-    from rocketmq_flink_spark.operators.graph import triangle_count
-
-    # two triangles sharing an edge + a pendant: canonical unique a<b
-    edges = [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (4, 5)]
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    base = {
-        r.node: r.n_triangles
-        for r in triangle_count(df).collect()
-    }
-    fast = {
-        r.node: (r.n_triangles, r.degree)
-        for r in triangle_count(
-            df, assume_canonical=True, with_degree=True
-        ).collect()
-    }
-    assert {n: t for n, (t, _) in fast.items()} == base
-    assert {n: d for n, (_, d) in fast.items()} == {
-        1: 2, 2: 3, 3: 3, 4: 3, 5: 1
-    }
-
-
 def test_nb_predict_tie_breaks_to_smallest_label(spark):
     """The argmax is now a min(struct(-score, c)) aggregation; an exact
     score tie must still resolve to the lexicographically smallest
@@ -119,38 +31,6 @@ def test_nb_predict_tie_breaks_to_smallest_label(spark):
     got = nb_predict(tst, model, priors).collect()
     assert len(got) == 1
     assert got[0].predicted == "a"  # tie -> smallest label
-
-
-def test_label_propagation_single_round_witness(spark):
-    """iters=1 exercises exactly the rewritten identity-label first
-    round: each node must adopt the most frequent (here: smallest,
-    since all neighbor labels are distinct) neighbor id."""
-    from rocketmq_flink_spark.operators.graph import label_propagation
-
-    und = [(0, 1), (0, 2), (3, 0)]  # star centered at 0
-    e = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src LONG, dst LONG"
-    )
-    got = {
-        r.node: r.community
-        for r in label_propagation(e, iters=1).collect()
-    }
-    # leaves see only {0}; 0 sees {1, 2, 3} all once -> smallest = 1
-    assert got == {0: 1, 1: 0, 2: 0, 3: 0}
-
-
-def test_pagerank_nodes_require_outdegree_contract(spark):
-    """pagerank_integer's documented contract (every node has
-    out-degree >= 1) now also defines the node set; a symmetrized
-    graph keeps every node in the output."""
-    from rocketmq_flink_spark.operators.graph import pagerank_integer
-
-    und = [(1, 2), (2, 3)]
-    e = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src LONG, dst LONG"
-    )
-    nodes = {r.node for r in pagerank_integer(e, iters=2).collect()}
-    assert nodes == {1, 2, 3}
 
 
 if __name__ == "__main__":

@@ -126,14 +126,6 @@ def test_embedding_near_dups_single_pipeline(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_hilbert_single_unified_window(spark):
-    """The three layout arms share ONE bucket-partitioned window pass
-    (r08 ran the full ntile machinery per layout)."""
-    plan = _executed(spark, "hilbert_layout_report")
-    assert plan.count("Window") <= 2
-    assert "CartesianProduct" not in plan
-
-
 def test_join_cardinality_no_count_distinct_scans(spark):
     """Stats derive from the per-key count tables: no separate
     count+countDistinct expand pass remains."""

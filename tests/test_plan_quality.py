@@ -196,33 +196,6 @@ def test_bloom_probe_is_pure_expression_no_gram_join_shuffle(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_fuzzy_pairs_no_cartesian_and_hashed_join(spark):
-    # the SymSpell blocking must be a hash equi-join on the variant
-    # hash — never a cartesian/broadcast-nested-loop over names.
-    # Asserted on the OPERATOR frame: the catalog query lineage-cuts
-    # the pair table (optimization r08), so the query's own explain
-    # truncates at an RDD leaf and no longer shows the blocking join —
-    # the operator plan is where the protected shape lives.
-    from rocketmq_flink_spark.operators.fuzzy import edit_distance_pairs
-    from rocketmq_flink_spark.session import load_tables
-
-    cust = load_tables(spark, SF)["customer"]
-    plan = _plan(edit_distance_pairs(cust, "c_name"))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "xxhash64" in plan  # join key is the 8-byte variant hash
-    # and the query on top must not reintroduce a cartesian downstream
-    qplan = _plan(REGISTRY["fuzzy_name_matches"].fn(spark, SF))
-    assert "CartesianProduct" not in qplan
-    assert "BroadcastNestedLoopJoin" not in qplan
-
-
-def test_copurchase_topk_is_take_ordered(spark):
-    plan = _plan(REGISTRY["copurchase_part_pairs"].fn(spark, SF))
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_line_dedup_no_window_over_line_key(spark):
     # the hot-line decision must be a combiner-reduced groupBy + anti
     # join, never a Window exchange materializing every occurrence of a
@@ -239,21 +212,6 @@ def test_pmi_totals_broadcast_and_no_python(spark):
     plan = _plan(REGISTRY["pmi_collocations"].fn(spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "TakeOrderedAndProject" in plan
-
-
-def test_pagerank_no_cartesian_no_python(spark):
-    plan = _plan(REGISTRY["pagerank_copurchase"].fn(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_lpa_and_bfs_no_cartesian_no_python(spark):
-    for name in ("label_propagation_communities", "bfs_hops_copurchase"):
-        plan = _plan(REGISTRY[name].fn(spark, SF))
-        assert "CartesianProduct" not in plan, name
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
 
 
 def test_nb_model_broadcasts_no_cartesian(spark):
@@ -342,28 +300,11 @@ def test_round4c3_stats_ops_no_cartesian_no_python(spark):
         assert "ArrowEvalPython" not in plan, name
 
 
-def test_adamic_adar_weights_broadcast_no_cartesian(spark):
-    plan = _plan(REGISTRY["adamic_adar_links"].fn(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the 1/log2(deg) weight table must reach the edges as a broadcast
-    assert "BroadcastHashJoin" in plan
-    # top-20 runs as TakeOrdered, not a global sort
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_nb_auc_model_broadcasts(spark):
     plan = _plan(REGISTRY["nb_auc_eval"].fn(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "BroadcastHashJoin" in plan  # NB model + truth labels
-
-
-def test_association_rules_broadcast_item_counts(spark):
-    plan = _plan(REGISTRY["association_rules_lift"].fn(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan  # item-frequency dim broadcasts
 
 
 def test_cross_source_dup_collapses_before_pairs(spark):
@@ -396,7 +337,6 @@ def test_round4c3_pipeline_ops_no_cartesian_no_python(spark):
         "rfm_user_segments",
         "bigram_next_token_accuracy",
         "token_budget_waterfill",
-        "copurchase_hitrate_eval",
         "interarrival_histogram",
         "embedding_dim_variance",
         "holt_backtest_mae",
@@ -454,21 +394,17 @@ def test_fulfillment_latency_keeps_shuffle_join(spark):
 
 
 def test_session_c4_ops_no_cartesian_no_python(spark):
-    # continuation-4 wave: audits, causal readouts, retrieval, graph,
-    # layout — all JVM-side; the only Python in any of these plans is
+    # continuation-4 wave: audits, causal readouts, retrieval — all
+    # JVM-side; the only Python in any of these plans is
     # the model-sized driver fold in markov_removal_attribution
     # (excluded here: its output is a literal frame by design)
     for name in (
-        "sssp_weighted_copurchase",
-        "local_clustering_coefficient",
         "functional_dependency_audit",
         "t_closeness_report",
         "did_treatment_effect",
         "token_burstiness_report",
         "slope_one_brand_recs",
         "rake_keyword_extraction",
-        "ppr_recommendations",
-        "hilbert_layout_report",
         "cuped_adjusted_abtest",
         "referential_integrity_audit",
         "bitmap_segment_intersections",

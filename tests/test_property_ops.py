@@ -332,46 +332,6 @@ def test_line_dedup_matches_model(spark, docs):
     assert got == _line_dedup_model(docs, 2)
 
 
-NAME = st.text(alphabet="abc1", min_size=0, max_size=5)
-
-
-def _edit1_model(names):
-    """Brute-force Levenshtein-1 pairs over distinct names."""
-    import itertools
-
-    def lev(a, b):
-        if abs(len(a) - len(b)) > 1:
-            return 2
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[j - 1] + 1,
-                               prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    uniq = sorted(set(names))
-    return {
-        (a, b)
-        for a, b in itertools.combinations(uniq, 2)
-        if lev(a, b) == 1
-    }
-
-
-@given(names=st.lists(NAME, min_size=1, max_size=12))
-@settings(**SETTINGS)
-def test_edit_distance_pairs_match_bruteforce(spark, names):
-    from rocketmq_flink_spark.operators.fuzzy import edit_distance_pairs
-
-    df = spark.createDataFrame([(n,) for n in names], ["name"])
-    got = {
-        (r["a"], r["b"])
-        for r in edit_distance_pairs(df, "name").collect()
-    }
-    assert got == _edit1_model(names)
-
-
 # ---------------------------------------------------------------------------
 # Engine-parity primitives (round 4): dec10 quantization and fp_log2
 # ---------------------------------------------------------------------------
@@ -1882,7 +1842,7 @@ def test_partitioning_invariance_representative_queries(spark):
 
     names = [
         "q1_pricing_summary",          # decimal agg
-        "pagerank_copurchase",         # iterative graph (quantized)
+        "kmeans_cluster_profile",      # iterative fold (quantized)
         "minhash_dedup_groups",        # dedup banding
         "bm25_search_docs",            # fixed-point retrieval
         "scd2_user_event_history",     # window/versioning

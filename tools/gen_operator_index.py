@@ -31,7 +31,7 @@ def main() -> None:
         f"{len(REGISTRY)} queries, every one paired with a DuckDB oracle",
         "and hash-checked (rows + schema + sorted value hash) at sf0.01",
         "and sf0.1. See PARITY.md for the reference-operator mapping and",
-        "PLANS/SCALING/SHUFFLE for the scale evidence.",
+        "SCALING/SHUFFLE for the scale evidence.",
         "",
         "| # | query | what it proves |",
         "|---|---|---|",

@@ -40,51 +40,40 @@ QUERIES = [
     "bloom_decontamination",     # inlined-sketch membership probe
     "token_drift_report",        # exact TV drift monitor
     "leakage_safe_split",      # closure-keyed split
-    "fuzzy_name_matches",      # symspell variant blocking
     "line_dedup_docs",         # hashed line-key anti-join
     "bpe_train_merges",        # iterative trainer (driver-sync/step)
-    "pagerank_copurchase",     # integer power iteration
     "containment_pairs_docs",  # asymmetric shingle containment
     "bm25_search_docs",        # postings-list retrieval
     "kmv_distinct_users",      # salted bottom-k sketch
     "dsir_importance_select",  # hashed log-ratio selection
     "ewma_event_rate",         # integer-fold monitor
-    "label_propagation_communities",  # mode-label graph rounds
     "nb_source_classifier",    # broadcast-scored NB
     "rrf_hybrid_search",       # BM25 + dense rank fusion
     "jl_projection_distortion",  # broadcast sign-matrix projection
     "source_vocab_jaccard",    # token-keyed source self-join
     "heaps_law_vocab_growth",     # first-occurrence prefix-sum curve
     "lang_similarity_jsd",       # shared-gram fp_log2 divergence
-    "kcore_peeling_copurchase",  # 8 checkpointed peel rounds
     "kaplan_meier_signup_to_purchase",  # fold-based survival
     "source_quality_calibration",  # per-source rank window
     "gini_order_concentration",  # histogram prefix-sum Gini
     "mann_kendall_trend_daily",  # calendar-bounded pairwise test
-    "adamic_adar_links",        # capped common-neighbor join
     "zipf_slope_by_source",     # vocab-ranked fp_log2 OLS
     "ams_f2_tokens",            # 16-sign sketch fold
     "nb_auc_eval",              # broadcast-scored rank-sum AUC
     "phrase_search_docs",       # positional postings probe
-    "harmonic_centrality_seeds", # per-seed BFS panel
     "streaming_token_counts",   # stateful streaming count
     "mmr_diversified_topk",       # pool-cut + model-sized greedy
     "facility_location_select",   # submodular greedy, pool-bounded
     "rfm_user_segments",          # histogram quartile cuts
     "bigram_next_token_accuracy", # context-keyed model join
-    "percolation_robustness",     # 2x 8-round min-label components
     "markov_stationary_eventtypes",  # 32-round tiny power iteration
     "jaccard_threshold_sensitivity", # shingle join, 5-way fan
     "fulfillment_latency_profile",   # SF x SF shuffle join
     "sprt_conversion_monitor",    # daily prefix-sum fold
-    "sssp_weighted_copurchase",   # bounded Bellman-Ford rounds
-    "local_clustering_coefficient",  # oriented-wedge triangles + ppm
     "functional_dependency_audit",   # 7x two-stage g3 aggregates
     "token_burstiness_report",    # per-doc count moments
     "slope_one_brand_recs",       # item-matrix self-join + broadcast
     "rake_keyword_extraction",    # islands window + vocab scores
-    "ppr_recommendations",        # seed-teleport power iteration
-    "hilbert_layout_report",      # 8-layer rotation walk + tiling
     "bitmap_segment_intersections",  # word-packed set algebra
     "query_likelihood_search",    # postings + fp_log2 candidates
     "markov_removal_attribution", # journey counts + tiny fold

@@ -45,43 +45,31 @@ QUERIES = [
     "bloom_decontamination",
     "semantic_dedup_drops",
     "deterministic_corpus_shuffle",
-    "fuzzy_name_matches",
     "line_dedup_docs",
     "pmi_collocations",
     "bpe_train_merges",
-    "pagerank_copurchase",
     "containment_pairs_docs",
     "bm25_search_docs",
     "kmv_distinct_users",
     "dsir_importance_select",
     "pca_top_component_embeddings",
-    "label_propagation_communities",
     "nb_source_classifier",
     "rrf_hybrid_search",
     "jl_projection_distortion",
     "source_vocab_jaccard",
-    "triangle_count_copurchase",
     "heaps_law_vocab_growth",
     "lang_similarity_jsd",
-    "kcore_peeling_copurchase",
     "last_touch_attribution",
     "kaplan_meier_signup_to_purchase",
     "gini_order_concentration",
-    "adamic_adar_links",
     "zipf_slope_by_source",
     "ams_f2_tokens",
     "nb_auc_eval",
     "phrase_search_docs",
-    "harmonic_centrality_seeds",
-    "lpa_modularity_score",
-    "association_rules_lift",
     "cross_source_duplication",
     # round 4 continuation 5
-    "sssp_weighted_copurchase",
-    "local_clustering_coefficient",
     "slope_one_brand_recs",
     "rake_keyword_extraction",
-    "ppr_recommendations",
     "bitmap_segment_intersections",
     "query_likelihood_search",
     "token_burstiness_report",
@@ -98,9 +86,6 @@ QUERIES = [
     # round 8: the remaining top-cost extras, audited
     "retrieval_model_comparison",
     "encoding_size_planning",
-    "percolation_robustness",
-    "bfs_hops_copurchase",
-    "hilbert_layout_report",
     # round 8 anchors
     "restart_offsets_replay",
     "acl_denial_audit",
