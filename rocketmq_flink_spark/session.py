@@ -13,7 +13,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_cores() -> str:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _default_driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half this machine's memory, at most 48g."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(half_mb, 48 * 1024)}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = int(_default_cores())
 
 
 def get_spark(
@@ -28,10 +40,9 @@ def get_spark(
     1000-executor deployment would set: AQE on, advisory partition sizes,
     UTC timestamps, Arrow for Python interchange.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{_default_cores()}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -55,7 +66,7 @@ def get_spark(
         # TimestampType — lossless, the fixture has micro precision).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,7 +15,10 @@ Maps RocketMQ's storage model onto the local filesystem:
 Offset semantics replicated from the reference:
 - earliest/latest (RocketMQSourceFunction.java:330-365 initOffset)
 - timestamp lookup = first offset with store_ts >= t
-  (consumer.searchOffset analog, RocketMQPartitionSplitReader.java:139)
+  (consumer.searchOffset analog, RocketMQPartitionSplitReader.java:139),
+  answered from parquet footers: row groups whose store_ts max is below
+  t are skipped unread, so a lookup reads the footers and, where they
+  carry statistics, one row group's offset and store_ts columns
 - bounded read: stop at first record with store_ts > stoppingTimestamp
   (RocketMQPartitionSplitReader.java:190-199).
 """
@@ -26,6 +29,7 @@ import os
 import re
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -110,14 +114,28 @@ class Broker:
         return start + count
 
     def offset_for_timestamp(self, topic: str, queue_id: int, ts_us: int) -> int:
-        """First offset whose store_ts >= ts_us (searchOffset analog)."""
-        for start, count, path in self.segments(topic, queue_id):
-            tbl = pq.read_table(path, columns=["offset", "store_ts"])
-            store = tbl.column("store_ts").to_pylist()
-            offs = tbl.column("offset").to_pylist()
-            for off, st in zip(offs, store):
-                if st >= ts_us:
-                    return off
+        """First offset, in log order, whose store_ts >= ts_us
+        (searchOffset analog).
+
+        store_ts need not be sorted, so segments are walked in order, but
+        only through their parquet footers: a row group whose store_ts
+        max is below ts_us cannot hold the answer and is never read. The
+        first row group that can (or that has no statistics) is read for
+        its offset and store_ts columns alone."""
+        for _, _, path in self.segments(topic, queue_id):
+            pf = pq.ParquetFile(path)
+            md = pf.metadata
+            col = [md.schema.column(j).path
+                   for j in range(md.num_columns)].index("store_ts")
+            for i in range(md.num_row_groups):
+                stats = md.row_group(i).column(col).statistics
+                if stats is not None and stats.has_min_max and stats.max < ts_us:
+                    continue
+                rg = pf.read_row_group(i, columns=["offset", "store_ts"])
+                store = rg.column("store_ts").to_numpy(zero_copy_only=False)
+                hits = np.flatnonzero(store >= ts_us)
+                if hits.size:
+                    return int(rg.column("offset")[int(hits[0])].as_py())
         return self.latest_offset(topic, queue_id)
 
     # -- read -------------------------------------------------------------

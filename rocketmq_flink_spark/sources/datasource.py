@@ -5,12 +5,15 @@ Maps the reference's three integration levels onto Spark's unified one:
 - bounded table scan (RocketMQScanTableSource)          -> DataSourceReader
 - SinkFunction / DynamicTableSink (RocketMQSink.java)   -> (Stream)Writer
 
-Split model: one input partition per (queue, offset-range) — the analog
-of RocketMQPartitionSplit. Partition discovery re-lists queue dirs every
-batch (the enumerator's periodic discovery,
-RocketMQSourceEnumerator.java:148-160, with interval 0). Reader->task
-assignment is left to Spark's scheduler (the reference's getSplitOwner
-hash exists only because Flink pins splits to readers).
+Split model: a queue's offset range is cut into chunks of at most
+maxRecordsPerPartition offsets (the analog of RocketMQPartitionSplit),
+and the chunks are packed into one wave of tasks — min(#chunks,
+max(task slots, ceil(total / maxRecordsPerPartition))) input partitions,
+largest chunk first into the least-loaded one — so one task reads
+several queues, as one reference reader pulls the splits getSplitOwner
+hands it. Partition discovery re-lists queue dirs every batch (the
+enumerator's periodic discovery, RocketMQSourceEnumerator.java:148-160,
+with interval 0).
 
 Offset surface (reference: RocketMQOptions + RocketMQSourceFunction
 initOffset, legacy/RocketMQSourceFunction.java:330-365):
@@ -19,16 +22,20 @@ initOffset, legacy/RocketMQSourceFunction.java:330-365):
   endingTimestamp = <epoch ms>   (bounded read / stopInMs, W6)
   tag             = broker-side tag filter (P1) applied in read()
   maxOffsetsPerTrigger = per-microbatch rate cap across queues
-  maxRecordsPerPartition = split large offset ranges for parallelism
+  maxRecordsPerPartition = most offsets one chunk (and one Arrow batch)
+                           holds; a backlogged queue fans out across
+                           tasks in chunks of this size
 
-Scale notes: read() yields Arrow RecordBatches (vectorized into Spark,
-no per-row Python); ranges are chunked so a backlogged queue fans out
-across tasks instead of serializing into one.
+Scale notes: read() yields one Arrow RecordBatch per chunk (vectorized
+into Spark, no per-row Python), so memory per batch stays bounded by
+maxRecordsPerPartition however many chunks a task packs.
 """
 
 from __future__ import annotations
 
+import heapq
 import json
+import os
 import time
 import zlib
 
@@ -58,6 +65,9 @@ ENVELOPE_DDL = (
     "props map<string,string>, value binary"
 )
 
+# environment variable carrying sc.defaultParallelism to the Python workers
+TASK_SLOTS_ENV = "ROCKETMQ_TASK_SLOTS"
+
 ARROW_ENVELOPE = pa.schema(
     [
         ("topic", pa.string()),
@@ -73,64 +83,74 @@ ARROW_ENVELOPE = pa.schema(
     ]
 )
 
-class QueueRange(InputPartition):
-    def __init__(self, root: str, topic: str, queue_id: int, start: int, end: int,
+class QueueRanges(InputPartition):
+    """One task's share of a scan: offset ranges [(queue_id, start, end)]
+    of one topic, sorted by (queue, start).
+
+    queue_id, start and end summarise the partition: the first range's
+    queue and start offset, with end - start the number of offsets it
+    covers. The empty placeholder has no ranges and queue_id -1."""
+
+    def __init__(self, root: str, topic: str, ranges: list[tuple[int, int, int]],
                  tag: str | None, sql: str | None = None):
         self.root = root
         self.topic = topic
-        self.queue_id = queue_id
-        self.start = start
-        self.end = end
+        self.ranges = ranges
         self.tag = tag
         self.sql = sql
+        self.queue_id, self.start = ranges[0][:2] if ranges else (-1, 0)
+        self.end = self.start + sum(hi - lo for _, lo, hi in ranges)
 
 
-def _read_partition(part: QueueRange):
-    """Executor-side scan of one queue offset-range -> Arrow batches."""
+def _read_partition(part: QueueRanges):
+    """Executor-side scan of one task's queue ranges -> one Arrow batch
+    per range, stamped with that range's queue id."""
+    import pyarrow.compute as pc
+
     broker = Broker(part.root)
-    tbl = call_with_retry(
-        lambda: broker.read_range(part.topic, part.queue_id, part.start, part.end)
-    )
-    if tbl.num_rows == 0:
-        return
+    # Broker-side tag filter analog (consumer.pull(mq, tag, ...),
+    # RocketMQPartitionSplitReader.java:161-163). Tag option supports
+    # the 'a || b' subscription syntax.
+    tags = None
     if part.tag and part.tag != "*":
-        import pyarrow.compute as pc
-
-        # Broker-side tag filter analog (consumer.pull(mq, tag, ...),
-        # RocketMQPartitionSplitReader.java:161-163). Tag option supports
-        # the 'a || b' subscription syntax.
-        tags = [t.strip() for t in part.tag.split("||")]
-        tbl = tbl.filter(pc.is_in(tbl.column("tags"), value_set=pa.array(tags)))
-        if tbl.num_rows == 0:
-            return
+        tags = pa.array([t.strip() for t in part.tag.split("||")])
+    # SQL92 property filter (P2): the reference broker evaluates the
+    # predicate per message when enablePropertyFilter=true; this reader
+    # IS the broker side of the local simulation, so the filter runs
+    # here, below the DataFrame layer. Compiled once per partition;
+    # evaluated VECTORIZED (map_lookup per referenced property + numpy
+    # column program — functions/sql92.py arrow backend); an evaluation
+    # error fails the task.
+    sql_filter = None
     if part.sql:
-        # SQL92 property filter (P2): the reference broker evaluates the
-        # predicate per message when enablePropertyFilter=true; this
-        # reader IS the broker side of the local simulation, so the
-        # filter runs here, below the DataFrame layer. Compiled once per
-        # partition; evaluated VECTORIZED (map_lookup per referenced
-        # property + numpy column program — functions/sql92.py arrow
-        # backend); an evaluation error fails the task.
         from rocketmq_flink_spark.functions.sql92 import compile_sql92_arrow
 
-        mask = compile_sql92_arrow(part.sql).mask(tbl.column("props"))
-        tbl = tbl.filter(mask)
-        if tbl.num_rows == 0:
-            return
-    n = tbl.num_rows
-    arrays = [
-        pa.array([part.topic] * n, pa.string()),
-        pa.array([part.queue_id] * n, pa.int32()),
-        tbl.column("offset").combine_chunks(),
-        tbl.column("msg_id").combine_chunks(),
-        tbl.column("keys").combine_chunks(),
-        tbl.column("tags").combine_chunks(),
-        tbl.column("born_ts").combine_chunks().cast(pa.timestamp("us")),
-        tbl.column("store_ts").combine_chunks().cast(pa.timestamp("us")),
-        tbl.column("props").combine_chunks(),
-        tbl.column("body").combine_chunks(),
-    ]
-    yield pa.RecordBatch.from_arrays(arrays, schema=ARROW_ENVELOPE)
+        sql_filter = compile_sql92_arrow(part.sql)
+    for queue_id, start, end in part.ranges:
+        tbl = call_with_retry(
+            lambda q=queue_id, lo=start, hi=end: broker.read_range(
+                part.topic, q, lo, hi)
+        )
+        if tags is not None and tbl.num_rows:
+            tbl = tbl.filter(pc.is_in(tbl.column("tags"), value_set=tags))
+        if sql_filter is not None and tbl.num_rows:
+            tbl = tbl.filter(sql_filter.mask(tbl.column("props")))
+        n = tbl.num_rows
+        if n == 0:
+            continue
+        arrays = [
+            pa.array([part.topic] * n, pa.string()),
+            pa.array([queue_id] * n, pa.int32()),
+            tbl.column("offset").combine_chunks(),
+            tbl.column("msg_id").combine_chunks(),
+            tbl.column("keys").combine_chunks(),
+            tbl.column("tags").combine_chunks(),
+            tbl.column("born_ts").combine_chunks().cast(pa.timestamp("us")),
+            tbl.column("store_ts").combine_chunks().cast(pa.timestamp("us")),
+            tbl.column("props").combine_chunks(),
+            tbl.column("body").combine_chunks(),
+        ]
+        yield pa.RecordBatch.from_arrays(arrays, schema=ARROW_ENVELOPE)
 
 
 def _validated_sql(opts: dict) -> str | None:
@@ -212,6 +232,45 @@ def _chunk(start: int, end: int, max_records: int):
         lo = hi
 
 
+def _task_slots() -> int:
+    """Task slots to plan for: the defaultParallelism that register()
+    put into the Python workers' environment, else this host's cores."""
+    return int(os.environ.get(TASK_SLOTS_ENV) or os.cpu_count() or 1)
+
+
+def _pack(chunks: list[tuple[int, int, int]], max_records: int,
+          slots: int) -> list[list[tuple[int, int, int]]]:
+    """Pack (queue_id, start, end) chunks into
+    k = min(#chunks, max(slots, ceil(total / max_records))) groups, the
+    rule Spark's file source uses to size its scan: the largest chunk
+    first, always into the least-loaded group. Returns the groups, each
+    sorted by (queue, start)."""
+    if not chunks:
+        return []
+    total = sum(hi - lo for _, lo, hi in chunks)
+    k = min(len(chunks), max(slots, -(-total // max_records)))
+    loads = [(0, i) for i in range(k)]  # a heap of (messages, group)
+    groups: list[list[tuple[int, int, int]]] = [[] for _ in range(k)]
+    for q, lo, hi in sorted(chunks, key=lambda c: (c[1] - c[2], c[0], c[1])):
+        load, i = heapq.heappop(loads)
+        groups[i].append((q, lo, hi))
+        heapq.heappush(loads, (load + hi - lo, i))
+    return [sorted(g) for g in groups]
+
+
+def _plan(root: str, topic: str, bounds, max_records: int, tag: str | None,
+          sql: str | None) -> list[QueueRanges]:
+    """Input partitions for (queue_id, start, end) bounds: each range cut
+    into chunks of at most max_records offsets, the chunks packed into
+    one wave of tasks (_pack)."""
+    chunks = [(q, lo, hi) for q, start, end in bounds
+              for lo, hi in _chunk(start, end, max_records)]
+    groups = _pack(chunks, max_records, _task_slots())
+    return [QueueRanges(root, topic, g, tag, sql) for g in groups] or [
+        QueueRanges(root, topic, [], tag, sql)
+    ]
+
+
 class RocketMQBatchReader(DataSourceReader):
     """Bounded scan (reference boundedness: stopInMs / endTime, S14/W6)."""
 
@@ -235,7 +294,7 @@ class RocketMQBatchReader(DataSourceReader):
         # "latest"), the batch-replay counterpart of startingOffsets —
         # what a restart replays between two W7 offset-log snapshots
         ending_spec = self.opts.get("endingOffsets")
-        parts = []
+        bounds = []
         for q in broker.queues(self.topic):
             start = _resolve_start(broker, self.topic, q, start_spec)
             if ending_spec:
@@ -246,16 +305,11 @@ class RocketMQBatchReader(DataSourceReader):
                 )
             else:
                 end = broker.latest_offset(self.topic, q)
-            for lo, hi in _chunk(start, max(end, start), self.max_records):
-                parts.append(QueueRange(self.root, self.topic, q, lo, hi, self.tag,
-                                        self.sql))
-        return parts or [
-            QueueRange(self.root, self.topic, -1, 0, 0, self.tag, self.sql)
-        ]
+            bounds.append((q, start, end))
+        return _plan(self.root, self.topic, bounds, self.max_records, self.tag,
+                     self.sql)
 
-    def read(self, partition: QueueRange):
-        if partition.queue_id < 0:
-            return iter(())
+    def read(self, partition: QueueRanges):
         return _read_partition(partition)
 
 
@@ -343,21 +397,12 @@ class RocketMQStreamReader(DataSourceStreamReader):
             q: max(int(end.get(q, 0)), int(start.get(q, 0)))
             for q in set(start) | set(end)
         }
-        parts = []
-        for q_str, end_off in sorted(end.items()):
-            q = int(q_str)
-            start_off = int(start.get(q_str, 0))
-            for lo, hi in _chunk(start_off, max(int(end_off), start_off),
-                                 self.max_records):
-                parts.append(QueueRange(self.root, self.topic, q, lo, hi, self.tag,
-                                        self.sql))
-        return parts or [
-            QueueRange(self.root, self.topic, -1, 0, 0, self.tag, self.sql)
-        ]
+        bounds = [(int(q), int(start.get(q, 0)), int(end_off))
+                  for q, end_off in end.items()]
+        return _plan(self.root, self.topic, bounds, self.max_records, self.tag,
+                     self.sql)
 
-    def read(self, partition: QueueRange):
-        if partition.queue_id < 0:
-            return iter(())
+    def read(self, partition: QueueRanges):
         return _read_partition(partition)
 
     def commit(self, end: dict) -> None:
@@ -613,5 +658,11 @@ class RocketMQDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the DataSource (the SPI META-INF/services analog, S13)."""
+    """Register the DataSource (the SPI META-INF/services analog, S13).
+
+    The Python workers that plan and read a scan learn the cluster's
+    task slots from their environment, which the registered source
+    captures here, so the slots go in first."""
+    sc = spark.sparkContext
+    sc.environment[TASK_SLOTS_ENV] = str(sc.defaultParallelism)
     spark.dataSource.register(RocketMQDataSource)

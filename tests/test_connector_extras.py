@@ -320,3 +320,49 @@ def test_sql_ddl_options_not_forwarded_probe(spark):
         .collect()[0][0]
     )
     assert "alpha" in api_seen
+
+
+_SESSION_DEFAULTS_PROBE = """
+import json
+from pyspark.sql import SparkSession
+from rocketmq_flink_spark import session
+
+seen = {}
+
+class _Session:
+    class sparkContext:
+        @staticmethod
+        def setLogLevel(level):
+            pass
+
+def _capture(builder):
+    seen.update(builder._options)
+    return _Session()
+
+SparkSession.Builder.getOrCreate = _capture
+session.get_spark()
+print(json.dumps(seen))
+"""
+
+
+def test_session_defaults_fit_the_machine():
+    """Without SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM the session sizes
+    itself to this process's cores and to half the machine's memory
+    (at most 48g), instead of local[32] with a 48g driver."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM")}
+    out = subprocess.run([sys.executable, "-c", _SESSION_DEFAULTS_PROBE],
+                         env=env, capture_output=True, text=True, check=True)
+    conf = json.loads(out.stdout.strip().splitlines()[-1])
+    cores = len(os.sched_getaffinity(0))
+    assert conf["spark.master"] == f"local[{cores}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(cores)
+    mem = conf["spark.driver.memory"]
+    assert mem.endswith("m")
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**21
+    assert int(mem[:-1]) == min(int(half_mb), 48 * 1024)

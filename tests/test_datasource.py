@@ -4,14 +4,22 @@ semantics: offset bounds, tag filtering, bounded reads, epoch commits."""
 
 from __future__ import annotations
 
+import os
+import tempfile
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from rocketmq_flink_spark.functions import decode_envelope, encode_rows
 from rocketmq_flink_spark.session import load_tables
 from rocketmq_flink_spark.sources import Broker, register
+from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA
+from rocketmq_flink_spark.sources.datasource import RocketMQBatchReader
 
 SF = "/root/testdata/sf0.001"
 EVENT_SCHEMA = "event_id BIGINT, user_id BIGINT, value DOUBLE, ts TIMESTAMP"
@@ -352,3 +360,158 @@ def test_ending_offsets_snapshot_replay(spark, broker_root):
     # "latest" spec and the "*" wildcard resolve too
     assert ids(endingOffsets="latest") == want_all
     assert ids(startingOffsets=json.dumps({"*": 0})) == want_all
+
+
+# -- timestamp seek and task-slot packing ---------------------------------
+
+
+def _write_segments(root, topic, queue_id, segments):
+    """Write raw segments [(store_ts list, row_group_size, write_statistics)]
+    back to back into one queue, bypassing the commit path so store_ts
+    can be anything (unsorted, repeated) and files can lack statistics."""
+    qdir = os.path.join(root, topic, f"queue-{queue_id}")
+    os.makedirs(qdir, exist_ok=True)
+    start = 0
+    for store, row_group_size, stats in segments:
+        n = len(store)
+        offs = list(range(start, start + n))
+        tbl = pa.Table.from_pydict(
+            {
+                "offset": offs,
+                "born_ts": [0] * n,
+                "store_ts": store,
+                "msg_id": [f"{topic}-{queue_id}-{o}" for o in offs],
+                "keys": [None] * n,
+                "tags": ["a"] * n,
+                "props": [[]] * n,
+                "body": [b"x"] * n,
+            },
+            schema=SEGMENT_SCHEMA,
+        )
+        pq.write_table(tbl, os.path.join(qdir, f"{start:020d}-{n}.parquet"),
+                       row_group_size=row_group_size, write_statistics=stats)
+        start += n
+    return start
+
+
+_segment = st.tuples(
+    st.lists(st.integers(0, 40).map(lambda ms: ms * 1000), min_size=1,
+             max_size=20),
+    st.integers(1, 6),  # row_group_size
+    st.booleans(),  # write_statistics
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(segments=st.lists(_segment, max_size=4), data=st.data())
+def test_offset_for_timestamp_matches_linear_scan(segments, data):
+    """The footer seek returns what a scan of every row in log order
+    returns, for unsorted store_ts within and across segments, small row
+    groups and files without statistics; an endingTimestamp read stops
+    at the same offset."""
+    store = [ts for seg, _, _ in segments for ts in seg]
+    edges = [-1, 0] + [v for ts in store for v in (ts - 1, ts, ts + 1)]
+    ts_us = data.draw(st.sampled_from(edges) | st.integers(-1000, 42_000))
+    end_ms = data.draw(st.integers(-1, 41))
+
+    def first_at_or_after(t):
+        return next((i for i, s in enumerate(store) if s >= t), len(store))
+
+    with tempfile.TemporaryDirectory() as root:
+        latest = _write_segments(root, "t", 0, segments)
+        assert latest == len(store)
+        broker = Broker(root)
+        assert broker.offset_for_timestamp("t", 0, ts_us) == first_at_or_after(ts_us)
+
+        reader = RocketMQBatchReader(
+            {"path": root, "topic": "t", "endingTimestamp": str(end_ms)}
+        )
+        got = [o for p in reader.partitions() for b in reader.read(p)
+               for o in b.column("offset").to_pylist()]
+        assert got == list(range(first_at_or_after((end_ms + 1) * 1000)))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    sizes=st.lists(st.tuples(st.integers(0, 50), st.integers(0, 300)),
+                   max_size=12),
+    max_records=st.integers(1, 120),
+    slots=st.integers(1, 8),
+)
+def test_pack_covers_every_offset_once_and_balances(sizes, max_records, slots):
+    from rocketmq_flink_spark.sources.datasource import QueueRanges, _chunk, _pack
+
+    chunks = [(q, lo, hi) for q, (start, n) in enumerate(sizes)
+              for lo, hi in _chunk(start, start + n, max_records)]
+    groups = _pack(chunks, max_records, slots)
+
+    total = sum(n for _, n in sizes)
+    want_k = min(len(chunks), max(slots, -(-total // max_records)))
+    assert len(groups) == want_k
+    covered = sorted((q, o) for g in groups for q, lo, hi in g
+                     for o in range(lo, hi))
+    assert covered == [(q, o) for q, (start, n) in enumerate(sizes)
+                       for o in range(start, start + n)]
+    if groups:
+        loads = [sum(hi - lo for _, lo, hi in g) for g in groups]
+        assert max(loads) - min(loads) <= max(hi - lo for _, lo, hi in chunks)
+    for g in groups:
+        assert g == sorted(g)
+        part = QueueRanges("root", "t", g, None)
+        assert part.queue_id == g[0][0] >= 0
+        assert part.end - part.start == sum(hi - lo for _, lo, hi in g)
+
+
+def _fill_queues(root, topic, counts):
+    """counts[q] messages in queue q, one segment each."""
+    for q, n in enumerate(counts):
+        _write_segments(root, topic, q, [([0] * n, n, True)] if n else [])
+
+
+def test_batch_read_packs_queues_into_task_slots(spark, tmp_path):
+    """8 queues plan as one task wave, min(8, defaultParallelism)
+    partitions, and each row keeps the queue id of the range it came
+    from."""
+    register(spark)
+    root = str(tmp_path / "broker")
+    counts = [30, 70, 5, 120, 64, 1, 90, 33]
+    _fill_queues(root, "t_pack", counts)
+
+    df = spark.read.format("rocketmq").options(path=root, topic="t_pack").load()
+    assert df.rdd.getNumPartitions() == min(8, spark.sparkContext.defaultParallelism)
+    rows = df.select("queue_id", "offset", "msg_id").collect()
+    assert sorted((r.queue_id, r.offset) for r in rows) == [
+        (q, o) for q, n in enumerate(counts) for o in range(n)
+    ]
+    assert all(r.msg_id == f"t_pack-{r.queue_id}-{r.offset}" for r in rows)
+
+
+def test_stream_rate_limit_packed_exactly_once(spark, tmp_path):
+    """A capped stream over 8 uneven queues delivers every (queue,
+    offset) exactly once, each micro-batch in one task wave."""
+    register(spark)
+    root = str(tmp_path / "broker")
+    counts = [300, 10, 250, 0, 75, 410, 5, 150]
+    _fill_queues(root, "t_rate", counts)
+
+    seen, parts = [], []
+
+    def collect(batch, _):
+        parts.append(batch.rdd.getNumPartitions())
+        seen.extend((r.queue_id, r.offset)
+                    for r in batch.select("queue_id", "offset").collect())
+
+    q = (
+        spark.readStream.format("rocketmq")
+        .options(path=root, topic="t_rate", maxOffsetsPerTrigger=400)
+        .load()
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert sorted(seen) == [(qid, o) for qid, n in enumerate(counts)
+                            for o in range(n)]
+    assert len(parts) >= -(-sum(counts) // 400)
+    assert max(parts) <= min(8, spark.sparkContext.defaultParallelism)
