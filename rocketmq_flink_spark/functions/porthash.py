@@ -18,41 +18,17 @@ The (a_j, b_j) coefficients are fixed constants derived from hashlib.md5
 at import time — the same literals are inlined into the Spark plan and
 the oracle SQL text.
 
-Production fast path: md5 costs ~32 hash evaluations per row in the
-heaviest consumers (the Poisson-bootstrap resampler, MinHash). For
-runs that do NOT need SQL-oracle replay, `set_hash_mode("fast")` (or
-env SPARK_GRAFT_HASH_MODE=fast before import) switches hash60 to
-Spark's JVM xxhash64 masked to the same non-negative 60-bit domain —
-every downstream contract (range, the mod-P31 universal family, split
-fractions) is domain-identical, only the hash VALUES differ, so
-hash-split cohorts, resample weights and MinHash permutations remain
-statistically equivalent (tests: test_fast_hash_mode_*). The default
-stays "portable": correctness gates always run md5.
+Every hash-based split, resample weight and MinHash permutation goes
+through md5, the one hash both engines share, so the SQL oracle can
+replay it.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_HASH_MODE = os.environ.get("SPARK_GRAFT_HASH_MODE", "portable")
-
-
-def set_hash_mode(mode: str) -> None:
-    """'portable' (md5, oracle-replayable — default) or 'fast'
-    (xxhash64, production). Takes effect for subsequently BUILT query
-    plans."""
-    global _HASH_MODE
-    if mode not in ("portable", "fast"):
-        raise ValueError(f"unknown hash mode {mode!r}")
-    _HASH_MODE = mode
-
-
-def hash_mode() -> str:
-    return _HASH_MODE
 
 # Mersenne prime 2^31 - 1: products a_j * x31 < 2^62 fit signed 64-bit.
 P31 = 2_147_483_647
@@ -73,11 +49,8 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
 
 
 def hash60(col: Column) -> Column:
-    """60-bit non-negative base hash of a string column (Spark side).
-    Portable mode = md5 (DuckDB-replayable); fast mode = xxhash64
-    masked into the identical [0, 2^60) domain."""
-    if _HASH_MODE == "fast":
-        return F.xxhash64(col).bitwiseAND(F.lit((1 << 60) - 1))
+    """60-bit non-negative base hash of a string column (Spark side),
+    md5-based so DuckDB replays it (hash60_sql)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
@@ -88,9 +61,7 @@ def hash60_sql(expr: str) -> str:
 
 def hash60_spark_sql(expr: str) -> str:
     """hash60 as Spark-SQL TEXT (for operators that build JVM-parsed
-    SQL strings instead of Column trees), mode-aware like hash60()."""
-    if _HASH_MODE == "fast":
-        return f"(xxhash64({expr}) & {(1 << 60) - 1})"
+    SQL strings instead of Column trees)."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 

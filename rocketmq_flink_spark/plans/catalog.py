@@ -77,467 +77,6 @@ def _dec2(col, p=12):
     return col.cast(T.DecimalType(p, 2))
 
 
-def _one():
-    return F.lit(1).cast(T.DecimalType(3, 2))
-
-# ---------------------------------------------------------------------------
-# Relational surface (SURVEY.md §2.5 — delegated to Catalyst, as the
-# reference delegates to Flink SQL)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-      CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-               * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
-      ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
-      ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) / COUNT(*), 6) AS avg_disc,
-      COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan + filter + hash agg with 8 aggregates.
-    Scale: partial aggregation map-side; 6 output groups — no skew."""
-    from rocketmq_flink_spark.session import spread_for_compute
-
-    # the 4-decimal-product partial agg is the CPU stage and the fixture
-    # parquet is single-row-group (one scan task): spread the pruned
-    # 7-column projection (A/B: 1.05s -> 0.75s at sf0.1; the shipdate
-    # filter still reaches the scan as a PushedFilter through the
-    # repartition). Metadata no-op at real scale.
-    l = spread_for_compute(load_tables(spark, sf_dir)["lineitem"].select(
-        "l_shipdate", "l_returnflag", "l_linestatus",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-    ))
-    qty, ep = _dec2(F.col("l_quantity")), _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    tax = F.col("l_tax").cast(T.DecimalType(4, 2))
-    n = F.count(F.lit(1))
-    return (
-        l.where(F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).cast("double").alias("sum_qty"),
-            F.sum(ep).cast("double").alias("sum_base_price"),
-            F.sum(ep * (_one() - disc)).cast("double").alias("sum_disc_price"),
-            F.sum(ep * (_one() - disc) * (_one() + tax)).cast("double").alias("sum_charge"),
-            F.round(F.sum(qty).cast("double") / n, 6).alias("avg_qty"),
-            F.round(F.sum(disc).cast("double") / n, 6).alias("avg_disc"),
-            n.alias("count_order"),
-        )
-    )
-
-
-@query(
-    "q3_shipping_priority",
-    """
-    SELECT l_orderkey,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-      o_orderdate, o_orderpriority
-    FROM customer JOIN orders ON c_custkey = o_custkey
-                  JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-      AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, o_orderdate, l_orderkey
-    LIMIT 10
-    """,
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join + agg + top-10.
-    Scale: customer filter broadcast into orders; lineitem shuffles once on
-    l_orderkey; global top-10 via TakeOrderedAndProject (no full sort)."""
-    t = load_tables(spark, sf_dir)
-    cut = F.lit("1998-03-15 00:00:00").cast("timestamp")
-    cust = t["customer"].where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    ords = t["orders"].where(F.col("o_orderdate") < cut)
-    line = t["lineitem"].where(F.col("l_shipdate") > cut)
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    return (
-        line.join(ords, line.l_orderkey == ords.o_orderkey)
-        .join(F.broadcast(cust), ords.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(ep * (_one() - disc)).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
-
-
-@query(
-    "q5_region_revenue",
-    """
-    SELECT n_name,
-      CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-    FROM customer
-      JOIN orders   ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY n_name
-    """,
-)
-def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way join with dimension broadcast.
-    Scale: region/nation/supplier broadcast (tiny dims); the only big
-    shuffle is lineitem<->orders on orderkey."""
-    t = load_tables(spark, sf_dir)
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    ords = t["orders"].where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    dim = (
-        t["supplier"]
-        .join(t["nation"], F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(t["region"], F.col("n_regionkey") == F.col("r_regionkey"))
-        .where(F.col("r_name") == "ASIA")
-        .select("s_suppkey", "s_nationkey", "n_name")
-    )
-    return (
-        t["lineitem"]
-        .join(ords, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(dim),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(F.sum(ep * (_one() - disc)).cast("double").alias("revenue"))
-    )
-
-
-@query(
-    "semi_join_shipped_orders",
-    """
-    SELECT o_orderstatus, COUNT(*) AS n_orders,
-      CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-    FROM orders
-    WHERE EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey
-                    AND l_shipdate > TIMESTAMP '2001-06-01 00:00:00')
-    GROUP BY o_orderstatus
-    """,
-)
-def semi_join_shipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join (EXISTS). Scale: semi join short-circuits per key;
-    shuffle on orderkey only."""
-    t = load_tables(spark, sf_dir)
-    recent = t["lineitem"].where(
-        F.col("l_shipdate") > F.lit("2001-06-01 00:00:00").cast("timestamp")
-    )
-    return (
-        t["orders"]
-        .join(recent, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec2(F.col("o_totalprice"))).cast("double").alias("total"),
-        )
-    )
-
-
-@query(
-    "anti_join_customers_without_orders",
-    """
-    SELECT c_mktsegment, COUNT(*) AS n_customers
-    FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-    GROUP BY c_mktsegment
-    """,
-)
-def anti_join_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT ANTI join (NOT EXISTS): customers with no large order."""
-    t = load_tables(spark, sf_dir)
-    big = t["orders"].where(F.col("o_totalprice") > 300000)
-    return (
-        t["customer"]
-        .join(big, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-@query(
-    "topk_orders_per_segment",
-    """
-    SELECT c_mktsegment, o_orderkey, o_totalprice, rn FROM (
-      SELECT c_mktsegment, o_orderkey, o_totalprice,
-             ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                                ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      FROM orders JOIN customer ON o_custkey = c_custkey
-    ) WHERE rn <= 5
-    """,
-)
-def topk_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k via ranking window + filter (SURVEY §2.5).
-    Scale: rank filter is pushed into a windowed TopK by AQE; one shuffle
-    on the partition key."""
-    from pyspark.sql import Window as W
-
-    t = load_tables(spark, sf_dir)
-    joined = t["orders"].join(
-        F.broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
-        F.col("o_custkey") == F.col("c_custkey"),
-    )
-    w = W.partitionBy("c_mktsegment").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("c_mktsegment", "o_orderkey", "o_totalprice", "rn")
-    )
-
-
-@query(
-    "running_customer_spend",
-    """
-    SELECT o_custkey, o_orderkey,
-      CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)))
-           OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        AS running_spend,
-      CAST(LAG(CAST(o_totalprice AS DECIMAL(12,2)))
-           OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS DOUBLE)
-        AS prev_price
-    FROM orders
-    """,
-)
-def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic windows: running sum + lag with deterministic ordering."""
-    from pyspark.sql import Window as W
-
-    t = load_tables(spark, sf_dir)
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    price = _dec2(F.col("o_totalprice"))
-    return t["orders"].select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(price)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("double")
-        .alias("running_spend"),
-        F.lag(price).over(w).cast("double").alias("prev_price"),
-    )
-
-
-@query(
-    "rollup_lineitem_status",
-    """
-    SELECT COALESCE(l_returnflag, '<ALL>') AS returnflag,
-           COALESCE(l_linestatus, '<ALL>') AS linestatus,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-    FROM lineitem
-    GROUP BY ROLLUP(l_returnflag, l_linestatus)
-    """,
-)
-def rollup_lineitem_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (fixture columns are non-null, so the
-    COALESCE sentinel unambiguously marks subtotal rows)."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["lineitem"]
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec2(F.col("l_quantity"))).cast("double").alias("qty"),
-        )
-        .select(
-            F.coalesce(F.col("l_returnflag"), F.lit("<ALL>")).alias("returnflag"),
-            F.coalesce(F.col("l_linestatus"), F.lit("<ALL>")).alias("linestatus"),
-            "n",
-            "qty",
-        )
-    )
-
-
-@query(
-    "cube_orders",
-    """
-    SELECT COALESCE(o_orderstatus, '<ALL>') AS status,
-           COALESCE(o_orderpriority, '<ALL>') AS priority,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-    FROM orders
-    GROUP BY CUBE(o_orderstatus, o_orderpriority)
-    """,
-)
-def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over two dimensions."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["orders"]
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec2(F.col("o_totalprice"))).cast("double").alias("total"),
-        )
-        .select(
-            F.coalesce(F.col("o_orderstatus"), F.lit("<ALL>")).alias("status"),
-            F.coalesce(F.col("o_orderpriority"), F.lit("<ALL>")).alias("priority"),
-            "n",
-            "total",
-        )
-    )
-
-
-@query(
-    "set_ops_customer_cohorts",
-    """
-    SELECT
-      (SELECT COUNT(*) FROM (
-         SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-         UNION
-         SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')) AS n_union,
-      (SELECT COUNT(*) FROM (
-         SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-         INTERSECT
-         SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')) AS n_intersect,
-      (SELECT COUNT(*) FROM (
-         SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-         EXCEPT
-         SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')) AS n_except
-    """,
-)
-def set_ops_customer_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION / INTERSECT / EXCEPT over customer cohorts."""
-    t = load_tables(spark, sf_dir)
-    a = t["customer"].where(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("k")
-    )
-    b = t["orders"].where(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("k")
-    )
-    n_union = a.union(b).distinct().agg(F.count(F.lit(1)).alias("n_union"))
-    n_intersect = a.intersect(b).agg(F.count(F.lit(1)).alias("n_intersect"))
-    n_except = a.exceptAll(b).distinct().agg(F.count(F.lit(1)).alias("n_except"))
-    return n_union.crossJoin(n_intersect).crossJoin(n_except)
-
-
-@query(
-    "pivot_priority_by_status",
-    """
-    SELECT o_orderpriority,
-      CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS "F",
-      CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS "O",
-      CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN CAST(o_totalprice AS DECIMAL(12,2)) END) AS DOUBLE) AS "P"
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def pivot_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (explicit value list keeps the plan a single agg pass)."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["orders"]
-        .withColumn("price", _dec2(F.col("o_totalprice")))
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.sum("price").cast("double"))
-    )
-
-
-@query(
-    "distinct_counts_lineitem",
-    """
-    SELECT l_returnflag,
-           COUNT(DISTINCT l_partkey) AS n_parts,
-           COUNT(DISTINCT l_suppkey) AS n_supps,
-           COUNT(*) AS n
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def distinct_counts_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct aggregation (expand + two-phase agg under the hood)."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["lineitem"]
-        .groupBy("l_returnflag")
-        .agg(
-            F.count_distinct(F.col("l_partkey")).alias("n_parts"),
-            F.count_distinct(F.col("l_suppkey")).alias("n_supps"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@query(
-    "range_join_ship_lag",
-    """
-    SELECT o_orderstatus, COUNT(*) AS n,
-      CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-    FROM lineitem JOIN orders
-      ON l_orderkey = o_orderkey
-     AND l_shipdate >= o_orderdate
-     AND l_shipdate <  o_orderdate + INTERVAL 60 DAY
-    GROUP BY o_orderstatus
-    """,
-)
-def range_join_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval/range join: equi-key + range predicate (the range filter
-    rides the equi-join shuffle — no cross product)."""
-    t = load_tables(spark, sf_dir)
-    cond = (
-        (F.col("l_orderkey") == F.col("o_orderkey"))
-        & (F.col("l_shipdate") >= F.col("o_orderdate"))
-        & (F.col("l_shipdate") < F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-    )
-    return (
-        t["lineitem"]
-        .join(t["orders"], cond)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec2(F.col("l_quantity"))).cast("double").alias("qty"),
-        )
-    )
-
-
-@query(
-    "filter_pushdown_parts",
-    """
-    SELECT p_brand, COUNT(*) AS n,
-      CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS retail
-    FROM part
-    WHERE p_size BETWEEN 10 AND 20 AND p_name LIKE '%a%'
-    GROUP BY p_brand
-    """,
-)
-def filter_pushdown_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan + predicate pushdown + column pruning (verify with
-    .explain: PushedFilters on p_size, ReadSchema of 3 columns)."""
-    t = load_tables(spark, sf_dir)
-    return (
-        t["part"]
-        .where(F.col("p_size").between(10, 20) & F.col("p_name").like("%a%"))
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec2(F.col("p_retailprice"))).cast("double").alias("retail"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Message-log / codec semantics (the reference's OWN logic: SURVEY.md
 # §2.2-§2.4 — serde, header projection, property filter, metadata,
@@ -2779,84 +2318,6 @@ def rolling_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "q4_order_priority",
-    """
-    SELECT o_orderpriority, COUNT(*) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1997-07-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1997-10-01 00:00:00'
-      AND EXISTS (
-        SELECT 1 FROM lineitem
-        WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
-      )
-    GROUP BY o_orderpriority
-    """,
-)
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape (adapted to the fixture's columns: returned-item
-    orders instead of late-commit) — EXISTS subquery as a left-semi join (Catalyst
-    plans the decorrelation; semi join broadcasts/hashes like any
-    equi-join, no row duplication from multi-match lineitems)."""
-    t = load_tables(spark, sf_dir)
-    late = t["lineitem"].where(
-        F.col("l_returnflag") == "R"
-    ).select("l_orderkey")
-    return (
-        t["orders"]
-        .where(
-            (F.col("o_orderdate") >= "1997-07-01")
-            & (F.col("o_orderdate") < "1997-10-01")
-        )
-        .join(late, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-@query(
-    "q17_small_quantity_revenue",
-    """
-    WITH caps AS (
-      SELECT l_partkey AS pk,
-             SUM(CAST(l_quantity AS DECIMAL(12,2))) AS sq,
-             COUNT(*) AS c
-      FROM lineitem GROUP BY 1
-    )
-    SELECT ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-                 / 7.0, 6) AS avg_yearly
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
-    JOIN caps ON pk = l_partkey
-    WHERE p_brand = 'Brand#13'
-      AND 5 * CAST(l_quantity AS DECIMAL(12,2)) * c < sq
-    """,
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape — correlated scalar subquery expressed as a
-    per-part aggregate joined back (Catalyst's decorrelation of the SQL
-    form). The `qty < 0.2*avg` threshold is cross-multiplied to
-    `5*qty*count < sum` so the comparison stays in exact decimal/integer
-    arithmetic — no engine-specific average rounding at the boundary."""
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"]
-    part = t["part"].where(F.col("p_brand") == "Brand#13").select("p_partkey")
-    caps = li.groupBy("l_partkey").agg(
-        F.sum(_dec2(F.col("l_quantity"))).alias("sq"),
-        F.count(F.lit(1)).alias("c"),
-    )
-    filtered = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(caps, "l_partkey")
-        .where(F.lit(5) * _dec2(F.col("l_quantity")) * F.col("c") < F.col("sq"))
-    )
-    return filtered.agg(
-        F.round(
-            F.sum(_dec2(F.col("l_extendedprice"))).cast("double") / 7.0, 6
-        ).alias("avg_yearly")
-    )
-
-
-@query(
     "percentiles_by_returnflag",
     """
     SELECT l_returnflag,
@@ -2888,692 +2349,10 @@ def percentiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Relational surface, round 2: the remaining TPC-H query shapes
-# expressible over the fixture schema (no partsupp / commitdate /
-# shipmode columns exist, so Q2/Q4/Q9/Q22 are adapted shapes — each
-# docstring notes the adaptation). All decimal-exact, all oracle-checked.
+# Analytics surface, round 2: exact-moment statistics and distribution
+# windows — the aggregation shapes a warehouse user expects beyond plain
+# GROUP BY (SURVEY.md §2.5 aggregate category).
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "q6_forecast_revenue",
-    """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      AND CAST(l_discount AS DECIMAL(4,2)) BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: pure scan + conjunctive filter + 2-aggregate fold; the
-    canonical predicate-pushdown benchmark. Scale: every predicate
-    (shipdate range, discount band, quantity cap) is
-    parquet-pushdown-eligible, no shuffle at all beyond the final
-    single-row fold; discount compared in DECIMAL(4,2) so the band edges
-    are exact in both engines."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & disc.between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(_dec2(F.col("l_extendedprice")) * disc)
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-@query(
-    "q7_volume_shipping",
-    """
-    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-           CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS l_year,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-                AS DOUBLE) AS revenue
-    FROM lineitem
-      JOIN orders   ON o_orderkey = l_orderkey
-      JOIN supplier ON s_suppkey = l_suppkey
-      JOIN customer ON c_custkey = o_custkey
-      JOIN nation n1 ON n1.n_nationkey = s_nationkey
-      JOIN nation n2 ON n2.n_nationkey = c_nationkey
-    WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-      AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
-    GROUP BY 1, 2, 3
-    """,
-)
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7: bilateral trade volume between two nations by year.
-    Scale: both nation-tagged dimension sides (supplier+n1,
-    customer+n2) broadcast; lineitem shuffles once on l_orderkey to meet
-    orders; the disjunctive nation-pair predicate is applied after the
-    broadcast joins, JVM-side."""
-    t = load_tables(spark, sf_dir)
-    two = F.col("n_name").isin("NATION_1", "NATION_2")
-    supp = F.broadcast(
-        t["supplier"]
-        .join(t["nation"].where(two), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    cust = F.broadcast(
-        t["customer"]
-        .join(t["nation"].where(two), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    li = t["lineitem"].where(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1999-01-01 00:00:00").cast("timestamp"))
-    )
-    pair = (
-        ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-        | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    )
-    return (
-        li.join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .where(pair)
-        .groupBy(
-            "supp_nation", "cust_nation",
-            F.year("l_shipdate").alias("l_year"),
-        )
-        .agg(F.sum(ep * (_one() - disc)).cast("double").alias("revenue"))
-    )
-
-
-@query(
-    "q8_market_share",
-    """
-    WITH vol AS (
-      SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS o_year,
-             CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-               AS volume,
-             n2.n_name AS supp_nation
-      FROM lineitem
-        JOIN part     ON p_partkey = l_partkey
-        JOIN orders   ON o_orderkey = l_orderkey
-        JOIN customer ON c_custkey = o_custkey
-        JOIN nation n1 ON n1.n_nationkey = c_nationkey
-        JOIN region   ON r_regionkey = n1.n_regionkey
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN nation n2 ON n2.n_nationkey = s_nationkey
-      WHERE r_name = 'AMERICA' AND p_type = 'PROMO'
-        AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-    )
-    SELECT o_year,
-           ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume
-                               ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
-                 / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
-    FROM vol GROUP BY o_year
-    """,
-)
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8: national market share within a region's PROMO-part
-    trade, by order year. Scale: nation/region lookups force-broadcast
-    (fixed cardinality); part/customer are SF-scaled, so their join
-    strategy is left to AQE (broadcast at small SF, shuffle-hash at 100
-    TB); the one big shuffle is lineitem->orders on orderkey; numerator/denominator stay exact DECIMAL until the final
-    double division (rounded, so both engines agree bit-for-bit)."""
-    t = load_tables(spark, sf_dir)
-    amer_nations = (
-        t["nation"]
-        .join(t["region"], F.col("n_regionkey") == F.col("r_regionkey"))
-        .where(F.col("r_name") == "AMERICA")
-        .select(F.col("n_nationkey").alias("cust_nk"))
-    )
-    cust = (
-        t["customer"]
-        .join(F.broadcast(amer_nations), F.col("c_nationkey") == F.col("cust_nk"))
-        .select("c_custkey")
-    )
-    part = t["part"].where(F.col("p_type") == "PROMO").select("p_partkey")
-    supp = F.broadcast(
-        t["supplier"]
-        .join(
-            t["nation"].select("n_nationkey", F.col("n_name").alias("supp_nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "supp_nation")
-    )
-    ords = t["orders"].where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    vol = (
-        t["lineitem"]
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(ords, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            (ep * (_one() - disc)).alias("volume"),
-            "supp_nation",
-        )
-    )
-    zero = F.lit(0).cast(T.DecimalType(12, 2))
-    return vol.groupBy("o_year").agg(
-        F.round(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_3", F.col("volume"))
-                .otherwise(zero)
-            ).cast("double")
-            / F.sum("volume").cast("double"),
-            6,
-        ).alias("mkt_share")
-    )
-
-
-@query(
-    "q9_product_profit",
-    """
-    SELECT n_name AS nation,
-           CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS o_year,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-                AS DOUBLE) AS profit
-    FROM lineitem
-      JOIN part     ON p_partkey = l_partkey
-      JOIN supplier ON s_suppkey = l_suppkey
-      JOIN nation   ON n_nationkey = s_nationkey
-    WHERE p_name LIKE '%red%'
-    GROUP BY 1, 2
-    """,
-)
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (adapted: the fixture has no partsupp, so profit
-    omits the supplycost term — revenue by supplier nation and ship
-    year over name-matched parts). Scale: supplier+nation broadcast
-    (supplier is the smallest SF-scaled dim); the LIKE-filtered part
-    side is left to AQE; single wide agg over lineitem with no orderkey
-    shuffle at all (orders isn't needed)."""
-    t = load_tables(spark, sf_dir)
-    part = t["part"].where(F.col("p_name").like("%red%")).select("p_partkey")
-    supp = F.broadcast(
-        t["supplier"]
-        .join(
-            t["nation"].select("n_nationkey", F.col("n_name").alias("nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "nation")
-    )
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    return (
-        t["lineitem"]
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("nation", F.year("l_shipdate").alias("o_year"))
-        .agg(F.sum(ep * (_one() - disc)).cast("double").alias("profit"))
-    )
-
-
-@query(
-    "q10_returned_items",
-    """
-    SELECT c_custkey, c_name,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-                AS DOUBLE) AS revenue,
-           CAST(c_acctbal AS DOUBLE) AS c_acctbal, n_name
-    FROM customer
-      JOIN orders   ON o_custkey = c_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      JOIN nation   ON n_nationkey = c_nationkey
-    WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
-      AND l_returnflag = 'R'
-    GROUP BY c_custkey, c_name, c_acctbal, n_name
-    ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-             DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10: top-20 customers by lost revenue on returned items in
-    a quarter. Scale: orders quarter-filter first (pushdown); the
-    per-customer aggregate is tiny after the quarter filter, so AQE
-    broadcasts IT into the customer join (not the other way around);
-    ordering in exact DECIMAL with a custkey tie-break, top-20 via
-    TakeOrderedAndProject — no global sort materialization."""
-    t = load_tables(spark, sf_dir)
-    ords = t["orders"].where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    li = t["lineitem"].where(F.col("l_returnflag") == "R")
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    cust = t["customer"].join(
-        F.broadcast(t["nation"].select("n_nationkey", "n_name")),
-        F.col("c_nationkey") == F.col("n_nationkey"),
-    ).select("c_custkey", "c_name", "c_acctbal", "n_name")
-    per_cust = (
-        li.join(ords, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_custkey")
-        .agg(F.sum(ep * (_one() - disc)).alias("revenue_dec"))
-    )
-    return (
-        per_cust.join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .orderBy(F.desc("revenue_dec"), "c_custkey")
-        .limit(20)
-        .select(
-            "c_custkey", "c_name",
-            F.col("revenue_dec").cast("double").alias("revenue"),
-            F.col("c_acctbal").cast("double").alias("c_acctbal"), "n_name",
-        )
-    )
-
-
-@query(
-    "q13_customer_distribution",
-    """
-    WITH counts AS (
-      SELECT c_custkey, COUNT(o_orderkey) AS c_count
-      FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-      GROUP BY c_custkey
-    )
-    SELECT c_count, COUNT(*) AS custdist
-    FROM counts GROUP BY c_count
-    """,
-)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13: order-count histogram over customers, zero-order
-    customers included via the left join. Scale: two cascaded
-    aggregations; the first shuffles orders on custkey (the natural
-    key), the second is a tiny histogram — classic map-side-combine
-    friendly shape."""
-    t = load_tables(spark, sf_dir)
-    counts = (
-        t["customer"]
-        .join(t["orders"], F.col("o_custkey") == F.col("c_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return counts.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-@query(
-    "q14_promo_revenue",
-    """
-    SELECT ROUND(
-      100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-                 THEN CAST(l_extendedprice AS DECIMAL(12,2))
-                      * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-                 ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE)
-      / CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-             AS DOUBLE), 6) AS promo_revenue
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-10-01 00:00:00'
-    """,
-)
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: promo-part revenue share in one month. Scale: the
-    month filter prunes lineitem first; the part join is AQE-planned
-    (lineitem post-filter is one month, part is SF-scaled); single-row
-    conditional aggregate — numerator and denominator exact DECIMAL,
-    one rounded double division at the end."""
-    t = load_tables(spark, sf_dir)
-    part = t["part"].select("p_partkey", "p_type")
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    vol = ep * (_one() - disc)
-    zero = F.lit(0).cast(T.DecimalType(12, 2))
-    return (
-        t["lineitem"]
-        .where(
-            (F.col("l_shipdate") >= F.lit("1997-09-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-10-01 00:00:00").cast("timestamp"))
-        )
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(
-                    F.when(F.col("p_type") == "PROMO", vol).otherwise(zero)
-                ).cast("double")
-                / F.sum(vol).cast("double"),
-                6,
-            ).alias("promo_revenue")
-        )
-    )
-
-
-@query(
-    "q15_top_supplier",
-    """
-    WITH rev AS (
-      SELECT l_suppkey AS suppkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-               AS total_rev
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
-      GROUP BY l_suppkey
-    )
-    SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
-    FROM supplier JOIN rev ON s_suppkey = suppkey
-    WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
-    """,
-)
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: supplier(s) with maximum quarterly revenue — scalar
-    subquery against a derived view. Scale: per-supplier agg shuffles
-    on suppkey; the global max is a 1-row broadcast join (Catalyst
-    plans the scalar subquery as a separate tiny stage); equality is
-    exact DECIMAL so ties surface identically in both engines."""
-    t = load_tables(spark, sf_dir)
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    rev = (
-        t["lineitem"]
-        .where(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-        )
-        .groupBy(F.col("l_suppkey").alias("suppkey"))
-        .agg(F.sum(ep * (_one() - disc)).alias("total_rev"))
-    ).cache()
-    mx = rev.agg(F.max("total_rev").alias("mx"))
-    return (
-        rev.join(F.broadcast(mx), F.col("total_rev") == F.col("mx"))
-        .join(t["supplier"], F.col("suppkey") == F.col("s_suppkey"))
-        .select(
-            "s_suppkey", "s_name",
-            F.col("total_rev").cast("double").alias("total_revenue"),
-        )
-    )
-
-
-@query(
-    "q18_large_orders",
-    """
-    SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-           CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-    FROM customer
-      JOIN orders   ON o_custkey = c_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-    GROUP BY c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice
-    HAVING SUM(CAST(l_quantity AS DECIMAL(12,2))) > 300
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 20
-    """,
-)
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18: large-quantity orders (sum qty > 300) with their
-    customers, top-20 by order value. Scale: the HAVING filter runs on
-    the lineitem-only aggregate BEFORE any join (the classic Q18
-    rewrite) — survivors are rare, so the subsequent orders/customer
-    joins see a tiny left side and AQE broadcasts it; top-20 via
-    TakeOrderedAndProject."""
-    t = load_tables(spark, sf_dir)
-    big = (
-        t["lineitem"]
-        .groupBy("l_orderkey")
-        .agg(F.sum(_dec2(F.col("l_quantity"))).alias("sum_qty_dec"))
-        .where(F.col("sum_qty_dec") > 300)
-    )
-    return (
-        big.join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(20)
-        .select(
-            "c_custkey", "c_name", "o_orderkey", "o_orderdate",
-            "o_totalprice",
-            F.col("sum_qty_dec").cast("double").alias("sum_qty"),
-        )
-    )
-
-
-@query(
-    "q19_disjunct_revenue",
-    """
-    SELECT p_brand,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-                AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-           AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-           AND l_quantity BETWEEN 10 AND 20)
-       OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-           AND l_quantity BETWEEN 20 AND 30)
-    GROUP BY p_brand
-    """,
-)
-def q19_disjunct_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19: disjunctive (OR-of-ANDs) mixed-table predicate over a
-    join. Scale: Catalyst pushes the derivable per-table residuals
-    (brand IN (...) to part, quantity range union to lineitem) below
-    the join, evaluates the full disjunction after — the join itself
-    stays a plain partkey equi-join either way."""
-    t = load_tables(spark, sf_dir)
-    li, p = t["lineitem"], t["part"]
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    qty = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15)
-         & qty.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 25)
-           & qty.between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 35)
-           & qty.between(20, 30))
-    )
-    return (
-        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .where(cond)
-        .groupBy("p_brand")
-        .agg(
-            F.sum(ep * (_one() - disc)).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-@query(
-    "q2_best_supplier_per_part",
-    """
-    WITH shippers AS (
-      SELECT DISTINCT l_partkey AS pk, s_suppkey, s_name, s_acctbal
-      FROM lineitem
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN nation   ON n_nationkey = s_nationkey
-        JOIN region   ON r_regionkey = n_regionkey
-      WHERE r_name = 'EUROPE'
-    ),
-    ranked AS (
-      SELECT p_partkey, p_name, s_name,
-             CAST(s_acctbal AS DOUBLE) AS s_acctbal,
-             MAX(s_acctbal) OVER (PARTITION BY p_partkey) AS best
-      FROM part JOIN shippers ON pk = p_partkey
-      WHERE p_type = 'STANDARD' AND p_size <= 10
-    )
-    SELECT p_partkey, p_name, s_name, s_acctbal
-    FROM ranked WHERE s_acctbal = best
-    ORDER BY s_acctbal DESC, p_partkey, s_name
-    LIMIT 20
-    """,
-)
-def q2_best_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (adapted: no partsupp table, so the part-supplier
-    relationship comes from lineitem shipping history, and min
-    supplycost becomes max supplier balance). The correlated-subquery
-    form is expressed as a window max per part — one shuffle on
-    partkey instead of a rewritten self-join. Scale: region/nation
-    broadcast prunes suppliers before the lineitem join; DISTINCT
-    bounds the window input to |part x supplier| pairs."""
-    t = load_tables(spark, sf_dir)
-    eur_supp = F.broadcast(
-        t["supplier"]
-        .join(
-            t["nation"].join(
-                t["region"], F.col("n_regionkey") == F.col("r_regionkey")
-            ).where(F.col("r_name") == "EUROPE").select("n_nationkey"),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name", "s_acctbal")
-    )
-    parts = t["part"].where(
-        (F.col("p_type") == "STANDARD") & (F.col("p_size") <= 10)
-    ).select("p_partkey", "p_name")
-    shippers = (
-        t["lineitem"].select("l_partkey", "l_suppkey")
-        .join(eur_supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("l_partkey").alias("pk"), "s_suppkey", "s_name", "s_acctbal"
-        )
-        .distinct()
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("p_partkey")
-    ranked = (
-        parts.join(shippers, F.col("p_partkey") == F.col("pk"))
-        .withColumn("best", F.max("s_acctbal").over(w))
-    )
-    return (
-        ranked.where(F.col("s_acctbal") == F.col("best"))
-        .orderBy(F.desc("s_acctbal"), "p_partkey", "s_name")
-        .limit(20)
-        .select(
-            "p_partkey", "p_name", "s_name",
-            F.col("s_acctbal").cast("double").alias("s_acctbal"),
-        )
-    )
-
-
-@query(
-    "q22_dormant_customers",
-    """
-    WITH active AS (
-      SELECT DISTINCT o_custkey FROM orders
-      WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'
-    ),
-    avg_bal AS (
-      SELECT ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
-                   / COUNT(*), 6) AS ab
-      FROM customer WHERE c_acctbal > 0
-    )
-    SELECT n_name,
-           COUNT(*) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS totacctbal
-    FROM customer
-      JOIN nation ON n_nationkey = c_nationkey
-    WHERE CAST(c_acctbal AS DOUBLE) > (SELECT ab FROM avg_bal)
-      AND c_custkey NOT IN (SELECT o_custkey FROM active)
-    GROUP BY n_name
-    """,
-)
-def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (adapted: no phone column, so the country-code
-    IN-list becomes the nation dim and "no orders" becomes "no orders
-    since 2000" — same scalar-subquery + anti-join skeleton). Scale:
-    the scalar average is a 1-row broadcast; the NOT IN is a left-anti
-    join on custkey (null-safe because custkey is non-null); customer
-    shuffles once. The threshold is computed as exact-decimal-sum /
-    count in DOUBLE, rounded to 6dp, in BOTH engines — decimal AVG
-    type rules differ between them, a rounded double comparison does
-    not."""
-    t = load_tables(spark, sf_dir)
-    active = t["orders"].where(
-        F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00").cast("timestamp")
-    ).select("o_custkey").distinct()
-    bal = _dec2(F.col("c_acctbal"))
-    avg_bal = (
-        t["customer"]
-        .where(F.col("c_acctbal") > 0)
-        .agg(
-            F.round(
-                F.sum(bal).cast("double") / F.count(F.lit(1)), 6
-            ).alias("ab")
-        )
-    )
-    return (
-        t["customer"]
-        .where(F.col("c_acctbal") > 0)
-        .join(F.broadcast(avg_bal), F.col("c_acctbal").cast("double") > F.col("ab"))
-        .join(
-            active, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
-        )
-        .join(
-            F.broadcast(t["nation"].select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(bal).cast("double").alias("totacctbal"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Analytics surface, round 2: grouping sets, exact-moment statistics,
-# distribution windows — the aggregation shapes a warehouse user expects
-# beyond plain GROUP BY (SURVEY.md §2.5 aggregate category).
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "grouping_sets_revenue",
-    """
-    SELECT l_returnflag, l_linestatus,
-           GROUPING(l_returnflag, l_linestatus) AS gid,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-                AS DOUBLE) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-    """,
-)
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (finer than rollup/cube, which the catalog
-    already covers): per (flag,status), per flag, and grand total in ONE
-    aggregation pass, with grouping_id() disambiguating NULL-as-group
-    from NULL-as-value. Scale: Spark expands grouping sets into a single
-    Expand + hash-agg — one shuffle regardless of set count."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    ep = _dec2(F.col("l_extendedprice"))
-    disc = F.col("l_discount").cast(T.DecimalType(4, 2))
-    return (
-        li.groupingSets(
-            [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-            "l_returnflag", "l_linestatus",
-        )
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.sum(ep * (_one() - disc)).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .select("l_returnflag", "l_linestatus", "gid", "revenue", "n_items")
-    )
 
 
 @query(
@@ -3972,64 +2751,6 @@ def rarity_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir)["documents"]
     return rarity_scores(docs, "doc_id", "text")
-
-
-@query(
-    "full_outer_order_reconciliation",
-    """
-    WITH placed AS (
-      SELECT o_custkey AS ck, COUNT(*) AS n_orders
-      FROM orders WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'
-      GROUP BY o_custkey
-    ),
-    returned AS (
-      SELECT o_custkey AS ck, COUNT(DISTINCT o_orderkey) AS n_returned
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE l_returnflag = 'R'
-        AND l_shipdate >= TIMESTAMP '2000-01-01 00:00:00'
-      GROUP BY o_custkey
-    )
-    SELECT COALESCE(p.ck, r.ck) AS c_custkey,
-           COALESCE(n_orders, 0) AS n_orders,
-           COALESCE(n_returned, 0) AS n_returned
-    FROM placed p FULL OUTER JOIN returned r ON p.ck = r.ck
-    """,
-)
-def full_outer_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join (the remaining join type in the §2.5 matrix):
-    reconcile per-customer order counts against returned-order counts,
-    keeping customers present on either side only (the sides are keyed
-    on different date dimensions — orders placed since 2000 vs returns
-    SHIPPED since 2000 — so both left-only and right-only rows exist).
-    Scale: both inputs pre-aggregate to one row per customer BEFORE
-    the join, so the full outer join is small-side x small-side
-    regardless of lineitem size."""
-    t = load_tables(spark, sf_dir)
-    cut = F.lit("2000-01-01 00:00:00").cast("timestamp")
-    placed = (
-        t["orders"].where(F.col("o_orderdate") >= cut)
-        .groupBy(F.col("o_custkey").alias("pck"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    returned = (
-        t["orders"]
-        .join(
-            t["lineitem"].where(
-                (F.col("l_returnflag") == "R") & (F.col("l_shipdate") >= cut)
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy(F.col("o_custkey").alias("rck"))
-        .agg(F.count_distinct(F.col("o_orderkey")).alias("n_returned"))
-    )
-    return (
-        placed.join(returned, F.col("pck") == F.col("rck"), "full_outer")
-        .select(
-            F.coalesce(F.col("pck"), F.col("rck")).alias("c_custkey"),
-            F.coalesce(F.col("n_orders"), F.lit(0)).alias("n_orders"),
-            F.coalesce(F.col("n_returned"), F.lit(0)).alias("n_returned"),
-        )
-    )
 
 
 @query(
@@ -4678,65 +3399,6 @@ def repeated_passages_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "window_function_suite",
-    """
-    WITH w AS (
-      SELECT o_custkey, o_orderkey, o_orderdate,
-             CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-             LAG(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               AS prev_date,
-             LEAD(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               AS next_date,
-             FIRST_VALUE(o_orderkey) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               AS first_order,
-             ROUND(PERCENT_RANK() OVER
-               (PARTITION BY o_custkey
-                ORDER BY CAST(o_totalprice AS DECIMAL(12,2)), o_orderkey), 6)
-               AS price_pr
-      FROM orders WHERE o_custkey < 100
-    )
-    SELECT o_custkey, o_orderkey,
-           CAST(date_diff('day', prev_date, o_orderdate) AS BIGINT)
-             AS days_since_prev,
-           CAST(date_diff('day', o_orderdate, next_date) AS BIGINT)
-             AS days_until_next,
-           first_order, price_pr
-    FROM w
-    """,
-)
-def window_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Remaining §2.5 window-function breadth in one query: lag/lead
-    (inter-order gaps in days), first_value, percent_rank — all with
-    total-order tie-breaks so results are engine-exact. One shuffle on
-    the customer key serves all four windows (same partitioning)."""
-    from pyspark.sql import Window as W
-
-    orders = load_tables(spark, sf_dir)["orders"].where(
-        F.col("o_custkey") < 100
-    )
-    wd = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wp = W.partitionBy("o_custkey").orderBy(
-        _dec2(F.col("o_totalprice")), F.col("o_orderkey")
-    )
-    day = lambda c: F.to_date(c)  # noqa: E731
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.datediff(
-            day(F.col("o_orderdate")), day(F.lag("o_orderdate").over(wd))
-        ).cast("long").alias("days_since_prev"),
-        F.datediff(
-            day(F.lead("o_orderdate").over(wd)), day(F.col("o_orderdate"))
-        ).cast("long").alias("days_until_next"),
-        F.first("o_orderkey").over(wd).alias("first_order"),
-        F.round(F.percent_rank().over(wp), 6).alias("price_pr"),
-    )
-
-
-@query(
     "log_compaction_latest_per_key",
     """
     WITH ranked AS (
@@ -4806,48 +3468,6 @@ def json_props_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "nation_top_customers_rollcall",
-    """
-    WITH ranked AS (
-      SELECT n_name, c_name,
-             ROW_NUMBER() OVER (PARTITION BY n_nationkey
-               ORDER BY CAST(c_acctbal AS DECIMAL(12,2)) DESC, c_name) AS rn
-      FROM customer JOIN nation ON c_nationkey = n_nationkey
-    )
-    SELECT n_name, COUNT(*) AS n_top,
-           string_agg(c_name, ',' ORDER BY c_name) AS top_customers
-    FROM ranked WHERE rn <= 3 GROUP BY n_name
-    """,
-)
-def nation_top_customers_rollcall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered string aggregation (LISTAGG analog): top-3 customers per
-    nation by account balance, rolled up into a sorted comma list —
-    deterministic because the collect is BOUNDED by the ranking window
-    first (never collect an unbounded group at scale) and sorted before
-    joining. Broadcast nation dim; one shuffle on the nation key."""
-    from pyspark.sql import Window as W
-
-    t = load_tables(spark, sf_dir)
-    j = t["customer"].join(
-        F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey")
-    )
-    w = W.partitionBy("n_nationkey").orderBy(
-        _dec2(F.col("c_acctbal")).desc(), F.col("c_name")
-    )
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_top"),
-            F.array_join(
-                F.sort_array(F.collect_list("c_name")), ","
-            ).alias("top_customers"),
-        )
-    )
-
-
-@query(
     "bpe_merge_candidates",
     """
     WITH pt AS (
@@ -4902,332 +3522,6 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "pair")
         .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
-# TPC-H completion (round 3): Q11, Q12, Q16, Q20, Q21 — the last five of
-# the 22 canonical shapes (adapted like q2/q22: the fixture has no
-# partsupp / shipmode / commitdate, so the partsupp role is played by the
-# lineitem shipping history and lateness is shipdate vs orderdate).
-# With these, every TPC-H skeleton — scalar subqueries, HAVING over a
-# global fraction, conditional aggregation, COUNT(DISTINCT) with NOT-IN
-# exclusion, nested correlated-aggregate thresholds, EXISTS/NOT-EXISTS —
-# has an oracle-checked catalog row.
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "q11_important_inventory",
-    """
-    WITH natsupp AS (
-      SELECT s_suppkey FROM supplier JOIN nation ON n_nationkey = s_nationkey
-      WHERE n_name IN ('NATION_7','NATION_8')
-    ),
-    val AS (
-      SELECT l_partkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * CAST(l_quantity AS DECIMAL(4,0))) AS v
-      FROM lineitem WHERE l_suppkey IN (SELECT s_suppkey FROM natsupp)
-      GROUP BY l_partkey
-    )
-    SELECT l_partkey AS partkey, CAST(v AS DOUBLE) AS value
-    FROM val, (SELECT ROUND(CAST(SUM(v) AS DOUBLE) * 0.001, 6) AS thr FROM val)
-    WHERE CAST(v AS DOUBLE) > thr
-    ORDER BY value DESC, partkey
-    """,
-)
-def q11_important_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (adapted: no partsupp, so "stock value" is the
-    shipped value sum(extendedprice*quantity) per part from two
-    nations' suppliers). Skeleton preserved: group per part, scalar
-    subquery computing a fraction of the global total, HAVING above
-    it. Scale: the nation supplier set broadcasts; lineitem shuffles
-    once on partkey with map-side partial DECIMAL agg; the threshold
-    is a 1-row broadcast cross join — no second pass over lineitem."""
-    t = load_tables(spark, sf_dir)
-    natsupp = F.broadcast(
-        t["supplier"]
-        .join(
-            F.broadcast(
-                t["nation"].where(
-                    F.col("n_name").isin("NATION_7", "NATION_8")
-                ).select("n_nationkey")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey")
-    )
-    v = _dec2(F.col("l_extendedprice")) * F.col("l_quantity").cast(
-        T.DecimalType(4, 0)
-    )
-    val = (
-        t["lineitem"]
-        .join(natsupp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(F.sum(v).alias("v"))
-    )
-    thr = val.agg(
-        F.round(F.sum("v").cast("double") * F.lit(0.001), 6).alias("thr")
-    )
-    return (
-        val.crossJoin(F.broadcast(thr))
-        .where(F.col("v").cast("double") > F.col("thr"))
-        .select(
-            F.col("l_partkey").alias("partkey"),
-            F.col("v").cast("double").alias("value"),
-        )
-        .orderBy(F.desc("value"), "partkey")
-    )
-
-
-@query(
-    "q12_late_lines_by_priority",
-    """
-    SELECT l_returnflag,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                     AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_late,
-           CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-                     AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_late,
-           COUNT(*) AS n_lines
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE year(l_shipdate) = 1997 AND l_returnflag IN ('R','A')
-    GROUP BY l_returnflag
-    """,
-)
-def q12_late_lines_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (adapted: no shipmode/commitdate/receiptdate, so
-    the mode dimension is the return flag and "late" is shipdate more
-    than 60 days past the order date). Skeleton preserved: orders x
-    lineitem join, two conditional sums split by priority class.
-    Scale: the year filter pushes to the lineitem scan; the join is a
-    plain orderkey equi-join (AQE may broadcast the filtered side);
-    conditional sums partial-aggregate map-side."""
-    t = load_tables(spark, sf_dir)
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
-        "INTERVAL 60 DAYS"
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        t["lineitem"]
-        .where(
-            (F.year("l_shipdate") == 1997)
-            & F.col("l_returnflag").isin("R", "A")
-        )
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high & late, 1).otherwise(0)).alias("high_late"),
-            F.sum(F.when(~high & late, 1).otherwise(0)).alias("low_late"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-@query(
-    "q16_supplier_part_counts",
-    """
-    SELECT p_brand, p_type, p_size,
-           COUNT(DISTINCT l_suppkey) AS supplier_cnt
-    FROM part JOIN lineitem ON l_partkey = p_partkey
-    WHERE p_brand <> 'Brand#5' AND p_type NOT LIKE 'MEDIUM%'
-      AND p_size IN (1,4,9,14,23,36,45,49)
-      AND l_suppkey NOT IN
-          (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY p_brand, p_type, p_size
-    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-    """,
-)
-def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape (adapted: the part-supplier relation is the
-    lineitem shipping history; the excluded "complaint" suppliers are
-    those with negative balance). Skeleton preserved: COUNT(DISTINCT
-    supplier) per part attribute group with brand/type/size exclusions
-    and a NOT-IN supplier subquery. Scale: part filters push to the
-    scan; the exclusion set is a broadcast anti-join (tiny by
-    construction); distinct-count shuffles (brand,type,size,suppkey)
-    pairs once after map-side dedup."""
-    t = load_tables(spark, sf_dir)
-    bad = F.broadcast(
-        t["supplier"].where(F.col("s_acctbal") < 0).select("s_suppkey")
-    )
-    parts = t["part"].where(
-        (F.col("p_brand") != "Brand#5")
-        & ~F.col("p_type").like("MEDIUM%")
-        & F.col("p_size").isin(1, 4, 9, 14, 23, 36, 45, 49)
-    )
-    return (
-        t["lineitem"]
-        .select("l_partkey", "l_suppkey")
-        .join(bad, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
-        .join(F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct(F.col("l_suppkey")).alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-@query(
-    "q20_recent_concentration_suppliers",
-    """
-    WITH red_parts AS (SELECT p_partkey FROM part WHERE p_name LIKE 'red%'),
-    sp AS (
-      SELECT l_suppkey, l_partkey,
-             SUM(l_quantity) AS qty_total,
-             SUM(CASE WHEN year(l_shipdate) = 1998 THEN l_quantity
-                      ELSE 0 END) AS qty_1998
-      FROM lineitem
-      WHERE l_partkey IN (SELECT p_partkey FROM red_parts)
-      GROUP BY l_suppkey, l_partkey
-    )
-    SELECT DISTINCT s_suppkey, s_name
-    FROM supplier JOIN nation ON n_nationkey = s_nationkey
-    WHERE n_name IN ('NATION_3','NATION_4')
-      AND s_suppkey IN
-          (SELECT l_suppkey FROM sp WHERE 2 * qty_1998 > qty_total)
-    ORDER BY s_name
-    """,
-)
-def q20_recent_concentration_suppliers(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q20 shape (adapted: no partsupp availqty, so the
-    correlated threshold compares a supplier-part's 1998 shipped
-    quantity against half its lifetime shipped quantity — same nested
-    "IN (parts by name-prefix) ... HAVING agg > fraction * agg"
-    skeleton). Scale: the name-prefix part set broadcasts into a
-    semi-join before the lineitem aggregate; per-(supp,part)
-    conditional sums partial-aggregate map-side; the qualifying
-    supplier set is a semi-join against the (small) supplier dim.
-    Quantities are whole numbers, so double sums are exact in both
-    engines."""
-    t = load_tables(spark, sf_dir)
-    red = F.broadcast(
-        t["part"].where(F.col("p_name").like("red%")).select("p_partkey")
-    )
-    sp = (
-        t["lineitem"]
-        .join(red, F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(
-            F.sum("l_quantity").alias("qty_total"),
-            F.sum(
-                F.when(F.year("l_shipdate") == 1998, F.col("l_quantity"))
-                .otherwise(F.lit(0.0))
-            ).alias("qty_1998"),
-        )
-        .where(2 * F.col("qty_1998") > F.col("qty_total"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    return (
-        t["supplier"]
-        .join(
-            F.broadcast(
-                t["nation"].where(
-                    F.col("n_name").isin("NATION_3", "NATION_4")
-                ).select("n_nationkey")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(sp, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .select("s_suppkey", "s_name")
-        .distinct()
-        .orderBy("s_name")
-    )
-
-
-@query(
-    "q21_waiting_suppliers",
-    """
-    SELECT s_name, COUNT(*) AS numwait
-    FROM supplier
-    JOIN nation ON n_nationkey = s_nationkey
-    JOIN lineitem l1 ON l1.l_suppkey = s_suppkey
-    JOIN orders ON o_orderkey = l1.l_orderkey
-    WHERE o_orderstatus = 'F' AND n_name IN ('NATION_11','NATION_12')
-      AND l1.l_shipdate > o_orderdate + INTERVAL 365 DAY
-      AND EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = l1.l_orderkey
-                    AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                      JOIN orders o3 ON o3.o_orderkey = l3.l_orderkey
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey
-                        AND l3.l_shipdate > o3.o_orderdate
-                            + INTERVAL 365 DAY)
-    GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100
-    """,
-)
-def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (adapted: no commit/receipt dates, so "kept the
-    order waiting" is shipping more than a year after the order date).
-    Skeleton preserved exactly: the classic EXISTS (another supplier
-    on the order) + NOT EXISTS (another LATE supplier on the order)
-    pair, expressed as a compound-condition left-semi and left-anti
-    join on (orderkey, suppkey<>) — the only Spark plan that keeps
-    both subqueries as single hash joins instead of per-row probes.
-    Scale: nation suppliers broadcast; the late-lines frame is built
-    once and reused for both the candidate side and the anti side;
-    everything shuffles on orderkey."""
-    t = load_tables(spark, sf_dir)
-    li, orders = t["lineitem"], t["orders"]
-    late_all = (
-        li.select("l_orderkey", "l_suppkey", "l_shipdate")
-        .join(
-            orders.select("o_orderkey", "o_orderdate", "o_orderstatus"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .where(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 365 DAYS")
-        )
-        .select("l_orderkey", "l_suppkey", "o_orderstatus")
-    )
-    natsupp = F.broadcast(
-        t["supplier"]
-        .join(
-            F.broadcast(
-                t["nation"].where(
-                    F.col("n_name").isin("NATION_11", "NATION_12")
-                ).select("n_nationkey")
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name")
-    )
-    l1 = (
-        late_all.where(F.col("o_orderstatus") == "F")
-        .join(natsupp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_suppkey").alias("sk"),
-            "s_name",
-        )
-    )
-    l2 = li.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_suppkey").alias("sk2")
-    )
-    l3 = late_all.select(
-        F.col("l_orderkey").alias("ok3"), F.col("l_suppkey").alias("sk3")
-    )
-    return (
-        l1.join(
-            l2,
-            (F.col("ok") == F.col("ok2")) & (F.col("sk") != F.col("sk2")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("ok") == F.col("ok3")) & (F.col("sk") != F.col("sk3")),
-            "left_anti",
-        )
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(100)
     )
 
 
@@ -16372,8 +14666,7 @@ def did_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture the readout is the correct A/A near-zero. Scale: one
     distinct-user pass + one filtered map-side-combinable (arm,
     period) aggregate — 4 cells, no row-level state; the hash split
-    runs at one md5 per row (xxhash64 fast path available via
-    SPARK_GRAFT_HASH_MODE)."""
+    runs at one md5 per row."""
     from rocketmq_flink_spark.functions.porthash import hash60
 
     ev = load_tables(spark, sf_dir)["events"]
@@ -18386,59 +16679,6 @@ def lof_outlier_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "unpivot_pricing_metrics",
-    """
-    WITH w AS (
-      SELECT l_returnflag, l_linestatus,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * 100) AS BIGINT)
-               AS sum_qty_c,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * 100)
-               AS BIGINT) AS sum_price_c,
-             CAST(COUNT(*) AS BIGINT) AS n_lines
-      FROM lineitem GROUP BY 1, 2)
-    SELECT l_returnflag, l_linestatus, metric, value
-    FROM (
-      SELECT l_returnflag, l_linestatus, 'sum_qty_c' AS metric,
-             sum_qty_c AS value FROM w
-      UNION ALL
-      SELECT l_returnflag, l_linestatus, 'sum_price_c', sum_price_c FROM w
-      UNION ALL
-      SELECT l_returnflag, l_linestatus, 'n_lines', n_lines FROM w)
-    ORDER BY l_returnflag, l_linestatus, metric
-    """,
-)
-def unpivot_pricing_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT surface (the inverse of pivot_priority_by_status): the
-    wide per-(returnflag, linestatus) pricing aggregate melted to long
-    (group, metric, value) form with Spark's native unpivot operator —
-    the reshape every metrics-warehouse export needs (long form is
-    what time-series stores and BI semantic layers ingest). Values
-    are exact integer cents/counts so the melt is hash-certifiable.
-    Scale: unpivot is a zero-shuffle projection (Expand node) over the
-    already-aggregated frame — rows multiply by the metric count, no
-    exchange."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    w = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.expr("CAST(l_quantity AS DECIMAL(12,2)) * 100"))
-        .cast("long")
-        .alias("sum_qty_c"),
-        F.sum(F.expr("CAST(l_extendedprice AS DECIMAL(12,2)) * 100"))
-        .cast("long")
-        .alias("sum_price_c"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-    return (
-        w.unpivot(
-            ["l_returnflag", "l_linestatus"],
-            ["sum_qty_c", "sum_price_c", "n_lines"],
-            "metric",
-            "value",
-        )
-        .orderBy("l_returnflag", "l_linestatus", "metric")
-    )
-
-
-@query(
     "trailing_window_range_frame",
     """
     WITH p AS (
@@ -19811,92 +18051,6 @@ def late_data_router_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "merge_upsert_apply",
-    """
-    WITH base AS (
-      SELECT o_orderkey, o_orderstatus,
-             CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-               AS cents
-      FROM orders WHERE o_orderkey % 10 <> 0),
-    delta AS (
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 7 = 3 THEN 'D' ELSE 'U' END AS op,
-             'X' AS o_orderstatus,
-             CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-               + 100 AS cents
-      FROM orders WHERE o_orderkey % 5 = 0),
-    merged AS (
-      SELECT COALESCE(d.o_orderkey, b.o_orderkey) AS k,
-             CASE WHEN d.op = 'D' THEN NULL
-                  WHEN d.op = 'U' THEN d.o_orderstatus
-                  ELSE b.o_orderstatus END AS st,
-             CASE WHEN d.op = 'D' THEN NULL
-                  WHEN d.op = 'U' THEN d.cents
-                  ELSE b.cents END AS cents
-      FROM base b FULL OUTER JOIN delta d
-        ON d.o_orderkey = b.o_orderkey),
-    fin AS (SELECT * FROM merged WHERE st IS NOT NULL)
-    SELECT st AS o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(cents) AS BIGINT) AS sum_cents,
-           CAST(MIN(k) AS BIGINT) AS min_key,
-           CAST(MAX(k) AS BIGINT) AS max_key
-    FROM fin GROUP BY st ORDER BY st
-    """,
-)
-def merge_upsert_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO semantics, Spark-native: a CDC delta (upserts that
-    both UPDATE matched keys and INSERT unmatched ones, plus
-    tombstone deletes) applied to a base snapshot via one full-outer
-    join — when-matched-update / when-not-matched-insert /
-    when-matched-delete in a single pass, the engine mechanics under
-    every lakehouse MERGE statement (and the batch dual of
-    log_compaction's latest-per-key). The delta derives
-    deterministically from the fixture (keys % 5 upsert with bumped
-    cents, % 7 = 3 of those delete; base omits % 10 = 0 so inserts
-    actually happen), and the post-merge census (count / cents mass /
-    key range per status) certifies all three branches fired. Scale:
-    one key-keyed full-outer shuffle join — exactly the cost MERGE
-    pays on any engine; AQE handles the skew."""
-    o = load_tables(spark, sf_dir)["orders"]
-    cents = F.expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
-    base = o.where(F.col("o_orderkey") % 10 != 0).select(
-        F.col("o_orderkey").alias("bk"),
-        F.col("o_orderstatus").alias("bst"),
-        cents.alias("bcents"),
-    )
-    delta = o.where(F.col("o_orderkey") % 5 == 0).select(
-        F.col("o_orderkey").alias("dk"),
-        F.when(F.col("o_orderkey") % 7 == 3, "D").otherwise("U").alias("op"),
-        F.lit("X").alias("dst"),
-        (cents + 100).alias("dcents"),
-    )
-    merged = base.join(
-        delta, base["bk"] == delta["dk"], "full_outer"
-    ).select(
-        F.coalesce(F.col("dk"), F.col("bk")).alias("k"),
-        F.when(F.col("op") == "D", F.lit(None))
-        .when(F.col("op") == "U", F.col("dst"))
-        .otherwise(F.col("bst"))
-        .alias("st"),
-        F.when(F.col("op") == "D", F.lit(None).cast("long"))
-        .when(F.col("op") == "U", F.col("dcents"))
-        .otherwise(F.col("bcents"))
-        .alias("cents"),
-    )
-    return (
-        merged.where(F.col("st").isNotNull())
-        .groupBy(F.col("st").alias("o_orderstatus"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-            F.min("k").cast("long").alias("min_key"),
-            F.max("k").cast("long").alias("max_key"),
-        )
-        .orderBy("o_orderstatus")
-    )
-
-
-@query(
     "source_embedding_separation",
     """
     WITH j AS (
@@ -20108,9 +18262,9 @@ def restart_offsets_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     loses nothing and replays nothing. Scale: the snapshot is
     per-queue scalars (8 numbers — the same driver-side cost the SS
     offset log pays); reads, decode, and the agg are fully
-    distributed. The shuffle ratio (~0.5, SHUFFLE.md) is the exact
-    countDistinct certificate — one (type, id) pair per event, the
-    minimal content-level exactly-once proof; at production scale the
+    distributed. The countDistinct is the exact certificate — one
+    (type, id) pair per event, the minimal content-level exactly-once
+    proof; at production scale the
     cheap tier is offset arithmetic (per-queue counts vs snapshot
     deltas, zero shuffle) with this content audit run on a sampled
     topic slice."""

@@ -56,7 +56,7 @@ from rocketmq_flink_spark.config import (
     parse_datetime_ms,
     require,
 )
-from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA, Broker
+from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA, Broker, check_acl
 from rocketmq_flink_spark.sources.retry import call_with_retry, retry_params
 
 ENVELOPE_DDL = (
@@ -224,6 +224,18 @@ def _resolve_end(broker: Broker, topic: str, queue_id: int, spec: str) -> int:
     raise ValueError(f"invalid endingOffsets: {spec!r}")
 
 
+def _end_offset(broker: Broker, topic: str, queue_id: int, opts: dict) -> int:
+    """A queue's read bound: endingOffsets (the explicit batch-replay
+    bound between two W7 offset-log snapshots), else the first offset
+    stored after endingTimestamp/endTime (W6), else latest."""
+    if opts.get("endingOffsets"):
+        return _resolve_end(broker, topic, queue_id, opts["endingOffsets"])
+    ending_ts = _ending_ts_ms(opts)
+    if ending_ts is not None:
+        return broker.offset_for_timestamp(topic, queue_id, (ending_ts + 1) * 1000)
+    return broker.latest_offset(topic, queue_id)
+
+
 def _chunk(start: int, end: int, max_records: int):
     lo = start
     while lo < end:
@@ -284,28 +296,14 @@ class RocketMQBatchReader(DataSourceReader):
         self.max_records = int(self.opts.get("maxRecordsPerPartition", "500000"))
 
     def partitions(self):
-        from rocketmq_flink_spark.sources.broker import check_acl
-
         check_acl(self.root, self.opts.get("accessKey"), self.opts.get("secretKey"))
         broker = Broker(self.root)
-        ending_ts = _ending_ts_ms(self.opts)
         start_spec = _starting_offsets_spec(self.opts)
-        # endingOffsets: explicit per-queue bound ({"<queue>": off} /
-        # "latest"), the batch-replay counterpart of startingOffsets —
-        # what a restart replays between two W7 offset-log snapshots
-        ending_spec = self.opts.get("endingOffsets")
-        bounds = []
-        for q in broker.queues(self.topic):
-            start = _resolve_start(broker, self.topic, q, start_spec)
-            if ending_spec:
-                end = _resolve_end(broker, self.topic, q, ending_spec)
-            elif ending_ts is not None:
-                end = broker.offset_for_timestamp(
-                    self.topic, q, (ending_ts + 1) * 1000
-                )
-            else:
-                end = broker.latest_offset(self.topic, q)
-            bounds.append((q, start, end))
+        bounds = [
+            (q, _resolve_start(broker, self.topic, q, start_spec),
+             _end_offset(broker, self.topic, q, self.opts))
+            for q in broker.queues(self.topic)
+        ]
         return _plan(self.root, self.topic, bounds, self.max_records, self.tag,
                      self.sql)
 
@@ -336,50 +334,41 @@ class RocketMQStreamReader(DataSourceStreamReader):
         self.max_per_trigger = self.opts.get("maxOffsetsPerTrigger")
         self._cursor: dict | None = None  # last end offsets handed to Spark
 
-    def _broker(self) -> Broker:
-        return Broker(self.root)
-
-    def initialOffset(self) -> dict:
-        from rocketmq_flink_spark.sources.broker import check_acl
-
-        check_acl(self.root, self.opts.get("accessKey"), self.opts.get("secretKey"))
-        broker = self._broker()
-        init = {
-            str(q): _resolve_start(
-                broker, self.topic, q, _starting_offsets_spec(self.opts)
-            )
+    def _start_offsets(self) -> dict:
+        """{queue: offset} at the configured starting position."""
+        broker = Broker(self.root)
+        spec = _starting_offsets_spec(self.opts)
+        return {
+            str(q): _resolve_start(broker, self.topic, q, spec)
             for q in broker.queues(self.topic)
         }
+
+    def initialOffset(self) -> dict:
+        check_acl(self.root, self.opts.get("accessKey"), self.opts.get("secretKey"))
+        init = self._start_offsets()
         self._cursor = dict(init)
         return init
 
     def latestOffset(self) -> dict:
-        """Next batch end offsets. The maxOffsetsPerTrigger cap MUST be
-        applied here (not in partitions()): whatever this returns goes
-        into the offset log as the batch's committed end, so capping any
-        later would silently skip messages."""
-        broker = self._broker()
+        """Next batch end offsets: every queue's read bound (latest, or
+        the endingTimestamp/endTime bound), then the maxOffsetsPerTrigger
+        cap. The cap MUST be applied here (not in partitions()): whatever
+        this returns goes into the offset log as the batch's committed
+        end, so capping any later would silently skip messages."""
+        broker = Broker(self.root)
         latest = {
-            str(q): broker.latest_offset(self.topic, q)
+            str(q): _end_offset(broker, self.topic, q, self.opts)
             for q in broker.queues(self.topic)
         }
         if not self.max_per_trigger:
             self._cursor = dict(latest)
             return latest
-        cursor = self._cursor
-        if cursor is None:
-            # Spark calls latestOffset() BEFORE initialOffset() on a fresh
-            # query, so seed the cursor from the configured start. After a
-            # checkpoint restart the true position may be further ahead;
-            # partitions() resyncs the cursor to max(start, end), costing
-            # at most one undersized batch.
-            broker2 = self._broker()
-            cursor = {
-                str(q): _resolve_start(
-                    broker2, self.topic, q, _starting_offsets_spec(self.opts)
-                )
-                for q in broker2.queues(self.topic)
-            }
+        # Spark calls latestOffset() BEFORE initialOffset() on a fresh
+        # query, so seed the cursor from the configured start. After a
+        # checkpoint restart the true position may be further ahead;
+        # partitions() resyncs the cursor to max(start, end), costing
+        # at most one undersized batch.
+        cursor = self._cursor if self._cursor is not None else self._start_offsets()
         budget = int(self.max_per_trigger)
         capped = {}
         for q_str, latest_off in sorted(latest.items()):
@@ -580,10 +569,16 @@ def _commit_staged(
         )
 
 
-class RocketMQBatchWriter(DataSourceArrowWriter):
-    def __init__(self, options: dict):
-        from rocketmq_flink_spark.sources.broker import check_acl
+def _staged(messages) -> list[tuple[str, int, str]]:
+    return [s for m in messages if m for s in m.staged]
 
+
+class _StagingWriter:
+    """Write path shared by the batch and stream writers: each task
+    stages one parquet per (topic, queue); the driver's commit publishes
+    the staged files and abort drops them."""
+
+    def __init__(self, options: dict):
         self.opts = normalize_options(dict(options))
         require(self.opts, "path", "topic")
         self.root = self.opts["path"]
@@ -594,44 +589,26 @@ class RocketMQBatchWriter(DataSourceArrowWriter):
     def write(self, iterator):
         return _write_batches(self.root, self.topic, self.num_queues, iterator)
 
+    def abort(self, messages, batchId=None):
+        Broker(self.root).abort_tmp([(q, p) for _, q, p in _staged(messages)])
+
+
+class RocketMQBatchWriter(_StagingWriter, DataSourceArrowWriter):
     def commit(self, messages):
-        staged = [s for m in messages if m for s in m.staged]
         # `_epoch` (underscore-passthrough option) lets foreachBatch sinks
         # reuse the stream writer's idempotent-epoch commit (W9): a retried
         # epoch with the same id is a no-op instead of a duplicate.
-        _commit_staged(self.root, staged, epoch_id=self.opts.get("_epoch"),
-                       retry_opts=self.opts)
-
-    def abort(self, messages):
-        staged = [s for m in messages if m for s in m.staged]
-        Broker(self.root).abort_tmp([(q, p) for _, q, p in staged])
+        _commit_staged(self.root, _staged(messages),
+                       epoch_id=self.opts.get("_epoch"), retry_opts=self.opts)
 
 
-class RocketMQStreamWriter(DataSourceStreamArrowWriter):
+class RocketMQStreamWriter(_StagingWriter, DataSourceStreamArrowWriter):
     """Per-epoch commit (flush-on-checkpoint analog, W9); epoch markers
     make retried epochs idempotent. Arrow-batch write path."""
 
-    def __init__(self, options: dict):
-        from rocketmq_flink_spark.sources.broker import check_acl
-
-        self.opts = normalize_options(dict(options))
-        require(self.opts, "path", "topic")
-        self.root = self.opts["path"]
-        self.topic = self.opts["topic"]
-        self.num_queues = int(self.opts.get("numQueues", "8"))
-        check_acl(self.root, self.opts.get("accessKey"), self.opts.get("secretKey"))
-
-    def write(self, iterator):
-        return _write_batches(self.root, self.topic, self.num_queues, iterator)
-
     def commit(self, messages, batchId):
-        staged = [s for m in messages if m for s in m.staged]
-        _commit_staged(self.root, staged, epoch_id=str(batchId),
+        _commit_staged(self.root, _staged(messages), epoch_id=str(batchId),
                        retry_opts=self.opts)
-
-    def abort(self, messages, batchId):
-        staged = [s for m in messages if m for s in m.staged]
-        Broker(self.root).abort_tmp([(q, p) for _, q, p in staged])
 
 
 class RocketMQDataSource(DataSource):

@@ -1776,36 +1776,6 @@ def test_bm25_matches_python_and_textbook(spark):
         assert [d for d, _, _ in exp[qid]] == ref_rank
 
 
-def test_fast_hash_mode_domain_and_dedup(spark):
-    """SPARK_GRAFT_HASH_MODE=fast swaps md5 for xxhash64: same
-    non-negative 60-bit domain, statistically equivalent behavior —
-    the planted near-dup corpus must still collapse to the same
-    groups (hash VALUES differ, so no oracle replay in this mode)."""
-    from rocketmq_flink_spark.functions import porthash
-    from rocketmq_flink_spark.functions.porthash import hash60, set_hash_mode
-
-    df = spark.createDataFrame(
-        [(i, f"value-{i}") for i in range(2000)], "id LONG, s STRING"
-    )
-    try:
-        set_hash_mode("fast")
-        vals = [r["h"] for r in df.select(hash60(F.col("s")).alias("h")).collect()]
-        assert all(0 <= v < (1 << 60) for v in vals)
-        assert len(set(vals)) == len(vals)  # no collisions on 2k keys
-        # operator-level: near-dup grouping still works
-        docs = spark.createDataFrame(
-            [(i, "an identical template body of words here") for i in range(40)]
-            + [(100 + i, f"unique document {i} alpha{i} beta{i}") for i in range(10)],
-            "doc_id LONG, text STRING",
-        )
-        rep = {r.doc_id: r.rep_id
-               for r in D.minhash_dedup(docs, "doc_id", "text").collect()}
-        assert all(rep[i] == 0 for i in range(40))
-    finally:
-        set_hash_mode("portable")
-    assert porthash.hash_mode() == "portable"
-
-
 def test_bpe_batched_equals_sequential(spark):
     """The batched trainer (one driver sync per COMPATIBLE merge
     batch) must produce bit-identical merges AND vocab to the

@@ -1512,61 +1512,6 @@ def test_selectivity_oracle_truth_and_depth_bounds(cents):
 
 @settings(**SETTINGS)
 @given(
-    keys=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=200),   # orderkey
-            st.sampled_from(["O", "F", "P"]),
-            st.integers(min_value=100, max_value=90000),  # cents
-        ),
-        min_size=1,
-        max_size=50,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_merge_upsert_oracle_matches_set_witness(keys):
-    """The merge_upsert_apply ORACLE equals pure-Python MERGE
-    semantics (update matched, insert unmatched, delete tombstoned)
-    on arbitrary orders."""
-    import duckdb
-    from collections import defaultdict
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE orders(o_orderkey BIGINT, o_orderstatus VARCHAR,"
-        " o_totalprice DOUBLE)"
-    )
-    con.executemany(
-        "INSERT INTO orders VALUES (?, ?, ?)",
-        [(k, s, c / 100.0) for k, s, c in keys],
-    )
-    got = con.execute(REGISTRY["merge_upsert_apply"].oracle).fetchall()
-    state = {}
-    for k, s, c in keys:
-        if k % 10 != 0:
-            state[k] = (s, c)
-    for k, s, c in keys:
-        if k % 5 == 0:
-            if k % 7 == 3:
-                state.pop(k, None)
-            else:
-                state[k] = ("X", c + 100)
-    agg = defaultdict(lambda: [0, 0, None, None])
-    for k, (s, c) in state.items():
-        a = agg[s]
-        a[0] += 1
-        a[1] += c
-        a[2] = k if a[2] is None else min(a[2], k)
-        a[3] = k if a[3] is None else max(a[3], k)
-    want = sorted(
-        (s, a[0], a[1], a[2], a[3]) for s, a in agg.items()
-    )
-    assert got == want
-
-
-@settings(**SETTINGS)
-@given(
     texts=st.lists(
         st.text(alphabet="ab x yz ", min_size=0, max_size=40),
         min_size=1,
@@ -1841,7 +1786,7 @@ def test_partitioning_invariance_representative_queries(spark):
     from rocketmq_flink_spark.plans.catalog import REGISTRY
 
     names = [
-        "q1_pricing_summary",          # decimal agg
+        "codec_roundtrip_agg",         # codec round trip + decimal agg
         "kmeans_cluster_profile",      # iterative fold (quantized)
         "minhash_dedup_groups",        # dedup banding
         "bm25_search_docs",            # fixed-point retrieval

@@ -205,6 +205,60 @@ def test_foreach_batch_sink_roundtrip_and_idempotence(
     )
 
 
+def test_stream_ending_timestamp_matches_batch_read(spark, tmp_path):
+    """endingTimestamp bounds a stream the way it bounds a batch read:
+    over 2 queues x 2 commit rounds with the bound between the rounds,
+    an availableNow stream and a rate-capped stream both deliver exactly
+    the batch read's (queue, offset) set, the first round."""
+    import pyarrow as pa
+
+    from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA, Broker
+
+    register(spark)
+    root = str(tmp_path / "broker")
+    broker = Broker(root)
+    cut_ms = 1_700_000_000_000
+    for store_ms in (cut_ms - 1000, cut_ms + 1000):
+        staged = []
+        for q in (0, 1):
+            rows = [
+                {"offset": 0, "born_ts": store_ms * 1000, "store_ts": 0,
+                 "msg_id": "", "keys": None, "tags": None, "props": [],
+                 "body": f"{q}-{i}".encode()}
+                for i in range(5)
+            ]
+            tbl = pa.Table.from_pylist(rows, schema=SEGMENT_SCHEMA)
+            staged.append((q, broker.write_tmp("t_end", tbl)))
+        broker.commit_tmp("t_end", staged, store_ts_us=store_ms * 1000)
+    opts = {"path": root, "topic": "t_end", "endingTimestamp": str(cut_ms)}
+
+    batch = sorted(
+        (r.queue_id, r.offset)
+        for r in spark.read.format("rocketmq").options(**opts).load().collect()
+    )
+    assert batch == [(q, o) for q in (0, 1) for o in range(5)]
+
+    for name, extra in (("now", {}), ("capped", {"maxOffsetsPerTrigger": "3"})):
+        seen = []
+
+        def collect(df, _):
+            seen.extend((r.queue_id, r.offset)
+                        for r in df.select("queue_id", "offset").collect())
+
+        writer = (
+            spark.readStream.format("rocketmq").options(**opts, **extra).load()
+            .writeStream.foreachBatch(collect)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+        )
+        if extra:
+            q = writer.start()
+            q.processAllAvailable()
+            q.stop()
+        else:
+            writer.trigger(availableNow=True).start().awaitTermination(180)
+        assert sorted(seen) == batch, name
+
+
 def test_observe_metrics_listener(spark, broker_root, event_topic, tmp_path):
     listener = ThroughputListener()
     spark.streams.addListener(listener)

@@ -30,8 +30,7 @@ def main() -> None:
         "Generated by tools/gen_operator_index.py; do not edit by hand.",
         f"{len(REGISTRY)} queries, every one paired with a DuckDB oracle",
         "and hash-checked (rows + schema + sorted value hash) at sf0.01",
-        "and sf0.1. See PARITY.md for the reference-operator mapping and",
-        "SCALING/SHUFFLE for the scale evidence.",
+        "and sf0.1. See PARITY.md for the reference-operator mapping.",
         "",
         "| # | query | what it proves |",
         "|---|---|---|",
