@@ -21,7 +21,8 @@ initOffset, legacy/RocketMQSourceFunction.java:330-365):
   endingOffsets   = latest | {"<queue>": off}  (batch replay bound, W7)
   endingTimestamp = <epoch ms>   (bounded read / stopInMs, W6)
   tag             = broker-side tag filter (P1) applied in read()
-  maxOffsetsPerTrigger = per-microbatch rate cap across queues
+  maxOffsetsPerTrigger = per-microbatch rate cap, shared across queues
+                         in proportion to their backlog
   maxRecordsPerPartition = most offsets one chunk (and one Arrow batch)
                            holds; a backlogged queue fans out across
                            tasks in chunks of this size
@@ -270,6 +271,26 @@ def _pack(chunks: list[tuple[int, int, int]], max_records: int,
     return [sorted(g) for g in groups]
 
 
+def _rate_limit(cursor: dict, latest: dict, budget: int) -> dict:
+    """End offsets that take at most `budget` messages past `cursor`,
+    split across queues in proportion to their backlog (as Spark's Kafka
+    source does): floor shares, then one more to each of the largest
+    fractional shares, ties to the lower queue id. So the batch holds
+    min(budget, backlog) messages and no backlogged queue starves."""
+    cur = {q: int(cursor.get(q, 0)) for q in latest}
+    backlog = {q: max(int(latest[q]) - cur[q], 0) for q in latest}
+    total = sum(backlog.values())
+    if total <= budget:
+        return {q: cur[q] + backlog[q] for q in latest}
+    take = {q: budget * n // total for q, n in backlog.items()}
+    left = budget - sum(take.values())
+    by_remainder = sorted(latest,
+                          key=lambda q: (-(budget * backlog[q] % total), int(q)))
+    for q in by_remainder[:left]:
+        take[q] += 1
+    return {q: cur[q] + take[q] for q in latest}
+
+
 def _plan(root: str, topic: str, bounds, max_records: int, tag: str | None,
           sql: str | None) -> list[QueueRanges]:
     """Input partitions for (queue_id, start, end) bounds: each range cut
@@ -369,13 +390,7 @@ class RocketMQStreamReader(DataSourceStreamReader):
         # partitions() resyncs the cursor to max(start, end), costing
         # at most one undersized batch.
         cursor = self._cursor if self._cursor is not None else self._start_offsets()
-        budget = int(self.max_per_trigger)
-        capped = {}
-        for q_str, latest_off in sorted(latest.items()):
-            cur = int(cursor.get(q_str, 0))
-            take = max(min(int(latest_off) - cur, budget), 0)
-            capped[q_str] = cur + take
-            budget -= take
+        capped = _rate_limit(cursor, latest, int(self.max_per_trigger))
         self._cursor = dict(capped)
         return capped
 

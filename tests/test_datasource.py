@@ -19,7 +19,7 @@ from rocketmq_flink_spark.functions import decode_envelope, encode_rows
 from rocketmq_flink_spark.session import load_tables
 from rocketmq_flink_spark.sources import Broker, register
 from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA
-from rocketmq_flink_spark.sources.datasource import RocketMQBatchReader
+from rocketmq_flink_spark.sources.datasource import RocketMQBatchReader, _rate_limit
 
 SF = "/root/testdata/sf0.001"
 EVENT_SCHEMA = "event_id BIGINT, user_id BIGINT, value DOUBLE, ts TIMESTAMP"
@@ -47,10 +47,16 @@ def _write_events(spark, root, topic, num_queues=4):
     )
 
 
-def test_write_then_batch_read_roundtrip(spark, broker_root):
+@pytest.fixture(scope="module")
+def t_round(spark, broker_root):
+    """Write the 1,000 fixture events to topic t_round of broker_root,
+    once, for every test of this module that reads it."""
     register(spark)
     _write_events(spark, broker_root, "t_round")
 
+
+@pytest.mark.usefixtures("t_round")
+def test_write_then_batch_read_roundtrip(spark, broker_root):
     env = (
         spark.read.format("rocketmq")
         .option("path", broker_root)
@@ -70,6 +76,7 @@ def test_write_then_batch_read_roundtrip(spark, broker_root):
     assert src.exceptAll(decoded).count() == 0
 
 
+@pytest.mark.usefixtures("t_round")
 def test_offsets_contiguous_per_queue(spark, broker_root):
     broker = Broker(broker_root)
     for q in broker.queues("t_round"):
@@ -78,6 +85,7 @@ def test_offsets_contiguous_per_queue(spark, broker_root):
         assert offs == list(range(len(offs)))
 
 
+@pytest.mark.usefixtures("t_round")
 def test_starting_offsets_latest_and_explicit(spark, broker_root):
     latest = (
         spark.read.format("rocketmq")
@@ -172,6 +180,7 @@ def test_bounded_read_ending_timestamp(spark, broker_root):
     assert full.count() == 20
 
 
+@pytest.mark.usefixtures("t_round")
 def test_streaming_read_available_now(spark, broker_root, tmp_path):
     register(spark)
     stream = (
@@ -192,6 +201,7 @@ def test_streaming_read_available_now(spark, broker_root, tmp_path):
     assert total == 1000
 
 
+@pytest.mark.usefixtures("t_round")
 def test_streaming_read_with_rate_limit(spark, broker_root, tmp_path):
     register(spark)
     stream = (
@@ -515,3 +525,60 @@ def test_stream_rate_limit_packed_exactly_once(spark, tmp_path):
                             for o in range(n)]
     assert len(parts) >= -(-sum(counts) // 400)
     assert max(parts) <= min(8, spark.sparkContext.defaultParallelism)
+
+
+def test_stream_rate_limit_splits_budget_by_backlog(spark, tmp_path):
+    """maxOffsetsPerTrigger is shared by backlog across 12 equal queues
+    (queue ids past 9 included): the first batch takes 10 from each, no
+    batch exceeds the cap, and every (queue, offset) arrives once."""
+    register(spark)
+    root = str(tmp_path / "broker")
+    counts = [100] * 12
+    _fill_queues(root, "t_share", counts)
+
+    batches = []
+
+    def collect(batch, _):
+        rows = batch.select("queue_id", "offset").collect()
+        if rows:
+            batches.append([(r.queue_id, r.offset) for r in rows])
+
+    q = (
+        spark.readStream.format("rocketmq")
+        .options(path=root, topic="t_share", maxOffsetsPerTrigger=120)
+        .load()
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert max(len(b) for b in batches) <= 120
+    first = {}
+    for qid, _ in batches[0]:
+        first[qid] = first.get(qid, 0) + 1
+    assert first == {qid: 10 for qid in range(12)}
+    assert sorted(p for b in batches for p in b) == [
+        (qid, o) for qid, n in enumerate(counts) for o in range(n)]
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    backlog=st.lists(st.integers(0, 500), min_size=1, max_size=14),
+    behind=st.data(),
+    budget=st.integers(1, 2000),
+)
+def test_rate_limit_shares_budget_by_backlog(backlog, behind, budget):
+    """The capped batch holds min(budget, backlog) messages, never more
+    than a queue's backlog, and each queue's take is within one message
+    of its exact proportional share."""
+    cursor = {str(q): behind.draw(st.integers(0, 50)) for q in range(len(backlog))}
+    latest = {q: cur + n for (q, cur), n in zip(cursor.items(), backlog)}
+    end = _rate_limit(cursor, latest, budget)
+    take = {q: end[q] - cursor[q] for q in latest}
+    total = sum(backlog)
+    assert sum(take.values()) == min(budget, total)
+    for q, n in zip(latest, backlog):
+        assert 0 <= take[q] <= n
+        if total > budget:
+            assert abs(take[q] - budget * n / total) < 1
