@@ -1,7 +1,9 @@
 """Scalar/codec function layer (the connector's "functions" surface).
 
-All implemented as built-in pyspark.sql.functions expressions so they stay
-inside whole-stage codegen — no Python UDFs in the decode/encode hot path.
+All implemented as built-in Spark SQL expressions, so the decode/encode
+hot path has no Python UDF. The codec's line Generate runs outside
+whole-stage codegen (`transform` is a CodegenFallback); the Filter and
+Project around it are codegen'd (see functions.codec).
 """
 
 from rocketmq_flink_spark.functions.binary import (  # noqa: F401

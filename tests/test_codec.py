@@ -6,9 +6,12 @@ coverage the reference only exercises implicitly."""
 from __future__ import annotations
 
 import datetime as dt
+import threading
 from decimal import Decimal
 
 import pytest
+from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -201,6 +204,41 @@ def test_length_check_pad(spark):
     ) == [(1, "x"), (2, None), (3, "y"), (None, "w")]
 
 
+def test_out_of_range_integer_is_a_format_error(spark):
+    # Integer.parseInt throws NumberFormatException on overflow, which the
+    # reference handles as a format error. Under ANSI mode a plain cast
+    # would fail the whole query instead, for header fields too.
+    bodies = ["1|2", "99999999999|3", "4|12345678901234567890"]
+    props = [{"h": "5"}, {"h": "6"}, {"h": "99999999999"}]
+
+    def decode(preset):
+        return decode_envelope(
+            envelope(spark, bodies, props),
+            "a INT, b BIGINT, h INT",
+            options={"fieldDelimiter": "|", "headerFields": "h", "lengthCheck": preset},
+        )
+
+    assert [tuple(r) for r in decode("SKIP").collect()] == [(1, 2, 5)]
+    assert sorted(
+        (tuple(r) for r in decode("PAD").collect()), key=repr
+    ) == [(1, 2, 5), (4, None, None), (None, 3, 6)]
+    with pytest.raises(Exception, match="unparseable field value"):
+        decode("EXCEPTION").collect()
+
+
+def test_out_of_range_epoch_millis_is_a_format_error(spark):
+    # a long whose micros overflow is no timestamp; it must not fail the query
+    df = decode_envelope(
+        envelope(spark, ["1|1704067200123", "2|9000000000000000000"]),
+        "a INT, ts TIMESTAMP",
+        options={"fieldDelimiter": "|", "lengthCheck": "PAD"},
+    )
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, dt.datetime(2024, 1, 1, 0, 0, 0, 123000)),
+        (2, None),
+    ]
+
+
 def test_length_check_exception(spark):
     df = decode_envelope(
         envelope(spark, ["1"]), "a INT, b STRING", options={"lengthCheck": "EXCEPTION"}
@@ -293,6 +331,13 @@ def test_decode_rejects_empty_field_delimiter(spark):
         )
 
 
+def test_encode_keys_only_gives_empty_body(spark):
+    # every column routed out of the body: the body is empty, not an error
+    src = spark.createDataFrame([("k1",)], "id STRING")
+    row = encode_rows(src, options={"topic": "t", "keyColumns": "id"}).collect()[0]
+    assert (row.keys, bytes(row.value)) == ("k1", b"")
+
+
 def test_encode_write_keys_to_body(spark):
     src = spark.createDataFrame([("k1", "v1")], "id STRING, payload STRING")
     env = encode_rows(
@@ -306,3 +351,166 @@ def test_encode_null_sentinel_keeps_positions(spark):
     src = spark.createDataFrame([(None, "x")], "a STRING, b STRING")
     env = encode_rows(src, options={"topic": "t"})
     assert bytes(env.collect()[0].value) == b"\\N\x01x"
+
+
+# --- build cost -------------------------------------------------------------
+
+REPLAY_SCHEMA = "id BIGINT, user STRING, amount INT, cat STRING"
+PRODUCE_COLUMNS = "id BIGINT, user STRING, kind STRING, region STRING, amount INT, note STRING"
+PRODUCE_OPTIONS = {
+    "fieldDelimiter": "|",
+    "keyColumns": "user",
+    "isDynamicTag": "true",
+    "dynamicTagColumn": "kind",
+    "dynamicTagColumnWriteIncluded": "false",
+    "isDynamicProperty": "true",
+    "dynamicPropertyColumns": "region",
+}
+# 12 more fields of every coerced kind, for the per-field cost
+EXTRA_COLUMNS = ", ".join(
+    f"x{i} {t}"
+    for i, t in enumerate(
+        ["INT", "BIGINT", "DOUBLE", "DECIMAL(10,2)", "BOOLEAN", "DATE",
+         "TIMESTAMP", "STRING", "SMALLINT", "TINYINT", "FLOAT", "BINARY"]
+    )
+)
+
+
+def _py4j_calls(monkeypatch, build) -> int:
+    """Py4J round trips that the second of two builds makes. Py4J's
+    finalizer thread sends the deletes of freed Java objects whenever it
+    runs, so only this thread's calls count."""
+    from py4j.java_gateway import GatewayClient
+
+    build()
+    calls = 0
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(GatewayClient, "send_command", counting)
+        build()
+    return calls
+
+
+def test_codec_build_py4j_calls(spark, monkeypatch):
+    # each F.*/Column call costs several Py4J round trips; the codec hands
+    # Spark SQL text in a few DataFrame calls, so a build stays cheap and
+    # a field adds at most the cost of its entries in those calls
+    env = envelope(spark, [])
+    opts = {"fieldDelimiter": "|", "lengthCheck": "SKIP"}
+
+    def decode(schema):
+        return _py4j_calls(monkeypatch, lambda: decode_envelope(env, schema, opts))
+
+    def encode(columns):
+        df = spark.createDataFrame([], columns)
+        return _py4j_calls(monkeypatch, lambda: encode_rows(df, PRODUCE_OPTIONS))
+
+    narrow = decode(REPLAY_SCHEMA)
+    assert narrow <= 60
+    assert decode(f"{REPLAY_SCHEMA}, {EXTRA_COLUMNS}") - narrow <= 2 * 12
+    narrow = encode(PRODUCE_COLUMNS)
+    assert narrow <= 60
+    assert encode(f"{PRODUCE_COLUMNS}, {EXTRA_COLUMNS}") - narrow <= 2 * 12
+
+
+# --- SQL text quoting -------------------------------------------------------
+
+# quotes, a backslash, regex metacharacters and \x01
+TRICKY = "'\\.|*+?^$()[]{}\x01`\""
+
+
+def _option(delim: str) -> str:
+    """The option text for a delimiter: options unescape like Java literals."""
+    return delim.replace("\\", "\\\\")
+
+
+def _text(alphabet: str, **kwargs):
+    return st.text(alphabet=st.sampled_from(alphabet), **kwargs)
+
+
+@st.composite
+def quoting_cases(draw):
+    fd = draw(_text(TRICKY, min_size=1, max_size=3))
+    ld = draw(_text(TRICKY, min_size=1, max_size=3))
+    sentinel = draw(_text(TRICKY + "N", min_size=1, max_size=4))
+    names = draw(
+        st.lists(
+            _text("ab .'`\"\\", min_size=1, max_size=5).filter(
+                lambda n: n == n.strip()  # option lists strip their items
+            ),
+            min_size=3,
+            max_size=3,
+            unique_by=str.lower,  # column names are case-insensitive
+        )
+    )
+    value = st.one_of(st.none(), st.just(sentinel), _text("ab\\N'", max_size=5))
+    row = st.tuples(
+        value,
+        st.one_of(st.none(), st.integers(-(2**63), 2**63 - 1)),
+        st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)),
+    )
+    return fd, ld, sentinel, names, draw(st.lists(row, min_size=1, max_size=4))
+
+
+@pytest.mark.usefixtures("spark")
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=quoting_cases())
+def test_sql_quoting_roundtrip(spark, case):
+    """encode -> decode returns its input for delimiters, null sentinels
+    and column/header names that need quoting in SQL text, whatever
+    spark.sql.parser.escapedStringLiterals is set to."""
+    fd, ld, sentinel, names, rows = case
+    nulls = [sentinel, "\\N"]
+    for s, n, _ in rows:
+        wire = [s if s is not None else "\\N", str(n) if n is not None else "\\N"]
+        body = fd.join(wire)
+        # a value holding a delimiter cannot round-trip by design
+        assume(body.split(fd) == wire and ld not in body)
+    schema = T.StructType(
+        [
+            T.StructField(names[0], T.StringType()),
+            T.StructField(names[1], T.LongType()),
+            T.StructField(names[2], T.IntegerType()),
+        ]
+    )
+    want = sorted(
+        ((None if s in nulls else s, n, h) for s, n, h in rows), key=repr
+    )
+    src = spark.createDataFrame(rows, schema)
+    for escaped in ("false", "true"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped)
+        try:
+            env = encode_rows(
+                src,
+                options={
+                    "fieldDelimiter": _option(fd),
+                    "isDynamicProperty": "true",
+                    "dynamicPropertyColumns": names[2],
+                },
+            )
+            back = decode_envelope(
+                env,
+                schema,
+                options={
+                    "fieldDelimiter": _option(fd),
+                    "lineDelimiter": _option(ld),
+                    "nullValues": ",".join(nulls),
+                    "headerFields": names[2],
+                    "lengthCheck": "EXCEPTION",
+                },
+            )
+            got = sorted((tuple(r) for r in back.collect()), key=repr)
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+        assert got == want, escaped
