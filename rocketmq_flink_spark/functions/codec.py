@@ -60,9 +60,12 @@ NULL_SENTINEL = "\\N"
 def _unescape(s: str) -> str:
     """Unescape Java-style literals in delimiter options ("\\n", "\\u0001"),
     mirroring StringEscapeUtils.unescapeJava in the reference
-    (RowDeserializationSchema.java:103-104)."""
+    (RowDeserializationSchema.java:103-104). A lone trailing backslash
+    is dropped, as unescapeJava drops it."""
     if "\\" not in s:
         return s
+    if (len(s) - len(s.rstrip("\\"))) % 2:
+        s = s[:-1]
     return s.encode("latin-1", "backslashreplace").decode("unicode_escape")
 
 

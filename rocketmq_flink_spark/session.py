@@ -67,6 +67,20 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", _default_driver_memory())
+        # Offset log, commit log and state-store files through the
+        # FileSystem API. The default FileContext manager goes through
+        # Hadoop's RawLocalFileSystem, which without libhadoop starts a
+        # process for a chmod of every file it creates and a readlink of
+        # both paths of every rename: about 54 process starts per
+        # live_tail trigger, 32.9 ms per atomic checkpoint file against
+        # 8.3 ms here (idle JVM, 4-core VM). It writes the same files
+        # (.crc and .delta.crc checksums included), and on a local disk
+        # both managers check the destination, then rename.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

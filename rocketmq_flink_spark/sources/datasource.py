@@ -34,6 +34,7 @@ maxRecordsPerPartition however many chunks a task packs.
 
 from __future__ import annotations
 
+import hashlib
 import heapq
 import json
 import os
@@ -57,7 +58,12 @@ from rocketmq_flink_spark.config import (
     parse_datetime_ms,
     require,
 )
-from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA, Broker, check_acl
+from rocketmq_flink_spark.sources.broker import (
+    STORED_SCHEMA,
+    Broker,
+    check_acl,
+    with_msg_ids,
+)
 from rocketmq_flink_spark.sources.retry import call_with_retry, retry_params
 
 ENVELOPE_DDL = (
@@ -105,7 +111,8 @@ class QueueRanges(InputPartition):
 
 def _read_partition(part: QueueRanges):
     """Executor-side scan of one task's queue ranges -> one Arrow batch
-    per range, stamped with that range's queue id."""
+    per range, stamped with that range's queue id. msg_id is derived
+    only for the rows the filters keep."""
     import pyarrow.compute as pc
 
     broker = Broker(part.root)
@@ -129,7 +136,7 @@ def _read_partition(part: QueueRanges):
         sql_filter = compile_sql92_arrow(part.sql)
     for queue_id, start, end in part.ranges:
         tbl = call_with_retry(
-            lambda q=queue_id, lo=start, hi=end: broker.read_range(
+            lambda q=queue_id, lo=start, hi=end: broker.read_stored(
                 part.topic, q, lo, hi)
         )
         if tags is not None and tbl.num_rows:
@@ -139,6 +146,7 @@ def _read_partition(part: QueueRanges):
         n = tbl.num_rows
         if n == 0:
             continue
+        tbl = with_msg_ids(tbl, part.topic, queue_id)
         arrays = [
             pa.array([part.topic] * n, pa.string()),
             pa.array([queue_id] * n, pa.int32()),
@@ -489,18 +497,16 @@ def _write_batches(root: str, topic: str, num_queues: int, batches):
             body_arr = pa.array([b""] * n, pa.binary())
         else:
             body_arr = pc.fill_null(body_c.cast(pa.binary()), b"")
+        # stored layout: offset, store_ts and msg_id come from the commit
         norm = pa.Table.from_arrays(
             [
-                pa.array([0] * n, pa.int64()),  # offset: assigned at commit
                 pa.chunked_array([born_us]).combine_chunks(),
-                pa.array([0] * n, pa.int64()),  # store_ts: stamped at commit
-                pa.array([""] * n, pa.string()),  # msg_id: stamped at commit
                 keys_arr,
                 tags_arr,
                 props_arr,
                 body_arr,
             ],
-            schema=SEGMENT_SCHEMA,
+            schema=STORED_SCHEMA,
         )
 
         # --- per-row routing key (topic index * num_queues + qid) ---
@@ -584,6 +590,16 @@ def _commit_staged(
         )
 
 
+def _epoch_key(opts: dict, batch_id) -> str:
+    """A stream epoch's key, `<sha1(checkpointLocation)[:16]>-<batchId>`,
+    or the batch id alone when no checkpoint location is among the
+    writer's options."""
+    loc = next((v for k, v in opts.items() if k.lower() == "checkpointlocation"), None)
+    if not loc:
+        return str(batch_id)
+    return f"{hashlib.sha1(str(loc).encode()).hexdigest()[:16]}-{batch_id}"
+
+
 def _staged(messages) -> list[tuple[str, int, str]]:
     return [s for m in messages if m for s in m.staged]
 
@@ -612,18 +628,27 @@ class RocketMQBatchWriter(_StagingWriter, DataSourceArrowWriter):
     def commit(self, messages):
         # `_epoch` (underscore-passthrough option) lets foreachBatch sinks
         # reuse the stream writer's idempotent-epoch commit (W9): a retried
-        # epoch with the same id is a no-op instead of a duplicate.
+        # epoch with the same id is a no-op instead of a duplicate. The id
+        # is the key as given, so it must be unique among a topic's writers.
         _commit_staged(self.root, _staged(messages),
                        epoch_id=self.opts.get("_epoch"), retry_opts=self.opts)
 
 
 class RocketMQStreamWriter(_StagingWriter, DataSourceStreamArrowWriter):
     """Per-epoch commit (flush-on-checkpoint analog, W9); epoch markers
-    make retried epochs idempotent. Arrow-batch write path."""
+    make retried and replayed epochs idempotent. Arrow-batch write path.
+
+    An epoch is keyed by the query's checkpoint location (the
+    `checkpointLocation` option, hashed as given) plus the batch id, so
+    two queries writing one topic never take each other's epochs as
+    done. A query whose location does not reach the writer as an option
+    (one set only through spark.sql.streaming.checkpointLocation) is
+    keyed by the batch id alone, and two such queries on one topic
+    still drop each other's batches."""
 
     def commit(self, messages, batchId):
-        _commit_staged(self.root, _staged(messages), epoch_id=str(batchId),
-                       retry_opts=self.opts)
+        _commit_staged(self.root, _staged(messages),
+                       epoch_id=_epoch_key(self.opts, batchId), retry_opts=self.opts)
 
 
 class RocketMQDataSource(DataSource):

@@ -135,6 +135,22 @@ def test_custom_delimiters(spark):
     assert sorted((r.a, r.b) for r in df.collect()) == [(1, "x"), (2, "y")]
 
 
+def test_unescape_drops_lone_trailing_backslash(spark):
+    """A delimiter option ending in a lone backslash loses it, as
+    unescapeJava drops it; escapes still unescape, and a decode with
+    such a delimiter runs."""
+    from rocketmq_flink_spark.functions.codec import _unescape
+
+    assert _unescape("a\\") == "a"
+    assert _unescape("\\") == ""
+    assert _unescape("|\\\\") == "|\\"
+    assert _unescape("\\t") == "\t"
+    assert _unescape("\\u0001") == "\u0001"
+    df = decode_envelope(envelope(spark, ["1|x"]), "a INT, b STRING",
+                         options={"fieldDelimiter": "|\\"})
+    assert [(r.a, r.b) for r in df.collect()] == [(1, "x")]
+
+
 def test_varbinary_passthrough(spark):
     schema = T.StructType([T.StructField("value", T.BinaryType())])
     df = decode_envelope(envelope(spark, ["rawbytes"]), schema)

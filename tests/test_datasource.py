@@ -376,13 +376,18 @@ def test_ending_offsets_snapshot_replay(spark, broker_root):
 
 
 def _write_segments(root, topic, queue_id, segments):
-    """Write raw segments [(store_ts list, row_group_size, write_statistics)]
-    back to back into one queue, bypassing the commit path so store_ts
-    can be anything (unsorted, repeated) and files can lack statistics."""
+    """Write segments [(store_ts list, row_group_size, write_statistics,
+    committed)] back to back into one queue. A committed segment goes
+    through the commit path with its first store_ts as the commit's
+    store time. The rest are raw files in the layout that stores
+    offset, store_ts and msg_id, bypassing the commit path so store_ts
+    can be anything (unsorted, repeated) and files can lack
+    statistics."""
     qdir = os.path.join(root, topic, f"queue-{queue_id}")
     os.makedirs(qdir, exist_ok=True)
+    broker = Broker(root)
     start = 0
-    for store, row_group_size, stats in segments:
+    for store, row_group_size, stats, committed in segments:
         n = len(store)
         offs = list(range(start, start + n))
         tbl = pa.Table.from_pydict(
@@ -398,8 +403,12 @@ def _write_segments(root, topic, queue_id, segments):
             },
             schema=SEGMENT_SCHEMA,
         )
-        pq.write_table(tbl, os.path.join(qdir, f"{start:020d}-{n}.parquet"),
-                       row_group_size=row_group_size, write_statistics=stats)
+        if committed:
+            broker.commit_tmp(topic, [(queue_id, broker.write_tmp(topic, tbl))],
+                              store_ts_us=store[0])
+        else:
+            pq.write_table(tbl, os.path.join(qdir, f"{start:020d}-{n}.parquet"),
+                           row_group_size=row_group_size, write_statistics=stats)
         start += n
     return start
 
@@ -409,17 +418,21 @@ _segment = st.tuples(
              max_size=20),
     st.integers(1, 6),  # row_group_size
     st.booleans(),  # write_statistics
-)
+    st.booleans(),  # committed: store time in the name, not in the file
+).map(  # a committed segment has one store time, its first
+    lambda seg: ([seg[0][0]] * len(seg[0]), *seg[1:]) if seg[3] else seg)
 
 
 @settings(max_examples=60, deadline=None)
 @given(segments=st.lists(_segment, max_size=4), data=st.data())
 def test_offset_for_timestamp_matches_linear_scan(segments, data):
-    """The footer seek returns what a scan of every row in log order
-    returns, for unsorted store_ts within and across segments, small row
-    groups and files without statistics; an endingTimestamp read stops
-    at the same offset."""
-    store = [ts for seg, _, _ in segments for ts in seg]
+    """The seek returns what a scan of every row in log order returns,
+    for unsorted store_ts within and across segments, small row groups,
+    files without statistics, and queues that mix committed segments
+    with segments that store offset, store_ts and msg_id; an
+    endingTimestamp read stops at the same offset; and every row reads
+    back with the offset, msg_id and store_ts the stored layout gives."""
+    store = [ts for seg, *_ in segments for ts in seg]
     edges = [-1, 0] + [v for ts in store for v in (ts - 1, ts, ts + 1)]
     ts_us = data.draw(st.sampled_from(edges) | st.integers(-1000, 42_000))
     end_ms = data.draw(st.integers(-1, 41))
@@ -439,6 +452,22 @@ def test_offset_for_timestamp_matches_linear_scan(segments, data):
         got = [o for p in reader.partitions() for b in reader.read(p)
                for o in b.column("offset").to_pylist()]
         assert got == list(range(first_at_or_after((end_ms + 1) * 1000)))
+
+        want = {"offset": list(range(len(store))),
+                "msg_id": [f"t-0-{o}" for o in range(len(store))],
+                "store_ts": store}
+        tbl = broker.read_range("t", 0, 0, len(store))
+        assert {c: tbl.column(c).to_pylist() for c in want} == want
+        lo = data.draw(st.integers(0, len(store)))
+        tbl = broker.read_range("t", 0, lo, len(store))
+        assert tbl.column("msg_id").to_pylist() == want["msg_id"][lo:]
+        reader = RocketMQBatchReader({"path": root, "topic": "t"})
+        rows = [b for p in reader.partitions() for b in reader.read(p)]
+        read = {c: [v for b in rows for v in b.column(c).to_pylist()]
+                for c in ("offset", "msg_id")}
+        read["store_ts"] = [v for b in rows
+                            for v in b.column("store_ts").cast(pa.int64()).to_pylist()]
+        assert read == want
 
 
 @settings(max_examples=200, deadline=None)
@@ -475,7 +504,7 @@ def test_pack_covers_every_offset_once_and_balances(sizes, max_records, slots):
 def _fill_queues(root, topic, counts):
     """counts[q] messages in queue q, one segment each."""
     for q, n in enumerate(counts):
-        _write_segments(root, topic, q, [([0] * n, n, True)] if n else [])
+        _write_segments(root, topic, q, [([0] * n, n, True, False)] if n else [])
 
 
 def test_batch_read_packs_queues_into_task_slots(spark, tmp_path):
@@ -582,3 +611,196 @@ def test_rate_limit_shares_budget_by_backlog(backlog, behind, budget):
         assert 0 <= take[q] <= n
         if total > budget:
             assert abs(take[q] - budget * n / total) < 1
+
+
+# -- commit: exactly-once under failure, replay and concurrency ------------
+
+
+def _stage(writer, bodies_by_queue):
+    """One writer task's staged batch: the given bodies per queue."""
+    rows = [(q, b) for q, bodies in bodies_by_queue.items() for b in bodies]
+    batch = pa.RecordBatch.from_pydict({
+        "keys": [None] * len(rows),
+        "value": [b for _, b in rows],
+        "queue_id": [q for q, _ in rows],
+    })
+    return writer.write(iter([batch]))
+
+
+def _bodies(root, topic):
+    broker = Broker(root)
+    return sorted(b for q in broker.queues(topic)
+                  for b in broker.read_range(topic, q, 0, broker.latest_offset(topic, q))
+                  .column("body").to_pylist())
+
+
+def test_commit_retry_then_replay_publishes_once(tmp_path, monkeypatch):
+    """A transient OSError on the second queue's publish: the retries
+    finish the commit, and a replay of the epoch (as Spark runs it after
+    a failed commit: abort, stage again, commit the same batch id)
+    publishes nothing more. Each message is in the topic once."""
+    from rocketmq_flink_spark.sources.datasource import RocketMQStreamWriter
+
+    root = str(tmp_path / "broker")
+    writer = RocketMQStreamWriter({
+        "path": root, "topic": "t", "numQueues": "2", "retryTimes": "3",
+        "sleepTimeMs": "1", "checkpointLocation": str(tmp_path / "ckpt"),
+    })
+    bodies = {0: [b"a0", b"a1", b"a2"], 1: [b"b0", b"b1", b"b2"]}
+    failed = []
+
+    def once_on_queue_1(publish):
+        def flaky(src, dst, *args, **kwargs):
+            if (not failed and f"{os.sep}queue-1{os.sep}" in str(dst)
+                    and str(dst).endswith(".parquet")):
+                failed.append(dst)
+                raise OSError("injected transient failure")
+            return publish(src, dst, *args, **kwargs)
+        return flaky
+
+    monkeypatch.setattr(os, "link", once_on_queue_1(os.link))
+    monkeypatch.setattr(os, "rename", once_on_queue_1(os.rename))
+    msg = _stage(writer, bodies)
+    try:
+        writer.commit([msg], 0)
+    except OSError:
+        writer.abort([msg], 0)
+    assert failed
+    writer.commit([_stage(writer, bodies)], 0)  # the replayed epoch
+
+    broker = Broker(root)
+    assert [broker.latest_offset("t", q) for q in (0, 1)] == [3, 3]
+    assert _bodies(root, "t") == sorted(bodies[0] + bodies[1])
+    assert not [f for f in os.listdir(os.path.join(root, "t"))
+                if f.startswith((".tmp-", ".intent-"))]
+
+
+def _segment_table(bodies):
+    """Messages with these bodies, offset, store_ts and msg_id left as
+    placeholders for the commit."""
+    return pa.Table.from_pylist(
+        [{"offset": 0, "born_ts": 0, "store_ts": 0, "msg_id": "", "keys": None,
+          "tags": None, "props": [], "body": b} for b in bodies],
+        schema=SEGMENT_SCHEMA)
+
+
+def test_abort_keeps_files_an_intent_names(tmp_path, monkeypatch):
+    """A commit that fails after writing its intent is carried out by
+    the topic's next commit, even after abort; abort drops only the
+    staged files no intent names, and the epoch then counts as done."""
+    root = str(tmp_path)
+    broker = Broker(root)
+    staged = [(q, broker.write_tmp("t", _segment_table([f"m{q}".encode()])))
+              for q in (0, 1)]
+
+    def fail(src, dst):
+        raise OSError("injected")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "link", fail)
+        with pytest.raises(OSError):
+            broker.commit_tmp("t", staged, store_ts_us=1, epoch_id="e")
+    loose = broker.write_tmp("t", _segment_table([b"loose"]))
+    broker.abort_tmp(staged + [(0, loose)])
+    assert all(os.path.exists(p) for _, p in staged)
+    assert not os.path.exists(loose)
+
+    later = [(0, broker.write_tmp("t", _segment_table([b"later"])))]
+    assert broker.commit_tmp("t", later, store_ts_us=2) == {0: (1, 2)}
+    assert _bodies(root, "t") == [b"later", b"m0", b"m1"]
+    replay = [(0, broker.write_tmp("t", _segment_table([b"m0"])))]
+    assert broker.commit_tmp("t", replay, store_ts_us=3, epoch_id="e") == {}
+    assert _bodies(root, "t") == [b"later", b"m0", b"m1"]
+
+
+_COMMIT_LOOP = r"""
+import os, sys, time
+import pyarrow as pa
+from rocketmq_flink_spark.sources.broker import SEGMENT_SCHEMA, Broker
+
+root, who, go = sys.argv[1:4]
+broker = Broker(root)
+open(go + "." + who, "w").close()  # ready
+while not os.path.exists(go):
+    time.sleep(0.001)
+for r in range(40):
+    staged = []
+    for q in (0, 1):
+        rows = [{"offset": 0, "born_ts": 0, "store_ts": 0, "msg_id": "",
+                 "keys": None, "tags": None, "props": [],
+                 "body": f"{who}-{r}-{q}-{i}".encode()} for i in range(3)]
+        tbl = pa.Table.from_pylist(rows, schema=SEGMENT_SCHEMA)
+        staged.append((q, broker.write_tmp("t", tbl)))
+    broker.commit_tmp("t", staged, store_ts_us=r + 1)
+"""
+
+
+def test_concurrent_commits_never_share_offsets(tmp_path):
+    """Two processes commit to one topic at once: every queue's
+    segments stay contiguous, no two ranges overlap, and no segment is
+    overwritten (every message is read back exactly once)."""
+    import subprocess
+    import sys
+
+    root = str(tmp_path / "broker")
+    go = str(tmp_path / "go")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+         os.environ.get("PYTHONPATH", "")]))
+    procs = [subprocess.Popen([sys.executable, "-c", _COMMIT_LOOP, root, who, go],
+                              env=env, stderr=subprocess.PIPE, text=True)
+             for who in ("A", "B")]
+    deadline = time.time() + 60
+    while not all(os.path.exists(f"{go}.{who}") for who in "AB"):
+        assert time.time() < deadline and all(p.poll() is None for p in procs)
+        time.sleep(0.01)
+    open(go, "w").close()
+    for p in procs:
+        _, err = p.communicate(timeout=120)
+        assert p.returncode == 0, err
+
+    broker = Broker(root)
+    for q in (0, 1):
+        segs = broker.segments("t", q)
+        assert [s for s, _, _ in segs] == [sum(c for _, c, _ in segs[:i])
+                                           for i in range(len(segs))]
+        assert sum(c for _, c, _ in segs) == 2 * 40 * 3
+    assert _bodies(root, "t") == sorted(
+        f"{who}-{r}-{q}-{i}".encode()
+        for who in "AB" for r in range(40) for q in (0, 1) for i in range(3))
+
+
+def test_published_segment_mtime_is_publish_moment(tmp_path):
+    """A segment becomes visible when it is published, not when it was
+    staged: its mtime is at or after the commit started, on the
+    filesystem's own clock."""
+    broker = Broker(str(tmp_path))
+    staged = [(0, broker.write_tmp("t", _segment_table([b"x"])))]
+    time.sleep(0.05)
+    clock = tmp_path / "clock"
+    clock.write_text("")
+    before = os.stat(clock).st_mtime_ns
+    broker.commit_tmp("t", staged, store_ts_us=1)
+    (_, _, path), = broker.segments("t", 0)
+    assert os.stat(path).st_mtime_ns >= before
+
+
+def test_two_stream_queries_to_one_topic_keep_every_batch(spark, tmp_path):
+    """Two streaming queries with their own checkpoints write one topic;
+    the second's batch 0 is not taken for the first's."""
+    register(spark)
+    root = str(tmp_path / "broker")
+    src = str(tmp_path / "src")
+    spark.range(10).selectExpr(
+        "cast(id AS string) AS keys", "encode(cast(id AS string), 'UTF-8') AS value"
+    ).write.parquet(src)
+    for i in (1, 2):
+        (
+            spark.readStream.schema("keys string, value binary").parquet(src)
+            .writeStream.format("rocketmq")
+            .option("path", root).option("topic", "t")
+            .option("checkpointLocation", str(tmp_path / f"ckpt{i}"))
+            .trigger(availableNow=True).start().awaitTermination(120)
+        )
+    got = spark.read.format("rocketmq").option("path", root).option("topic", "t").load()
+    assert got.count() == 20

@@ -82,6 +82,47 @@ def test_offsets_resume_after_kill_no_loss_no_dup(spark, tmp_path):
     assert set(ids) == {r.event_id for r in src.collect()}
 
 
+def test_dedup_stream_restart_exactly_once(spark, tmp_path):
+    """The get_spark session keeps its checkpoints through
+    FileSystemBasedCheckpointFileManager, and a dedup relay stopped and
+    restarted from its checkpoint still delivers each key once: run 2
+    re-reads keys run 1 saw (dropped by the restored dedup state) and
+    keys it sees twice itself."""
+    from rocketmq_flink_spark.streaming.ops import streaming_dedup
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager")
+    register(spark)
+    root = str(tmp_path / "broker3")
+    ckpt = str(tmp_path / "ckpt3")
+
+    def relay():
+        env = spark.readStream.format("rocketmq").options(path=root, topic="in").load()
+        fresh = streaming_dedup(decode_envelope(env, EVENT_SCHEMA), ["event_id"],
+                                ts_col="ts", max_out_of_orderness="3650 days",
+                                within_watermark=True)
+        out = encode_rows(fresh, options={"keyColumns": "event_id",
+                                          "writeKeysToBody": "true"}, born_ts_col="ts")
+        q = (out.writeStream.format("rocketmq").options(path=root, topic="out")
+             .option("checkpointLocation", ckpt).start())
+        q.processAllAvailable()
+        q.stop()
+
+    _write_half(spark, root, "in", 0, 500)
+    relay()
+    _write_half(spark, root, "in", 400, 1000)
+    _write_half(spark, root, "in", 900, 1000)
+    relay()
+
+    back = decode_envelope(
+        spark.read.format("rocketmq").options(path=root, topic="out").load(),
+        EVENT_SCHEMA,
+    )
+    ids = [r.event_id for r in back.select("event_id").collect()]
+    assert len(ids) == 1000 and len(set(ids)) == 1000
+
+
 def test_stateful_session_state_survives_restart(spark, tmp_path):
     """A session left OPEN when the query stops must keep accumulating
     after restart: run 2's events extend the run-1 session, and the

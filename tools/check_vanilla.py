@@ -9,11 +9,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import __spark_entry__ as e
 from rocketmq_flink_spark.plans.oracle import compare_frames, duck_connect
+from rocketmq_flink_spark.session import _default_cores, _default_driver_memory
 
-spark = (SparkSession.builder.master("local[32]")
+# sized as get_spark sizes it (the cores this process may use, half the
+# machine's memory at most 48g); vanilla otherwise
+spark = (SparkSession.builder.master(f"local[{_default_cores()}]")
          .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "48g")
-         .getOrCreate())  # vanilla otherwise
+         .config("spark.driver.memory", _default_driver_memory())
+         .getOrCreate())
 args = sys.argv[1:]
 sf = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
 pats = args[1:] if args and os.path.isdir(args[0]) else args
