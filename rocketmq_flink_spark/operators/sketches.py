@@ -65,9 +65,9 @@ def _hll_alpha(m: int) -> float:
 def hll_bucket_rho(value: Column, p: int = 6) -> tuple[Column, Column]:
     """The (bucket, rho) projection of one value under the portable
     60-bit hash — the md5-heavy part of hll_registers, exposed so a
-    caller sketching the SAME values under several groupings
-    (hll_distinct_parts' full vs sharded registers) can hash once and
-    aggregate many ways (optimization r08).
+    caller sketching the SAME values under several groupings (say,
+    full vs sharded registers) can hash once and aggregate many ways
+    (optimization r08).
 
     bucket = top p bits of the 60-bit portable hash; rho = 1-based
     position of the leftmost set bit in the remaining width=60-p bits

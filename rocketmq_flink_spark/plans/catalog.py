@@ -2317,152 +2317,6 @@ def rolling_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "percentiles_by_returnflag",
-    """
-    SELECT l_returnflag,
-           ROUND(quantile_cont(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                 AS DOUBLE), 0.5), 6) AS p50,
-           ROUND(quantile_cont(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                 AS DOUBLE), 0.9), 6) AS p90,
-           quantile_disc(CAST(l_extendedprice AS DECIMAL(12,2)), 0.99) AS p99_disc
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def percentiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed percentiles (continuous-interpolation p50/p90 +
-    discrete p99) per group. Spark's percentile() is the exact
-    (sort-based) aggregate, not the sketch. Interpolation runs in double
-    in BOTH engines (DuckDB's quantile_cont on DECIMAL rounds the
-    midpoint to the input scale); the discrete p99 stays decimal."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    price = _dec2(F.col("l_extendedprice"))
-    price_d = price.cast("double")  # interpolate in double in BOTH engines
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.percentile(price_d, F.lit(0.5)), 6).alias("p50"),
-        F.round(F.percentile(price_d, F.lit(0.9)), 6).alias("p90"),
-        F.expr(
-            "percentile_disc(0.99) WITHIN GROUP (ORDER BY"
-            " CAST(l_extendedprice AS DECIMAL(12,2)))"
-        ).alias("p99_disc"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Analytics surface, round 2: exact-moment statistics and distribution
-# windows — the aggregation shapes a warehouse user expects beyond plain
-# GROUP BY (SURVEY.md §2.5 aggregate category).
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "stats_quantity_price_corr",
-    """
-    WITH m AS (
-      SELECT l_returnflag,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                      * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                      * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS syy,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                      * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sxy
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, n,
-           ROUND((n * sxy - sx * sy)
-                 / SQRT((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS corr_qty_price,
-           ROUND((n * sxy - sx * sy) / (CAST(n AS DOUBLE) * (n - 1)), 6) AS covar_samp,
-           ROUND(SQRT((n * sxx - sx * sx) / (CAST(n AS DOUBLE) * (n - 1))), 6) AS stddev_qty
-    FROM m
-    """,
-)
-def stats_quantity_price_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation / sample covariance / stddev per group,
-    computed from EXACT decimal moments (sums of x, y, x^2, y^2, x*y)
-    with the closed-form combination done in double and rounded. Both
-    engines see identical decimal sums, so the statistics match
-    bit-for-bit — unlike native corr()/stddev(), whose streaming-update
-    order differs per engine/partitioning. Scale: one map-side-combined
-    aggregation pass; the moment trick is how you get deterministic
-    distributed statistics at any partition count."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    x = _dec2(F.col("l_quantity"))
-    y = _dec2(F.col("l_extendedprice"))
-    m = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-        F.sum(y * y).cast("double").alias("syy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-    )
-    n = F.col("n")
-    nd = n.cast("double")
-    sx, sy = F.col("sx"), F.col("sy")
-    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
-    return m.select(
-        "l_returnflag", "n",
-        F.round(
-            (n * sxy - sx * sy)
-            / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)),
-            6,
-        ).alias("corr_qty_price"),
-        F.round((n * sxy - sx * sy) / (nd * (n - F.lit(1))), 6).alias("covar_samp"),
-        F.round(F.sqrt((n * sxx - sx * sx) / (nd * (n - F.lit(1)))), 6).alias("stddev_qty"),
-    )
-
-
-@query(
-    "order_value_deciles",
-    """
-    WITH d AS (
-      SELECT CAST(ntile(10) OVER (ORDER BY CAST(o_totalprice AS DECIMAL(12,2)),
-                             o_orderkey) AS INTEGER) AS decile,
-             CAST(o_totalprice AS DECIMAL(12,2)) AS p
-      FROM orders
-    )
-    SELECT decile, COUNT(*) AS n_orders,
-           CAST(MIN(p) AS DOUBLE) AS lo,
-           CAST(MAX(p) AS DOUBLE) AS hi,
-           CAST(SUM(p) AS DOUBLE) AS total
-    FROM d GROUP BY decile
-    """,
-)
-def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile boundaries of order value via an EXACT distributed ntile:
-    deterministic range buckets on price cents -> per-bucket offsets ->
-    bucket-partitioned row_number = global position, then the standard
-    ntile arithmetic from (position, total) — bit-identical to the
-    oracle's ntile(10) OVER (ORDER BY price, orderkey) with NO
-    single-partition window sort anywhere in the plan
-    (operators/ranking.py; ties broken by orderkey so both engines
-    assign identical deciles)."""
-    from rocketmq_flink_spark.operators.ranking import distributed_ntile
-
-    o = load_tables(spark, sf_dir)["orders"]
-    base = o.select(
-        _dec2(F.col("o_totalprice")).alias("p"),
-        F.col("o_orderkey"),
-        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("vc"),
-    )
-    return (
-        distributed_ntile(
-            base, ["p", "o_orderkey"], "vc", 10, out="decile"
-        )
-        .select("decile", "p")
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("p").cast("double").alias("lo"),
-            F.max("p").cast("double").alias("hi"),
-            F.sum("p").cast("double").alias("total"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Training-data pipeline, round 2: sequence packing, stratified
 # sampling, vocabulary heavy-hitters (operators/pipeline.py)
@@ -3532,124 +3386,6 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registers/counters bit-exactly (Spark's own approx_count_distinct has
 # engine-private registers and could never be hash-checked).
 # ---------------------------------------------------------------------------
-
-
-def _hll_oracle_sql() -> str:
-    from rocketmq_flink_spark.functions.porthash import hash60_sql
-    from rocketmq_flink_spark.operators.sketches import (
-        hll_estimate_sql,
-        hll_registers_sql,
-    )
-
-    base = hash60_sql("CAST(l_partkey AS VARCHAR)")
-    width, s = 54, 55
-    return f"""
-    WITH reg AS ({hll_registers_sql(
-        "CAST(l_partkey AS VARCHAR)", "FROM lineitem", "l_returnflag")}),
-    est AS ({hll_estimate_sql("reg")}),
-    regsh AS (
-      SELECT l_returnflag AS grp, (l_orderkey % 2) AS shard,
-             ({base} >> {width}) AS bucket,
-             MAX(CASE WHEN ({base} % {1 << width}::BIGINT) = 0
-                      THEN {s}
-                      ELSE {s} - length(bin({base} % {1 << width}::BIGINT))
-                 END) AS m
-      FROM lineitem GROUP BY 1, 2, 3
-    ),
-    merged AS (SELECT grp, bucket, MAX(m) AS m FROM regsh GROUP BY 1, 2),
-    estm AS ({hll_estimate_sql("merged")}),
-    exact AS (SELECT l_returnflag AS grp,
-                     COUNT(DISTINCT l_partkey) AS exact_parts
-              FROM lineitem GROUP BY 1)
-    SELECT x.grp AS l_returnflag, x.exact_parts,
-           e.est_distinct AS est_parts,
-           g.est_distinct AS est_merged,
-           ROUND((e.est_distinct - x.exact_parts) / x.exact_parts * 100,
-                 4) AS err_pct,
-           e.est_distinct = g.est_distinct AS merge_ok
-    FROM exact x JOIN est e ON e.grp = x.grp JOIN estm g ON g.grp = x.grp
-    ORDER BY l_returnflag
-    """
-
-
-@query("hll_distinct_parts", _hll_oracle_sql())
-def hll_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable HyperLogLog (p=6, m=64): distinct parts per return flag,
-    estimated from 60-bit md5 registers, PLUS the merge proof — the
-    same data sketched in two shards (orderkey parity) and merged by
-    register max must yield the identical estimate (the property that
-    makes per-partition sketching + rollup valid at cluster scale).
-    Z is summed in exact BIGINT (order-independent), so the estimate is
-    deterministic and the oracle replays it bit-exactly."""
-    from rocketmq_flink_spark.operators.sketches import (
-        hll_bucket_rho,
-        hll_estimate,
-        hll_merge,
-    )
-
-    from rocketmq_flink_spark.session import spread_for_compute
-
-    # the register pass is md5-heavy; lineitem's parquet scans as 3
-    # row-group partitions, so without spreading the sketch runs on 3
-    # cores with a straggler (measured 3.2 s -> ~1 s at sf0.1)
-    li = spread_for_compute(
-        load_tables(spark, sf_dir)["lineitem"].select(
-            "l_returnflag", "l_partkey", "l_orderkey"
-        )
-    )
-    # One full pass, everything downstream key-deduplicated
-    # (optimization r09, guide §2.3/§2.4; r08 hashed once but still ran
-    # THREE corpus-width aggregations off the cut frame):
-    # 1. dedup to the distinct (flag, shard, partkey) triples — one
-    #    map-side-combinable aggregate, the only corpus-width pass;
-    # 2. md5-hash only the SURVIVING keys (≈5x fewer hash evaluations
-    #    than per-row hashing at sf0.1);
-    # 3. sharded registers from the deduped frame; FULL registers by
-    #    register merge (max over shards) — LOSSLESS by the HLL merge
-    #    property, so est_parts is bit-identical to sketching the
-    #    unsharded stream; the exact count re-dedups only across the 2
-    #    shards of already-distinct triples.
-    dk = li.groupBy(
-        "l_returnflag",
-        (F.col("l_orderkey") % 2).alias("shard"),
-        "l_partkey",
-    ).agg(F.count(F.lit(1)).alias("_n")).drop("_n")
-    bucket, rho = hll_bucket_rho(F.col("l_partkey").cast("string"))
-    hv = dk.select(
-        "l_returnflag", "shard", "l_partkey", bucket, rho.alias("rho")
-    ).transform(_cut_big)
-    reg_sh = hv.groupBy("l_returnflag", "shard", "bucket").agg(
-        F.max("rho").alias("m")
-    ).transform(cut)  # <= |flags| * 2 * 64 rows, two consumers
-    reg_full = hll_merge(reg_sh, ["l_returnflag"])
-    est_full = hll_estimate(reg_full, ["l_returnflag"]).withColumnRenamed(
-        "est_distinct", "est_parts"
-    )
-    est_merged = hll_estimate(
-        hll_merge(reg_sh, ["l_returnflag"]), ["l_returnflag"]
-    ).withColumnRenamed("est_distinct", "est_merged")
-    exact = hv.groupBy("l_returnflag").agg(
-        F.count_distinct("l_partkey").alias("exact_parts")
-    )
-    return (
-        exact.join(est_full, "l_returnflag")
-        .join(est_merged, "l_returnflag")
-        .withColumn(
-            "err_pct",
-            F.round(
-                (F.col("est_parts") - F.col("exact_parts"))
-                / F.col("exact_parts")
-                * 100,
-                4,
-            ),
-        )
-        .withColumn("merge_ok", F.col("est_parts") == F.col("est_merged"))
-        .select(
-            "l_returnflag", "exact_parts", "est_parts", "est_merged",
-            "err_pct", "merge_ok",
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 def _countmin_oracle_sql() -> str:
@@ -5387,74 +5123,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges.orderBy("step")
 
 
-@query(
-    "order_total_reconciliation",
-    """
-    WITH calc AS (
-      SELECT l_orderkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(14,2))
-                 * (1 + CAST(l_tax AS DECIMAL(4,2)))
-                 * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS expected
-      FROM lineitem GROUP BY l_orderkey),
-    j AS (
-      SELECT o_orderpriority,
-             ABS(CAST(o_totalprice AS DECIMAL(14,2)) - expected) AS dev
-      FROM orders JOIN calc ON l_orderkey = o_orderkey)
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CASE WHEN dev > 0.05 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_violations,
-           CAST(SUM(dev) * 1000000 AS BIGINT) AS sum_abs_dev_micros,
-           CAST(MAX(dev) * 1000000 AS BIGINT) AS max_abs_dev_micros
-    FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality rule audit (conditional functional dependency
-    checking): does o_totalprice equal the recomputed
-    sum(extendedprice x (1+tax) x (1-discount)) of the order's lines?
-    Reports per-priority violation counts and exact DECIMAL deviation
-    totals — the reconciliation report an ingest pipeline runs after
-    every load. (The synthetic fixture violates the invariant
-    everywhere, which the audit faithfully reports; the check logic is
-    what's under test.) Scale: one map-side-combined per-order
-    aggregation + one equi-join on the order key + a 5-group rollup;
-    all arithmetic DECIMAL-exact, so the deviations hash-match."""
-    t = load_tables(spark, sf_dir)
-    li, orders = t["lineitem"], t["orders"]
-    calc = li.groupBy("l_orderkey").agg(
-        F.sum(
-            _dec2(F.col("l_extendedprice"), 14)
-            * (F.lit(1) + F.col("l_tax").cast(T.DecimalType(4, 2)))
-            * (F.lit(1) - F.col("l_discount").cast(T.DecimalType(4, 2)))
-        ).alias("expected")
-    )
-    j = orders.join(
-        calc, orders["o_orderkey"] == calc["l_orderkey"]
-    ).select(
-        "o_orderpriority",
-        F.abs(_dec2(F.col("o_totalprice"), 14) - F.col("expected")).alias(
-            "dev"
-        ),
-    )
-    return (
-        j.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(
-                F.when(F.col("dev") > 0.05, F.lit(1)).otherwise(F.lit(0))
-            ).cast("long").alias("n_violations"),
-            (F.sum("dev") * 1000000).cast("long").alias(
-                "sum_abs_dev_micros"
-            ),
-            (F.max("dev") * 1000000).cast("long").alias(
-                "max_abs_dev_micros"
-            ),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
 @query("bpe_segment_corpus", _bpe_segment_oracle_sql(steps=6))
 def bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide application of the learned BPE merges: every word
@@ -5700,60 +5368,6 @@ def scd2_user_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "skew_audit_suppkey",
-    """
-    WITH f AS (
-      SELECT l_suppkey AS k, COUNT(*) AS freq FROM lineitem GROUP BY 1),
-    s AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(SUM(freq) AS BIGINT) AS n_rows,
-             CAST(MAX(freq) AS BIGINT) AS max_freq
-      FROM f),
-    hot AS (
-      SELECT k AS hottest_key, freq AS hottest_freq
-      FROM f ORDER BY freq DESC, k LIMIT 1)
-    SELECT s.n_keys, s.n_rows, s.max_freq,
-           (s.n_rows * 1000000) // s.n_keys AS avg_freq_micros,
-           (s.max_freq * 1000000 * s.n_keys) // s.n_rows
-             AS skew_ratio_micros,
-           h.hottest_key
-    FROM s, hot h
-    """,
-)
-def skew_audit_suppkey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew audit for lineitem.l_suppkey — the measurement a
-    pipeline takes BEFORE choosing a join strategy (broadcast / salt /
-    AQE skew hints). Emits key count, row count, max key frequency,
-    and the max/avg skew ratio in exact integer micro-units (floor
-    division — no float in the decision path). One map-side-combined
-    count plus a 1-row argmax with a deterministic tie-break."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    f = li.groupBy(F.col("l_suppkey").alias("k")).agg(
-        F.count(F.lit(1)).alias("freq")
-    )
-    s = f.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum("freq").cast("long").alias("n_rows"),
-        F.max("freq").cast("long").alias("max_freq"),
-    )
-    hot = (
-        f.orderBy(F.desc("freq"), "k")
-        .limit(1)
-        .select(F.col("k").alias("hottest_key"))
-    )
-    return s.crossJoin(F.broadcast(hot)).select(
-        "n_keys",
-        "n_rows",
-        "max_freq",
-        F.expr("(n_rows * 1000000) div n_keys").alias("avg_freq_micros"),
-        F.expr("(max_freq * 1000000 * n_keys) div n_rows").alias(
-            "skew_ratio_micros"
-        ),
-        "hottest_key",
-    )
-
-
-@query(
     "containment_pairs_docs",
     f"""
     WITH sh AS ({_SHINGLES_DUCK}),
@@ -5860,90 +5474,6 @@ def kcenter_coreset_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "ols_price_per_brand",
-    """
-    WITH j AS (
-      SELECT p.p_brand,
-             CAST(l.l_quantity AS DECIMAL(12,2)) AS x,
-             CAST(l.l_extendedprice AS DECIMAL(12,2)) AS y
-      FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey),
-    a AS (
-      SELECT p_brand, COUNT(*) AS n,
-             SUM(x) AS sx, SUM(y) AS sy,
-             SUM(x * y) AS sxy, SUM(x * x) AS sxx
-      FROM j GROUP BY p_brand),
-    s AS (
-      SELECT p_brand, n,
-             ROUND(CAST(CAST(n AS DECIMAL(8,0)) * CAST(sxy AS DECIMAL(28,4))
-                        - CAST(sx AS DECIMAL(19,2)) * CAST(sy AS DECIMAL(19,2))
-                        AS DOUBLE)
-                   / CAST(CAST(n AS DECIMAL(8,0)) * CAST(sxx AS DECIMAL(28,4))
-                          - CAST(sx AS DECIMAL(19,2)) * CAST(sx AS DECIMAL(19,2))
-                          AS DOUBLE), 6) AS slope,
-             CAST(sy AS DOUBLE) AS syd, CAST(sx AS DOUBLE) AS sxd
-      FROM a)
-    SELECT p_brand, CAST(n AS BIGINT) AS n, slope,
-           ROUND((syd - slope * sxd) / n, 6) AS intercept
-    FROM s ORDER BY p_brand
-    """,
-)
-def ols_price_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped closed-form OLS: price-vs-quantity regression line per
-    part brand — the distributed trend-estimation staple (feature
-    drift slopes, per-segment elasticity) computed from the five
-    sufficient statistics (n, Σx, Σy, Σxy, Σx²) in ONE map-side-
-    combined pass; no iterative solver, no driver math. The slope
-    numerator/denominator are exact DECIMAL cross-terms; the only
-    doubles are two identical-order casts and divisions, so results
-    hash-match. (The oracle casts sx/sy to DECIMAL(19,2) — one digit
-    wider than Spark — because DuckDB evaluates 18x18-digit products
-    in int64 and overflows at sf0.1; width 19 forces int128. Values
-    are identical either way.) Broadcast join to the part dim for the
-    brand key."""
-    t = load_tables(spark, sf_dir)
-    li, part = t["lineitem"], t["part"]
-    j = li.join(
-        F.broadcast(part.select("p_partkey", "p_brand")),
-        li["l_partkey"] == part["p_partkey"],
-    ).select(
-        "p_brand",
-        _dec2(F.col("l_quantity")).alias("x"),
-        _dec2(F.col("l_extendedprice")).alias("y"),
-    )
-    a = j.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    # explicit downcasts: Spark's decimal-precision growth rules would
-    # push n*sxy past 38 digits and silently lose scale; (8,0)x(28,4)
-    # and (18,2)x(18,2) both land at (37,4) — exact and in range for
-    # any per-group n < 10^8 (re-widen if a group exceeds that)
-    nd = F.col("n").cast(T.DecimalType(8, 0))
-    d28 = lambda c: F.col(c).cast(T.DecimalType(28, 4))  # noqa: E731
-    d18 = lambda c: F.col(c).cast(T.DecimalType(18, 2))  # noqa: E731
-    num = nd * d28("sxy") - d18("sx") * d18("sy")
-    den = nd * d28("sxx") - d18("sx") * d18("sx")
-    s = a.select(
-        "p_brand",
-        F.col("n").cast("long").alias("n"),
-        F.round(num.cast("double") / den.cast("double"), 6).alias("slope"),
-        F.col("sy").cast("double").alias("syd"),
-        F.col("sx").cast("double").alias("sxd"),
-    )
-    return s.select(
-        "p_brand",
-        "n",
-        "slope",
-        F.round(
-            (F.col("syd") - F.col("slope") * F.col("sxd")) / F.col("n"), 6
-        ).alias("intercept"),
-    ).orderBy("p_brand")
-
-
-@query(
     "mannwhitney_value_drift",
     """
     WITH e AS (
@@ -6033,162 +5563,6 @@ def mannwhitney_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("z"),
-    )
-
-
-def _bootstrap_coeffs(b: int = 32) -> list[tuple[int, int]]:
-    """Per-resample (a_j, b_j) of the mod-P31 universal family — ONE
-    md5 base hash per row expands to all B resample draws with two
-    integer ops each (the MinHash coefficient trick; 32 md5s/row was
-    the bench's single largest cost, 4.5 s -> ~1.5 s at sf0.1)."""
-    from rocketmq_flink_spark.functions.porthash import P31, _const
-
-    return [
-        (_const("boot-a", j, 1, P31), _const("boot-b", j, 0, P31))
-        for j in range(b)
-    ]
-
-
-def _poisson_thresholds31(max_k: int = 6) -> list[int]:
-    """Cumulative Poisson(1) inverse-CDF thresholds scaled to the
-    mod-P31 field (31-bit granularity — frozen integer literals)."""
-    import math
-
-    from rocketmq_flink_spark.functions.porthash import P31
-
-    cum, out = 0.0, []
-    for k in range(max_k):
-        cum += math.exp(-1.0) / math.factorial(k)
-        out.append(int(cum * P31))
-    return out
-
-
-def _bootstrap_oracle_sql(b: int = 32) -> str:
-    from rocketmq_flink_spark.functions.porthash import hash60_sql
-
-    th = _poisson_thresholds31()
-    coeffs = _bootstrap_coeffs(b)
-    alist = "[" + ", ".join(str(a) for a, _ in coeffs) + "]"
-    blist = "[" + ", ".join(str(bb) for _, bb in coeffs) + "]"
-    h = hash60_sql("'boot:' || CAST(o_orderkey AS VARCHAR)")
-    cases = " ".join(
-        f"WHEN hh < {t} THEN {k}" for k, t in enumerate(th)
-    )
-    return f"""
-    WITH r AS (
-      SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-             i, ({alist}[i + 1] * ({h} % 2147483647)
-                 + {blist}[i + 1]) % 2147483647 AS hh
-      FROM orders, unnest(range(0, {b})) AS u(i)),
-    w AS (
-      SELECT i, cents, CASE {cases} ELSE {len(th)} END AS wt FROM r),
-    m AS (
-      SELECT i,
-             ROUND(CAST(SUM(wt * cents) AS DOUBLE)
-                   / CAST(SUM(wt) AS DOUBLE) / 100.0, 6) AS mean_b
-      FROM w GROUP BY i),
-    o AS (
-      SELECT mean_b, ROW_NUMBER() OVER (ORDER BY mean_b, i) AS rk FROM m),
-    pt AS (
-      SELECT ROUND(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-                        AS DOUBLE)
-                   / COUNT(*) / 100.0, 6) AS point_est,
-             CAST(COUNT(*) AS BIGINT) AS n_rows
-      FROM orders)
-    SELECT pt.point_est, pt.n_rows, {b} AS n_resamples,
-           (SELECT mean_b FROM o WHERE rk = 2) AS ci_lo,
-           (SELECT mean_b FROM o WHERE rk = {b - 1}) AS ci_hi
-    FROM pt
-    """
-
-
-@query("bootstrap_ci_order_value", _bootstrap_oracle_sql())
-def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap confidence interval for the mean order value —
-    THE resampling technique that works at cluster scale (Chamandy et
-    al.): instead of drawing B resamples (impossible without global
-    coordination), each row contributes a Poisson(1) weight per
-    resample, drawn here from the portable 60-bit hash through a frozen
-    inverse-CDF table — fully deterministic, so the WHOLE bootstrap
-    (all 32 resample means and the CI bounds) is hash-checked by the
-    oracle. Shuffle shape: the B-way row explode is collapsed by a
-    map-side-combined groupBy(resample) before anything moves; what
-    shuffles is B partial-sum rows per map task. CI = 2nd and 31st of
-    the 32 sorted resample means (~93.75% coverage for B=32;
-    order-statistic convention documented)."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    from rocketmq_flink_spark.functions.porthash import P31
-
-    B = 32
-    th = _poisson_thresholds31()
-    coeffs = _bootstrap_coeffs(B)
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in coeffs])
-    b_arr = F.array(*[F.lit(bb).cast("long") for _, bb in coeffs])
-    orders = load_tables(spark, sf_dir)["orders"].select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    # ONE portable md5 per row; each resample draw is an affine
-    # multiply-mod over it (JVM integer ops) — not 32 md5s
-    r = (
-        orders.withColumn(
-            "x31",
-            hash60(F.concat(F.lit("boot:"), F.col("o_orderkey").cast("string")))
-            % F.lit(P31).cast("long"),
-        )
-        .select(
-            "o_orderkey",
-            "cents",
-            "x31",
-            F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("i"),
-        )
-        .withColumn(
-            "hh",
-            (
-                F.element_at(a_arr, F.col("i") + 1) * F.col("x31")
-                + F.element_at(b_arr, F.col("i") + 1)
-            )
-            % F.lit(P31).cast("long"),
-        )
-    )
-    wt = F.lit(len(th))
-    for k in range(len(th) - 1, -1, -1):
-        wt = F.when(F.col("hh") < th[k], F.lit(k)).otherwise(wt)
-    m = (
-        r.withColumn("wt", wt)
-        .groupBy("i")
-        .agg(
-            F.round(
-                F.sum(F.col("wt") * F.col("cents")).cast("double")
-                / F.sum("wt").cast("double")
-                / 100.0,
-                6,
-            ).alias("mean_b")
-        )
-    )
-    from pyspark.sql import Window
-
-    o = m.withColumn(
-        "rk", F.row_number().over(Window.orderBy("mean_b", "i"))
-    )
-    pt = orders.agg(
-        F.round(
-            F.sum("cents").cast("double") / F.count(F.lit(1)) / 100.0, 6
-        ).alias("point_est"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    lo = o.where(F.col("rk") == 2).select(F.col("mean_b").alias("ci_lo"))
-    hi = o.where(F.col("rk") == B - 1).select(
-        F.col("mean_b").alias("ci_hi")
-    )
-    return (
-        pt.withColumn("n_resamples", F.lit(B))
-        .crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
-        .select(
-            "point_est", "n_rows", "n_resamples", "ci_lo", "ci_hi"
-        )
     )
 
 
@@ -8662,7 +8036,7 @@ def autocorr_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (no sqrt anywhere), so the statistic is bit-identical
     across engines; the sign restores the correlation direction.
     Calendar-lag pairs: a missing day yields no pair (self-join on
-    day+lag). Exactness bound (cf. ols_price_per_brand): the ticks
+    day+lag). Exactness bound: the ticks
     numerator is ~1e6 * (n * max_count^2)^2 and must stay under
     HUGEINT/DECIMAL(38) — holds for any series with
     n * max_count^2 < 3e15 (a decade of days at 1.5M events/day);
@@ -8785,114 +8159,6 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_cents"),
         )
         .orderBy("channel")
-    )
-
-
-def _ks_oracle_sql() -> str:
-    from rocketmq_flink_spark.functions.intmath import isqrt_sql
-
-    s = isqrt_sql("(1000000000000 * (n1 + n2)) // (n1 * n2)")
-    return f"""
-    WITH e AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS v,
-             o_orderpriority = '1-URGENT' AS is_a
-      FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-    g AS (
-      SELECT v,
-             CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-             CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS nb
-      FROM e GROUP BY v),
-    t AS (SELECT CAST(SUM(na) AS BIGINT) AS n1,
-                 CAST(SUM(nb) AS BIGINT) AS n2 FROM g),
-    c AS (
-      SELECT v,
-             SUM(na) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-             SUM(nb) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
-      FROM g),
-    d AS (
-      SELECT v, ABS(ca * (SELECT n2 FROM t) - cb * (SELECT n1 FROM t))
-               AS dnum
-      FROM c),
-    m AS (SELECT v, dnum FROM d ORDER BY dnum DESC, v LIMIT 1)
-    SELECT n1 AS n_urgent, n2 AS n_low,
-           CAST((2 * 1000000 * dnum + n1 * n2) // (2 * n1 * n2) AS BIGINT)
-             AS ks_ppm,
-           v AS at_value_cents,
-           CAST((2 * 1358 * {s} + 1000) // 2000 AS BIGINT) AS crit_ppm_05,
-           CAST(CASE WHEN (2 * 1000000 * dnum + n1 * n2) // (2 * n1 * n2)
-                     > (2 * 1358 * {s} + 1000) // 2000
-                THEN 1 ELSE 0 END AS INTEGER) AS reject_05
-    FROM m, t
-    """
-
-
-@query("ks_two_sample_order_values", _ks_oracle_sql())
-def ks_two_sample_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample Kolmogorov-Smirnov test: URGENT vs LOW priority
-    order values. D = max_v |F1(v) - F2(v)| evaluated AFTER each
-    distinct value (the correct tie handling) as the integer
-    max |cumA*n2 - cumB*n1| — no floats in the statistic; reported in
-    half-up ppm with the argmax value (smallest on ties) and the
-    alpha=0.05 critical value 1.358*sqrt((n1+n2)/(n1*n2)) computed via
-    the exact integer sqrt (functions/intmath.py), so even the reject
-    decision is bit-identical across engines. Complements
-    mannwhitney_value_drift (rank shift) with a supremum-distance test
-    that also catches pure shape/variance changes. Scale: one
-    map-side-combined count per distinct cents value, then EXACT
-    distributed prefix sums over the value vocabulary
-    (operators/ranking.py — range buckets, offset join,
-    bucket-partitioned running sums; no single-partition window even
-    when the value domain is order-stream-sized)."""
-    from rocketmq_flink_spark.functions.intmath import isqrt_sql
-
-    od = load_tables(spark, sf_dir)["orders"].where(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    )
-    g = (
-        od.select(
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("v"),
-            (F.col("o_orderpriority") == "1-URGENT").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0))
-            .cast("long")
-            .alias("na"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1))
-            .cast("long")
-            .alias("nb"),
-        )
-    )
-    t = g.agg(
-        F.sum("na").cast("long").alias("n1"),
-        F.sum("nb").cast("long").alias("n2"),
-    )
-    from rocketmq_flink_spark.operators.ranking import distributed_prefix
-
-    c = distributed_prefix(g, ["v"], "v", sum_cols=["na", "nb"]).select(
-        "v",
-        F.col("cum_na").alias("ca"),
-        F.col("cum_nb").alias("cb"),
-    )
-    d = (
-        c.crossJoin(F.broadcast(t))
-        .selectExpr("v", "n1", "n2", "ABS(ca * n2 - cb * n1) AS dnum")
-        .orderBy(F.desc("dnum"), "v")
-        .limit(1)
-    )
-    s = isqrt_sql("(1000000000000 * (n1 + n2)) div (n1 * n2)")
-    return d.selectExpr(
-        "n1 AS n_urgent",
-        "n2 AS n_low",
-        "CAST((2 * 1000000 * dnum + n1 * n2) div (2 * n1 * n2) AS BIGINT)"
-        " AS ks_ppm",
-        "v AS at_value_cents",
-        f"CAST((2 * 1358 * {s} + 1000) div 2000 AS BIGINT) AS crit_ppm_05",
-        "CAST(CASE WHEN (2 * 1000000 * dnum + n1 * n2) div (2 * n1 * n2)"
-        f" > (2 * 1358 * {s} + 1000) div 2000"
-        " THEN 1 ELSE 0 END AS INT) AS reject_05",
     )
 
 
@@ -9314,86 +8580,6 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" div (2 * element_at({pre_arr}, CAST(LEAST(r, 10) AS INT)))"
         " END AS BIGINT) AS ndcg_ppm",
     ).orderBy("qid")
-
-
-# Benford first-digit expectations round(1e6*log10(1+1/d)), d=1..9 —
-# fixed shared constants (they sum to exactly 1e6), same discipline as
-# the DCG discount table.
-_BENFORD_PPM = [301030, 176091, 124939, 96910, 79181,
-                66947, 57992, 51153, 45757]
-
-
-@query(
-    "benford_first_digit_orders",
-    f"""
-    WITH v AS (
-      SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)
-                         AS VARCHAR), 1, 1) AS INTEGER) AS d
-      FROM orders WHERE o_totalprice > 0),
-    c AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS n FROM v GROUP BY d),
-    t AS (SELECT CAST(SUM(n) AS BIGINT) AS tot FROM c),
-    x AS (SELECT unnest(range(1, 10)) AS d,
-                 unnest([{", ".join(str(x) for x in _BENFORD_PPM)}])
-                   AS exp_ppm)
-    SELECT CAST(x.d AS INTEGER) AS digit,
-           CAST(COALESCE(c.n, 0) AS BIGINT) AS n,
-           CAST((2 * 1000000 * COALESCE(c.n, 0) + t.tot)
-                // (2 * t.tot) AS BIGINT) AS obs_ppm,
-           CAST(x.exp_ppm AS BIGINT) AS exp_ppm,
-           CAST((2 * 1000000 * COALESCE(c.n, 0) + t.tot) // (2 * t.tot)
-                - x.exp_ppm AS BIGINT) AS dev_ppm
-    FROM x LEFT JOIN c ON c.d = x.d CROSS JOIN t
-    ORDER BY digit
-    """,
-)
-def benford_first_digit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-significant-digit screen over order totals —
-    the forensic-accounting / synthetic-data fingerprint: organically
-    grown multiplicative amounts follow P(d) = log10(1 + 1/d), while
-    fabricated or uniformly generated values (TPC-H's are!) deviate
-    visibly. First digit taken from the exact cents integer (leading
-    digit is invariant under the *100 scaling); expectations are the
-    shared ppm constant table (sums to exactly 1e6); observed shares
-    half-up ppm, signed deviation per digit. Scale: one map-side
-    combined 9-group count — nothing grows with order volume. The
-    digit axis is a literal 9-row frame so missing digits still emit
-    a zero row (LEFT JOIN from the axis, not the data)."""
-    od = load_tables(spark, sf_dir)["orders"].where(
-        F.col("o_totalprice") > 0
-    )
-    c = (
-        od.selectExpr(
-            "CAST(substr(CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-            " AS STRING), 1, 1) AS INT) AS d"
-        )
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    t = c.agg(F.sum("n").cast("long").alias("tot"))
-    exp_arr = ", ".join(
-        f"({i + 1}, {v}L)" for i, v in enumerate(_BENFORD_PPM)
-    )
-    x = (
-        load_tables(spark, sf_dir)["orders"]
-        .sparkSession.createDataFrame(
-            [(i + 1, v) for i, v in enumerate(_BENFORD_PPM)],
-            "d int, exp_ppm long",
-        )
-    )
-    return (
-        x.join(c, "d", "left")
-        .crossJoin(F.broadcast(t))
-        .selectExpr(
-            "CAST(d AS INT) AS digit",
-            "CAST(COALESCE(n, 0) AS BIGINT) AS n",
-            "CAST((2 * 1000000 * COALESCE(n, 0) + tot)"
-            " div (2 * tot) AS BIGINT) AS obs_ppm",
-            "CAST(exp_ppm AS BIGINT) AS exp_ppm",
-            "CAST((2 * 1000000 * COALESCE(n, 0) + tot) div (2 * tot)"
-            " - exp_ppm AS BIGINT) AS dev_ppm",
-        )
-        .orderBy("digit")
-    )
 
 
 @query(
@@ -9921,285 +9107,6 @@ def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _psi_oracle_sql() -> str:
-    """DuckDB replay of the PSI drift report: reference-decile bin
-    edges by rank position, strict-greater binning, Laplace+1
-    smoothing, signed fp_log2 recursive CTE per bin."""
-    return """
-    WITH RECURSIVE r AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS v
-      FROM orders WHERE o_orderdate < DATE '1998-01-01'),
-    c AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS v
-      FROM orders WHERE o_orderdate >= DATE '1998-01-01'),
-    mref AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM r),
-    ed AS (
-      SELECT rn.i,
-             (SELECT v FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY v)
-                             AS p FROM r) s
-              WHERE s.p = ((rn.i * (SELECT m FROM mref) + 9) // 10))
-               AS ev
-      FROM (SELECT unnest(range(1, 10)) AS i) rn),
-    rb AS (
-      SELECT 1 + (SELECT COUNT(*) FROM ed WHERE r.v > ed.ev) AS bin
-      FROM r),
-    cb AS (
-      SELECT 1 + (SELECT COUNT(*) FROM ed WHERE c.v > ed.ev) AS bin
-      FROM c),
-    ax AS (SELECT unnest(range(1, 11)) AS bin),
-    cnt AS (
-      SELECT ax.bin,
-             COALESCE(rc.n, 0) + 1 AS cp, COALESCE(cc.n, 0) + 1 AS cq
-      FROM ax
-      LEFT JOIN (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM rb
-                 GROUP BY bin) rc ON rc.bin = ax.bin
-      LEFT JOIN (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM cb
-                 GROUP BY bin) cc ON cc.bin = ax.bin),
-    tt AS (SELECT CAST(SUM(cp) AS BIGINT) AS np,
-                  CAST(SUM(cq) AS BIGINT) AS nq FROM cnt),
-    fb AS (
-      SELECT bin, cp, cq,
-             cp * (SELECT nq FROM tt) AS a,
-             cq * (SELECT np FROM tt) AS b
-      FROM cnt),
-    f0 AS (
-      SELECT bin, cp, cq, a, b,
-             CASE WHEN a >= b THEN 1 ELSE -1 END AS sgn,
-             GREATEST(a, b) AS p0, LEAST(a, b) AS q0,
-             length(bin(GREATEST(a, b) // LEAST(a, b))) - 1 AS kk
-      FROM fb),
-    it AS (
-      SELECT bin, sgn, kk, 0 AS i, p0 AS p, (q0 << kk) AS q,
-             CAST(0 AS BIGINT) AS acc
-      FROM f0
-      UNION ALL
-      SELECT bin, sgn, kk, i + 1,
-             (p >> s)*(p >> s),
-             CASE WHEN (p >> s)*(p >> s) >= 2*((q >> s)*(q >> s))
-                  THEN ((q >> s)*(q >> s)) << 1
-                  ELSE (q >> s)*(q >> s) END,
-             acc*2 + CASE WHEN (p >> s)*(p >> s) >= 2*((q >> s)*(q >> s))
-                     THEN 1 ELSE 0 END
-      FROM (SELECT *, greatest(0, length(bin(q)) - 30) AS s FROM it)
-      WHERE i < 20),
-    lg AS (SELECT bin, sgn * (acc + (CAST(kk AS BIGINT) << 20)) AS t
-           FROM it WHERE i = 20),
-    term AS (
-      SELECT f0.bin, f0.cp, f0.cq,
-             CAST(f0.a - f0.b AS HUGEINT) * lg.t AS num
-      FROM f0 JOIN lg ON lg.bin = f0.bin),
-    den AS (SELECT CAST(1048576 AS HUGEINT) * np * nq AS d FROM tt)
-    SELECT CAST(term.bin AS INTEGER) AS bin,
-           CAST(term.cp - 1 AS BIGINT) AS ref_n,
-           CAST(term.cq - 1 AS BIGINT) AS cur_n,
-           CAST(CASE WHEN term.num >= 0 THEN
-                  (2 * 1000000 * term.num + (SELECT d FROM den))
-                    // (2 * (SELECT d FROM den))
-                ELSE -((2 * 1000000 * (-term.num) + (SELECT d FROM den))
-                    // (2 * (SELECT d FROM den))) END AS BIGINT)
-             AS contrib_micro,
-           CAST((2 * 1000000 * (SELECT SUM(num) FROM term)
-                 + (SELECT d FROM den))
-                // (2 * (SELECT d FROM den)) AS BIGINT) AS psi_micro
-    FROM term ORDER BY bin
-    """
-
-
-@query("psi_drift_order_values", _psi_oracle_sql())
-def psi_drift_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index — THE production ML-monitoring drift
-    metric — between early (pre-1998) and late order-value
-    distributions: PSI = sum_bins (p_i - q_i) * ln(p_i/q_i), evaluated
-    over the REFERENCE distribution's decile bins (edges = exact
-    rank-position values, strict-greater binning so edge ties bin
-    low), Laplace+1 smoothed so empty bins stay finite, and with every
-    log as a SIGNED fixed-point fp_log2 tick — each bin's contribution
-    and the total are bit-identical across engines (log2 vs ln scales
-    PSI by a constant 1/ln2; thresholds 0.1/0.25 become 0.144/0.361
-    bits — documented unit choice, micro-bits here). Complements
-    token_drift_report (TV distance, vocab axis) and
-    lang_similarity_jsd (symmetric divergence): PSI is the
-    binned-numeric-feature drift gauge with the industry alarm
-    thresholds. Scale: two filtered scans aggregate to 10-bin counts
-    (map-side combinable after the broadcast edge test); edge
-    rank-positions come from the EXACT distributed rank
-    (operators/ranking.py — range buckets on the cents value, offset
-    join, bucket-partitioned row_number), so the reference scan never
-    funnels through one task; the fold runs over ten rows."""
-    from rocketmq_flink_spark.operators.ranking import distributed_prefix
-    from rocketmq_flink_spark.operators.retrieval import signed_fp_log2_sql
-
-    od = load_tables(spark, sf_dir)["orders"].selectExpr(
-        "CAST(ROUND(o_totalprice * 100) AS BIGINT) AS v",
-        "o_orderdate < DATE '1998-01-01' AS is_ref",
-    )
-    r = od.where("is_ref").select("v")
-    c = od.where("NOT is_ref").select("v")
-    m = r.agg(F.count(F.lit(1)).alias("m"))
-    ranked = distributed_prefix(r, ["v"], "v", pos_col="p")
-    idx = r.sparkSession.range(1, 10).select(
-        F.col("id").cast("int").alias("i")
-    )
-    ed = (
-        idx.crossJoin(F.broadcast(m))
-        .join(
-            ranked,
-            F.col("p") == F.expr("(i * m + 9) div 10"),
-        )
-        .select("i", F.col("v").alias("ev"))
-    )
-    # edges is ONE row (the 9 decile edge values) whose lineage is the
-    # whole distributed-rank pipeline; binned() broadcasts it into BOTH
-    # the reference and current scans, and cnt below feeds two more
-    # consumers — without cuts the rank pipeline ran 4x per action
-    # (150 Exchanges / 32 order scans at baseline; optimization r08)
-    edges = ed.agg(
-        F.array_sort(F.collect_list("ev")).alias("earr")
-    ).transform(cut)
-
-    def binned(df):
-        return (
-            df.crossJoin(F.broadcast(edges))
-            .selectExpr(
-                "1 + size(filter(earr, e -> v > e)) AS bin"
-            )
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-
-    ax = r.sparkSession.range(1, 11).select(
-        F.col("id").cast("int").alias("bin")
-    )
-    cnt = (
-        ax.join(binned(r).withColumnRenamed("n", "nr"), "bin", "left")
-        .join(binned(c).withColumnRenamed("n", "nc"), "bin", "left")
-        .selectExpr(
-            "bin",
-            "COALESCE(nr, 0) + 1 AS cp",
-            "COALESCE(nc, 0) + 1 AS cq",
-        )
-        # ten rows, two consumers (the np/nq totals and the term
-        # projection): cut so the binning scans run once
-        .transform(cut)
-    )
-    tt = cnt.agg(
-        F.sum("cp").cast("long").alias("np"),
-        F.sum("cq").cast("long").alias("nq"),
-    )
-    t = signed_fp_log2_sql("cp * nq", "cq * np")
-    term = (
-        cnt.crossJoin(F.broadcast(tt))
-        .selectExpr(
-            "bin",
-            "cp",
-            "cq",
-            "np",
-            "nq",
-            f"CAST(cp * nq - cq * np AS DECIMAL(38,0)) * ({t}) AS num",
-        )
-    )
-    # the PSI total used to be an unbounded partition-less window over
-    # the 10 bin rows; with cnt lineage-cut the plan sweep can no
-    # longer PROVE that boundedness through the RDD leaf — and an
-    # aggregate + broadcast cross join computes the same scalar with
-    # no window at all (optimization r08)
-    tot = term.agg(F.sum("num").alias("tot"))
-    return (
-        term.crossJoin(F.broadcast(tot))
-        .selectExpr(
-            "CAST(bin AS INT) AS bin",
-            "CAST(cp - 1 AS BIGINT) AS ref_n",
-            "CAST(cq - 1 AS BIGINT) AS cur_n",
-            "CAST(CASE WHEN num >= 0 THEN"
-            " (2 * 1000000 * num + CAST(1048576 AS DECIMAL(38,0)) * np * nq)"
-            " div (2 * CAST(1048576 AS DECIMAL(38,0)) * np * nq)"
-            " ELSE -((2 * 1000000 * (-num)"
-            " + CAST(1048576 AS DECIMAL(38,0)) * np * nq)"
-            " div (2 * CAST(1048576 AS DECIMAL(38,0)) * np * nq)) END"
-            " AS BIGINT) AS contrib_micro",
-            "CAST((2 * 1000000 * tot + CAST(1048576 AS DECIMAL(38,0))"
-            " * np * nq) div (2 * CAST(1048576 AS DECIMAL(38,0)) * np * nq)"
-            " AS BIGINT) AS psi_micro",
-        )
-        .orderBy("bin")
-    )
-
-
-@query(
-    "gini_order_concentration",
-    """
-    WITH v AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-             CAST(COUNT(*) AS HUGEINT) AS c
-      FROM orders GROUP BY 1),
-    w AS (
-      SELECT cents, c,
-             COALESCE(SUM(c) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS cc,
-             COALESCE(SUM(c * cents) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS sc
-      FROM v),
-    ag AS (
-      SELECT CAST(SUM(c) AS HUGEINT) AS n,
-             CAST(SUM(c * cents) AS HUGEINT) AS s,
-             CAST(SUM(c * (cc * cents - sc)) AS HUGEINT) AS t
-      FROM w)
-    SELECT CAST(n AS BIGINT) AS n_orders,
-           CAST(s AS BIGINT) AS total_cents,
-           CAST((2 * 1000000 * t + n * s) // (2 * n * s) AS BIGINT)
-             AS gini_ppm
-    FROM ag
-    """,
-)
-def gini_order_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of the order-value distribution — the
-    inequality/concentration gauge (0 = every order equal, 1 = all
-    revenue in one order) that corpus curators apply to source and
-    domain token masses before fixing mixture weights. Exact integer
-    throughout: G = sum_{i,j}|x_i - x_j| / (2 n S) is computed from the
-    VALUE HISTOGRAM, not the row set — group by cents, one ordered
-    prefix-sum pass over distinct values gives
-    T = sum_v c_v * (Ccum_v * v - Scum_v) = sum over ordered pairs of
-    differences, and G_ppm is one half-up rational rounding
-    (2e6*T + nS) div (2nS), bit-identical in both engines (HUGEINT /
-    DECIMAL(38,0)). Scale: the only ordered pass runs over DISTINCT
-    cent values (price-domain bounded, same discipline as
-    order_value_deciles / psi buckets), never over rows; counts and
-    sums are map-side combined. One row."""
-    dec = "decimal(38,0)"
-    o = load_tables(spark, sf_dir)["orders"].select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    v = o.groupBy("cents").agg(F.count(F.lit(1)).cast(dec).alias("c"))
-    wpre = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w = v.select(
-        "cents",
-        "c",
-        F.coalesce(F.sum("c").over(wpre), F.lit(0).cast(dec)).alias("cc"),
-        F.coalesce(
-            F.sum(F.col("c") * F.col("cents")).over(wpre),
-            F.lit(0).cast(dec),
-        ).alias("sc"),
-    )
-    ag = w.agg(
-        F.sum("c").cast(dec).alias("n"),
-        F.sum(F.col("c") * F.col("cents")).cast(dec).alias("s"),
-        F.sum(
-            F.col("c") * (F.col("cc") * F.col("cents") - F.col("sc"))
-        ).cast(dec).alias("t"),
-    )
-    return ag.selectExpr(
-        "CAST(n AS BIGINT) AS n_orders",
-        "CAST(s AS BIGINT) AS total_cents",
-        "CAST((2 * 1000000 * t + n * s) div (2 * n * s) AS BIGINT)"
-        " AS gini_ppm",
-    )
-
-
 @query(
     "mann_kendall_trend_daily",
     """
@@ -10344,8 +9251,8 @@ def spearman_daily_activity_value(
 ) -> DataFrame:
     """Spearman rank correlation between daily event VOLUME and daily
     event VALUE mass — the monotone-association gauge that survives
-    the heavy-tailed value distribution where Pearson
-    (stats_quantity_price_corr) is outlier-dominated. Ties get the
+    the heavy-tailed value distribution where Pearson is
+    outlier-dominated. Ties get the
     standard average rank, kept integer by DOUBLING: for a tie group
     of size t starting at competition rank r0, 2*avg_rank = 2*r0+t-1
     = 2*RANK() + COUNT() OVER (PARTITION BY value) - 1. Pearson on the
@@ -11181,113 +10088,6 @@ def nb_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "winsorized_mean_orders",
-    """
-    WITH v AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM orders GROUP BY 1),
-    w AS (
-      SELECT cents, c,
-             COALESCE(SUM(c) OVER (ORDER BY cents
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS cc
-      FROM v),
-    nn AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM v),
-    tt AS (SELECT n, n * 5 // 100 AS t FROM nn),
-    ov AS (
-      SELECT w.cents, w.c, w.cc, tt.n, tt.t,
-             GREATEST(0, LEAST(w.cc + w.c, tt.n - tt.t)
-                         - GREATEST(w.cc + 1, tt.t + 1) + 1) AS k
-      FROM w CROSS JOIN tt),
-    ag AS (
-      SELECT CAST(MAX(n) AS HUGEINT) AS n, CAST(MAX(t) AS HUGEINT) AS t,
-             CAST(SUM(k * cents) AS HUGEINT) AS ts,
-             CAST(MAX(CASE WHEN cc < t + 1 AND t + 1 <= cc + c
-                           THEN cents END) AS HUGEINT) AS lo_cut,
-             CAST(MAX(CASE WHEN cc < n - t AND n - t <= cc + c
-                           THEN cents END) AS HUGEINT) AS hi_cut
-      FROM ov)
-    SELECT CAST(n AS BIGINT) AS n_orders,
-           CAST(n - 2 * t AS BIGINT) AS n_kept,
-           CAST(lo_cut AS BIGINT) AS lo_cut_cents,
-           CAST(hi_cut AS BIGINT) AS hi_cut_cents,
-           CAST((2 * 1000 * ts + (n - 2 * t)) // (2 * (n - 2 * t))
-                AS BIGINT) AS trimmed_mean_milli,
-           CAST((2 * 1000 * (ts + t * lo_cut + t * hi_cut) + n)
-                // (2 * n) AS BIGINT) AS winsorized_mean_milli
-    FROM ag
-    """,
-)
-def winsorized_mean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5%-trimmed and 5%-winsorized mean of the order values — the
-    robust-location pair (trimming DROPS each tail, winsorizing CLAMPS
-    it to the cut values), completing the robust-statistics family
-    next to MAD and the deciles. Entirely rank-exact over the VALUE
-    HISTOGRAM (the gini discipline — never a row-level sort): one
-    ordered prefix pass over distinct cents gives each value's rank
-    interval, the trimmed sum is the interval overlap with
-    [t+1, n-t] (t = floor(0.05 n)), and the cut values are the cents
-    holding ranks t+1 / n-t. Means reported in half-up milli-cents.
-    Scale: distinct-value (price-domain) bounded ordered pass, all
-    else map-side combined. One row."""
-    dec = "decimal(38,0)"
-    o = load_tables(spark, sf_dir)["orders"].select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    v = o.groupBy("cents").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    wpre = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w = v.select(
-        "cents",
-        "c",
-        F.coalesce(F.sum("c").over(wpre), F.lit(0)).alias("cc"),
-    )
-    tt = v.agg(F.sum("c").cast("long").alias("n")).selectExpr(
-        "n", "n * 5 div 100 AS t"
-    )
-    ov = w.crossJoin(F.broadcast(tt)).selectExpr(
-        "cents",
-        "c",
-        "cc",
-        "n",
-        "t",
-        "GREATEST(0, LEAST(cc + c, n - t)"
-        " - GREATEST(cc + 1, t + 1) + 1) AS k",
-    )
-    ag = ov.agg(
-        F.max("n").cast(dec).alias("n"),
-        F.max("t").cast(dec).alias("t"),
-        F.sum(F.col("k") * F.col("cents")).cast(dec).alias("ts"),
-        F.max(
-            F.when(
-                (F.col("cc") < F.col("t") + 1)
-                & (F.col("t") + 1 <= F.col("cc") + F.col("c")),
-                F.col("cents"),
-            )
-        ).cast(dec).alias("lo_cut"),
-        F.max(
-            F.when(
-                (F.col("cc") < F.col("n") - F.col("t"))
-                & (F.col("n") - F.col("t") <= F.col("cc") + F.col("c")),
-                F.col("cents"),
-            )
-        ).cast(dec).alias("hi_cut"),
-    )
-    return ag.selectExpr(
-        "CAST(n AS BIGINT) AS n_orders",
-        "CAST(n - 2 * t AS BIGINT) AS n_kept",
-        "CAST(lo_cut AS BIGINT) AS lo_cut_cents",
-        "CAST(hi_cut AS BIGINT) AS hi_cut_cents",
-        "CAST((2 * 1000 * ts + (n - 2 * t)) div (2 * (n - 2 * t))"
-        " AS BIGINT) AS trimmed_mean_milli",
-        "CAST((2 * 1000 * (ts + t * lo_cut + t * hi_cut) + n)"
-        " div (2 * n) AS BIGINT) AS winsorized_mean_milli",
-    )
-
-
-@query(
     "event_trigram_patterns",
     """
     WITH s AS (
@@ -11824,100 +10624,6 @@ def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_occurrences"), "doc_id")
         .limit(10)
     )
-
-
-@query(
-    "correlation_matrix_lineitem",
-    """
-    WITH a AS (
-      SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sq,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sp,
-        CAST(SUM(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS sd,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                 * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sqq,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-          AS spp,
-        CAST(SUM(CAST(l_discount AS DECIMAL(4,2))
-                 * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS sdd,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                 * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-          AS sqp,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                 * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS sqd,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                 * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS spd
-      FROM lineitem),
-    pairs AS (
-      SELECT 'quantity~price' AS pair, n*sqp - sq*sp AS cov_n,
-             n*sqq - sq*sq AS vx_n, n*spp - sp*sp AS vy_n FROM a
-      UNION ALL
-      SELECT 'quantity~discount', n*sqd - sq*sd, n*sqq - sq*sq,
-             n*sdd - sd*sd FROM a
-      UNION ALL
-      SELECT 'price~discount', n*spd - sp*sd, n*spp - sp*sp,
-             n*sdd - sd*sd FROM a)
-    SELECT pair, ROUND(cov_n / SQRT(vx_n * vy_n), 6) AS corr
-    FROM pairs ORDER BY pair
-    """,
-)
-def correlation_matrix_lineitem(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Full pairwise correlation matrix of (quantity, price, discount)
-    in ONE scan — the multi-column profiling pass that would be three
-    separate jobs if written naively: all nine sufficient statistics
-    (three sums, three squares, three cross-products) accumulate as
-    EXACT decimal moments in a single map-side-combined aggregate; the
-    closed-form Pearson combination runs in double on bit-identical
-    inputs and is rounded (the stats_quantity_price_corr convention —
-    native corr() would drift per partitioning). Scale: one pass, one
-    reduce row — adding columns grows the state quadratically
-    (k^2/2 sums) but never adds a scan."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    q = _dec2(F.col("l_quantity"))
-    p = _dec2(F.col("l_extendedprice"))
-    d = F.col("l_discount").cast(T.DecimalType(4, 2))
-    a = li.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(q).cast("double").alias("sq"),
-        F.sum(p).cast("double").alias("sp"),
-        F.sum(d).cast("double").alias("sd"),
-        F.sum(q * q).cast("double").alias("sqq"),
-        F.sum(p * p).cast("double").alias("spp"),
-        F.sum(d * d).cast("double").alias("sdd"),
-        F.sum(q * p).cast("double").alias("sqp"),
-        F.sum(q * d).cast("double").alias("sqd"),
-        F.sum(p * d).cast("double").alias("spd"),
-    )
-    pairs = (
-        a.selectExpr(
-            "'quantity~price' AS pair",
-            "n*sqp - sq*sp AS cov_n",
-            "n*sqq - sq*sq AS vx_n",
-            "n*spp - sp*sp AS vy_n",
-        )
-        .unionAll(
-            a.selectExpr(
-                "'quantity~discount' AS pair",
-                "n*sqd - sq*sd AS cov_n",
-                "n*sqq - sq*sq AS vx_n",
-                "n*sdd - sd*sd AS vy_n",
-            )
-        )
-        .unionAll(
-            a.selectExpr(
-                "'price~discount' AS pair",
-                "n*spd - sp*sd AS cov_n",
-                "n*spp - sp*sp AS vx_n",
-                "n*sdd - sd*sd AS vy_n",
-            )
-        )
-    )
-    return pairs.selectExpr(
-        "pair", "ROUND(cov_n / SQRT(vx_n * vy_n), 6) AS corr"
-    ).orderBy("pair")
 
 
 @query(
@@ -12672,9 +11378,9 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents), each quartiled, reported as (R,F,M) cell counts + revenue
     mass. The quartile cuts are computed SCALE-SAFELY: per dimension
     a distinct-VALUE histogram with one ordered prefix pass yields the
-    exact value holding rank ceil(k*n/4) (the winsorized_mean_orders
-    technique) — never an ntile window over all users (which would
-    single-partition a user-dimension that grows with the data);
+    exact value holding rank ceil(k*n/4) — never an ntile window
+    over all users (which would single-partition a user-dimension
+    that grows with the data);
     bucket assignment is then one broadcast-threshold map pass.
     Quartile 1 = most recent / fewest / cheapest (ascending value
     order; documented). Scale: user aggregation map-side combined;
@@ -13511,80 +12217,6 @@ def mcnemar_nb_vs_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "hhi_supplier_concentration",
-    """
-    WITH rev AS (
-      SELECT s.s_nationkey, l.l_suppkey,
-             CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT))
-                  AS HUGEINT) AS cents
-      FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      GROUP BY s.s_nationkey, l.l_suppkey),
-    ag AS (
-      SELECT r.s_nationkey,
-             CAST(COUNT(*) AS BIGINT) AS n_suppliers,
-             CAST(SUM(cents) AS HUGEINT) AS tot,
-             CAST(SUM(cents * cents) AS HUGEINT) AS s2
-      FROM rev r GROUP BY r.s_nationkey)
-    SELECT n.n_name AS nation, ag.n_suppliers,
-           CAST(ag.tot AS BIGINT) AS revenue_cents,
-           CAST((2 * 1000000 * ag.s2 + ag.tot * ag.tot)
-                // (2 * ag.tot * ag.tot) AS BIGINT) AS hhi_ppm
-    FROM ag JOIN nation n ON n.n_nationkey = ag.s_nationkey
-    ORDER BY nation
-    """,
-)
-def hhi_supplier_concentration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Herfindahl-Hirschman supply concentration per nation: HHI =
-    sum of squared supplier revenue shares (1e6 ppm = monopoly; 1e6/n
-    = perfectly even) — the supply-chain risk gauge, and the economic
-    sibling of Simpson diversity (identical quadratic statistic,
-    revenue-weighted). Exact integer cents; one half-up ppm rational
-    per nation (HUGEINT/DECIMAL38 — cents^2 sums need the wide type).
-    Scale: supplier revenue is one map-side-combined (nation,
-    supplier) aggregation over lineitem with the supplier dim
-    broadcast; the nation reduce and name join are dimension-sized.
-    One row per nation."""
-    dec = "decimal(38,0)"
-    t = load_tables(spark, sf_dir)
-    li, sup, nat = t["lineitem"], t["supplier"], t["nation"]
-    rev = (
-        li.join(
-            F.broadcast(sup.select("s_suppkey", "s_nationkey")),
-            li["l_suppkey"] == sup["s_suppkey"],
-        )
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            )
-            .cast(dec)
-            .alias("cents")
-        )
-    )
-    ag = rev.groupBy("s_nationkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-        F.sum("cents").cast(dec).alias("tot"),
-        F.sum(F.col("cents") * F.col("cents")).cast(dec).alias("s2"),
-    )
-    return (
-        ag.join(
-            F.broadcast(nat.select("n_nationkey", "n_name")),
-            ag["s_nationkey"] == nat["n_nationkey"],
-        )
-        .selectExpr(
-            "n_name AS nation",
-            "n_suppliers",
-            "CAST(tot AS BIGINT) AS revenue_cents",
-            "CAST((2 * 1000000 * s2 + tot * tot) div (2 * tot * tot)"
-            " AS BIGINT) AS hhi_ppm",
-        )
-        .orderBy("nation")
-    )
-
-
-@query(
     "power_analysis_sample_size",
     """
     WITH u AS (
@@ -14186,428 +12818,10 @@ def conversion_window_sensitivity(
     )
 
 
-@query(
-    "discount_band_volume",
-    """
-    SELECT CAST(ROUND(l_discount * 100) AS BIGINT) AS discount_pct,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST((2 * 1000 * SUM(CAST(ROUND(l_quantity * 100) AS BIGINT))
-                 + 100 * COUNT(*)) // (2 * 100 * COUNT(*)) AS BIGINT)
-             AS avg_qty_milli,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-                AS BIGINT) AS revenue_cents
-    FROM lineitem
-    GROUP BY 1 ORDER BY discount_pct
-    """,
-)
-def discount_band_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discount-band volume curve: per discount percentage, line
-    count, exact average quantity (half-up milli) and revenue mass —
-    the raw elasticity readout behind pricing reviews (if avg
-    quantity is flat across bands, discounts buy nothing;
-    correlation_matrix_lineitem gives the single-number summary, this
-    shows WHERE on the curve it comes from). Exact integer cents and
-    centi-quantities. Scale: one scan, one map-side-combined group-by
-    on the ~11-value discount domain."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    return (
-        li.select(
-            F.round(F.col("l_discount") * 100)
-            .cast("long")
-            .alias("discount_pct"),
-            F.round(F.col("l_quantity") * 100).cast("long").alias("qc"),
-            F.round(F.col("l_extendedprice") * 100)
-            .cast("long")
-            .alias("pc"),
-        )
-        .groupBy("discount_pct")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.sum("qc").cast("long").alias("sq"),
-            F.sum("pc").cast("long").alias("revenue_cents"),
-        )
-        .selectExpr(
-            "discount_pct",
-            "n_lines",
-            "CAST((2 * 1000 * sq + 100 * n_lines)"
-            " div (2 * 100 * n_lines) AS BIGINT) AS avg_qty_milli",
-            "revenue_cents",
-        )
-        .orderBy("discount_pct")
-    )
-
-
-@query(
-    "order_aging_report",
-    """
-    WITH o AS (
-      SELECT o_orderpriority,
-             date_diff('day', CAST(o_orderdate AS DATE),
-                       (SELECT MAX(CAST(o_orderdate AS DATE))
-                        FROM orders)) AS age
-      FROM orders WHERE o_orderstatus = 'O'),
-    g AS (
-      SELECT o_orderpriority, age, CAST(COUNT(*) AS BIGINT) AS c
-      FROM o GROUP BY 1, 2),
-    w AS (
-      SELECT o_orderpriority, age, c,
-             SUM(c) OVER (PARTITION BY o_orderpriority ORDER BY age)
-               AS cc,
-             SUM(c) OVER (PARTITION BY o_orderpriority) AS n
-      FROM g)
-    SELECT o_orderpriority,
-           CAST(MAX(n) AS BIGINT) AS n_open,
-           CAST(MIN(CASE WHEN 2 * cc >= n THEN age END) AS BIGINT)
-             AS median_age_days,
-           CAST(MIN(CASE WHEN 10 * cc >= 9 * n THEN age END) AS BIGINT)
-             AS p90_age_days,
-           CAST(MAX(age) AS BIGINT) AS max_age_days
-    FROM w GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def order_aging_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Open-order aging per priority: median / p90 / max days since
-    order date for still-open ('O') orders, relative to the newest
-    order date — the operations backlog readout (a p90 that grows
-    faster than the median = a starving tail the SLA will surface).
-    Percentiles are RANK-EXACT over the per-priority age HISTOGRAM
-    (first age whose cumulative count reaches the rank — integer
-    cross-multiplication, no percentile_approx drift, the
-    winsorized/deciles discipline). Scale: one filtered scan, a
-    histogram group-by, windows over (priority, DISTINCT age) —
-    calendar-bounded. One row per priority."""
-    o = (
-        load_tables(spark, sf_dir)["orders"]
-        .where(F.col("o_orderstatus") == "O")
-        .select("o_orderpriority", F.to_date("o_orderdate").alias("od"))
-    )
-    maxd = (
-        load_tables(spark, sf_dir)["orders"]
-        .agg(F.max(F.to_date("o_orderdate")).alias("maxd"))
-    )
-    g = (
-        o.crossJoin(F.broadcast(maxd))
-        .select(
-            "o_orderpriority",
-            F.datediff(F.col("maxd"), F.col("od")).alias("age"),
-        )
-        .groupBy("o_orderpriority", "age")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    wcum = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("age")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("o_orderpriority")
-    w = g.select(
-        "o_orderpriority",
-        "age",
-        F.sum("c").over(wcum).alias("cc"),
-        F.sum("c").over(wall).alias("n"),
-    )
-    return (
-        w.groupBy("o_orderpriority")
-        .agg(
-            F.max("n").cast("long").alias("n_open"),
-            F.min(
-                F.when(2 * F.col("cc") >= F.col("n"), F.col("age"))
-            )
-            .cast("long")
-            .alias("median_age_days"),
-            F.min(
-                F.when(10 * F.col("cc") >= 9 * F.col("n"), F.col("age"))
-            )
-            .cast("long")
-            .alias("p90_age_days"),
-            F.max("age").cast("long").alias("max_age_days"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-@query(
-    "fulfillment_latency_profile",
-    """
-    WITH j AS (
-      SELECT o.o_orderpriority,
-             date_diff('day', CAST(o.o_orderdate AS DATE),
-                       CAST(l.l_shipdate AS DATE)) AS lag
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey),
-    g AS (
-      SELECT o_orderpriority, lag, CAST(COUNT(*) AS BIGINT) AS c
-      FROM j GROUP BY 1, 2),
-    w AS (
-      SELECT o_orderpriority, lag, c,
-             SUM(c) OVER (PARTITION BY o_orderpriority ORDER BY lag)
-               AS cc,
-             SUM(c) OVER (PARTITION BY o_orderpriority) AS n
-      FROM g)
-    SELECT o_orderpriority,
-           CAST(MAX(n) AS BIGINT) AS n_lines,
-           CAST(MIN(CASE WHEN 2 * cc >= n THEN lag END) AS BIGINT)
-             AS median_lag_days,
-           CAST(MIN(CASE WHEN 20 * cc >= 19 * n THEN lag END) AS BIGINT)
-             AS p95_lag_days,
-           CAST(MAX(lag) AS BIGINT) AS max_lag_days
-    FROM w GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def fulfillment_latency_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Fulfillment latency (order date -> line ship date) median / p95
-    / max per order priority — the SLA distribution view that
-    completes the logistics pair with order_aging_report (aging =
-    what's still open; this = how fast the closed work actually
-    shipped; a priority whose p95 matches low-priority p95 means the
-    priority field is theater). Same rank-exact histogram-percentile
-    machinery (integer cross-multiplication ranks over per-priority
-    DISTINCT lag values). Scale: one orderkey-keyed join (both sides
-    SF-scaled — the shuffle join is correct here, no broadcast), a
-    map-side-combined histogram, calendar-bounded windows."""
-    t = load_tables(spark, sf_dir)
-    j = t["lineitem"].join(
-        t["orders"].select(
-            "o_orderkey",
-            "o_orderpriority",
-            F.to_date("o_orderdate").alias("od"),
-        ),
-        t["lineitem"]["l_orderkey"] == F.col("o_orderkey"),
-    ).select(
-        "o_orderpriority",
-        F.datediff(F.to_date("l_shipdate"), F.col("od")).alias("lag"),
-    )
-    g = j.groupBy("o_orderpriority", "lag").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    wcum = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("lag")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("o_orderpriority")
-    w = g.select(
-        "o_orderpriority",
-        "lag",
-        F.sum("c").over(wcum).alias("cc"),
-        F.sum("c").over(wall).alias("n"),
-    )
-    return (
-        w.groupBy("o_orderpriority")
-        .agg(
-            F.max("n").cast("long").alias("n_lines"),
-            F.min(
-                F.when(2 * F.col("cc") >= F.col("n"), F.col("lag"))
-            )
-            .cast("long")
-            .alias("median_lag_days"),
-            F.min(
-                F.when(20 * F.col("cc") >= 19 * F.col("n"), F.col("lag"))
-            )
-            .cast("long")
-            .alias("p95_lag_days"),
-            F.max("lag").cast("long").alias("max_lag_days"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Continuation 4: weighted graph distance, local structure, data-quality
 # audits, causal readouts
 # ---------------------------------------------------------------------------
-
-
-_FD_AUDIT = [
-    # (label, table, X column, Y column)
-    ("orders.o_orderkey->o_orderstatus", "orders", "o_orderkey", "o_orderstatus"),
-    ("orders.o_custkey->o_orderpriority", "orders", "o_custkey", "o_orderpriority"),
-    ("lineitem.l_partkey->l_suppkey", "lineitem", "l_partkey", "l_suppkey"),
-    ("part.p_brand->p_type", "part", "p_brand", "p_type"),
-    ("documents.doc_id->lang", "documents", "doc_id", "lang"),
-    ("documents.lang->source", "documents", "lang", "source"),
-    ("events.user_id->event_type", "events", "user_id", "event_type"),
-]
-
-
-def _fd_oracle_sql() -> str:
-    """g3-error audit per candidate FD: keep-max rows = sum over X of
-    max_Y count(X,Y); violations = n_rows - keep_max (the minimum
-    number of rows to delete for the FD to hold — Kivinen/Mannila g3)."""
-    blocks = []
-    for label, table, x, y in _FD_AUDIT:
-        blocks.append(f"""
-    SELECT '{label}' AS fd,
-           CAST(SUM(n) AS BIGINT) AS n_rows,
-           CAST(COUNT(*) AS BIGINT) AS n_groups,
-           CAST(SUM(n) - SUM(mx) AS BIGINT) AS violations,
-           CAST((1000000 * (SUM(n) - SUM(mx))) // SUM(n) AS BIGINT)
-             AS error_ppm
-    FROM (
-      SELECT {x} AS xv, SUM(c) AS n, MAX(c) AS mx FROM (
-        SELECT {x}, {y}, COUNT(*) AS c FROM {table}
-        WHERE {x} IS NOT NULL GROUP BY 1, 2) g
-      GROUP BY 1)""")
-    return (
-        "SELECT * FROM (" + " UNION ALL ".join(blocks) + ") ORDER BY fd"
-    )
-
-
-@query("functional_dependency_audit", _fd_oracle_sql())
-def functional_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate functional-dependency audit over seven candidate
-    FDs spanning four tables — the schema-discovery / data-quality
-    profiling primitive: for each X -> Y, the exact g3 error (the
-    minimum fraction of rows to delete for the FD to hold:
-    n_rows - sum_x max_y count(x,y); Kivinen & Mannila's measure, the
-    one TANE-style FD miners report). Key-implied FDs land at 0 ppm,
-    genuine violations are quantified rather than booleanized —
-    exactly what column-mapping and dedup-key selection need. Scale:
-    per FD one map-side-combinable (X, Y) count then an X-keyed
-    max-combine — two shuffles of group-cardinality rows, no row-level
-    state; the seven audits run as one unioned lazy plan."""
-    t = load_tables(spark, sf_dir)
-    outs = []
-    for label, table, x, y in _FD_AUDIT:
-        g = (
-            t[table]
-            .where(F.col(x).isNotNull())
-            .groupBy(x, y)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy(F.col(x).alias("xv"))
-            .agg(F.sum("c").alias("n"), F.max("c").alias("mx"))
-            .agg(
-                F.lit(label).alias("fd"),
-                F.sum("n").cast("long").alias("n_rows"),
-                F.count(F.lit(1)).cast("long").alias("n_groups"),
-                (F.sum("n") - F.sum("mx")).cast("long").alias("violations"),
-                F.expr(
-                    "CAST((1000000 * (sum(n) - sum(mx))) div sum(n)"
-                    " AS BIGINT)"
-                ).alias("error_ppm"),
-            )
-        )
-        outs.append(g)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.orderBy("fd")
-
-
-@query(
-    "t_closeness_report",
-    """
-    WITH o AS (
-      SELECT o_orderpriority AS prio, o_orderstatus AS status,
-             LEAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-                        AS BIGINT) // 5000000, 9) AS band
-      FROM orders),
-    cls AS (
-      SELECT prio, status, band, CAST(COUNT(*) AS BIGINT) AS c
-      FROM o GROUP BY 1, 2, 3),
-    g AS (SELECT band, CAST(COUNT(*) AS BIGINT) AS gc FROM o GROUP BY 1),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS big_n FROM o),
-    cn AS (SELECT prio, status, CAST(COUNT(*) AS BIGINT) AS n
-           FROM o GROUP BY 1, 2),
-    grid AS (
-      SELECT cn.prio, cn.status, cn.n, CAST(b.g AS BIGINT) AS band
-      FROM cn, range(10) b(g)),
-    cell AS (
-      SELECT grid.prio, grid.status, grid.n, grid.band,
-             COALESCE(cls.c, 0) AS c, COALESCE(g.gc, 0) AS gc
-      FROM grid LEFT JOIN cls ON cls.prio = grid.prio
-        AND cls.status = grid.status AND cls.band = grid.band
-      LEFT JOIN g ON g.band = grid.band),
-    pre AS (
-      SELECT prio, status, n, band,
-             SUM(c * (SELECT big_n FROM nn) - gc * n) OVER (
-               PARTITION BY prio, status ORDER BY band) AS d
-      FROM cell)
-    SELECT prio AS o_orderpriority, status AS o_orderstatus,
-           CAST(n AS BIGINT) AS n_orders,
-           CAST((CAST(1000000 AS HUGEINT) * SUM(CASE WHEN band < 9
-                   THEN ABS(CAST(d AS HUGEINT)) ELSE 0 END))
-                // (CAST(n AS HUGEINT) * (SELECT big_n FROM nn) * 9)
-                AS BIGINT) AS emd_ppm
-    FROM pre GROUP BY prio, status, n
-    ORDER BY emd_ppm DESC, o_orderpriority, o_orderstatus
-    """,
-)
-def t_closeness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit — the third rung of the privacy ladder
-    (k_anonymity_report catches SMALL classes, l_diversity_report
-    catches near-CONSTANT sensitive values; this catches classes whose
-    sensitive DISTRIBUTION diverges from the population, the skew
-    attack both miss). Quasi-identifier = (priority, status); ordered
-    sensitive attribute = order value in ten fixed 50k-dollar bands;
-    per-class distance = the ordered-attribute Earth Mover's Distance,
-    computed EXACTLY as prefix-difference mass in integer ticks:
-    D_j = sum_{i<=j} (c_i*N - g_i*n), EMD_ppm = 1e6 * sum_j |D_j|
-    div (n*N*(m-1)) — every product in HUGEINT/decimal width, so the
-    readout is bit-identical across engines (and the documented
-    overflow bound is N^2*9e6 < 10^38, safe past 10^14 orders).
-    Scale: two map-side-combinable histograms (class x 10 bands,
-    global 10 bands) + a 150-cell window — no row-level state."""
-    o = load_tables(spark, sf_dir)["orders"].select(
-        F.col("o_orderpriority").alias("prio"),
-        F.col("o_orderstatus").alias("status"),
-        F.least(
-            F.expr(
-                "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100"
-                " AS BIGINT) div 5000000"
-            ),
-            F.lit(9).cast("long"),
-        ).alias("band"),
-    )
-    cls = o.groupBy("prio", "status", "band").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    g = o.groupBy("band").agg(F.count(F.lit(1)).cast("long").alias("gc"))
-    cn = o.groupBy("prio", "status").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    big_n = o.agg(F.count(F.lit(1)).cast("long").alias("big_n"))
-    bands = spark.range(10).select(F.col("id").cast("long").alias("band"))
-    grid = cn.crossJoin(F.broadcast(bands))
-    cell = (
-        grid.join(cls, ["prio", "status", "band"], "left")
-        .join(F.broadcast(g), "band", "left")
-        .crossJoin(F.broadcast(big_n))
-        .select(
-            "prio", "status", "n", "band",
-            F.coalesce(F.col("c"), F.lit(0)).alias("c"),
-            F.coalesce(F.col("gc"), F.lit(0)).alias("gc"),
-            "big_n",
-        )
-    )
-    w = Window.partitionBy("prio", "status").orderBy("band")
-    pre = cell.select(
-        "prio", "status", "n", "band", "big_n",
-        F.sum(
-            F.col("c") * F.col("big_n") - F.col("gc") * F.col("n")
-        ).over(w).alias("d"),
-    )
-    return (
-        pre.groupBy("prio", "status", "n", "big_n")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("band") < 9,
-                    F.abs(F.col("d")).cast(T.DecimalType(38, 0)),
-                ).otherwise(F.lit(0).cast(T.DecimalType(38, 0)))
-            ).alias("sumabs")
-        )
-        .selectExpr(
-            "prio AS o_orderpriority",
-            "status AS o_orderstatus",
-            "CAST(n AS BIGINT) AS n_orders",
-            "CAST((CAST(1000000 AS DECIMAL(38,0)) * sumabs)"
-            " div (CAST(n AS DECIMAL(38,0)) * big_n * 9)"
-            " AS BIGINT) AS emd_ppm",
-        )
-        .orderBy(F.desc("emd_ppm"), "o_orderpriority", "o_orderstatus")
-    )
 
 
 @query(
@@ -14807,133 +13021,6 @@ def token_burstiness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("vmr_ppm"), "tok")
         .limit(20)
-    )
-
-
-@query(
-    "slope_one_brand_recs",
-    """
-    WITH r AS (
-      SELECT o.o_custkey AS u, p.p_brand AS it,
-             CAST(COUNT(*) AS BIGINT) AS rt
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-                    JOIN part p ON p.p_partkey = l.l_partkey
-      GROUP BY 1, 2),
-    dev AS (
-      SELECT b.it AS j, a.it AS i,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(b.rt - a.rt) AS BIGINT) AS s
-      FROM r a JOIN r b ON b.u = a.u AND b.it <> a.it
-      GROUP BY 1, 2),
-    tu AS (
-      SELECT u FROM (
-        SELECT u, COUNT(*) AS k FROM r GROUP BY u)
-      WHERE k >= 2 ORDER BY u LIMIT 3),
-    pred AS (
-      SELECT r.u, dev.j,
-             CAST(SUM(dev.s + r.rt * dev.n) AS BIGINT) AS num,
-             CAST(SUM(dev.n) AS BIGINT) AS den
-      FROM r JOIN tu ON tu.u = r.u
-             JOIN dev ON dev.i = r.it
-      WHERE NOT EXISTS (
-        SELECT 1 FROM r r2 WHERE r2.u = r.u AND r2.it = dev.j)
-      GROUP BY 1, 2),
-    sc AS (
-      SELECT u, j AS p_brand, den AS support,
-             CASE WHEN num >= 0 THEN (1000 * num) // den
-                  ELSE -((1000 * (-num)) // den) END AS pred_milli
-      FROM pred),
-    rk AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY u ORDER BY pred_milli DESC, p_brand) AS rn
-      FROM sc)
-    SELECT CAST(u AS BIGINT) AS o_custkey, p_brand,
-           CAST(pred_milli AS BIGINT) AS pred_milli,
-           CAST(support AS BIGINT) AS support
-    FROM rk WHERE rn <= 5 ORDER BY o_custkey, pred_milli DESC, p_brand
-    """,
-)
-def slope_one_brand_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted Slope-One recommendations (Lemire & Maclachlan) over
-    implicit customer x brand purchase counts — the closed-form
-    item-item collaborative filter: dev(j,i) = avg over co-raters of
-    (r_j - r_i), prediction P(u,j) = sum_i (s_ji + r_ui * n_ji) /
-    sum_i n_ji, which is EXACTLY integer-expressible (s and n are
-    integer sums; the only division is the final readout, emitted as
-    sign-split trunc milli ticks so both engines agree on negatives).
-    Top-5 unpurchased brands for the three smallest multi-brand
-    customers. Scale: the deviation matrix is item-vocabulary bounded
-    (|brands|^2 cells = 625 here) — built by one user-keyed self-join
-    whose fan-out is brands-per-user squared, then map-side combined;
-    the matrix BROADCASTS to the scoring pass, so predictions never
-    shuffle the big ratings table twice."""
-    t = load_tables(spark, sf_dir)
-    r = (
-        t["orders"]
-        .join(t["lineitem"], t["orders"]["o_orderkey"] == F.col("l_orderkey"))
-        .join(
-            F.broadcast(t["part"].select("p_partkey", "p_brand")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .groupBy(
-            F.col("o_custkey").alias("u"), F.col("p_brand").alias("it")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("rt"))
-        # the ratings aggregation over orders x lineitem x part feeds
-        # FIVE subtrees (both deviation sides, the eval-user pick, the
-        # scoring join, the rated anti-join): one cut (optimization r08)
-        .transform(_cut_big)
-    )
-    a = r.select(F.col("u"), F.col("it").alias("i"), F.col("rt").alias("ra"))
-    b = r.select(F.col("u"), F.col("it").alias("j"), F.col("rt").alias("rb"))
-    dev = (
-        a.join(b, "u")
-        .where(F.col("j") != F.col("i"))
-        .groupBy("j", "i")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("rb") - F.col("ra")).cast("long").alias("s"),
-        )
-    )
-    tu = (
-        r.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .where(F.col("k") >= 2)
-        .orderBy("u")
-        .limit(3)
-        .select("u")
-    )
-    tr = r.join(F.broadcast(tu), "u")
-    cand = tr.join(F.broadcast(dev), tr["it"] == dev["i"])
-    rated = r.select("u", F.col("it").alias("j"))
-    pred = (
-        cand.join(rated, ["u", "j"], "left_anti")
-        .groupBy("u", "j")
-        .agg(
-            F.sum(F.col("s") + F.col("rt") * F.col("n")).cast("long").alias(
-                "num"
-            ),
-            F.sum("n").cast("long").alias("den"),
-        )
-    )
-    sc = pred.selectExpr(
-        "u",
-        "j AS p_brand",
-        "den AS support",
-        "CASE WHEN num >= 0 THEN (1000 * num) div den"
-        " ELSE -((1000 * (-num)) div den) END AS pred_milli",
-    )
-    w = Window.partitionBy("u").orderBy(F.desc("pred_milli"), "p_brand")
-    return (
-        sc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select(
-            F.col("u").cast("long").alias("o_custkey"),
-            "p_brand",
-            F.col("pred_milli").cast("long").alias("pred_milli"),
-            F.col("support").cast("long").alias("support"),
-        )
-        .orderBy("o_custkey", F.desc("pred_milli"), "p_brand")
     )
 
 
@@ -15224,122 +13311,6 @@ def cuped_adjusted_abtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE -((-(1000 * (dy * b - a * dx))) div (nt * nc * b)) END"
         " AS BIGINT) AS diff_adj_milli",
     )
-
-
-_RI_FOREIGN_KEYS = [
-    # (label, child table, child key, parent table, parent key)
-    ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-     "orders", "o_orderkey"),
-    ("lineitem.l_partkey->part", "lineitem", "l_partkey",
-     "part", "p_partkey"),
-    ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
-     "supplier", "s_suppkey"),
-    ("orders.o_custkey->customer", "orders", "o_custkey",
-     "customer", "c_custkey"),
-    ("customer.c_nationkey->nation", "customer", "c_nationkey",
-     "nation", "n_nationkey"),
-    ("nation.n_regionkey->region", "nation", "n_regionkey",
-     "region", "r_regionkey"),
-]
-
-_RI_UNIQUE_KEYS = [
-    ("orders.o_orderkey unique", "orders", "o_orderkey"),
-    ("customer.c_custkey unique", "customer", "c_custkey"),
-    ("part.p_partkey unique", "part", "p_partkey"),
-    ("documents.doc_id unique", "documents", "doc_id"),
-    ("events.event_id unique", "events", "event_id"),
-]
-
-
-def _ri_oracle_sql() -> str:
-    blocks = []
-    for label, ct, ck, pt, pk in _RI_FOREIGN_KEYS:
-        blocks.append(f"""
-    SELECT '{label}' AS check_name, 'foreign_key' AS kind,
-           CAST((SELECT COUNT(*) FROM {ct}) AS BIGINT) AS n_rows,
-           CAST(COUNT(*) AS BIGINT) AS n_violations
-    FROM {ct} c WHERE NOT EXISTS (
-      SELECT 1 FROM {pt} p WHERE p.{pk} = c.{ck})""")
-    for label, t, k in _RI_UNIQUE_KEYS:
-        blocks.append(f"""
-    SELECT '{label}', 'unique_key',
-           CAST((SELECT COUNT(*) FROM {t}) AS BIGINT),
-           CAST(COALESCE(SUM(c - 1), 0) AS BIGINT)
-    FROM (SELECT {k}, COUNT(*) AS c FROM {t} GROUP BY 1 HAVING COUNT(*) > 1)""")
-    return (
-        "SELECT * FROM ("
-        + " UNION ALL ".join(blocks)
-        + ") ORDER BY check_name"
-    )
-
-
-@query("referential_integrity_audit", _ri_oracle_sql())
-def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Constraint-validation battery over the warehouse: six foreign
-    keys (orphan counts via anti-join) and five unique keys (surplus
-    duplicate counts) in one unioned report — the pre-load gate a
-    lakehouse pipeline runs before publishing a snapshot, and the
-    referential counterpart of functional_dependency_audit (which
-    audits VALUE dependencies, not key reachability). Spark leaves
-    every count exact; anti-joins against the small dimensions
-    broadcast, the orders/lineitem checks shuffle on the key like any
-    FK validation must. Violations are 0 on the fixture by
-    construction — the value is the CHECK running, not the zeros
-    (a corrupted upstream shows here first)."""
-    t = load_tables(spark, sf_dir)
-    small = {"part", "supplier", "customer", "nation", "region"}
-    # row totals stay IN the plan (crossJoin of 1-row aggregates), not
-    # driver-side .count() actions — the report is one lazy job. Each
-    # 1-row total is lineage-CUT (optimization r09): lineitem/orders
-    # totals feed 3 checks each, and without the cut every consuming
-    # crossJoin re-ran the full-table count per check (the r08
-    # encoding_size_planning pattern); bounded frame, broadcast pinned
-    # at every use below.
-    totals = {
-        name: cut(
-            t[name].agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-        )
-        for name in {c[1] for c in _RI_FOREIGN_KEYS}
-        | {c[1] for c in _RI_UNIQUE_KEYS}
-    }
-    outs = []
-    for label, ct, ck, pt, pk in _RI_FOREIGN_KEYS:
-        parent = t[pt].select(F.col(pk).alias("__pk")).distinct()
-        if pt in small:
-            parent = F.broadcast(parent)
-        orphans = (
-            t[ct]
-            .join(parent, t[ct][ck] == F.col("__pk"), "left_anti")
-            .agg(
-                F.lit(label).alias("check_name"),
-                F.lit("foreign_key").alias("kind"),
-                F.count(F.lit(1)).cast("long").alias("n_violations"),
-            )
-            .crossJoin(F.broadcast(totals[ct]))
-        )
-        outs.append(orphans)
-    for label, tb, k in _RI_UNIQUE_KEYS:
-        dups = (
-            t[tb]
-            .groupBy(k)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") > 1)
-            .agg(
-                F.lit(label).alias("check_name"),
-                F.lit("unique_key").alias("kind"),
-                F.coalesce(F.sum(F.col("c") - 1), F.lit(0)).cast("long").alias(
-                    "n_violations"
-                ),
-            )
-            .crossJoin(F.broadcast(totals[tb]))
-        )
-        outs.append(dups)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.select(
-        "check_name", "kind", "n_rows", "n_violations"
-    ).orderBy("check_name")
 
 
 @query(
@@ -16236,337 +14207,6 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cohort_week", "age_weeks")
 
 
-@query(
-    "selectivity_estimation_report",
-    """
-    WITH o AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-               AS v,
-             o_orderkey
-      FROM orders),
-    st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, MIN(v) AS mn, MAX(v) AS mx,
-                  MAX(v) - MIN(v) + 1 AS w FROM o),
-    ew AS (
-      SELECT LEAST(((v - st.mn) * 16) // st.w, 15) AS b,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM o CROSS JOIN st GROUP BY 1),
-    ewb AS (
-      SELECT ew.b, ew.c,
-             st.mn + (ew.b * st.w + 15) // 16 AS lo,
-             st.mn + ((ew.b + 1) * st.w + 15) // 16 - 1 AS hi
-      FROM ew CROSS JOIN st),
-    ed AS (
-      SELECT tile, CAST(COUNT(*) AS BIGINT) AS c,
-             MIN(v) AS lo, MAX(v) AS hi
-      FROM (SELECT v, ntile(16) OVER (ORDER BY v, o_orderkey) AS tile
-            FROM o)
-      GROUP BY 1),
-    pr AS (
-      SELECT q.g AS q, st.mn + ((st.mx - st.mn) * q.g) // 4 AS t
-      FROM range(1, 4) q(g) CROSS JOIN st),
-    tru AS (
-      SELECT pr.q, pr.t, CAST(COUNT(*) AS BIGINT) AS true_rows
-      FROM pr LEFT JOIN o ON o.v <= pr.t GROUP BY 1, 2),
-    estw AS (
-      SELECT pr.q,
-             CAST(SUM(CASE WHEN pr.t >= h.hi THEN h.c
-                      WHEN pr.t < h.lo THEN 0
-                      ELSE (h.c * (pr.t - h.lo + 1)) // (h.hi - h.lo + 1)
-                      END) AS BIGINT) AS est
-      FROM pr CROSS JOIN ewb h GROUP BY 1),
-    estd AS (
-      SELECT pr.q,
-             CAST(SUM(CASE WHEN pr.t >= h.hi THEN h.c
-                      WHEN pr.t < h.lo THEN 0
-                      ELSE (h.c * (pr.t - h.lo + 1)) // (h.hi - h.lo + 1)
-                      END) AS BIGINT) AS est
-      FROM pr CROSS JOIN ed h GROUP BY 1)
-    SELECT tru.q AS quartile, tru.t AS threshold_cents, tru.true_rows,
-           estw.est AS est_equiwidth, estd.est AS est_equidepth,
-           CAST(CASE WHEN estw.est >= tru.true_rows
-                THEN (1000000 * (estw.est - tru.true_rows)) // tru.true_rows
-                ELSE -((1000000 * (tru.true_rows - estw.est))
-                       // tru.true_rows) END AS BIGINT) AS err_width_ppm,
-           CAST(CASE WHEN estd.est >= tru.true_rows
-                THEN (1000000 * (estd.est - tru.true_rows)) // tru.true_rows
-                ELSE -((1000000 * (tru.true_rows - estd.est))
-                       // tru.true_rows) END AS BIGINT) AS err_depth_ppm
-    FROM tru JOIN estw ON estw.q = tru.q JOIN estd ON estd.q = tru.q
-    ORDER BY quartile
-    """,
-)
-def selectivity_estimation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimizer-style selectivity estimation quality: 16-bucket
-    equi-WIDTH vs equi-DEPTH histograms on order value, each asked to
-    estimate `value <= t` at the 25/50/75% span thresholds with
-    uniform within-bucket interpolation, scored against true counts
-    (sign-split ppm error) — the reason every serious engine keeps
-    equi-depth statistics, shown in numbers (skewed mass makes
-    equi-width's wide sparse buckets interpolate badly; equi-depth
-    bounds every bucket's error by its fixed row share). All bucket
-    boundaries, interpolations, and errors are exact integer
-    arithmetic. Scale: ONE 3-scalar stats collect (n, min, max — the
-    Markov/retrieval precedent) inlined as literals everywhere the
-    r5 form re-evaluated a broadcast stats subplan, so the plan is two
-    map-side histograms + the 2-pass distributed ntile (domain+total
-    supplied, stats scan skipped) + a single conditional-agg scan for
-    the true counts — no theta join, no stats re-evaluation; at 100 TB
-    feed it the per-value histogram, not raw rows; estimates touch
-    only 16-row tables. Same-process 9-rep interleaved A/B vs the r5
-    form at sf0.1 (min/med total secs): 1.76/2.27 vs 1.83/2.36, and
-    21→17 jobs with a 2x faster cold first run — the intermediate
-    'local-relation theta join for true counts' variant measured
-    SLOWER (0.72 vs 0.43 s branch-level) and is dead; the conditional
-    aggregation replaced it."""
-    # o feeds the equi-width histogram, the distributed ntile's two
-    # passes, the true-count scan AND the build-time stats collect —
-    # one cut, one orders scan (optimization r09)
-    o = _cut_big(load_tables(spark, sf_dir)["orders"].select(
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)"
-        ).alias("v"),
-        "o_orderkey",
-    ))
-    st = o.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-    ).first()
-    n, mn, mx = st["n"], st["mn"], st["mx"]
-    out_schema = (
-        "quartile LONG, threshold_cents LONG, true_rows LONG,"
-        " est_equiwidth LONG, est_equidepth LONG,"
-        " err_width_ppm LONG, err_depth_ppm LONG"
-    )
-    if not n:
-        return spark.createDataFrame([], out_schema)
-    w = mx - mn + 1
-    thresholds = {q: mn + ((mx - mn) * q) // 4 for q in (1, 2, 3)}
-    ewb = (
-        o.groupBy(
-            F.least(
-                F.expr(f"((v - {mn}) * 16) div {w}"),
-                F.lit(15).cast("long"),
-            ).alias("b")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .selectExpr(
-            "b",
-            "c",
-            f"{mn} + (b * {w} + 15) div 16 AS lo",
-            f"{mn} + ((b + 1) * {w} + 15) div 16 - 1 AS hi",
-        )
-    )
-    from rocketmq_flink_spark.operators.ranking import distributed_ntile
-
-    ed = (
-        distributed_ntile(
-            o, ["v", "o_orderkey"], "v", 16, out="tile",
-            domain=(mn, mx), total=n,
-        )
-        .groupBy("tile")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-    )
-    # true selectivities: one conditional-agg scan, stacked to rows
-    tru = o.agg(*[
-        F.sum(F.when(F.col("v") <= F.lit(t), 1).otherwise(0))
-        .cast("long").alias(f"c{q}")
-        for q, t in thresholds.items()
-    ]).selectExpr(
-        "stack(3, " + ", ".join(
-            f"CAST({q} AS LONG), CAST({t} AS LONG), c{q}"
-            for q, t in thresholds.items()
-        ) + ") AS (q, t, true_rows)"
-    )
-    pr = spark.createDataFrame(
-        list(thresholds.items()), "q LONG, t LONG"
-    )
-
-    def est(hist, name):
-        return (
-            pr.crossJoin(F.broadcast(hist))
-            .groupBy("q")
-            .agg(
-                F.sum(
-                    F.when(F.col("t") >= F.col("hi"), F.col("c"))
-                    .when(F.col("t") < F.col("lo"), F.lit(0))
-                    .otherwise(
-                        F.expr(
-                            "(c * (t - lo + 1)) div (hi - lo + 1)"
-                        )
-                    )
-                ).cast("long").alias(name)
-            )
-        )
-
-    estw = est(ewb.select("lo", "hi", "c"), "est_equiwidth")
-    estd = est(ed.select("lo", "hi", "c"), "est_equidepth")
-    return (
-        tru.join(estw, "q")
-        .join(estd, "q")
-        .selectExpr(
-            "q AS quartile",
-            "t AS threshold_cents",
-            "true_rows",
-            "est_equiwidth",
-            "est_equidepth",
-            "CAST(CASE WHEN est_equiwidth >= true_rows"
-            " THEN (1000000 * (est_equiwidth - true_rows)) div true_rows"
-            " ELSE -((1000000 * (true_rows - est_equiwidth)) div true_rows)"
-            " END AS BIGINT) AS err_width_ppm",
-            "CAST(CASE WHEN est_equidepth >= true_rows"
-            " THEN (1000000 * (est_equidepth - true_rows)) div true_rows"
-            " ELSE -((1000000 * (true_rows - est_equidepth)) div true_rows)"
-            " END AS BIGINT) AS err_depth_ppm",
-        )
-        .orderBy("quartile")
-    )
-
-
-_JOINCARD_SPECS = [
-    # (label, left table, left key, right table, right key)
-    ("orders*lineitem@orderkey", "orders", "o_orderkey",
-     "lineitem", "l_orderkey"),
-    ("part*lineitem@partkey", "part", "p_partkey",
-     "lineitem", "l_partkey"),
-    ("supplier*lineitem@suppkey", "supplier", "s_suppkey",
-     "lineitem", "l_suppkey"),
-    ("customer*orders@custkey", "customer", "c_custkey",
-     "orders", "o_custkey"),
-    ("events*events@user_id", "events", "user_id",
-     "events", "user_id"),
-]
-
-
-def _joincard_oracle_sql() -> str:
-    blocks = []
-    for label, lt, lk, rt, rk in _JOINCARD_SPECS:
-        blocks.append(f"""
-    SELECT '{label}' AS join_name,
-           l.n AS n_left, r.n AS n_right,
-           l.d AS ndv_left, r.d AS ndv_right,
-           CAST((l.n * r.n) // GREATEST(l.d, r.d) AS BIGINT) AS est_rows,
-           a.actual AS actual_rows,
-           CAST(CASE WHEN a.actual = 0 THEN NULL
-                WHEN (l.n * r.n) // GREATEST(l.d, r.d) >= a.actual
-                THEN (1000000 * ((l.n * r.n) // GREATEST(l.d, r.d)
-                                 - a.actual)) // a.actual
-                ELSE -((1000000 * (a.actual
-                                   - (l.n * r.n) // GREATEST(l.d, r.d)))
-                       // a.actual) END AS BIGINT) AS err_ppm
-    FROM (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(COUNT(DISTINCT {lk}) AS BIGINT) AS d FROM {lt}) l,
-         (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(COUNT(DISTINCT {rk}) AS BIGINT) AS d FROM {rt}) r,
-         (SELECT CAST(COALESCE(SUM(lc.c * rc.c), 0) AS BIGINT) AS actual
-          FROM (SELECT {lk} AS k, COUNT(*) AS c FROM {lt} GROUP BY 1) lc
-          JOIN (SELECT {rk} AS k, COUNT(*) AS c FROM {rt} GROUP BY 1) rc
-            ON rc.k = lc.k) a""")
-    return (
-        "SELECT * FROM (" + " UNION ALL ".join(blocks)
-        + ") ORDER BY join_name"
-    )
-
-
-@query("join_cardinality_estimate", _joincard_oracle_sql())
-def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimizer join-size estimation audit: the textbook
-    uniformity/containment estimate |R|*|S| / max(ndv_R, ndv_S)
-    against the EXACT join cardinality for four FK joins and the
-    skewed events self-join — estimation error in sign-split ppm.
-    The FK estimates land near zero error (containment holds); the
-    self-join exposes what uniformity misses: actual = sum of squared
-    per-user counts, which skew inflates past n^2/ndv. The exact
-    cardinality is computed from per-key COUNT tables joined on the
-    key (sum of count products) — the join's size without
-    materializing the join, which is also how a 100 TB engine should
-    audit a planned join before running it. Everything integer;
-    selectivity_estimation_report is the single-column sibling."""
-    t = load_tables(spark, sf_dir)
-    outs = []
-    for label, lt, lk, rt, rk in _JOINCARD_SPECS:
-        # ONE pass per (table, key): the per-key count table is the
-        # sufficient statistic for everything this spec reports —
-        # n = sum(c) (all rows, incl. NULL keys, = COUNT(*)),
-        # ndv = count of non-NULL groups (= COUNT(DISTINCT k)), and the
-        # exact join size from the count-product join. r5..r8 ran a
-        # separate count+countDistinct scan per side on top of the
-        # groupBy (lineitem 6 scans/spec-set -> 3; optimization r09,
-        # guide §2.4: the countDistinct shuffle was a second exchange
-        # over the same key). Cut: each count table feeds the stats agg
-        # AND the join.
-        lc = t[lt].groupBy(F.col(lk).alias("k")).agg(
-            F.count(F.lit(1)).alias("c1")
-        ).transform(_cut_big)
-        ls = lc.agg(
-            F.sum("c1").cast("long").alias("n_left"),
-            F.count(F.col("k")).cast("long").alias("ndv_left"),
-        )
-        if (lt, lk) == (rt, rk):
-            # self-join spec: both count tables are identical, so the
-            # key-matched count-product sum is just sum(c^2) — no join
-            rs = lc.agg(
-                F.sum("c1").cast("long").alias("n_right"),
-                F.count(F.col("k")).cast("long").alias("ndv_right"),
-            )
-            # NULL-key groups never match in the equi-join being
-            # estimated, so exclude them from the squared-count sum
-            act = lc.agg(
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("k").isNotNull(),
-                            F.col("c1") * F.col("c1"),
-                        )
-                    ),
-                    F.lit(0),
-                )
-                .cast("long")
-                .alias("actual_rows")
-            )
-        else:
-            rc = t[rt].groupBy(F.col(rk).alias("k")).agg(
-                F.count(F.lit(1)).alias("c2")
-            ).transform(_cut_big)
-            rs = rc.agg(
-                F.sum("c2").cast("long").alias("n_right"),
-                F.count(F.col("k")).cast("long").alias("ndv_right"),
-            )
-            act = lc.join(rc, "k").agg(
-                F.coalesce(F.sum(F.col("c1") * F.col("c2")), F.lit(0))
-                .cast("long")
-                .alias("actual_rows")
-            )
-        outs.append(
-            ls.crossJoin(F.broadcast(rs))
-            .crossJoin(F.broadcast(act))
-            .selectExpr(
-                f"'{label}' AS join_name",
-                "n_left", "n_right", "ndv_left", "ndv_right",
-                "CAST((n_left * n_right) div GREATEST(ndv_left, ndv_right)"
-                " AS BIGINT) AS est_rows",
-                "actual_rows",
-                "CAST(CASE WHEN actual_rows = 0 THEN NULL"
-                " WHEN (n_left * n_right)"
-                " div GREATEST(ndv_left, ndv_right) >= actual_rows"
-                " THEN (1000000 * ((n_left * n_right)"
-                "   div GREATEST(ndv_left, ndv_right) - actual_rows))"
-                "   div actual_rows"
-                " ELSE -((1000000 * (actual_rows - (n_left * n_right)"
-                "   div GREATEST(ndv_left, ndv_right))) div actual_rows)"
-                " END AS BIGINT) AS err_ppm",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out.orderBy("join_name")
-
-
 _LOF_VE_DUCK = (
     "list_transform(CAST(embedding AS DOUBLE[]),"
     " x -> CAST(CAST(floor(x * 1e10 + 0.5) AS BIGINT)"
@@ -17231,154 +14871,6 @@ def srm_assignment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "encoding_size_planning",
-    """
-    WITH o AS (
-      SELECT l_returnflag AS rf, l_linestatus AS ls,
-             CAST(epoch_us(l_shipdate) // 86400000000 AS BIGINT) AS sd,
-             CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT) AS qt,
-             l_partkey AS pk,
-             ROW_NUMBER() OVER (ORDER BY l_orderkey, l_linenumber) AS rn
-      FROM lineitem),
-    fl AS (
-      SELECT rf, ls, sd, qt, pk,
-             CASE WHEN rf <> LAG(rf) OVER w THEN 1 ELSE 0 END AS c_rf,
-             CASE WHEN ls <> LAG(ls) OVER w THEN 1 ELSE 0 END AS c_ls,
-             CASE WHEN sd <> LAG(sd) OVER w THEN 1 ELSE 0 END AS c_sd,
-             CASE WHEN qt <> LAG(qt) OVER w THEN 1 ELSE 0 END AS c_qt,
-             CASE WHEN pk <> LAG(pk) OVER w THEN 1 ELSE 0 END AS c_pk
-      FROM o WINDOW w AS (ORDER BY rn)),
-    r AS (
-      SELECT COUNT(*) AS n,
-             1 + SUM(c_rf) AS runs_rf, 1 + SUM(c_ls) AS runs_ls,
-             1 + SUM(c_sd) AS runs_sd, 1 + SUM(c_qt) AS runs_qt,
-             1 + SUM(c_pk) AS runs_pk,
-             COUNT(DISTINCT rf) AS d_rf, COUNT(DISTINCT ls) AS d_ls,
-             COUNT(DISTINCT sd) AS d_sd, COUNT(DISTINCT qt) AS d_qt,
-             COUNT(DISTINCT pk) AS d_pk
-      FROM fl),
-    cols AS (
-      SELECT 'l_returnflag' AS col, 1 AS width, runs_rf AS runs,
-             d_rf AS ndv, n FROM r
-      UNION ALL SELECT 'l_linestatus', 1, runs_ls, d_ls, n FROM r
-      UNION ALL SELECT 'l_shipdate_day', 4, runs_sd, d_sd, n FROM r
-      UNION ALL SELECT 'l_quantity_c', 4, runs_qt, d_qt, n FROM r
-      UNION ALL SELECT 'l_partkey', 8, runs_pk, d_pk, n FROM r),
-    est AS (
-      SELECT col, CAST(n AS BIGINT) AS n_rows, CAST(ndv AS BIGINT) AS ndv,
-             CAST(runs AS BIGINT) AS n_runs,
-             CAST(n * width AS BIGINT) AS bytes_plain,
-             CAST((n * CASE WHEN ndv <= 1 THEN 1
-                       ELSE length(bin(CAST(ndv - 1 AS BIGINT))) END + 7)
-                  // 8 + ndv * width AS BIGINT) AS bytes_dict,
-             CAST(runs * (width + 4) AS BIGINT) AS bytes_rle
-      FROM cols)
-    SELECT col, n_rows, ndv, n_runs, bytes_plain, bytes_dict, bytes_rle,
-           CASE WHEN bytes_rle <= bytes_plain AND bytes_rle <= bytes_dict
-                  THEN 'rle'
-                WHEN bytes_dict <= bytes_plain THEN 'dict'
-                ELSE 'plain' END AS best_encoding
-    FROM est ORDER BY col
-    """,
-)
-def encoding_size_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Columnar encoding planner: for five lineitem columns, the exact
-    run count (in physical (orderkey, linenumber) order), distinct
-    count, and projected bytes under PLAIN / DICTIONARY
-    (bit-packed indices + dictionary) / RLE — the decision table a
-    storage layer consults before writing a column chunk, and the
-    quantitative reason sort order changes
-    file sizes, not just pruning. Integer arithmetic only (bit width
-    = bin-length of ndv-1, half-open byte rounding). Scale: the run
-    count is fully distributed — the exact global position comes from
-    operators/ranking.distributed_prefix (range buckets on orderkey,
-    no single-partition window) and each row meets its predecessor
-    through a position-keyed self-join (uniform join key, one
-    shuffle); production would count runs per row group, which is
-    embarrassingly parallel and what parquet actually stores.
-    Distinct counts are one map-side pass."""
-    from rocketmq_flink_spark.operators.ranking import distributed_prefix
-
-    li = load_tables(spark, sf_dir)["lineitem"]
-    base = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_returnflag").alias("rf"),
-        F.col("l_linestatus").alias("ls"),
-        F.expr(
-            "CAST(unix_micros(CAST(l_shipdate AS TIMESTAMP))"
-            " div 86400000000 AS BIGINT)"
-        ).alias("sd"),
-        F.expr(
-            "CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)"
-        ).alias("qt"),
-        F.col("l_partkey").alias("pk"),
-    )
-    cols = ("rf", "ls", "sd", "qt", "pk")
-    ranked = distributed_prefix(
-        base, ["l_orderkey", "l_linenumber"], "l_orderkey", pos_col="rn"
-    ).select("rn", *cols)
-    prev = ranked.select(
-        (F.col("rn") + 1).alias("rn"),
-        *[F.col(c).alias(f"p_{c}") for c in cols],
-    )
-    # rn is dense and unique, so the self-join key is perfectly uniform;
-    # the first row's predecessor is NULL -> chg = 0, matching lag()
-    flags = ranked.join(prev, "rn", "left").select(
-        *[F.col(c) for c in cols],
-        *[
-            F.when(F.col(c) != F.col(f"p_{c}"), 1)
-            .otherwise(0)
-            .alias(f"chg_{c}")
-            for c in cols
-        ],
-    )
-    r = flags.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[(F.lit(1) + F.sum(f"chg_{c}")).alias(f"runs_{c}") for c in cols],
-        *[F.countDistinct(c).alias(f"d_{c}") for c in cols],
-    )
-    # r is ONE row consumed by five selectExpr branches below; without
-    # a lineage cut the whole prefix + self-join pipeline is duplicated
-    # per branch (260 Exchanges / 60 lineitem scans at baseline) and
-    # exchange reuse doesn't collapse the differently-projected copies
-    # (optimization r08, guide §3.3: truncate the plan)
-    r = r.transform(cut)
-    specs = [
-        ("l_returnflag", 1, "rf"),
-        ("l_linestatus", 1, "ls"),
-        ("l_shipdate_day", 4, "sd"),
-        ("l_quantity_c", 4, "qt"),
-        ("l_partkey", 8, "pk"),
-    ]
-    outs = []
-    for name, width, tag in specs:
-        outs.append(
-            r.selectExpr(
-                f"'{name}' AS col",
-                "CAST(n AS BIGINT) AS n_rows",
-                f"CAST(d_{tag} AS BIGINT) AS ndv",
-                f"CAST(runs_{tag} AS BIGINT) AS n_runs",
-                f"CAST(n * {width} AS BIGINT) AS bytes_plain",
-                f"CAST((n * CASE WHEN d_{tag} <= 1 THEN 1"
-                f" ELSE length(bin(CAST(d_{tag} - 1 AS BIGINT))) END + 7)"
-                f" div 8 + d_{tag} * {width} AS BIGINT) AS bytes_dict",
-                f"CAST(runs_{tag} * ({width} + 4) AS BIGINT) AS bytes_rle",
-            )
-        )
-    out = outs[0]
-    for x in outs[1:]:
-        out = out.unionAll(x)
-    return out.selectExpr(
-        "col", "n_rows", "ndv", "n_runs", "bytes_plain", "bytes_dict",
-        "bytes_rle",
-        "CASE WHEN bytes_rle <= bytes_plain AND bytes_rle <= bytes_dict"
-        " THEN 'rle' WHEN bytes_dict <= bytes_plain THEN 'dict'"
-        " ELSE 'plain' END AS best_encoding",
-    ).orderBy("col")
-
-
-@query(
     "partition_pruning_scan",
     """
     SELECT event_type,
@@ -17695,8 +15187,8 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     away: a treatment that moves only the tail shows a flat median
     and a large p90 effect. Per-arm purchase-value quantiles are
     rank-EXACT (smallest value whose cumulative count crosses the
-    rank, from the per-arm distinct-value histogram — the
-    order_value_deciles discipline, never percentile_approx), so the
+    rank, from the per-arm distinct-value histogram, never
+    percentile_approx), so the
     per-quantile difference is exact cents. On the untreated fixture
     the effects are the A/A noise floor. Scale: one (arm, value)
     histogram then arm-partitioned cumulative windows over DISTINCT
@@ -18167,64 +15659,6 @@ def source_embedding_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("centroid_cos"),
         )
         .orderBy("source_a", "source_b")
-    )
-
-
-@query(
-    "trending_parts_wow",
-    """
-    WITH w AS (
-      SELECT l_partkey,
-             epoch_us(CAST(l_shipdate AS TIMESTAMP))
-               // 86400000000 // 7 AS wk,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM lineitem GROUP BY 1, 2),
-    mx AS (SELECT MAX(wk) AS mw FROM w),
-    cur AS (SELECT l_partkey, c FROM w CROSS JOIN mx WHERE wk = mw),
-    prv AS (SELECT l_partkey, c FROM w CROSS JOIN mx WHERE wk = mw - 1),
-    f AS (
-      SELECT COALESCE(cur.l_partkey, prv.l_partkey) AS l_partkey,
-             COALESCE(cur.c, 0) AS c_now, COALESCE(prv.c, 0) AS c_prev
-      FROM cur FULL OUTER JOIN prv ON prv.l_partkey = cur.l_partkey)
-    SELECT l_partkey, c_now, c_prev, c_now - c_prev AS wow_delta
-    FROM f
-    ORDER BY wow_delta DESC, l_partkey LIMIT 10
-    """,
-)
-def trending_parts_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week trending parts: shipped-line counts per part in
-    the newest epoch-week vs the week before (full-outer so new
-    entrants and vanishing parts both rank), top-10 risers by exact
-    integer delta — the per-entity trend readout next to the global
-    trend tests (Mann-Kendall / Theil-Sen measure the corpus; this
-    names the movers). Scale: one (part, week) map-side count, two
-    week slices, one part-keyed full-outer join — the ranking is a
-    TakeOrdered top-10, never a global sort."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    wk = F.expr(
-        "unix_micros(CAST(l_shipdate AS TIMESTAMP))"
-        " div 86400000000 div 7"
-    )
-    w = li.groupBy(F.col("l_partkey"), wk.alias("wk")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    mx = w.agg(F.max("wk").alias("mw"))
-    wb = w.crossJoin(F.broadcast(mx))
-    cur = wb.where(F.col("wk") == F.col("mw")).select(
-        F.col("l_partkey").alias("pk_a"), F.col("c").alias("c_now")
-    )
-    prv = wb.where(F.col("wk") == F.col("mw") - 1).select(
-        F.col("l_partkey").alias("pk_b"), F.col("c").alias("c_prev")
-    )
-    f = cur.join(prv, cur["pk_a"] == prv["pk_b"], "full_outer").select(
-        F.coalesce(F.col("pk_a"), F.col("pk_b")).alias("l_partkey"),
-        F.coalesce(F.col("c_now"), F.lit(0)).cast("long").alias("c_now"),
-        F.coalesce(F.col("c_prev"), F.lit(0)).cast("long").alias("c_prev"),
-    )
-    return (
-        f.withColumn("wow_delta", F.col("c_now") - F.col("c_prev"))
-        .orderBy(F.desc("wow_delta"), "l_partkey")
-        .limit(10)
     )
 
 

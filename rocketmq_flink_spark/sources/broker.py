@@ -41,7 +41,10 @@ publishes, under an exclusive flock on `<topic>/.lock`:
 4. hard-link each staged file to its final name (`os.link` never
    replaces a file), set its mtime to the publish moment, unlink the
    staged name;
-5. write the epoch marker and remove the intent.
+5. write the epoch marker and remove the intent. A stream epoch's
+   marker (`<checkpoint hash>-<N>`) replaces its query's marker for
+   batch N-1, which Spark never replays once batch N has started; so
+   a stream leaves one marker, not one per batch.
 Once its intent is written a commit always completes: on retry, on a
 replay of its epoch, or at the topic's next commit. A retried or
 replayed epoch therefore publishes its messages exactly once, and two
@@ -65,6 +68,7 @@ import pyarrow.parquet as pq
 SEGMENT_RE = re.compile(r"^(\d{20})-(\d+)(?:-(-?\d+))?\.parquet$")
 STAGED_RE = re.compile(r"^\.tmp-[0-9a-f]{32}-(\d+)\.parquet$")
 INTENT_RE = re.compile(r"^\.intent-[0-9a-f]{32}\.json$")
+STREAM_EPOCH_RE = re.compile(r"^([0-9a-f]{16})-(\d+)$")  # datasource._epoch_key
 
 SEGMENT_SCHEMA = pa.schema(
     [
@@ -158,9 +162,15 @@ def _publish(tdir: str, intent_path: str, intent: dict) -> None:
                 raise
             continue  # linked and unlinked by an earlier attempt
         os.remove(pending)
-    if intent["epoch"] is not None:
-        with open(os.path.join(tdir, f".epoch-{intent['epoch']}.done"), "w"):
+    epoch = intent["epoch"]
+    if epoch is not None:
+        with open(os.path.join(tdir, f".epoch-{epoch}.done"), "w"):
             pass
+        m = STREAM_EPOCH_RE.match(epoch)
+        if m and int(m.group(2)) > 0:
+            # Spark starts batch N only once N-1 is in the query's commit
+            # log, so N-1 is never replayed and its marker is spent.
+            _remove(os.path.join(tdir, f".epoch-{m.group(1)}-{int(m.group(2)) - 1}.done"))
     os.remove(intent_path)
 
 

@@ -628,8 +628,10 @@ class RocketMQBatchWriter(_StagingWriter, DataSourceArrowWriter):
     def commit(self, messages):
         # `_epoch` (underscore-passthrough option) lets foreachBatch sinks
         # reuse the stream writer's idempotent-epoch commit (W9): a retried
-        # epoch with the same id is a no-op instead of a duplicate. The id
-        # is the key as given, so it must be unique among a topic's writers.
+        # epoch with the same id is a no-op instead of a duplicate. The
+        # foreachBatch sink passes the stream writer's key (`_epoch_key`
+        # of its checkpoint location and batch id); any other id is used
+        # as given, so it must be unique among a topic's writers.
         _commit_staged(self.root, _staged(messages),
                        epoch_id=self.opts.get("_epoch"), retry_opts=self.opts)
 

@@ -4,7 +4,10 @@ The direct path is `df.writeStream.format("rocketmq")`; foreachBatch is
 the variant for pipelines whose output isn't append-only (update-mode
 aggregations) or that need the codec applied per epoch. Parity:
 - flush-on-checkpoint (RocketMQSink.java:189-203) -> per-epoch batch
-  write; the broker's epoch marker makes retried epochs idempotent.
+  write; the broker's epoch marker makes retried epochs idempotent. An
+  epoch is keyed like a `format("rocketmq")` stream's: the checkpoint
+  location plus the batch id, so two such queries writing one topic
+  never take each other's epochs as done.
 - changelog rowkind filter (RocketMQRowDataConverter.java:168-171, P6):
   Spark update-mode output carries no UPDATE_BEFORE rows, so the filter
   is structurally a no-op here — the semantic P6 preserves (never emit
@@ -16,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from rocketmq_flink_spark.functions.codec import encode_rows
+from rocketmq_flink_spark.sources.datasource import _epoch_key
 
 
 def write_stream_foreach_batch(
@@ -33,6 +37,7 @@ def write_stream_foreach_batch(
     Returns the StreamingQuery.
     """
     opts = dict(options)
+    ckpt = {"checkpointLocation": checkpoint_location}
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         env = encode_rows(batch_df, options=opts)
@@ -44,7 +49,7 @@ def write_stream_foreach_batch(
         (
             env.write.format("rocketmq")
             .mode("append")
-            .options(_epoch=str(batch_id), **sink_opts)
+            .options(_epoch=_epoch_key(ckpt, batch_id), **sink_opts)
             .save()
         )
 

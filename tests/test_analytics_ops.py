@@ -18,32 +18,6 @@ def _run(spark, name):
     return REGISTRY[name].fn(spark, SF).toPandas()
 
 
-def test_ks_statistic_matches_python_witness(spark):
-    out = _run(spark, "ks_two_sample_order_values").iloc[0]
-    con = duckdb.connect()
-    rows = con.execute(
-        f"""SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT),
-                   o_orderpriority = '1-URGENT'
-            FROM '{SF}/orders.parquet'
-            WHERE o_orderpriority IN ('1-URGENT', '5-LOW')"""
-    ).fetchall()
-    a = sorted(v for v, is_a in rows if is_a)
-    b = sorted(v for v, is_a in rows if not is_a)
-    n1, n2 = len(a), len(b)
-    best, best_v = -1, None
-    for v in sorted(set(a) | set(b)):
-        ca = sum(1 for x in a if x <= v)
-        cb = sum(1 for x in b if x <= v)
-        d = abs(ca * n2 - cb * n1)
-        if d > best:
-            best, best_v = d, v
-    assert int(out["n_urgent"]) == n1 and int(out["n_low"]) == n2
-    assert int(out["ks_ppm"]) == (2 * 1000000 * best + n1 * n2) // (
-        2 * n1 * n2
-    )
-    assert int(out["at_value_cents"]) == best_v
-
-
 def test_heaps_curve_is_monotone_and_consistent(spark):
     df = _run(spark, "heaps_law_vocab_growth")
     assert list(df["decile"]) == list(range(10))
@@ -104,29 +78,6 @@ def test_ndcg_bounds_and_perfect_case(spark):
     perfect = df[(df["hits_at_10"] == 10) & (df["n_rel_corpus"] >= 10)]
     assert (perfect["ndcg_ppm"] == 1000000).all()
     assert (df["hits_at_10"] <= df["n_rel_corpus"].clip(upper=10)).all()
-
-
-def test_benford_shares_and_digit_counts(spark):
-    df = _run(spark, "benford_first_digit_orders")
-    assert list(df["digit"]) == list(range(1, 10))
-    assert int(df["exp_ppm"].sum()) == 1000000
-    # nine half-up roundings: total observed share within +-5 ppm of 1e6
-    assert abs(int(df["obs_ppm"].sum()) - 1000000) <= 5
-    con = duckdb.connect()
-    wit = dict(
-        con.execute(
-            f"""SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100)
-                         AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER),
-                       COUNT(*)
-                FROM '{SF}/orders.parquet' WHERE o_totalprice > 0
-                GROUP BY 1"""
-        ).fetchall()
-    )
-    got = dict(zip(df["digit"], df["n"]))
-    assert {k: int(v) for k, v in got.items() if v} == {
-        k: int(v) for k, v in wit.items()
-    }
-    assert (df["dev_ppm"] == df["obs_ppm"] - df["exp_ppm"]).all()
 
 
 def test_activity_streaks_invariants(spark):
@@ -196,56 +147,6 @@ def test_jsd_identical_distributions_are_zero(spark):
     from rocketmq_flink_spark.operators.retrieval import fp_log2_py
 
     assert fp_log2_py(2 * 7 * 100, 7 * 100 + 7 * 100) == 0
-
-
-def test_psi_matches_python_witness(spark):
-    from rocketmq_flink_spark.operators.retrieval import fp_log2_py
-
-    df = _run(spark, "psi_drift_order_values")
-    con = duckdb.connect()
-    ref = sorted(
-        v
-        for (v,) in con.execute(
-            f"""SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT)
-                FROM '{SF}/orders.parquet'
-                WHERE o_orderdate < DATE '1998-01-01'"""
-        ).fetchall()
-    )
-    cur = [
-        v
-        for (v,) in con.execute(
-            f"""SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT)
-                FROM '{SF}/orders.parquet'
-                WHERE o_orderdate >= DATE '1998-01-01'"""
-        ).fetchall()
-    ]
-    m = len(ref)
-    edges = [ref[(i * m + 9) // 10 - 1] for i in range(1, 10)]
-
-    def bins(vals):
-        out = [0] * 10
-        for v in vals:
-            out[sum(1 for e in edges if v > e)] += 1
-        return out
-
-    cp = [x + 1 for x in bins(ref)]
-    cq = [x + 1 for x in bins(cur)]
-    np_, nq = sum(cp), sum(cq)
-
-    def slog(a, b):
-        return fp_log2_py(a, b) if a >= b else -fp_log2_py(b, a)
-
-    tot = sum(
-        (p * nq - q * np_) * slog(p * nq, q * np_) for p, q in zip(cp, cq)
-    )
-    den = 1048576 * np_ * nq
-    want_psi = (2 * 1000000 * tot + den) // (2 * den)
-    assert list(df["ref_n"]) == [x - 1 for x in cp]
-    assert list(df["cur_n"]) == [x - 1 for x in cq]
-    assert int(df["psi_micro"].iloc[0]) == want_psi
-    assert (df["psi_micro"] == df["psi_micro"].iloc[0]).all()
-    # each bin's contribution is non-negative (both factors share sign)
-    assert (df["contrib_micro"] >= 0).all()
 
 
 def test_sprt_constants_and_boundaries_are_exact():

@@ -786,21 +786,67 @@ def test_published_segment_mtime_is_publish_moment(tmp_path):
 
 
 def test_two_stream_queries_to_one_topic_keep_every_batch(spark, tmp_path):
-    """Two streaming queries with their own checkpoints write one topic;
-    the second's batch 0 is not taken for the first's."""
+    """Two streaming queries with their own checkpoints write one topic,
+    through format("rocketmq") and through the foreachBatch sink; the
+    second's batch 0 is not taken for the first's."""
+    from rocketmq_flink_spark.streaming import write_stream_foreach_batch
+
     register(spark)
     root = str(tmp_path / "broker")
     src = str(tmp_path / "src")
     spark.range(10).selectExpr(
         "cast(id AS string) AS keys", "encode(cast(id AS string), 'UTF-8') AS value"
     ).write.parquet(src)
-    for i in (1, 2):
-        (
-            spark.readStream.schema("keys string, value binary").parquet(src)
-            .writeStream.format("rocketmq")
-            .option("path", root).option("topic", "t")
-            .option("checkpointLocation", str(tmp_path / f"ckpt{i}"))
-            .trigger(availableNow=True).start().awaitTermination(120)
+
+    def rocketmq_sink(stream, topic, ckpt):
+        return (
+            stream.writeStream.format("rocketmq")
+            .option("path", root).option("topic", topic)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start()
         )
-    got = spark.read.format("rocketmq").option("path", root).option("topic", "t").load()
-    assert got.count() == 20
+
+    def foreach_batch_sink(stream, topic, ckpt):
+        return write_stream_foreach_batch(
+            stream.select("keys"),
+            {"path": root, "topic": topic, "keyColumns": "keys",
+             "writeKeysToBody": "true"},
+            checkpoint_location=ckpt,
+            trigger={"availableNow": True},
+        )
+
+    for topic, start in (("t", rocketmq_sink), ("t_fb", foreach_batch_sink)):
+        for i in (1, 2):
+            stream = spark.readStream.schema("keys string, value binary").parquet(src)
+            start(stream, topic, str(tmp_path / f"{topic}_ckpt{i}")).awaitTermination(120)
+        got = spark.read.format("rocketmq").option("path", root).option("topic", topic).load()
+        assert got.count() == 20, topic
+
+
+def test_stream_leaves_one_epoch_marker(spark, tmp_path):
+    """A rate-capped stream of several batches leaves one epoch marker
+    in the topic dir, its last batch's: each batch's commit removes the
+    marker of the batch before."""
+    from rocketmq_flink_spark.sources.datasource import _epoch_key
+
+    register(spark)
+    root = str(tmp_path / "broker")
+    _fill_queues(root, "t_src", [12, 12])
+    ckpt = str(tmp_path / "ckpt")
+    q = (
+        spark.readStream.format("rocketmq")
+        .options(path=root, topic="t_src", maxOffsetsPerTrigger=8).load()
+        .select("keys", "value")
+        .writeStream.format("rocketmq")
+        .option("path", root).option("topic", "t_out")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    last = q.lastProgress["batchId"]
+    assert last >= 2
+    markers = [f for f in os.listdir(os.path.join(root, "t_out"))
+               if f.startswith(".epoch-")]
+    assert markers == [f".epoch-{_epoch_key({'checkpointLocation': ckpt}, last)}.done"]
+    assert spark.read.format("rocketmq").options(path=root, topic="t_out").load().count() == 24

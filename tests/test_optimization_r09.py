@@ -126,8 +126,3 @@ def test_embedding_near_dups_single_pipeline(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_join_cardinality_no_count_distinct_scans(spark):
-    """Stats derive from the per-key count tables: no separate
-    count+countDistinct expand pass remains."""
-    plan = _executed(spark, "join_cardinality_estimate")
-    assert "Expand" not in plan

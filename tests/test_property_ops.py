@@ -497,39 +497,6 @@ def test_isqrt_engine_parity(spark, xs):
 
 @settings(**SETTINGS)
 @given(
-    cents=st.lists(
-        st.integers(min_value=1, max_value=10_000_00),
-        min_size=2,
-        max_size=60,
-    )
-)
-def test_gini_oracle_matches_fraction_witness(cents):
-    """The gini_order_concentration ORACLE (the formula Spark must
-    hash-match) equals an independent Fraction-exact Gini on arbitrary
-    positive cent values — half-up ppm, pairwise-|difference|
-    definition."""
-    from fractions import Fraction
-
-    import duckdb
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE orders(o_totalprice DOUBLE)")
-    con.executemany(
-        "INSERT INTO orders VALUES (?)", [(c / 100.0,) for c in cents]
-    )
-    got = con.execute(REGISTRY["gini_order_concentration"].oracle).fetchone()
-    n = len(cents)
-    s = sum(cents)
-    t = sum(abs(a - b) for i, a in enumerate(cents) for b in cents[i + 1:])
-    frac = Fraction(1_000_000 * t, n * s)
-    want = (2 * frac.numerator + frac.denominator) // (2 * frac.denominator)
-    assert got == (n, s, want)
-
-
-@settings(**SETTINGS)
-@given(
     xs=st.lists(
         st.integers(min_value=1, max_value=30), min_size=3, max_size=40
     )
@@ -637,50 +604,6 @@ def test_waterfill_oracle_matches_python_witness(masses):
 
 @settings(**SETTINGS)
 @given(
-    cents=st.lists(
-        st.integers(min_value=1, max_value=500_00),
-        min_size=3,
-        max_size=50,
-    )
-)
-def test_winsorized_oracle_matches_sorted_witness(cents):
-    """The winsorized_mean_orders ORACLE equals the direct
-    sort-based definition on arbitrary values: drop/clamp the t =
-    floor(0.05 n) smallest and largest, half-up milli means."""
-    import duckdb
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE orders(o_totalprice DOUBLE)")
-    con.executemany(
-        "INSERT INTO orders VALUES (?)", [(c / 100.0,) for c in cents]
-    )
-    got = con.execute(
-        REGISTRY["winsorized_mean_orders"].oracle
-    ).fetchone()
-    s = sorted(cents)
-    n = len(s)
-    t = n * 5 // 100
-    kept = s[t:n - t]
-    lo_cut, hi_cut = s[t], s[n - t - 1]
-    wins = kept + [lo_cut] * t + [hi_cut] * t
-
-    def milli(total, cnt):
-        return (2 * 1000 * total + cnt) // (2 * cnt)
-
-    assert got == (
-        n,
-        n - 2 * t,
-        lo_cut,
-        hi_cut,
-        milli(sum(kept), n - 2 * t),
-        milli(sum(wins), n),
-    )
-
-
-@settings(**SETTINGS)
-@given(
     texts=st.lists(
         st.text(alphabet="abe iou.!? xyz", min_size=5, max_size=80),
         min_size=1,
@@ -780,118 +703,6 @@ def test_simpson_oracle_matches_fraction_witness(masses, dups):
 
 @settings(**SETTINGS)
 @given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=6),    # o_custkey
-            st.sampled_from(["1-URGENT", "3-MEDIUM", "5-LOW"]),
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_fd_audit_oracle_matches_g3_witness(rows):
-    """The functional_dependency_audit ORACLE's g3 error equals the
-    direct definition (rows minus the per-key majority) on arbitrary
-    orders; the key-implied FD stays at zero violations."""
-    import duckdb
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE orders(o_orderkey BIGINT, o_custkey BIGINT,"
-        " o_orderstatus VARCHAR, o_orderpriority VARCHAR)"
-    )
-    con.executemany(
-        "INSERT INTO orders VALUES (?, ?, 'O', ?)",
-        [(i, ck, pr) for i, (ck, pr) in enumerate(rows)],
-    )
-    con.execute("CREATE TABLE lineitem(l_partkey BIGINT, l_suppkey BIGINT)")
-    con.execute("INSERT INTO lineitem VALUES (1, 1)")
-    con.execute("CREATE TABLE part(p_brand VARCHAR, p_type VARCHAR)")
-    con.execute("INSERT INTO part VALUES ('B', 'T')")
-    con.execute(
-        "CREATE TABLE documents(doc_id BIGINT, lang VARCHAR,"
-        " source VARCHAR)"
-    )
-    con.execute("INSERT INTO documents VALUES (1, 'en', 's')")
-    con.execute("CREATE TABLE events(user_id BIGINT, event_type VARCHAR)")
-    con.execute("INSERT INTO events VALUES (1, 'view')")
-    out = {
-        r[0]: r
-        for r in con.execute(
-            REGISTRY["functional_dependency_audit"].oracle
-        ).fetchall()
-    }
-    # witness: g3 = n - sum over custkeys of the majority-priority count
-    from collections import Counter, defaultdict
-
-    per = defaultdict(Counter)
-    for ck, pr in rows:
-        per[ck][pr] += 1
-    n = len(rows)
-    keep = sum(c.most_common(1)[0][1] for c in per.values())
-    row = out["orders.o_custkey->o_orderpriority"]
-    assert row[1] == n and row[2] == len(per)
-    assert row[3] == n - keep
-    assert row[4] == (1_000_000 * (n - keep)) // n
-    key_fd = out["orders.o_orderkey->o_orderstatus"]
-    assert key_fd[3] == 0 and key_fd[4] == 0
-
-
-@settings(**SETTINGS)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.sampled_from(["1-URGENT", "3-MEDIUM"]),   # prio
-            st.sampled_from(["O", "F"]),                 # status
-            st.integers(min_value=132051, max_value=49970505),  # cents
-        ),
-        min_size=2,
-        max_size=60,
-    )
-)
-def test_t_closeness_oracle_matches_fraction_witness(rows):
-    """The t_closeness_report ORACLE equals a Fraction-exact EMD
-    witness (ordered-attribute prefix-difference mass over the ten
-    fixed 50k-dollar bands) on arbitrary orders."""
-    import duckdb
-    from collections import Counter
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE orders(o_orderpriority VARCHAR,"
-        " o_orderstatus VARCHAR, o_totalprice DOUBLE)"
-    )
-    con.executemany(
-        "INSERT INTO orders VALUES (?, ?, ?)",
-        [(p, s, c / 100.0) for p, s, c in rows],
-    )
-    got = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in con.execute(
-            REGISTRY["t_closeness_report"].oracle
-        ).fetchall()
-    }
-    big_n = len(rows)
-    band = lambda c: min(c // 5_000_000, 9)
-    g = Counter(band(c) for _, _, c in rows)
-    classes = Counter((p, s) for p, s, _ in rows)
-    for (p, s), n in classes.items():
-        cls = Counter(band(c) for pp, ss, c in rows if (pp, ss) == (p, s))
-        sumabs = 0
-        d = 0
-        for b in range(9):  # prefix diffs j = 0..8 (j = 9 is 0)
-            d += cls.get(b, 0) * big_n - g.get(b, 0) * n
-            sumabs += abs(d)
-        emd = (1_000_000 * sumabs) // (n * big_n * 9)
-        assert got[(p, s)] == (n, emd)
-
-
-@settings(**SETTINGS)
-@given(
     users=st.lists(
         st.tuples(
             st.integers(min_value=1, max_value=12),  # user_id
@@ -959,73 +770,6 @@ def test_cuped_oracle_matches_fraction_witness(users):
         trunc_div(1_000_000 * a_, b_),
         trunc_div(1000 * (dy * b_ - a_ * dx), nt * nc * b_),
     )
-
-
-@settings(**SETTINGS)
-@given(
-    lines=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=5),   # custkey
-            st.integers(min_value=1, max_value=6),   # partkey -> brand
-        ),
-        min_size=4,
-        max_size=40,
-    )
-)
-def test_slope_one_oracle_matches_python_witness(lines):
-    """The slope_one_brand_recs ORACLE equals a pure-Python weighted
-    Slope-One (P(u,j) = sum(s_ji + r_ui*n_ji)/sum(n_ji), sign-split
-    milli division, top-5 per target user) on arbitrary baskets."""
-    import duckdb
-    from collections import Counter, defaultdict
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE orders(o_orderkey BIGINT, o_custkey BIGINT)")
-    con.execute(
-        "CREATE TABLE lineitem(l_orderkey BIGINT, l_partkey BIGINT)"
-    )
-    con.execute("CREATE TABLE part(p_partkey BIGINT, p_brand VARCHAR)")
-    for pk in range(1, 7):
-        con.execute(f"INSERT INTO part VALUES ({pk}, 'B{pk % 3}')")
-    for i, (ck, pk) in enumerate(lines):
-        con.execute(f"INSERT INTO orders VALUES ({i}, {ck})")
-        con.execute(f"INSERT INTO lineitem VALUES ({i}, {pk})")
-    got = con.execute(REGISTRY["slope_one_brand_recs"].oracle).fetchall()
-
-    brand = {pk: f"B{pk % 3}" for pk in range(1, 7)}
-    r = Counter((ck, brand[pk]) for ck, pk in lines)
-    by_user = defaultdict(dict)
-    for (u, it), cnt in r.items():
-        by_user[u][it] = cnt
-    dev = defaultdict(lambda: [0, 0])  # (j, i) -> [n, s]
-    for u, items in by_user.items():
-        for i_, ri in items.items():
-            for j_, rj in items.items():
-                if i_ != j_:
-                    dev[(j_, i_)][0] += 1
-                    dev[(j_, i_)][1] += rj - ri
-    targets = sorted(u for u, it in by_user.items() if len(it) >= 2)[:3]
-    want = []
-    for u in targets:
-        preds = {}
-        for (j_, i_), (n_, s_) in dev.items():
-            if i_ in by_user[u] and j_ not in by_user[u]:
-                acc = preds.setdefault(j_, [0, 0])
-                acc[0] += s_ + by_user[u][i_] * n_
-                acc[1] += n_
-        sc = []
-        for j_, (num, den) in preds.items():
-            m = (
-                (1000 * num) // den
-                if num >= 0
-                else -((1000 * -num) // den)
-            )
-            sc.append((u, j_, m, den))
-        sc.sort(key=lambda t: (-t[2], t[1]))
-        want.extend(sc[:5])
-    assert got == want
 
 
 @settings(**SETTINGS)
@@ -1413,105 +1157,6 @@ def test_rake_oracle_matches_python_witness(texts):
 
 @settings(**SETTINGS)
 @given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=4),      # partkey
-            st.integers(min_value=100, max_value=5000),  # qty cents
-        ),
-        min_size=1,
-        max_size=50,
-    )
-)
-def test_encoding_planner_oracle_matches_python_witness(rows):
-    """The encoding_size_planning ORACLE's run counts, ndv, and byte
-    models equal a direct Python computation on arbitrary lineitem
-    rows (partkey / quantity columns checked; fixed-width model)."""
-    import duckdb
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE lineitem(l_orderkey BIGINT, l_linenumber BIGINT,"
-        " l_returnflag VARCHAR, l_linestatus VARCHAR,"
-        " l_shipdate TIMESTAMP, l_quantity DOUBLE, l_partkey BIGINT)"
-    )
-    con.executemany(
-        "INSERT INTO lineitem VALUES (?, 1, 'N', 'O',"
-        " TIMESTAMP '1995-01-01', ?, ?)",
-        [(i, q / 100.0, pk) for i, (pk, q) in enumerate(rows)],
-    )
-    got = {
-        r[0]: r
-        for r in con.execute(
-            REGISTRY["encoding_size_planning"].oracle
-        ).fetchall()
-    }
-
-    def model(vals, width):
-        n = len(vals)
-        runs = 1 + sum(
-            1 for a, b in zip(vals, vals[1:]) if a != b
-        )
-        ndv = len(set(vals))
-        bits = 1 if ndv <= 1 else (ndv - 1).bit_length()
-        return (
-            n,
-            ndv,
-            runs,
-            n * width,
-            (n * bits + 7) // 8 + ndv * width,
-            runs * (width + 4),
-        )
-
-    pks = [pk for pk, _ in rows]
-    qts = [q for _, q in rows]
-    assert got["l_partkey"][1:7] == model(pks, 8)
-    assert got["l_quantity_c"][1:7] == model(qts, 4)
-
-
-@settings(**SETTINGS)
-@given(
-    cents=st.lists(
-        st.integers(min_value=1000, max_value=10_000_000),
-        min_size=4,
-        max_size=60,
-    )
-)
-def test_selectivity_oracle_truth_and_depth_bounds(cents):
-    """The selectivity_estimation_report ORACLE's true counts equal
-    the direct predicate counts, and the equi-depth estimate is within
-    one bucket's row share of truth (the boundedness that justifies
-    keeping depth histograms)."""
-    import duckdb
-
-    from hypothesis import assume
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    assume(len(set(cents)) > 1)
-    con = duckdb.connect()
-    con.execute("CREATE TABLE orders(o_orderkey BIGINT, o_totalprice DOUBLE)")
-    con.executemany(
-        "INSERT INTO orders VALUES (?, ?)",
-        [(i, c / 100.0) for i, c in enumerate(cents)],
-    )
-    got = con.execute(
-        REGISTRY["selectivity_estimation_report"].oracle
-    ).fetchall()
-    mn, mx = min(cents), max(cents)
-    n = len(cents)
-    for q, t, true_rows, est_w, est_d, err_w, err_d in got:
-        want_t = mn + ((mx - mn) * q) // 4
-        assert t == want_t
-        assert true_rows == sum(1 for c in cents if c <= want_t)
-        # equi-depth: each bucket holds ~n/16 rows; interpolation can
-        # miss by at most ~2 buckets' mass (boundary + partial bucket)
-        assert abs(est_d - true_rows) <= (n // 16 + 1) * 2
-
-
-@settings(**SETTINGS)
-@given(
     texts=st.lists(
         st.text(alphabet="ab x yz ", min_size=0, max_size=40),
         min_size=1,
@@ -1791,7 +1436,7 @@ def test_partitioning_invariance_representative_queries(spark):
         "minhash_dedup_groups",        # dedup banding
         "bm25_search_docs",            # fixed-point retrieval
         "scd2_user_event_history",     # window/versioning
-        "ks_two_sample_order_values",  # distributed exact rank
+        "deterministic_corpus_shuffle",  # distributed exact rank
     ]
     sf = SF_TINY
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -159,9 +159,10 @@ def test_streaming_dedup_within_watermark(spark, broker_root, event_topic, tmp_p
 
 
 def test_foreach_batch_sink_roundtrip_and_idempotence(
-    spark, broker_root, events, tmp_path
+    spark, broker_root, event_topic, events, tmp_path
 ):
-    stream = _stream_decoded(spark, broker_root, "t_m3").drop("born_ts")
+    stream = _stream_decoded(spark, broker_root, event_topic).drop("born_ts")
+    ckpt = str(tmp_path / "ckpt_feb")
     q = write_stream_foreach_batch(
         stream,
         options={
@@ -170,7 +171,7 @@ def test_foreach_batch_sink_roundtrip_and_idempotence(
             "keyColumns": "event_id",
             "writeKeysToBody": "true",
         },
-        checkpoint_location=str(tmp_path / "ckpt_feb"),
+        checkpoint_location=ckpt,
         trigger={"availableNow": True},
     )
     q.awaitTermination(180)
@@ -184,7 +185,11 @@ def test_foreach_batch_sink_roundtrip_and_idempotence(
     assert decoded.exceptAll(events).count() == 0
     assert events.exceptAll(decoded).count() == 0
 
-    # replaying the same epoch id must be a no-op (idempotent commit)
+    # replaying the query's last epoch must be a no-op (idempotent
+    # commit); the sink keys it by checkpoint location plus batch id
+    from rocketmq_flink_spark.sources.datasource import _epoch_key
+
+    last = _epoch_key({"checkpointLocation": ckpt}, q.lastProgress["batchId"])
     env = encode_rows(
         events.limit(7),
         options={"topic": "t_m3_out", "keyColumns": "event_id",
@@ -192,7 +197,7 @@ def test_foreach_batch_sink_roundtrip_and_idempotence(
     )
     (
         env.write.format("rocketmq")
-        .options(path=broker_root, topic="t_m3_out", _epoch="0")
+        .options(path=broker_root, topic="t_m3_out", _epoch=last)
         .mode("append")
         .save()
     )
