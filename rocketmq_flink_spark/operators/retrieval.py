@@ -188,8 +188,8 @@ def bm25_topk(
     # qterms feeds TWO subtrees (the postings prune and the candidate
     # join): cut once so the query-panel tokenize pipeline runs once
     # per action, and broadcast-pin every use (panel-bounded by module
-    # contract; the cut leaf has no Catalyst size stats — the r08
-    # shapley lesson, VERDICT item 4)
+    # contract; the cut leaf has no Catalyst size stats, so Catalyst
+    # would otherwise plan these joins as sort-merge)
     qterms = cut(
         queries.selectExpr(
             f"{qid_col} AS qid", _tokens(qtext_col) + " AS qtk"
@@ -215,7 +215,7 @@ def bm25_topk(
     dfreq = tfq.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # panel-bounded and built from a lineage-cut frame (no Catalyst
     # size stats): pin the broadcast so the score join never degrades
-    # to sort-merge (the r08 shapley lesson, VERDICT item 4)
+    # to sort-merge
     idf = F.broadcast(dfreq.selectExpr(
         "term",
         fp_log2_sql(f"CAST({2 * n_docs + 2} AS BIGINT)", "(2*df + 1)")

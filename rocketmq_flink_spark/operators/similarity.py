@@ -1224,9 +1224,9 @@ def hard_negatives(
 # previous one's argmax, so kcenter_coreset runs exactly one
 # TakeOrdered(1).collect() driver round-trip PER CENTER (k-1 Spark jobs
 # after the seed). That is the right shape for the small k a coreset
-# wants, and catastrophic for a large one — cap it hard (the
-# _MARKOV_MAX_STATES pattern) so a mis-sized call fails loudly instead
-# of launching thousands of sequential jobs on a shared cluster.
+# wants, and catastrophic for a large one — cap it hard so a mis-sized
+# call fails loudly instead of launching thousands of sequential jobs on
+# a shared cluster.
 _KCENTER_MAX_K = 256
 
 

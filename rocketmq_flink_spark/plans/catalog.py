@@ -3695,136 +3695,9 @@ def fuzzy_decontamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-3 additions: event analytics (funnel, retention) — the
-# product-analytics shapes a warehouse on this engine would run daily.
+# Round-3 additions: deterministic corpus shuffle, dedup graph statistics
+# and quantized ANN (product and scalar quantization).
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "conversion_funnel",
-    """
-    WITH fv AS (
-      SELECT user_id, MIN(ts) AS t FROM events
-      WHERE event_type = 'view' GROUP BY 1
-    ),
-    fc AS (
-      SELECT e.user_id, MIN(e.ts) AS t
-      FROM events e JOIN fv ON fv.user_id = e.user_id
-      WHERE e.event_type = 'click' AND e.ts > fv.t GROUP BY 1
-    ),
-    fp AS (
-      SELECT e.user_id, MIN(e.ts) AS t
-      FROM events e JOIN fc ON fc.user_id = e.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > fc.t GROUP BY 1
-    )
-    SELECT (SELECT COUNT(*) FROM fv) AS n_view,
-           (SELECT COUNT(*) FROM fc) AS n_view_click,
-           (SELECT COUNT(*) FROM fp) AS n_view_click_purchase,
-           ROUND(CAST((SELECT COUNT(*) FROM fc) AS DOUBLE)
-                 / (SELECT COUNT(*) FROM fv), 6) AS click_rate,
-           ROUND(CAST((SELECT COUNT(*) FROM fp) AS DOUBLE)
-                 / (SELECT COUNT(*) FROM fc), 6) AS purchase_rate
-    """,
-)
-def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered 3-stage conversion funnel over the event stream: users
-    with a view, whose first click FOLLOWS that view, whose first
-    purchase FOLLOWS that click (strict event-order semantics, not mere
-    co-occurrence). Scale: three conditional min-aggregations on
-    user_id — each stage joins the (|users|-sized) previous-stage
-    table back to events, broadcastable by size; no windows over the
-    raw stream."""
-    ev = load_tables(spark, sf_dir)["events"]
-    fv = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-    )
-    fc = (
-        ev.where(F.col("event_type") == "click")
-        .join(F.broadcast(fv.withColumnRenamed("t", "tv")), "user_id")
-        .where(F.col("ts") > F.col("tv"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-    )
-    fp = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(F.broadcast(fc.withColumnRenamed("t", "tc")), "user_id")
-        .where(F.col("ts") > F.col("tc"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-    )
-    nv = fv.agg(F.count(F.lit(1)).alias("n_view"))
-    nc = fc.agg(F.count(F.lit(1)).alias("n_view_click"))
-    np_ = fp.agg(F.count(F.lit(1)).alias("n_view_click_purchase"))
-    return (
-        nv.crossJoin(nc)
-        .crossJoin(np_)
-        .select(
-            "n_view",
-            "n_view_click",
-            "n_view_click_purchase",
-            F.round(
-                F.col("n_view_click").cast("double") / F.col("n_view"), 6
-            ).alias("click_rate"),
-            F.round(
-                F.col("n_view_click_purchase").cast("double")
-                / F.col("n_view_click"),
-                6,
-            ).alias("purchase_rate"),
-        )
-    )
-
-
-@query(
-    "retention_cohorts",
-    """
-    WITH w AS (
-      SELECT user_id,
-             CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7
-                  AS BIGINT) AS wk
-      FROM events
-    ),
-    f AS (SELECT user_id, MIN(wk) AS cohort FROM w GROUP BY 1),
-    act AS (
-      SELECT DISTINCT w.user_id, f.cohort, w.wk - f.cohort AS week_offset
-      FROM w JOIN f ON f.user_id = w.user_id
-    )
-    SELECT cohort, week_offset, COUNT(*) AS n_active
-    FROM act GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-)
-def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention cohort matrix: users grouped by first-activity
-    week, counted as active per week offset since their cohort week —
-    the triangle every growth dashboard draws. Week indices are exact
-    integer day-arithmetic from a fixed epoch (no engine-specific week
-    truncation rules). Scale: two user-keyed aggregations + one
-    broadcastable first-week join; the distinct is on (user, cohort,
-    offset) — bounded by users x weeks."""
-    ev = load_tables(spark, sf_dir)["events"]
-    wk = ev.select(
-        "user_id",
-        F.expr(
-            "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') DIV 7"
-            " AS BIGINT)"
-        ).alias("wk"),
-    )
-    first = wk.groupBy("user_id").agg(F.min("wk").alias("cohort"))
-    act = (
-        wk.join(F.broadcast(first), "user_id")
-        .select(
-            "user_id", "cohort", (F.col("wk") - F.col("cohort")).alias(
-                "week_offset"
-            )
-        )
-        .distinct()
-    )
-    return (
-        act.groupBy("cohort", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-        .orderBy("cohort", "week_offset")
-    )
 
 
 from rocketmq_flink_spark.functions.porthash import hash60_sql as _h60sql
@@ -5302,72 +5175,6 @@ def hll_set_algebra_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "scd2_user_event_history",
-    """
-    WITH o AS (
-      SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us,
-             LAG(event_type) OVER w AS prev_type
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-    ch AS (
-      SELECT user_id, event_type, event_id, ts_us
-      FROM o WHERE prev_type IS NULL OR event_type <> prev_type),
-    v AS (
-      SELECT user_id, event_type, ts_us AS valid_from_us,
-             LEAD(ts_us) OVER w2 AS valid_to_us,
-             ROW_NUMBER() OVER w2 AS version
-      FROM ch
-      WINDOW w2 AS (PARTITION BY user_id ORDER BY ts_us, event_id))
-    SELECT user_id, version, event_type, valid_from_us,
-           COALESCE(valid_to_us, -1) AS valid_to_us
-    FROM v ORDER BY user_id, version
-    """,
-)
-def scd2_user_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (SCD Type 2) history build: collapse
-    each user's event stream into validity intervals of their current
-    event_type — one row per CHANGE with [valid_from, valid_to)
-    microsecond bounds and a per-user version number (-1 = current
-    row). This is the standard warehouse temporal-modeling operator an
-    ingest pipeline runs to turn a changelog into a time-travelable
-    dimension. One window pass keyed by user (even distribution), no
-    self-joins; timestamps emitted as epoch micros for cross-engine
-    exactness. Total order within a user = (ts, event_id)."""
-    from pyspark.sql import Window
-
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    o = ev.select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    ch = o.where(
-        F.col("prev_type").isNull()
-        | (F.col("event_type") != F.col("prev_type"))
-    )
-    # event_id tie-break keeps version numbering deterministic when two
-    # change rows share (user_id, ts) — same total order as window w.
-    w2 = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    return (
-        ch.select(
-            "user_id",
-            F.row_number().over(w2).alias("version"),
-            "event_type",
-            F.col("ts_us").alias("valid_from_us"),
-            F.coalesce(
-                F.lead("ts_us").over(w2), F.lit(-1).cast("long")
-            ).alias("valid_to_us"),
-        )
-        .orderBy("user_id", "version")
-    )
-
-
-@query(
     "containment_pairs_docs",
     f"""
     WITH sh AS ({_SHINGLES_DUCK}),
@@ -5471,235 +5278,6 @@ def kcenter_coreset_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     return kcenter_coreset(emb, k=6).orderBy("rank")
-
-
-@query(
-    "mannwhitney_value_drift",
-    """
-    WITH e AS (
-      SELECT CAST(ROUND(value * 100) AS BIGINT) AS v,
-             event_type = 'purchase' AS is_a
-      FROM events WHERE event_type IN ('purchase', 'click')),
-    g AS (
-      SELECT v,
-             CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-             CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS nb
-      FROM e GROUP BY v),
-    c AS (
-      SELECT v, na, nb,
-             COALESCE(SUM(na) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cuma
-      FROM g),
-    s AS (
-      SELECT CAST(SUM(na) AS BIGINT) AS n1,
-             CAST(SUM(nb) AS BIGINT) AS n2,
-             CAST(SUM(nb * (2 * cuma + na)) AS BIGINT) AS u2
-      FROM c)
-    SELECT n1, n2, u2,
-           ROUND(CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)
-                 * CAST(n2 AS DOUBLE)), 6) AS auc,
-           ROUND((CAST(u2 AS DOUBLE) - CAST(n1 AS DOUBLE)
-                  * CAST(n2 AS DOUBLE))
-                 / (2.0 * sqrt(CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
-                    * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) + 1.0)
-                    / 12.0)), 6) AS z
-    FROM s
-    """,
-)
-def mannwhitney_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-based distribution-drift test: Mann-Whitney U comparing
-    purchase vs click event values — the nonparametric two-sample test
-    a monitoring pipeline runs when a mean-based 3-sigma alarm is too
-    distribution-shape-sensitive. The doubled statistic 2U = 2·#(a<b)
-    + #(a=b) is assembled in exact BIGINTs from per-distinct-value
-    counts (values are exact cents, so binning is lossless): one
-    map-side-combined count, then ONE window over the ~thousands of
-    distinct values (value-vocabulary-bounded, never the event
-    stream). Outputs the AUC effect size (U/(n1·n2)) and the normal
-    z — sqrt is IEEE exact-rounded, so even the z hash-matches.
-    Ties handled by the standard 0.5 convention; no tie variance
-    correction (documented)."""
-    from pyspark.sql import Window
-
-    ev = load_tables(spark, sf_dir)["events"].where(
-        F.col("event_type").isin("purchase", "click")
-    )
-    g = ev.select(
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        (F.col("event_type") == "purchase").alias("is_a"),
-    ).groupBy("v").agg(
-        F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias(
-            "na"
-        ),
-        F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias(
-            "nb"
-        ),
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    c = g.select(
-        "na",
-        "nb",
-        F.coalesce(F.sum("na").over(w), F.lit(0)).alias("cuma"),
-    )
-    s = c.agg(
-        F.sum("na").cast("long").alias("n1"),
-        F.sum("nb").cast("long").alias("n2"),
-        F.sum(F.col("nb") * (2 * F.col("cuma") + F.col("na")))
-        .cast("long")
-        .alias("u2"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    return s.select(
-        "n1",
-        "n2",
-        "u2",
-        F.round(d("u2") / (F.lit(2.0) * d("n1") * d("n2")), 6).alias("auc"),
-        F.round(
-            (d("u2") - d("n1") * d("n2"))
-            / (
-                F.lit(2.0)
-                * F.sqrt(d("n1") * d("n2") * (d("n1") + d("n2") + 1.0) / 12.0)
-            ),
-            6,
-        ).alias("z"),
-    )
-
-
-@query(
-    "chi2_type_by_hour",
-    """
-    WITH o AS (
-      SELECT event_type AS t, CAST(hour(ts) AS BIGINT) AS h,
-             CAST(COUNT(*) AS BIGINT) AS obs
-      FROM events GROUP BY 1, 2),
-    rt AS (SELECT t, CAST(SUM(obs) AS BIGINT) AS r FROM o GROUP BY t),
-    ct AS (SELECT h, CAST(SUM(obs) AS BIGINT) AS c FROM o GROUP BY h),
-    n AS (SELECT CAST(SUM(obs) AS BIGINT) AS nn FROM o),
-    cell AS (
-      SELECT CAST(ROUND(
-               CAST((o.obs * n.nn - rt.r * ct.c)
-                    * (o.obs * n.nn - rt.r * ct.c) AS DOUBLE)
-               / CAST(rt.r * ct.c * n.nn AS DOUBLE) * 1e9) AS BIGINT)
-             AS term_nanos
-      FROM o JOIN rt USING (t) JOIN ct USING (h) CROSS JOIN n),
-    agg AS (
-      SELECT CAST(SUM(term_nanos) AS BIGINT) AS chi2_nanos,
-             CAST(COUNT(*) AS BIGINT) AS n_cells
-      FROM cell)
-    SELECT ROUND(CAST(chi2_nanos AS DOUBLE) / 1e9, 6) AS chi2,
-           n_cells,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM rt) AS n_types,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM ct) AS n_hours
-    FROM agg
-    """,
-)
-def chi2_type_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-squared independence test: is event type independent of
-    hour-of-day? Completes the statistical-testing trio (3-sigma
-    anomalies, Mann-Whitney, chi-squared). Each cell's
-    (O·N − r·c)²/(r·c·N) is computed once in exact BIGINT numerators,
-    quantized to integer nano-units, and summed EXACTLY — a double
-    groupBy-sum would be order-dependent in the last ulp, integer sums
-    are not, so chi2 hash-matches. Contingency table is
-    cardinality-bounded (types x hours), built from one
-    map-side-combined count."""
-    ev = load_tables(spark, sf_dir)["events"]
-    o = ev.groupBy(
-        F.col("event_type").alias("t"),
-        F.hour("ts").cast("long").alias("h"),
-    ).agg(F.count(F.lit(1)).alias("obs"))
-    rt = o.groupBy("t").agg(F.sum("obs").cast("long").alias("r"))
-    ct = o.groupBy("h").agg(F.sum("obs").cast("long").alias("c"))
-    n = o.agg(F.sum("obs").cast("long").alias("nn"))
-    num = F.col("obs") * F.col("nn") - F.col("r") * F.col("c")
-    cell = (
-        o.join(F.broadcast(rt), "t")
-        .join(F.broadcast(ct), "h")
-        .crossJoin(F.broadcast(n))
-        .select(
-            F.round(
-                (num * num).cast("double")
-                / (F.col("r") * F.col("c") * F.col("nn")).cast("double")
-                * 1e9
-            )
-            .cast("long")
-            .alias("term_nanos")
-        )
-    )
-    agg = cell.agg(
-        F.sum("term_nanos").cast("long").alias("chi2_nanos"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
-    return (
-        agg.crossJoin(
-            F.broadcast(rt.agg(F.count(F.lit(1)).alias("n_types")))
-        )
-        .crossJoin(F.broadcast(ct.agg(F.count(F.lit(1)).alias("n_hours"))))
-        .select(
-            F.round(F.col("chi2_nanos").cast("double") / 1e9, 6).alias(
-                "chi2"
-            ),
-            "n_cells",
-            "n_types",
-            "n_hours",
-        )
-    )
-
-
-@query(
-    "event_transition_matrix",
-    """
-    WITH s AS (
-      SELECT user_id, event_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-               ORDER BY epoch_us(ts), event_id) AS nxt
-      FROM events),
-    t AS (
-      SELECT event_type AS from_type, nxt AS to_type, COUNT(*) AS n
-      FROM s WHERE nxt IS NOT NULL GROUP BY 1, 2),
-    tot AS (
-      SELECT from_type, CAST(SUM(n) AS BIGINT) AS row_n FROM t GROUP BY 1)
-    SELECT t.from_type, t.to_type, CAST(t.n AS BIGINT) AS n,
-           (t.n * 1000000) // tot.row_n AS p_micros
-    FROM t JOIN tot USING (from_type)
-    ORDER BY from_type, to_type
-    """,
-)
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-journey Markov transition matrix: counts and probabilities
-    (integer micro-units, floor division — no float in the estimate)
-    of moving from one event type to the next within a user's
-    time-ordered stream. One window pass keyed by user (even
-    distribution), one cardinality-bounded count — the behavioral
-    model behind funnel design and next-event prediction baselines.
-    Total order within user = (ts, event_id)."""
-    from pyspark.sql import Window
-
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    s = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("nxt")
-    ).where(F.col("nxt").isNotNull())
-    t = s.groupBy(
-        F.col("event_type").alias("from_type"),
-        F.col("nxt").alias("to_type"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    tot = t.groupBy("from_type").agg(
-        F.sum("n").cast("long").alias("row_n")
-    )
-    return (
-        t.join(F.broadcast(tot), "from_type")
-        .select(
-            "from_type",
-            "to_type",
-            F.col("n").cast("long").alias("n"),
-            F.expr("(n * 1000000) div row_n").alias("p_micros"),
-        )
-        .orderBy("from_type", "to_type")
-    )
 
 
 def _pca_stages_sql(iters: int = 6) -> str:
@@ -5836,194 +5414,6 @@ def pca_top_component_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     return pca_top_component(emb, iters=6)
-
-
-@query(
-    "cusum_changepoint_events",
-    """
-    WITH h AS (
-      SELECT event_type, date_trunc('hour', ts) AS hr,
-             CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2),
-    st AS (
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(x) AS BIGINT) AS t
-      FROM h GROUP BY 1),
-    p AS (
-      SELECT h.event_type, h.hr,
-             SUM(h.x * st.n - st.t) OVER (PARTITION BY h.event_type
-               ORDER BY h.hr ROWS UNBOUNDED PRECEDING) AS pref,
-             st.n
-      FROM h JOIN st USING (event_type)),
-    q AS (
-      SELECT *, MIN(pref) OVER (PARTITION BY event_type ORDER BY hr
-               ROWS UNBOUNDED PRECEDING) AS minpref
-      FROM p),
-    s AS (
-      SELECT event_type, hr, CAST(pref - minpref AS BIGINT) AS drift, n
-      FROM q),
-    best AS (
-      SELECT event_type, epoch_us(hr) AS changepoint_hr_us,
-             drift AS max_drift_scaled, n
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-              ORDER BY drift DESC, hr) AS rk FROM s)
-      WHERE rk = 1)
-    SELECT event_type, changepoint_hr_us, max_drift_scaled,
-           CAST(n AS BIGINT) AS n_hours
-    FROM best ORDER BY event_type
-    """,
-)
-def cusum_changepoint_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM change-point detection per event type: the hour where the
-    cumulative drift of hourly counts away from the mean peaks — the
-    classic sequential shift detector, in CLOSED FORM: the recursive
-    S_t = max(0, S_{t-1} + (x_t - mean)) equals prefix_t - min(prefix
-    up to t), so two stacked windows replace the recurrence (no UDF,
-    no iteration). All arithmetic is mean-cleared by cross-
-    multiplication (x·n - T), so drift values are exact BIGINTs and
-    the argmax is deterministic (ties to the earliest hour). Windows
-    are bounded by hours-per-type, never event rows."""
-    from pyspark.sql import Window
-
-    ev = load_tables(spark, sf_dir)["events"]
-    h = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    st = h.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("t")
-    )
-    j = h.join(F.broadcast(st), "event_type").select(
-        "event_type", "hr", (F.col("x") * F.col("n") - F.col("t")).alias("r"),
-        "n",
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hr")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    p = j.withColumn("pref", F.sum("r").over(w)).withColumn(
-        "minpref", F.min("pref").over(w)
-    )
-    s = p.select(
-        "event_type",
-        "hr",
-        (F.col("pref") - F.col("minpref")).cast("long").alias("drift"),
-        "n",
-    )
-    rk = Window.partitionBy("event_type").orderBy(F.desc("drift"), "hr")
-    return (
-        s.withColumn("rk", F.row_number().over(rk))
-        .where(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.unix_micros("hr").alias("changepoint_hr_us"),
-            F.col("drift").alias("max_drift_scaled"),
-            F.col("n").cast("long").alias("n_hours"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def _abtest_oracle_sql() -> str:
-    from rocketmq_flink_spark.functions.porthash import hash60_sql
-
-    h = hash60_sql("'ab:' || CAST(user_id AS VARCHAR)")
-    return f"""
-    WITH u AS (
-      SELECT user_id, ({h}) % 2 AS arm,
-             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               AS converted
-      FROM events GROUP BY user_id),
-    s AS (
-      SELECT arm, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(converted) AS BIGINT) AS c
-      FROM u GROUP BY arm),
-    w AS (
-      SELECT MAX(CASE WHEN arm = 0 THEN n END) AS n_a,
-             MAX(CASE WHEN arm = 0 THEN c END) AS c_a,
-             MAX(CASE WHEN arm = 1 THEN n END) AS n_b,
-             MAX(CASE WHEN arm = 1 THEN c END) AS c_b
-      FROM s)
-    SELECT n_a, c_a, n_b, c_b,
-           ROUND(CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS rate_a,
-           ROUND(CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS rate_b,
-           CASE WHEN c_a + c_b = 0 OR c_a + c_b = n_a + n_b THEN 0.0
-           ELSE
-           ROUND((CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-                  - CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-                 / sqrt((CAST(c_a + c_b AS DOUBLE)
-                         / CAST(n_a + n_b AS DOUBLE))
-                        * (1.0 - CAST(c_a + c_b AS DOUBLE)
-                           / CAST(n_a + n_b AS DOUBLE))
-                        * (1.0 / CAST(n_a AS DOUBLE)
-                           + 1.0 / CAST(n_b AS DOUBLE))), 6)
-           END AS z
-    FROM w
-    """
-
-
-@query("abtest_conversion_ztest", _abtest_oracle_sql())
-def abtest_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experimentation readout: users are deterministically hash-split
-    into two arms (the portable 60-bit hash mod 2 — the same
-    reproducible bucketing a real experiment platform uses), per-arm
-    conversion (any purchase) is counted exactly, and the two-
-    proportion pooled z-statistic is computed in fixed-order doubles
-    (sqrt is IEEE exact-rounded, so z hash-matches). On the fixture
-    the split is null — the |z| < 2 readout is itself the correct
-    A/A-test result, proving the bucketing doesn't bias. One user-
-    keyed aggregation + a 2-row pivot; nothing user-level leaves the
-    shuffle stage."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    ev = load_tables(spark, sf_dir)["events"]
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("converted")
-    ).select(
-        (
-            hash60(F.concat(F.lit("ab:"), F.col("user_id").cast("string")))
-            % 2
-        ).alias("arm"),
-        "converted",
-    )
-    s = u.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("converted").cast("long").alias("c")
-    )
-    w = s.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("c"))).alias("c_a"),
-        F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("c"))).alias("c_b"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    pool = (d("c_a") + d("c_b")) / (d("n_a") + d("n_b"))
-    return w.select(
-        "n_a",
-        "c_a",
-        "n_b",
-        "c_b",
-        F.round(d("c_a") / d("n_a"), 6).alias("rate_a"),
-        F.round(d("c_b") / d("n_b"), 6).alias("rate_b"),
-        F.when(
-            (F.col("c_a") + F.col("c_b") == 0)
-            | (F.col("c_a") + F.col("c_b") == F.col("n_a") + F.col("n_b")),
-            F.lit(0.0),
-        )
-        .otherwise(
-            F.round(
-                (d("c_a") / d("n_a") - d("c_b") / d("n_b"))
-                / F.sqrt(
-                    pool
-                    * (F.lit(1.0) - pool)
-                    * (F.lit(1.0) / d("n_a") + F.lit(1.0) / d("n_b"))
-                ),
-                6,
-            )
-        )
-        .alias("z"),
-    )
 
 
 def _pca_outliers_oracle_sql(iters: int = 6, k: int = 10) -> str:
@@ -6238,84 +5628,6 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ewma_event_rate",
-    """
-    WITH RECURSIVE dc AS (
-      SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
-      FROM events GROUP BY 1, 2),
-    rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-                                        ORDER BY d) AS rn
-           FROM dc),
-    it AS (
-      SELECT event_type, d, cnt, rn, CAST(-1 AS BIGINT) AS prev,
-             CAST(cnt << 20 AS BIGINT) AS s
-      FROM rk WHERE rn = 1
-      UNION ALL
-      SELECT r.event_type, r.d, r.cnt, r.rn, it.s AS prev,
-             CAST((3 * it.s + (r.cnt << 20)) >> 2 AS BIGINT) AS s
-      FROM rk r JOIN it
-        ON r.event_type = it.event_type AND r.rn = it.rn + 1)
-    SELECT event_type, CAST(d AS VARCHAR) AS day,
-           CAST(cnt AS BIGINT) AS n_events,
-           s AS ewma_ticks,
-           (prev >= 0 AND 2 * abs((cnt << 20) - prev) > prev) AS flagged
-    FROM it ORDER BY event_type, day
-    """,
-)
-def ewma_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially-weighted moving-average rate monitor over daily
-    event counts per type, with spike/drop flags (deviation > 50% of
-    the running level). alpha = 1/4 is DYADIC, so the recurrence
-    s_t = (3*s_{t-1} + x_t*2^20) >> 2 is pure integer shifts — exact,
-    engine-neutral, hash-checkable (a float EWMA drifts in the last
-    ulp and differs across engines). Complements the 3-sigma
-    `event_rate_anomalies`: EWMA adapts to level shifts instead of
-    flagging forever after one. Scale: the fold runs per event_type
-    over its DAILY count array (bounded by the time range, never by
-    row count); daily counts are one map-side-combined aggregation."""
-    ev = load_tables(spark, sf_dir)["events"]
-    dc = (
-        ev.groupBy(
-            "event_type", F.to_date("ts").alias("d")
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    arr = dc.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("d", "cnt"))).alias("a")
-    )
-    folded = arr.selectExpr(
-        "event_type",
-        """
-        aggregate(a,
-          struct(CAST(-1 AS BIGINT) AS s,
-                 CAST(array() AS ARRAY<STRUCT<d: DATE, cnt: BIGINT,
-                                              prev: BIGINT>>) AS out),
-          (st, e) -> struct(
-            CAST(CASE WHEN st.s < 0 THEN shiftleft(e.cnt, 20)
-                 ELSE shiftrightunsigned(3 * st.s + shiftleft(e.cnt, 20), 2)
-                 END AS BIGINT),
-            concat(st.out, array(struct(e.d AS d,
-                                        CAST(e.cnt AS BIGINT) AS cnt,
-                                        st.s AS prev)))),
-          st -> st.out) AS rows
-        """,
-    ).select("event_type", F.explode("rows").alias("r"))
-    return folded.select(
-        "event_type",
-        F.date_format("r.d", "yyyy-MM-dd").alias("day"),
-        F.col("r.cnt").alias("n_events"),
-        F.expr(
-            "CAST(CASE WHEN r.prev < 0 THEN shiftleft(r.cnt, 20)"
-            " ELSE shiftrightunsigned(3 * r.prev + shiftleft(r.cnt, 20), 2)"
-            " END AS BIGINT)"
-        ).alias("ewma_ticks"),
-        F.expr(
-            "r.prev >= 0 AND"
-            " 2 * abs(shiftleft(r.cnt, 20) - r.prev) > r.prev"
-        ).alias("flagged"),
-    ).orderBy("event_type", "day")
-
-
 def _dsir_oracle_sql(buckets: int = 8192, k: int = 20) -> str:
     """DuckDB replay of the hashed-feature importance scorer: bucket
     counts, signed fixed-point log-ratio per bucket (recursive CTE,
@@ -6501,77 +5813,6 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "mad_outlier_days",
-    """
-    WITH dc AS (
-      SELECT event_type, CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n_events
-      FROM events GROUP BY 1, 2),
-    st AS (
-      SELECT event_type, list_sort(list(n_events)) AS cs
-      FROM dc GROUP BY 1),
-    md AS (
-      SELECT event_type, cs[(len(cs) + 1) // 2] AS med FROM st),
-    mad AS (
-      SELECT s.event_type, m.med,
-             list_sort(list_transform(s.cs, x -> abs(x - m.med)))
-               [(len(s.cs) + 1) // 2] AS mad
-      FROM st s JOIN md m USING (event_type))
-    SELECT d.event_type, d.day, d.n_events,
-           CAST(a.med AS BIGINT) AS med, CAST(a.mad AS BIGINT) AS mad,
-           abs(d.n_events - a.med) > 3 * a.mad AS flagged
-    FROM dc d JOIN mad a USING (event_type)
-    ORDER BY event_type, day
-    """,
-)
-def mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust daily-rate outlier report: median / MAD (median absolute
-    deviation) flags per event type — the anomaly detector that one
-    extreme day cannot poison (mean/stddev monitors move WITH the
-    outlier; the median does not). Completes the monitor family:
-    3-sigma (event_rate_anomalies), EWMA (ewma_event_rate), CUSUM
-    (cusum_changepoint_events), MAD (this). All integer: the LOWER
-    median of the sorted daily counts (deterministic tie handling),
-    integer |x - med| > 3*MAD decision — no float anywhere, so flags
-    hash-match (days where MAD = 0 flag any deviation — documented
-    sharpness of the integer rule). Scale: daily counts are one
-    map-side-combined pass; the per-type fold runs over the DAY array
-    (bounded by the time range, never row count)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    dc = ev.groupBy(
-        "event_type", F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    st = dc.groupBy("event_type").agg(
-        F.array_sort(F.collect_list("n_events")).alias("cs")
-    )
-    md = st.selectExpr(
-        "event_type",
-        "cs",
-        "element_at(cs, CAST((size(cs) + 1) / 2 AS INT)) AS med",
-    )
-    mad = md.selectExpr(
-        "event_type",
-        "med",
-        "element_at(array_sort(transform(cs, x -> abs(x - med))),"
-        " CAST((size(cs) + 1) / 2 AS INT)) AS mad",
-    )
-    return (
-        dc.join(mad, "event_type")
-        .select(
-            "event_type",
-            "day",
-            F.col("n_events").cast("long"),
-            F.col("med").cast("long"),
-            F.col("mad").cast("long"),
-            (F.expr("abs(n_events - med)") > 3 * F.col("mad")).alias(
-                "flagged"
-            ),
-        )
-        .orderBy("event_type", "day")
-    )
-
-
-@query(
     "schema_profile_events",
     """
     SELECT 'event_id' AS col,
@@ -6715,90 +5956,6 @@ def scene_change_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scene_cuts(frame_histograms(frames, bins=16), threshold=100).orderBy(
         "frame_id"
     )
-
-
-@query(
-    "theil_sen_trend_daily",
-    """
-    WITH d AS (
-      SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1),
-    nd AS (SELECT COUNT(*) AS n_days FROM d),
-    pr AS (
-      SELECT b.x - a.x AS num, date_diff('day', a.day, b.day) AS den
-      FROM d a JOIN d b ON a.day < b.day),
-    tk AS (
-      SELECT CASE WHEN num >= 0 THEN
-               (2 * CAST(1000000000000 AS HUGEINT) * num + den)
-                 // (2 * CAST(den AS HUGEINT))
-             ELSE
-               -((2 * CAST(1000000000000 AS HUGEINT) * (-num) + den)
-                 // (2 * CAST(den AS HUGEINT))) END AS t
-      FROM pr),
-    rk AS (
-      SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS rn,
-             COUNT(*) OVER () AS np
-      FROM tk)
-    SELECT CAST((SELECT n_days FROM nd) AS BIGINT) AS n_days,
-           CAST(np AS BIGINT) AS n_pairs,
-           CAST(CASE WHEN t >= 0 THEN
-                  (2 * t + 1000000) // 2000000
-                ELSE -((2 * (-t) + 1000000) // 2000000) END
-                AS BIGINT) AS slope_micro
-    FROM rk WHERE rn = (np + 1) // 2
-    """,
-)
-def theil_sen_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust trend of the daily event-count series — the
-    median of all pairwise slopes, the standard outlier-immune
-    alternative to OLS (breakdown point 29%). Exact rational median
-    with NO floats: each pairwise slope num/den (den = day gap <= 30)
-    is mapped to half-up 1e12 ticks — distinct rationals with
-    den <= 365 differ by >= 1/365^2, i.e. >= 7.5e6 ticks, so the tick
-    order IS the exact rational order (no collisions) and equal
-    rationals collide to the same tick; sign-split rounding keeps
-    Spark's truncating div and DuckDB's flooring // in agreement.
-    Lower median picked by rank; reported in 1e-6 events/day. Scale:
-    the pairwise stage is CALENDAR-bounded (days^2, not events^2) —
-    the daily series is one map-side-combined count; nothing grows
-    with raw event volume. One row."""
-    ev = load_tables(spark, sf_dir)["events"]
-    d = (
-        ev.select(F.to_date("ts").alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"))
-    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"))
-    pr = a.join(b, F.col("da") < F.col("db")).selectExpr(
-        "CAST(xb - xa AS DECIMAL(38,0)) AS num",
-        "CAST(datediff(db, da) AS DECIMAL(38,0)) AS den",
-    )
-    tk = pr.selectExpr(
-        "CASE WHEN num >= 0 THEN"
-        " (2 * CAST(1000000000000 AS DECIMAL(38,0)) * num + den)"
-        "   div (2 * den)"
-        " ELSE"
-        " -((2 * CAST(1000000000000 AS DECIMAL(38,0)) * (-num) + den)"
-        "   div (2 * den)) END AS t"
-    )
-    n_days = d.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
-    w = Window.orderBy("t")
-    rk = tk.select(
-        "t",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(
-            Window.partitionBy(F.lit(1))
-        ).alias("np"),
-    )
-    med = rk.where(F.expr("rn = (np + 1) div 2")).selectExpr(
-        "CAST(np AS BIGINT) AS n_pairs",
-        "CAST(CASE WHEN t >= 0 THEN"
-        " (2 * t + 1000000) div 2000000"
-        " ELSE -((2 * (-t) + 1000000) div 2000000) END"
-        " AS BIGINT) AS slope_micro",
-    )
-    return n_days.crossJoin(med).select("n_days", "n_pairs", "slope_micro")
 
 
 @query(
@@ -7015,63 +6172,6 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" div (2 * {m} * d2) END AS BIGINT) AS ratio_ppm",
         )
         .orderBy("id_a", "id_b")
-    )
-
-
-@query(
-    "dispersion_event_arrivals",
-    """
-    WITH d AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2),
-    ag AS (
-      SELECT event_type, COUNT(*) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx,
-             CAST(SUM(x*x) AS HUGEINT) AS sxx
-      FROM d GROUP BY event_type)
-    SELECT event_type, CAST(n AS BIGINT) AS n_days,
-           CAST(sx AS BIGINT) AS n_events,
-           CAST((2 * 1000000 * (n * sxx - sx * sx)
-                 + ((n - 1) * sx)) // (2 * ((n - 1) * sx)) AS BIGINT)
-             AS dispersion_micro
-    FROM ag WHERE n >= 2 AND sx > 0
-    ORDER BY event_type
-    """,
-)
-def dispersion_event_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index of dispersion (Fano factor) of daily arrivals per event
-    type — the burstiness diagnostic: ~1e6 ticks = Poisson-like, > 1e6
-    = bursty/overdispersed (batch jobs, bots), < 1e6 = regular. D =
-    sample_variance / mean = (n*Sxx - Sx^2) / ((n-1) * Sx) — an exact
-    RATIONAL of the integer daily counts, reported in half-up 1e-6
-    ticks (no float variance anywhere; complements the 3-sigma, EWMA,
-    MAD and CUSUM monitors with a stationarity-free burstiness score).
-    Scale: one map-side-combined (type, day) count, one tiny reduce;
-    nothing grows with event volume."""
-    ev = load_tables(spark, sf_dir)["events"]
-    d = (
-        ev.select("event_type", F.to_date("ts").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    dec = "decimal(38,0)"
-    ag = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast(dec).alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast(dec).alias("sxx"),
-    )
-    return (
-        ag.where((F.col("n") >= 2) & (F.col("sx") > 0))
-        .selectExpr(
-            "event_type",
-            "CAST(n AS BIGINT) AS n_days",
-            "CAST(sx AS BIGINT) AS n_events",
-            "CAST((2 * 1000000 * (n * sxx - sx * sx)"
-            " + ((n - 1) * sx)) div (2 * ((n - 1) * sx)) AS BIGINT)"
-            " AS dispersion_micro",
-        )
-        .orderBy("event_type")
     )
 
 
@@ -7850,8 +6950,8 @@ def _nb_frames(
     # it inline (train counts, class doc counts, the model's
     # test-bucket grid, scoring, truth). localCheckpoint materializes
     # the hashed occurrence stream once per run (4 narrow columns,
-    # executor-local) — the conformal discipline, applied to
-    # the shared scan instead of a derived frame (optimization r08).
+    # executor-local), so the five subtrees read it instead of
+    # re-deriving it (optimization r08).
     occ = occ.transform(_cut_big)
     trn = occ.where(~F.col("is_test"))
     tst = occ.where(F.col("is_test"))
@@ -7994,172 +7094,10 @@ def source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "autocorr_daily_counts",
-    """
-    WITH d AS (
-      SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1),
-    pr AS (
-      SELECT lg.lag, a.x AS x, b.x AS y
-      FROM (SELECT unnest(range(1, 8)) AS lag) lg
-      JOIN d a ON TRUE
-      JOIN d b ON b.day = a.day + CAST(lg.lag AS INTEGER)),
-    ag AS (
-      SELECT lag, COUNT(*) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-             CAST(SUM(x*y) AS HUGEINT) AS sxy,
-             CAST(SUM(x*x) AS HUGEINT) AS sxx,
-             CAST(SUM(y*y) AS HUGEINT) AS syy
-      FROM pr GROUP BY lag),
-    rr AS (
-      SELECT lag, n,
-             n * sxy - sx * sy AS cov_n,
-             n * sxx - sx * sx AS vx_n,
-             n * syy - sy * sy AS vy_n
-      FROM ag)
-    SELECT CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_pairs,
-           CAST(CASE WHEN vx_n = 0 OR vy_n = 0 THEN 0
-                WHEN cov_n >= 0 THEN
-                  (2 * 1000000 * cov_n * cov_n + vx_n * vy_n)
-                    // (2 * vx_n * vy_n)
-                ELSE -((2 * 1000000 * cov_n * cov_n + vx_n * vy_n)
-                    // (2 * vx_n * vy_n)) END AS BIGINT) AS r2_signed_micro
-    FROM rr ORDER BY lag
-    """,
-)
-def autocorr_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1..7 autocorrelation of the daily event-count series — the
-    time-series seasonality diagnostic (a weekly cycle shows as a
-    lag-7 peak). Reported as SIGNED r-squared in half-up 1e-6 ticks:
-    r^2 = cov^2/(varx*vary) is an exact RATIONAL of the integer daily
-    counts (no sqrt anywhere), so the statistic is bit-identical
-    across engines; the sign restores the correlation direction.
-    Calendar-lag pairs: a missing day yields no pair (self-join on
-    day+lag). Exactness bound: the ticks
-    numerator is ~1e6 * (n * max_count^2)^2 and must stay under
-    HUGEINT/DECIMAL(38) — holds for any series with
-    n * max_count^2 < 3e15 (a decade of days at 1.5M events/day);
-    normalize counts to thousands beyond that. Scale: the daily
-    series is one map-side-combined count (output rows = days), the
-    lag self-join is day-keyed and tiny; nothing here grows with raw
-    event volume."""
-    ev = load_tables(spark, sf_dir)["events"]
-    d = (
-        ev.select(F.to_date("ts").alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
-    b = d.select(F.col("day").alias("day2"), F.col("x").alias("y"))
-    pr = (
-        lags.crossJoin(d)
-        .join(b, F.expr("day2 = date_add(day, lag)"))
-    )
-    dec = "decimal(38,0)"
-    ag = pr.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast(dec).alias("sx"),
-        F.sum("y").cast(dec).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast(dec).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast(dec).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast(dec).alias("syy"),
-    )
-    rr = ag.selectExpr(
-        "lag",
-        "n",
-        "n * sxy - sx * sy AS cov_n",
-        "n * sxx - sx * sx AS vx_n",
-        "n * syy - sy * sy AS vy_n",
-    )
-    return rr.selectExpr(
-        "CAST(lag AS BIGINT) AS lag",
-        "CAST(n AS BIGINT) AS n_pairs",
-        "CAST(CASE WHEN vx_n = 0 OR vy_n = 0 THEN 0"
-        " WHEN cov_n >= 0 THEN"
-        "  (2 * 1000000 * cov_n * cov_n + vx_n * vy_n)"
-        "    div (2 * vx_n * vy_n)"
-        " ELSE -((2 * 1000000 * cov_n * cov_n + vx_n * vy_n)"
-        "    div (2 * vx_n * vy_n)) END AS BIGINT) AS r2_signed_micro",
-    ).orderBy("lag")
-
-
 # ---------------------------------------------------------------------------
-# Behavioral analytics, continued (funnel + retention cohorts live above;
-# attribution closes the product-analytics trio the RocketMQ->Flink event
-# pipeline serves). Exact-integer: microsecond timestamps, integer cents.
+# Corpus, retrieval and dedup analytics, continued: vocabulary growth,
+# quality calibration, retrieval evaluation, sampling and mixture reports.
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "last_touch_attribution",
-    """
-    WITH e AS (SELECT user_id, event_id, event_type, value,
-                      epoch_us(ts) AS ts_us FROM events
-               WHERE event_type IN ('view', 'click', 'purchase')),
-    m AS (SELECT *,
-            LAST_VALUE(CASE WHEN event_type IN ('view', 'click')
-                            THEN event_type END IGNORE NULLS)
-              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS touch
-          FROM e)
-    SELECT COALESCE(touch, 'direct') AS channel,
-           CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-             AS value_cents
-    FROM m WHERE event_type = 'purchase'
-    GROUP BY COALESCE(touch, 'direct') ORDER BY channel
-    """,
-)
-def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch revenue attribution: each purchase is credited to the
-    user's most recent preceding touch event (`view` or `click`) under
-    the total order (ts_us, event_id); purchases with no prior touch
-    go to the 'direct' channel. One running `last(_, ignorenulls)`
-    window over the type-filtered log — the purchase row's own channel
-    is NULL, so the window never self-attributes. Revenue in exact
-    integer cents (ROUND(value*100) — the fixture's values are
-    2-decimal money, the same cents discipline as the anomaly
-    monitors). Scale: a single user-keyed sort-window over the three
-    relevant event types only; state per row is one small string —
-    this is the textbook Structured-Streaming-able attribution shape
-    (the same window runs incrementally under
-    applyInPandasWithState, cf. streaming/stateful.py)."""
-    ev = (
-        load_tables(spark, sf_dir)["events"]
-        .where(F.col("event_type").isin("view", "click", "purchase"))
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "value",
-            F.unix_micros("ts").alias("ts_us"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    touch = F.last(
-        F.when(
-            F.col("event_type").isin("view", "click"), F.col("event_type")
-        ),
-        ignorenulls=True,
-    ).over(w)
-    return (
-        ev.withColumn("touch", touch)
-        .where(F.col("event_type") == "purchase")
-        .groupBy(F.coalesce("touch", F.lit("direct")).alias("channel"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_purchases"),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("long")
-            .alias("value_cents"),
-        )
-        .orderBy("channel")
-    )
 
 
 def _heaps_oracle_sql() -> str:
@@ -8583,86 +7521,6 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "activity_streaks_users",
-    """
-    WITH d AS (
-      SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-    g AS (
-      SELECT user_id, day,
-             date_diff('day', DATE '2024-01-01', day)
-               - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day)
-               AS grp
-      FROM d),
-    st AS (
-      SELECT user_id, CAST(COUNT(*) AS BIGINT) AS streak,
-             MIN(day) AS streak_start
-      FROM g GROUP BY user_id, grp),
-    best AS (
-      SELECT user_id, streak, streak_start,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY streak DESC, streak_start) AS rn
-      FROM st),
-    tot AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_active_days
-            FROM d GROUP BY user_id)
-    SELECT b.user_id, b.streak AS best_streak,
-           CAST(date_diff('day', DATE '2024-01-01', b.streak_start)
-                AS INTEGER) AS start_day_idx,
-           t.n_active_days
-    FROM best b JOIN tot t ON b.user_id = t.user_id
-    WHERE b.rn = 1
-    ORDER BY best_streak DESC, b.user_id LIMIT 20
-    """,
-)
-def activity_streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-active-day streak per user (top-20) — the
-    gaps-and-islands classic: group key = day index minus the per-user
-    day row_number, constant within a consecutive run. Calendar-day
-    streaks complement the time-gap sessionization operator (a streak
-    survives overnight; a session does not). Earliest streak wins ties
-    (deterministic via the streak_start tie-break); day indices are
-    exact integer day arithmetic from the fixture epoch. Scale: the
-    distinct (user, day) grid is users x days bounded, the window is
-    user-partitioned (range-partitionable), and the top-20 is a
-    TakeOrdered — no global sort of the event stream."""
-    ev = load_tables(spark, sf_dir)["events"]
-    d = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
-    wg = Window.partitionBy("user_id").orderBy("day")
-    g = d.select(
-        "user_id",
-        "day",
-        (
-            F.datediff("day", F.lit("2024-01-01").cast("date"))
-            - F.row_number().over(wg)
-        ).alias("grp"),
-    )
-    st = g.groupBy("user_id", "grp").agg(
-        F.count(F.lit(1)).cast("long").alias("streak"),
-        F.min("day").alias("streak_start"),
-    )
-    wb = Window.partitionBy("user_id").orderBy(
-        F.desc("streak"), "streak_start"
-    )
-    best = st.withColumn("rn", F.row_number().over(wb)).where(
-        F.col("rn") == 1
-    )
-    tot = d.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_active_days")
-    )
-    return (
-        best.join(tot, "user_id")
-        .selectExpr(
-            "user_id",
-            "streak AS best_streak",
-            "CAST(datediff(streak_start, DATE '2024-01-01') AS INT)"
-            " AS start_day_idx",
-            "n_active_days",
-        )
-        .orderBy(F.desc("best_streak"), "user_id")
-        .limit(20)
-    )
-
-
-@query(
     "streaming_dedup_fingerprints",
     f"""
     WITH fp AS (SELECT doc_id, md5({_NORM_SQL_DUCK}) AS f
@@ -8732,139 +7590,6 @@ def streaming_dedup_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("f AS fingerprint", "n_copies", "keeper")
         .orderBy(F.desc("n_copies"), "fingerprint")
         .limit(20)
-    )
-
-
-@query(
-    "kaplan_meier_signup_to_purchase",
-    """
-    WITH RECURSIVE ev AS (
-      SELECT user_id, CAST(ts AS DATE) AS day, event_type FROM events),
-    su AS (SELECT user_id, MIN(day) AS sday FROM ev
-           WHERE event_type = 'signup' GROUP BY user_id),
-    pu AS (SELECT ev.user_id, MIN(ev.day) AS pday
-           FROM ev JOIN su ON ev.user_id = su.user_id
-           WHERE ev.event_type = 'purchase' AND ev.day >= su.sday
-           GROUP BY ev.user_id),
-    mx AS (SELECT MAX(day) AS maxd FROM ev),
-    samp AS (
-      SELECT su.user_id,
-             date_diff('day', su.sday,
-                       COALESCE(pu.pday, (SELECT maxd FROM mx))) AS t,
-             pu.pday IS NOT NULL AS is_event
-      FROM su LEFT JOIN pu ON su.user_id = pu.user_id),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM samp),
-    pert AS (
-      SELECT t, CAST(COUNT(*) AS BIGINT) AS c,
-             CAST(SUM(CASE WHEN is_event THEN 1 ELSE 0 END) AS BIGINT)
-               AS d
-      FROM samp GROUP BY t),
-    atrisk AS (
-      SELECT t, d,
-             (SELECT n FROM nn)
-               - COALESCE(SUM(c) OVER (ORDER BY t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS n_risk
-      FROM pert),
-    km AS (
-      SELECT t, d, n_risk,
-             ROW_NUMBER() OVER (ORDER BY t) AS idx
-      FROM atrisk WHERE d > 0),
-    it AS (
-      SELECT CAST(0 AS BIGINT) AS idx, CAST(1000000 AS BIGINT) AS s
-      UNION ALL
-      SELECT km.idx,
-             (2 * it.s * (km.n_risk - km.d) + km.n_risk)
-               // (2 * km.n_risk)
-      FROM it JOIN km ON km.idx = it.idx + 1)
-    SELECT CAST(km.t AS INTEGER) AS t_days,
-           CAST(km.n_risk AS BIGINT) AS n_at_risk,
-           CAST(km.d AS BIGINT) AS d_events,
-           CAST(it.s AS BIGINT) AS surv_ppm
-    FROM km JOIN it ON it.idx = km.idx
-    ORDER BY t_days
-    """,
-)
-def kaplan_meier_signup_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival curve for time-to-conversion: days from a
-    user's signup to their first purchase, RIGHT-CENSORED at the end
-    of the observation window for users who never convert — the
-    estimator that handles "hasn't converted YET" correctly where a
-    naive mean-of-converters is biased optimistic. S(t) =
-    prod_{t_i <= t} (1 - d_i/n_i) evaluated as an integer recurrence
-    with HALF-UP ppm rounding per step (s <- (2*s*(n-d) + n) div (2n),
-    s_0 = 1e6): a Catalyst `aggregate` fold over the day-ordered step
-    list on the Spark side, the same recurrence as a recursive CTE in
-    the oracle — bit-identical by construction (the fp_log2
-    discipline). Risk sets come from ONE cumulative count over
-    distinct day-offsets, never a per-t rescan. Scale: samples are one
-    row per signup user; the step table is bounded by the observation
-    window in DAYS (~tens of rows), so the fold is constant-size no
-    matter how many users flow in; everything upstream is user-keyed
-    min-aggregation."""
-    ev = load_tables(spark, sf_dir)["events"].select(
-        "user_id", F.to_date("ts").alias("day"), "event_type"
-    )
-    su = (
-        ev.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("day").alias("sday"))
-    )
-    pu = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(su, "user_id")
-        .where(F.col("day") >= F.col("sday"))
-        .groupBy("user_id")
-        .agg(F.min("day").alias("pday"))
-    )
-    mx = ev.agg(F.max("day").alias("maxd"))
-    samp = (
-        su.join(pu, "user_id", "left")
-        .crossJoin(F.broadcast(mx))
-        .select(
-            F.datediff(
-                F.coalesce("pday", "maxd"), F.col("sday")
-            ).alias("t"),
-            F.col("pday").isNotNull().alias("is_event"),
-        )
-    )
-    pert = samp.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum(F.when(F.col("is_event"), 1).otherwise(0))
-        .cast("long")
-        .alias("d"),
-    )
-    nn = pert.agg(F.sum("c").cast("long").alias("n"))
-    wcum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    atrisk = (
-        pert.crossJoin(F.broadcast(nn))
-        .select(
-            "t",
-            "d",
-            (
-                F.col("n") - F.coalesce(F.sum("c").over(wcum), F.lit(0))
-            ).alias("n_risk"),
-        )
-        .where(F.col("d") > 0)
-    )
-    widx = Window.orderBy("t")
-    km = atrisk.withColumn("idx", F.row_number().over(widx))
-    steps = km.agg(
-        F.array_sort(
-            F.collect_list(F.struct("idx", "d", "n_risk"))
-        ).alias("arr")
-    )
-    return (
-        km.crossJoin(F.broadcast(steps))
-        .selectExpr(
-            "CAST(t AS INT) AS t_days",
-            "CAST(n_risk AS BIGINT) AS n_at_risk",
-            "CAST(d AS BIGINT) AS d_events",
-            "CAST(aggregate(slice(arr, 1, idx), CAST(1000000 AS BIGINT),"
-            " (acc, x) -> (2 * acc * (x.n_risk - x.d) + x.n_risk)"
-            " div (2 * x.n_risk)) AS BIGINT) AS surv_ppm",
-        )
-        .orderBy("t_days")
     )
 
 
@@ -9033,288 +7758,6 @@ def lang_similarity_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "k_anonymity_report",
-    """
-    WITH g AS (
-      SELECT lang, source, n_chars // 100 AS len_bucket,
-             CAST(COUNT(*) AS BIGINT) AS sz
-      FROM documents GROUP BY lang, source, len_bucket),
-    t AS (SELECT CAST(SUM(sz) AS BIGINT) AS n,
-                 CAST(COUNT(*) AS BIGINT) AS n_groups,
-                 CAST(MIN(sz) AS BIGINT) AS min_group FROM g),
-    ks AS (SELECT unnest([2, 5, 10]) AS k)
-    SELECT CAST(ks.k AS INTEGER) AS k,
-           t.n_groups, t.min_group,
-           CAST(COALESCE(SUM(CASE WHEN g.sz < ks.k THEN g.sz END), 0)
-                AS BIGINT) AS n_docs_violating,
-           CAST((2 * 1000000
-                 * COALESCE(SUM(CASE WHEN g.sz < ks.k THEN g.sz END), 0)
-                 + t.n) // (2 * t.n) AS BIGINT) AS violating_ppm
-    FROM ks CROSS JOIN t LEFT JOIN g ON TRUE
-    GROUP BY ks.k, t.n, t.n_groups, t.min_group
-    ORDER BY k
-    """,
-)
-def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit of the corpus' quasi-identifier combination
-    (lang, source, length-bucket-of-100-chars): for each privacy level
-    k in {2, 5, 10}, how many documents sit in an equivalence class
-    smaller than k — i.e. are re-identifiable by metadata alone (the
-    release-gate number privacy review asks for BEFORE the text is
-    even considered; complements pii_redaction, which audits the text
-    itself). Exact integer class sizes, violating share in half-up
-    ppm, plus the global class count and the smallest class. Scale:
-    ONE map-side-combinable group-by over the quasi-identifier tuple
-    (class-vocabulary bounded output), then a 3-literal-row summary —
-    nothing downstream grows with corpus size."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    g = (
-        docs.selectExpr(
-            "lang", "source", "n_chars div 100 AS len_bucket"
-        )
-        .groupBy("lang", "source", "len_bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    )
-    t = g.agg(
-        F.sum("sz").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.min("sz").cast("long").alias("min_group"),
-    )
-    ks = load_tables(spark, sf_dir)["documents"].sparkSession.createDataFrame(
-        [(2,), (5,), (10,)], "k int"
-    )
-    return (
-        ks.crossJoin(F.broadcast(t))
-        .join(F.broadcast(g), F.lit(True), "left")
-        .groupBy("k", "n", "n_groups", "min_group")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("sz") < F.col("k"), F.col("sz"))),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_docs_violating")
-        )
-        .selectExpr(
-            "CAST(k AS INT) AS k",
-            "n_groups",
-            "min_group",
-            "n_docs_violating",
-            "CAST((2 * 1000000 * n_docs_violating + n) div (2 * n)"
-            " AS BIGINT) AS violating_ppm",
-        )
-        .orderBy("k")
-    )
-
-
-@query(
-    "mann_kendall_trend_daily",
-    """
-    WITH d AS (
-      SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1),
-    nn AS (SELECT CAST(COUNT(*) AS HUGEINT) AS nd FROM d),
-    ss AS (
-      SELECT CAST(SUM(CASE WHEN b.x > a.x THEN 1
-                           WHEN b.x < a.x THEN -1 ELSE 0 END)
-                  AS HUGEINT) AS s
-      FROM d a JOIN d b ON a.day < b.day),
-    tt AS (
-      SELECT COALESCE(CAST(SUM(t * (t - 1) * (2 * t + 5)) AS HUGEINT),
-                      0) AS tie
-      FROM (SELECT CAST(COUNT(*) AS HUGEINT) AS t FROM d GROUP BY x) z),
-    f AS (
-      SELECT (SELECT nd FROM nn) AS nd, (SELECT s FROM ss) AS s,
-             (SELECT tie FROM tt) AS tie)
-    SELECT CAST(nd AS BIGINT) AS n_days,
-           CAST(s AS BIGINT) AS s_stat,
-           CAST(nd * (nd - 1) * (2 * nd + 5) - tie AS BIGINT) AS var18,
-           CAST(CASE WHEN s >= 0 THEN
-                  (2 * 1000000 * s + nd * (nd - 1) // 2)
-                    // (2 * (nd * (nd - 1) // 2))
-                ELSE -((2 * 1000000 * (-s) + nd * (nd - 1) // 2)
-                    // (2 * (nd * (nd - 1) // 2))) END AS BIGINT)
-             AS tau_ppm,
-           CAST(CASE WHEN s = 0 THEN 0
-                WHEN 18000000 * (abs(s) - 1) * (abs(s) - 1)
-                     > 3841600 * (nd * (nd - 1) * (2 * nd + 5) - tie)
-                THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct
-    FROM f
-    """,
-)
-def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test on the daily event-count series — the
-    nonparametric companion to theil_sen_trend_daily (same pairwise
-    structure; MK answers "IS there a monotone trend" where Theil-Sen
-    answers "how steep"). Everything integer-exact: S = sum of pairwise
-    sign(x_b - x_a); the tie-corrected variance is reported as
-    var18 = 18*Var = n(n-1)(2n+5) - sum_t t(t-1)(2t+5); Kendall tau_a
-    in half-up ppm; and the alpha=0.05 two-sided decision uses the
-    continuity-corrected z SQUARED so no sqrt is ever taken:
-    reject iff 18e6*(|S|-1)^2 > 3841600*var18 (z_crit^2 = 3.8416
-    exactly). Scale: identical to theil_sen — the pairwise stage is
-    CALENDAR-bounded (days^2), the daily series one map-side-combined
-    count; nothing grows with raw event volume. One row."""
-    ev = load_tables(spark, sf_dir)["events"]
-    dec = "decimal(38,0)"
-    d = (
-        ev.select(F.to_date("ts").alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"))
-    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"))
-    s = (
-        a.join(b, F.col("da") < F.col("db"))
-        .select(
-            F.when(F.col("xb") > F.col("xa"), F.lit(1))
-            .when(F.col("xb") < F.col("xa"), F.lit(-1))
-            .otherwise(F.lit(0))
-            .alias("sg")
-        )
-        .agg(F.sum("sg").cast(dec).alias("s"))
-    )
-    nn = d.agg(F.count(F.lit(1)).cast(dec).alias("nd"))
-    tie = (
-        d.groupBy("x")
-        .agg(F.count(F.lit(1)).cast(dec).alias("t"))
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.col("t")
-                    * (F.col("t") - 1)
-                    * (2 * F.col("t") + 5)
-                ),
-                F.lit(0).cast(dec),
-            ).alias("tie")
-        )
-    )
-    f = nn.crossJoin(s).crossJoin(tie)
-    return f.selectExpr(
-        "CAST(nd AS BIGINT) AS n_days",
-        "CAST(s AS BIGINT) AS s_stat",
-        "CAST(nd * (nd - 1) * (2 * nd + 5) - tie AS BIGINT) AS var18",
-        "CAST(CASE WHEN s >= 0 THEN"
-        "  (2 * 1000000 * s + nd * (nd - 1) div 2)"
-        "    div (2 * (nd * (nd - 1) div 2))"
-        " ELSE -((2 * 1000000 * (-s) + nd * (nd - 1) div 2)"
-        "    div (2 * (nd * (nd - 1) div 2))) END AS BIGINT) AS tau_ppm",
-        "CAST(CASE WHEN s = 0 THEN 0"
-        " WHEN 18000000 * (abs(s) - 1) * (abs(s) - 1)"
-        "      > 3841600 * (nd * (nd - 1) * (2 * nd + 5) - tie)"
-        " THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct",
-    )
-
-
-@query(
-    "spearman_daily_activity_value",
-    """
-    WITH d AS (
-      SELECT CAST(ts AS DATE) AS day,
-             CAST(COUNT(*) AS BIGINT) AS x,
-             CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-               AS y
-      FROM events GROUP BY 1),
-    r AS (
-      SELECT day,
-             2 * RANK() OVER (ORDER BY x) + COUNT(*) OVER
-               (PARTITION BY x) - 1 AS rx,
-             2 * RANK() OVER (ORDER BY y) + COUNT(*) OVER
-               (PARTITION BY y) - 1 AS ry
-      FROM d),
-    ag AS (
-      SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(rx) AS HUGEINT) AS sx,
-             CAST(SUM(ry) AS HUGEINT) AS sy,
-             CAST(SUM(rx * ry) AS HUGEINT) AS sxy,
-             CAST(SUM(rx * rx) AS HUGEINT) AS sxx,
-             CAST(SUM(ry * ry) AS HUGEINT) AS syy
-      FROM r),
-    rr AS (
-      SELECT n, n * sxy - sx * sy AS cov_n,
-             n * sxx - sx * sx AS vx_n,
-             n * syy - sy * sy AS vy_n
-      FROM ag)
-    SELECT CAST(n AS BIGINT) AS n_days,
-           CAST(CASE WHEN vx_n = 0 OR vy_n = 0 THEN 0
-                WHEN cov_n >= 0 THEN
-                  (2 * 1000000 * cov_n * cov_n + vx_n * vy_n)
-                    // (2 * vx_n * vy_n)
-                ELSE -((2 * 1000000 * cov_n * cov_n + vx_n * vy_n)
-                    // (2 * vx_n * vy_n)) END AS BIGINT)
-             AS rho2_signed_micro
-    FROM rr
-    """,
-)
-def spearman_daily_activity_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Spearman rank correlation between daily event VOLUME and daily
-    event VALUE mass — the monotone-association gauge that survives
-    the heavy-tailed value distribution where Pearson is
-    outlier-dominated. Ties get the
-    standard average rank, kept integer by DOUBLING: for a tie group
-    of size t starting at competition rank r0, 2*avg_rank = 2*r0+t-1
-    = 2*RANK() + COUNT() OVER (PARTITION BY value) - 1. Pearson on the
-    doubled ranks is then exact rational arithmetic, reported as
-    SIGNED rho^2 in half-up 1e-6 ticks (the no-sqrt convention of
-    autocorr_daily_counts). Scale: ranking runs
-    over the DAILY table (calendar-bounded), built by one map-side-
-    combined count; value cents are exact (2-decimal fixture). One
-    row."""
-    ev = load_tables(spark, sf_dir)["events"]
-    d = (
-        ev.select(
-            F.to_date("ts").alias("day"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("day")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("x"),
-            F.sum("cents").cast("long").alias("y"),
-        )
-    )
-    r = d.select(
-        "day",
-        (
-            2 * F.rank().over(Window.orderBy("x"))
-            + F.count(F.lit(1)).over(Window.partitionBy("x"))
-            - 1
-        ).cast("long").alias("rx"),
-        (
-            2 * F.rank().over(Window.orderBy("y"))
-            + F.count(F.lit(1)).over(Window.partitionBy("y"))
-            - 1
-        ).cast("long").alias("ry"),
-    )
-    dec = "decimal(38,0)"
-    ag = r.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("rx").cast(dec).alias("sx"),
-        F.sum("ry").cast(dec).alias("sy"),
-        F.sum(F.col("rx") * F.col("ry")).cast(dec).alias("sxy"),
-        F.sum(F.col("rx") * F.col("rx")).cast(dec).alias("sxx"),
-        F.sum(F.col("ry") * F.col("ry")).cast(dec).alias("syy"),
-    )
-    rr = ag.selectExpr(
-        "n",
-        "n * sxy - sx * sy AS cov_n",
-        "n * sxx - sx * sx AS vx_n",
-        "n * syy - sy * sy AS vy_n",
-    )
-    return rr.selectExpr(
-        "CAST(n AS BIGINT) AS n_days",
-        "CAST(CASE WHEN vx_n = 0 OR vy_n = 0 THEN 0"
-        " WHEN cov_n >= 0 THEN"
-        "  (2 * 1000000 * cov_n * cov_n + vx_n * vy_n)"
-        "    div (2 * vx_n * vy_n)"
-        " ELSE -((2 * 1000000 * cov_n * cov_n + vx_n * vy_n)"
-        "    div (2 * vx_n * vy_n)) END AS BIGINT)"
-        " AS rho2_signed_micro",
-    )
-
-
-@query(
     "domain_cap_sample",
     """
     WITH r AS (
@@ -9382,87 +7825,6 @@ def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST((2 * 1000000 * chars_kept + chars_total)"
         " div (2 * chars_total) AS BIGINT) AS retention_ppm",
     ).orderBy("source")
-
-
-@query(
-    "l_diversity_report",
-    """
-    WITH g AS (
-      SELECT source, n_chars // 100 AS len_bucket,
-             CAST(COUNT(*) AS BIGINT) AS sz,
-             CAST(COUNT(DISTINCT lang) AS BIGINT) AS d
-      FROM documents GROUP BY source, len_bucket),
-    t AS (SELECT CAST(SUM(sz) AS BIGINT) AS n,
-                 CAST(COUNT(*) AS BIGINT) AS n_classes,
-                 CAST(MIN(d) AS BIGINT) AS min_diversity FROM g),
-    ls AS (SELECT unnest([2, 3]) AS l)
-    SELECT CAST(ls.l AS INTEGER) AS l,
-           t.n_classes, t.min_diversity,
-           CAST(COALESCE(SUM(CASE WHEN g.d < ls.l THEN 1 END), 0)
-                AS BIGINT) AS classes_violating,
-           CAST(COALESCE(SUM(CASE WHEN g.d < ls.l THEN g.sz END), 0)
-                AS BIGINT) AS docs_violating,
-           CAST((2 * 1000000
-                 * COALESCE(SUM(CASE WHEN g.d < ls.l THEN g.sz END), 0)
-                 + t.n) // (2 * t.n) AS BIGINT) AS violating_ppm
-    FROM ls CROSS JOIN t LEFT JOIN g ON TRUE
-    GROUP BY ls.l, t.n, t.n_classes, t.min_diversity
-    ORDER BY l
-    """,
-)
-def l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit — k-anonymity's sharper sibling
-    (k_anonymity_report counts SMALL quasi-identifier classes; this
-    counts classes whose SENSITIVE attribute is near-constant, the
-    homogeneity attack k-anonymity misses). Quasi-identifier =
-    (source, 100-char length bucket), sensitive = lang; for l in
-    {2, 3}, report the classes with fewer than l distinct sensitive
-    values and the documents they expose (half-up ppm share). Scale:
-    one map-side group-by over the QI tuple with a distinct-count
-    (class-vocabulary bounded), then a 2-literal-row summary."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    g = (
-        docs.selectExpr("source", "n_chars div 100 AS len_bucket", "lang")
-        .groupBy("source", "len_bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("sz"),
-            F.countDistinct("lang").cast("long").alias("d"),
-        )
-    )
-    t = g.agg(
-        F.sum("sz").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.min("d").cast("long").alias("min_diversity"),
-    )
-    ls = docs.sparkSession.createDataFrame([(2,), (3,)], "l int")
-    return (
-        ls.crossJoin(F.broadcast(t))
-        .join(F.broadcast(g), F.lit(True), "left")
-        .groupBy("l", "n", "n_classes", "min_diversity")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("d") < F.col("l"), 1)), F.lit(0)
-            )
-            .cast("long")
-            .alias("classes_violating"),
-            F.coalesce(
-                F.sum(F.when(F.col("d") < F.col("l"), F.col("sz"))),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("docs_violating"),
-        )
-        .selectExpr(
-            "CAST(l AS INT) AS l",
-            "n_classes",
-            "min_diversity",
-            "classes_violating",
-            "docs_violating",
-            "CAST((2 * 1000000 * docs_violating + n) div (2 * n)"
-            " AS BIGINT) AS violating_ppm",
-        )
-        .orderBy("l")
-    )
 
 
 @query(
@@ -9851,130 +8213,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_select(emb, k=5, pool=16).orderBy("rank")
 
 
-def _holt_oracle_sql() -> str:
-    """DuckDB replay of the dyadic Holt recurrence: recursive CTE per
-    event_type, identical sign-split floor-by-4 steps."""
-
-    def fdiv4(v: str) -> str:
-        return (
-            f"CASE WHEN ({v}) >= 0 THEN ({v}) // 4"
-            f" ELSE -(((-({v})) + 3) // 4) END"
-        )
-
-    nl = fdiv4("r.cnt * 1048576 + 3 * (it.l + it.b)")
-    nb = fdiv4(f"(({nl}) - it.l) + 3 * it.b")
-    fm = (
-        "CASE WHEN f >= 0 THEN (2 * 1000 * f + 1048576) // (2 * 1048576)"
-        " ELSE -((2 * 1000 * (-f) + 1048576) // (2 * 1048576)) END"
-    )
-    return f"""
-    WITH RECURSIVE dc AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2),
-    rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-                                        ORDER BY d) AS rn
-           FROM dc),
-    nn AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-           FROM rk GROUP BY event_type),
-    it AS (
-      SELECT r1.event_type, CAST(1 AS BIGINT) AS i,
-             CAST(r1.cnt * 1048576 AS BIGINT) AS l,
-             CAST((r2.cnt - r1.cnt) * 1048576 AS BIGINT) AS b
-      FROM rk r1 JOIN rk r2
-        ON r2.event_type = r1.event_type AND r1.rn = 1 AND r2.rn = 2
-      UNION ALL
-      SELECT r.event_type, it.i + 1,
-             CAST({nl} AS BIGINT),
-             CAST({nb} AS BIGINT)
-      FROM rk r JOIN it
-        ON r.event_type = it.event_type AND r.rn = it.i + 1),
-    fin AS (
-      SELECT it.event_type, it.l, it.b
-      FROM it JOIN nn ON nn.event_type = it.event_type
-      WHERE it.i = nn.n),
-    hs AS (SELECT unnest(range(1, 8)) AS h),
-    fc AS (
-      SELECT event_type, CAST(hs.h AS INT) AS h,
-             l + hs.h * b AS f
-      FROM fin CROSS JOIN hs)
-    SELECT event_type, h,
-           CAST({fm} AS BIGINT) AS forecast_milli
-    FROM fc ORDER BY event_type, h
-    """
-
-
-@query("holt_linear_forecast", _holt_oracle_sql())
-def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt double-exponential (level + trend) smoothing over the
-    daily event-count series per event type, forecasting 1..7 days
-    ahead — the capacity-planning companion to ewma_event_rate (which
-    tracks level only and lags any drift; Holt's trend component
-    follows it). Both smoothing constants are DYADIC (alpha = beta =
-    1/4), so the recurrence is exact integer arithmetic in 2^20
-    ticks:  l_t = floor((x_t*S + 3(l+b))/4),  b_t =
-    floor((l_t - l_{t-1} + 3b)/4), with a sign-split floor that Spark
-    (truncating div) and DuckDB (flooring //) evaluate identically —
-    zero float drift, the whole state trajectory hash-checks.
-    Textbook init: l_0 = x_0*S, b_0 = (x_1 - x_0)*S. Forecast
-    f_h = l_n + h*b_n reported in half-up milli-events. Scale: the
-    fold runs per event_type over its DAILY array (calendar-bounded,
-    same shape as ewma/kaplan_meier); counts are one map-side
-    combine. State fits BIGINT for daily counts < 2^42."""
-    ev = load_tables(spark, sf_dir)["events"]
-    dc = ev.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    arr = (
-        dc.groupBy("event_type")
-        .agg(F.array_sort(F.collect_list(F.struct("d", "cnt"))).alias("a"))
-        .where(F.size("a") >= 2)
-    )
-
-    def fdiv4(v: str) -> str:
-        return (
-            f"CASE WHEN ({v}) >= 0 THEN ({v}) div 4"
-            f" ELSE -(((-({v})) + 3) div 4) END"
-        )
-
-    nl = fdiv4("e.cnt * 1048576 + 3 * (st.l + st.b)")
-    nb = fdiv4(f"(({nl}) - st.l) + 3 * st.b")
-    fin = arr.selectExpr(
-        "event_type",
-        f"""
-        aggregate(slice(a, 2, size(a) - 1),
-          struct(CAST(a[0].cnt * 1048576 AS BIGINT) AS l,
-                 CAST((a[1].cnt - a[0].cnt) * 1048576 AS BIGINT) AS b),
-          (st, e) -> struct(CAST({nl} AS BIGINT) AS l,
-                            CAST({nb} AS BIGINT) AS b),
-          st -> st) AS fin
-        """,
-    )
-    fm = (
-        "CASE WHEN f >= 0 THEN (2 * 1000 * f + 1048576) div (2 * 1048576)"
-        " ELSE -((2 * 1000 * (-f) + 1048576) div (2 * 1048576)) END"
-    )
-    return (
-        fin.select(
-            "event_type",
-            F.explode(F.sequence(F.lit(1), F.lit(7))).alias("h"),
-            F.col("fin.l").alias("l"),
-            F.col("fin.b").alias("b"),
-        )
-        .selectExpr(
-            "event_type",
-            "CAST(h AS INT) AS h",
-            "l + h * b AS f",
-        )
-        .selectExpr(
-            "event_type",
-            "h",
-            f"CAST({fm} AS BIGINT) AS forecast_milli",
-        )
-        .orderBy("event_type", "h")
-    )
-
-
 def _nb_auc_oracle_sql(buckets: int = 8192) -> str:
     """One-vs-rest AUC final over the shared NB pipeline: exact
     Mann-Whitney rank-sum on the integer score ticks, ties counted
@@ -10088,67 +8326,6 @@ def nb_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "event_trigram_patterns",
-    """
-    WITH s AS (
-      SELECT user_id, event_type AS t1,
-             LEAD(event_type, 1) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS t2,
-             LEAD(event_type, 2) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS t3
-      FROM events),
-    g AS (
-      SELECT t1 || '>' || t2 || '>' || t3 AS pattern,
-             CAST(COUNT(*) AS BIGINT) AS n_occurrences
-      FROM s WHERE t3 IS NOT NULL
-      GROUP BY 1),
-    r AS (
-      SELECT pattern, n_occurrences,
-             ROW_NUMBER() OVER (ORDER BY n_occurrences DESC, pattern)
-               AS rank
-      FROM g)
-    SELECT CAST(rank AS BIGINT) AS rank, pattern, n_occurrences
-    FROM r WHERE rank <= 20 ORDER BY rank
-    """,
-)
-def event_trigram_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential pattern mining, the length-3 staple: the most common
-    event-type TRIGRAMS along each user's journey (total order =
-    (ts, event_id), the SCD2 convention) — where the first-order
-    event_transition_matrix sees only pairwise hops, this surfaces
-    multi-step paths (view>click>purchase vs view>click>view). One
-    window per user yields both lookaheads; counting is a map-side-
-    combined group-by over the tiny type^3 pattern vocabulary; top-20
-    with (count, pattern) total order. Scale: the window is
-    user-partitioned (hash-distributed, no global sort); pattern
-    cardinality is |types|^3 regardless of corpus size."""
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        F.col("event_type").alias("t1"),
-        F.lead("event_type", 1).over(w).alias("t2"),
-        F.lead("event_type", 2).over(w).alias("t3"),
-    )
-    g = (
-        s.where(F.col("t3").isNotNull())
-        .select(
-            F.concat_ws(">", "t1", "t2", "t3").alias("pattern")
-        )
-        .groupBy("pattern")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_occurrences"))
-    )
-    r = g.select(
-        F.row_number()
-        .over(Window.orderBy(F.col("n_occurrences").desc(), "pattern"))
-        .cast("long")
-        .alias("rank"),
-        "pattern",
-        "n_occurrences",
-    )
-    return r.where(F.col("rank") <= 20).orderBy("rank")
-
-
-@query(
     "streaming_token_counts",
     f"""
     WITH toks AS (
@@ -10214,185 +8391,6 @@ def streaming_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table(qname)
         .orderBy(F.desc("n_occurrences"), "tok")
         .limit(20)
-    )
-
-
-def _user_entropy_oracle_sql() -> str:
-    return f"""
-    WITH RECURSIVE ut AS (
-      SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
-      FROM events GROUP BY 1, 2),
-    tu AS (
-      SELECT user_id, CAST(SUM(c) AS BIGINT) AS t
-      FROM ut GROUP BY user_id),
-    dv AS (
-      SELECT DISTINCT v FROM (
-        SELECT c AS v FROM ut UNION ALL SELECT t FROM tu)),
-    {_fp_log2_cte('u', 'dv')},
-    su AS (
-      SELECT ut.user_id, CAST(SUM(ut.c * ulg.lg) AS BIGINT) AS s
-      FROM ut JOIN ulg ON ulg.v = ut.c
-      GROUP BY ut.user_id),
-    h AS (
-      SELECT tu.user_id, tu.t,
-             CAST(lt.lg - su.s // tu.t AS BIGINT) AS ticks
-      FROM tu JOIN su ON su.user_id = tu.user_id
-              JOIN ulg lt ON lt.v = tu.t)
-    SELECT CAST(ticks // 32768 AS BIGINT) AS bucket_32nd_bit,
-           CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(MIN(ticks) AS BIGINT) AS min_ticks,
-           CAST(MAX(ticks) AS BIGINT) AS max_ticks,
-           CAST(SUM(t) AS BIGINT) AS n_events
-    FROM h GROUP BY 1 ORDER BY 1
-    """
-
-
-@query("user_type_entropy", _user_entropy_oracle_sql())
-def user_type_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral diversity per user: Shannon entropy of each user's
-    event-type mix (H = log2(T) - sum(c*log2 c)/T in fixed-point
-    fp_log2 ticks — the token_entropy design applied to behavior),
-    reported as a 1/32-bit histogram (bucket = ticks div 2^15 — fine
-    enough to spread the fixture's homogeneous users) with
-    user counts and event mass — the segmentation readout that
-    separates single-action bots (H ~ 0) from engaged multi-modal
-    users. Zero libm; positive integer floor division identical in
-    both engines. Scale: the (user, type) count and per-user reduce
-    are map-side combined; the log2 fold runs over DISTINCT count
-    values (shared via one value table, never per row); output is
-    bucket-bounded. The oracle reuses the factored _fp_log2_cte."""
-    from rocketmq_flink_spark.operators.retrieval import fp_log2_sql
-
-    ev = load_tables(spark, sf_dir)["events"]
-    # The 20-step fp_log2 fold is the expensive expression; run it once
-    # per DISTINCT count value (the docstring's design — previously the
-    # code inlined the fold per (user, type) row and again per user
-    # total) and broadcast-join it back; ut/agg each feed two consumers
-    # (the distinct-value table + the join), hence the cuts
-    # (optimization r08, the query_likelihood distinct-values
-    # discipline).
-    ut = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    ).transform(_cut_big)
-    cdv = ut.select("c").distinct().selectExpr(
-        "c", fp_log2_sql("c", "1") + " AS lgc"
-    )
-    lg = ut.join(F.broadcast(cdv), "c").select("user_id", "c", "lgc")
-    agg = lg.groupBy("user_id").agg(
-        F.sum("c").cast("long").alias("t"),
-        F.sum(F.col("c") * F.col("lgc")).cast("long").alias("s"),
-    ).transform(_cut_big)
-    tdv = agg.select("t").distinct().selectExpr(
-        "t", fp_log2_sql("t", "1") + " AS lgt"
-    )
-    h = agg.join(F.broadcast(tdv), "t").selectExpr(
-        "user_id",
-        "t",
-        "CAST(lgt - s div t AS BIGINT) AS ticks",
-    )
-    return (
-        h.groupBy(F.expr("ticks div 32768").alias("bucket_32nd_bit"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.min("ticks").cast("long").alias("min_ticks"),
-            F.max("ticks").cast("long").alias("max_ticks"),
-            F.sum("t").cast("long").alias("n_events"),
-        )
-        .selectExpr(
-            "CAST(bucket_32nd_bit AS BIGINT) AS bucket_32nd_bit",
-            "n_users",
-            "min_ticks",
-            "max_ticks",
-            "n_events",
-        )
-        .orderBy("bucket_32nd_bit")
-    )
-
-
-@query(
-    "future_purchase_labels",
-    """
-    WITH ev AS (
-      SELECT user_id,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) // 7
-               AS wk,
-             event_type
-      FROM events),
-    act AS (SELECT DISTINCT user_id, wk FROM ev),
-    pur AS (SELECT DISTINCT user_id, wk FROM ev
-            WHERE event_type = 'purchase'),
-    mx AS (SELECT MAX(wk) AS maxwk FROM ev),
-    lab AS (
-      SELECT a.user_id, a.wk,
-             CASE WHEN p.user_id IS NOT NULL THEN 1 ELSE 0 END AS y
-      FROM act a LEFT JOIN pur p
-        ON p.user_id = a.user_id AND p.wk = a.wk + 1
-      WHERE a.wk < (SELECT maxwk FROM mx))
-    SELECT CAST(wk AS BIGINT) AS wk,
-           CAST(COUNT(*) AS BIGINT) AS n_active_users,
-           CAST(SUM(y) AS BIGINT) AS n_positive,
-           CAST((2 * 1000000 * SUM(y) + COUNT(*)) // (2 * COUNT(*))
-                AS BIGINT) AS positive_ppm
-    FROM lab GROUP BY wk ORDER BY wk
-    """,
-)
-def future_purchase_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-free training-label generation: for every
-    (user, epoch-week) with any activity, the supervised label is
-    "did this user purchase in week+1" — the standard churn/propensity
-    label builder, with the temporal hygiene a training pipeline must
-    get right (the label window is STRICTLY future; the final week is
-    dropped because its label window is unobserved — silent leakage
-    in the naive version). Epoch-week = floor(days-since-1970 / 7),
-    identical integer arithmetic in both engines (no locale-dependent
-    week-of-year). Reports per-week label balance (positives, half-up
-    ppm rate) — the class-imbalance readout the downstream trainer
-    needs. Scale: two map-side-combined distinct projections + one
-    (user, wk)-keyed left join; output is calendar-bounded."""
-    ev = load_tables(spark, sf_dir)["events"].select(
-        "user_id",
-        F.expr(
-            "CAST(datediff(to_date(ts), DATE '1970-01-01') div 7"
-            " AS BIGINT)"
-        ).alias("wk"),
-        "event_type",
-    )
-    act = ev.select("user_id", "wk").distinct()
-    pur = (
-        ev.where(F.col("event_type") == "purchase")
-        .select("user_id", F.col("wk").alias("pwk"))
-        .distinct()
-    )
-    mx = ev.agg(F.max("wk").alias("maxwk"))
-    lab = (
-        act.join(
-            pur,
-            (act["user_id"] == pur["user_id"])
-            & (pur["pwk"] == act["wk"] + 1),
-            "left",
-        )
-        .select(
-            act["user_id"],
-            act["wk"],
-            F.when(pur["pwk"].isNotNull(), 1).otherwise(0).alias("y"),
-        )
-        .crossJoin(F.broadcast(mx))
-        .where(F.col("wk") < F.col("maxwk"))
-    )
-    return (
-        lab.groupBy("wk")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_active_users"),
-            F.sum("y").cast("long").alias("n_positive"),
-        )
-        .selectExpr(
-            "CAST(wk AS BIGINT) AS wk",
-            "n_active_users",
-            "n_positive",
-            "CAST((2 * 1000000 * n_positive + n_active_users)"
-            " div (2 * n_active_users) AS BIGINT) AS positive_ppm",
-        )
-        .orderBy("wk")
     )
 
 
@@ -10467,79 +8465,6 @@ def cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.desc("shared_fingerprints"), "source_a", "source_b"
         )
         .limit(20)
-    )
-
-
-@query(
-    "clipped_contribution_report",
-    f"""
-    WITH dt AS (
-      SELECT source,
-             CAST(len(list_filter(
-               regexp_split_to_array({_NORM_SQL_DUCK}, '\\s+'),
-               x -> x <> '')) AS BIGINT) AS n_tok
-      FROM documents)
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN n_tok > 200 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_clipped,
-           CAST(SUM(n_tok) AS BIGINT) AS raw_tokens,
-           CAST(SUM(LEAST(n_tok, 200)) AS BIGINT) AS clipped_tokens,
-           CAST((2 * 1000 * SUM(LEAST(n_tok, 200)) + COUNT(*))
-                // (2 * COUNT(*)) AS BIGINT) AS clipped_mean_milli,
-           CAST((2 * 1000000 * SUM(CASE WHEN n_tok > 200 THEN 1
-                                        ELSE 0 END) + COUNT(*))
-                // (2 * COUNT(*)) AS BIGINT) AS clip_frac_ppm
-    FROM dt GROUP BY source ORDER BY source
-    """,
-)
-def clipped_contribution_report(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bounded-contribution (clipping) report — the differential-
-    privacy PREP step: before any DP release, each unit's contribution
-    must be clipped to a fixed cap (here: per-document token count at
-    C = 200); this reports, per source, the clipped vs raw token
-    mass, how many documents hit the cap, and the clipped mean — the
-    sensitivity-calibration numbers that pick C (too low = bias, too
-    high = noise). The NOISE step is intentionally absent: noise is
-    nondeterministic by definition and cannot be hash-certified; the
-    deterministic clipping pipeline is the Spark-side work. Exact
-    integers, half-up milli/ppm. Scale: one tokenize+count pass,
-    map-side combined per source."""
-    from rocketmq_flink_spark.operators.dedup import normalize_sql
-
-    docs = load_tables(spark, sf_dir)["documents"]
-    toks = (
-        f"filter(split({normalize_sql('text')}, '\\\\s+'), x -> x <> '')"
-    )
-    dt = docs.selectExpr(
-        "source", f"CAST(size({toks}) AS BIGINT) AS n_tok"
-    )
-    return (
-        dt.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("n_tok") > 200, 1).otherwise(0))
-            .cast("long")
-            .alias("n_clipped"),
-            F.sum("n_tok").cast("long").alias("raw_tokens"),
-            F.sum(F.least(F.col("n_tok"), F.lit(200)))
-            .cast("long")
-            .alias("clipped_tokens"),
-        )
-        .selectExpr(
-            "source",
-            "n_docs",
-            "n_clipped",
-            "raw_tokens",
-            "clipped_tokens",
-            "CAST((2 * 1000 * clipped_tokens + n_docs) div (2 * n_docs)"
-            " AS BIGINT) AS clipped_mean_milli",
-            "CAST((2 * 1000000 * n_clipped + n_docs) div (2 * n_docs)"
-            " AS BIGINT) AS clip_frac_ppm",
-        )
-        .orderBy("source")
     )
 
 
@@ -10755,132 +8680,6 @@ def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _holt_backtest_oracle_sql() -> str:
-    """DuckDB replay of the Holt backtest: the same dyadic recurrence
-    folded over the TRAIN prefix (first 80% of days, global series),
-    then MAE of the h-step forecasts against the held-out tail,
-    compared to the last-train-value naive baseline."""
-
-    def fdiv4(v: str) -> str:
-        return (
-            f"CASE WHEN ({v}) >= 0 THEN ({v}) // 4"
-            f" ELSE -(((-({v})) + 3) // 4) END"
-        )
-
-    nl = fdiv4("r.cnt * 1048576 + 3 * (it.l + it.b)")
-    nb = fdiv4(f"(({nl}) - it.l) + 3 * it.b")
-    return f"""
-    WITH RECURSIVE dc AS (
-      SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1),
-    rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY d) AS rn FROM dc),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                  CAST(COUNT(*) * 8 // 10 AS BIGINT) AS ntr FROM rk),
-    it AS (
-      SELECT CAST(1 AS BIGINT) AS i,
-             CAST(r1.cnt * 1048576 AS BIGINT) AS l,
-             CAST((r2.cnt - r1.cnt) * 1048576 AS BIGINT) AS b
-      FROM rk r1 JOIN rk r2 ON r1.rn = 1 AND r2.rn = 2
-      UNION ALL
-      SELECT it.i + 1, CAST({nl} AS BIGINT), CAST({nb} AS BIGINT)
-      FROM rk r JOIN it ON r.rn = it.i + 1
-      WHERE it.i + 1 <= (SELECT ntr FROM nn)),
-    fin AS (SELECT l, b FROM it WHERE i = (SELECT ntr FROM nn)),
-    lastv AS (
-      SELECT cnt AS lv FROM rk WHERE rn = (SELECT ntr FROM nn)),
-    tst AS (
-      SELECT rn - (SELECT ntr FROM nn) AS h, cnt
-      FROM rk WHERE rn > (SELECT ntr FROM nn)),
-    err AS (
-      SELECT tst.h, tst.cnt,
-             ABS(tst.cnt * 1048576 - (fin.l + tst.h * fin.b))
-               AS holt_err_ticks,
-             ABS(tst.cnt - lastv.lv) * 1048576 AS naive_err_ticks
-      FROM tst CROSS JOIN fin CROSS JOIN lastv)
-    SELECT CAST((SELECT ntr FROM nn) AS BIGINT) AS n_train,
-           CAST(COUNT(*) AS BIGINT) AS n_test,
-           CAST((2 * 1000 * SUM(holt_err_ticks)
-                 + CAST(1048576 AS HUGEINT) * COUNT(*))
-                // (2 * CAST(1048576 AS HUGEINT) * COUNT(*)) AS BIGINT)
-             AS holt_mae_milli,
-           CAST((2 * 1000 * SUM(naive_err_ticks)
-                 + CAST(1048576 AS HUGEINT) * COUNT(*))
-                // (2 * CAST(1048576 AS HUGEINT) * COUNT(*)) AS BIGINT)
-             AS naive_mae_milli
-    FROM err
-    """
-
-
-@query("holt_backtest_mae", _holt_backtest_oracle_sql())
-def holt_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backtest of the Holt forecaster — the eval that keeps
-    holt_linear_forecast honest: train the dyadic level+trend
-    recurrence on the first 80% of the global daily series, forecast
-    every held-out day (h = 1..n_test), and report the exact MAE in
-    half-up milli-events against the last-train-value NAIVE baseline
-    (the comparison every forecast eval needs: beating naive is the
-    bar). Identical integer recurrence as holt_linear_forecast
-    (Catalyst fold == recursive CTE); errors stay in 2^20 ticks until
-    one final rounding. Scale: calendar-bounded fold + one join-free
-    error pass. One row."""
-    ev = load_tables(spark, sf_dir)["events"]
-    dc = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    arr = dc.agg(
-        F.array_sort(F.collect_list(F.struct("d", "cnt"))).alias("a")
-    ).selectExpr("a", "CAST(size(a) * 8 div 10 AS INT) AS ntr")
-
-    def fdiv4(v: str) -> str:
-        return (
-            f"CASE WHEN ({v}) >= 0 THEN ({v}) div 4"
-            f" ELSE -(((-({v})) + 3) div 4) END"
-        )
-
-    nl = fdiv4("e.cnt * 1048576 + 3 * (st.l + st.b)")
-    nb = fdiv4(f"(({nl}) - st.l) + 3 * st.b")
-    fin = arr.selectExpr(
-        "a",
-        "ntr",
-        f"""
-        aggregate(slice(a, 2, ntr - 1),
-          struct(CAST(a[0].cnt * 1048576 AS BIGINT) AS l,
-                 CAST((a[1].cnt - a[0].cnt) * 1048576 AS BIGINT) AS b),
-          (st, e) -> struct(CAST({nl} AS BIGINT) AS l,
-                            CAST({nb} AS BIGINT) AS b),
-          st -> st) AS fin
-        """,
-        "a[ntr - 1].cnt AS lv",
-    )
-    err = fin.selectExpr(
-        "ntr",
-        "size(a) - ntr AS n_test",
-        """
-        aggregate(slice(a, ntr + 1, size(a) - ntr),
-          struct(CAST(0 AS DECIMAL(38,0)) AS he,
-                 CAST(0 AS DECIMAL(38,0)) AS ne,
-                 CAST(1 AS BIGINT) AS h),
-          (st, e) -> struct(
-            CAST(st.he + abs(CAST(e.cnt AS DECIMAL(38,0)) * 1048576
-                 - (fin.l + st.h * fin.b)) AS DECIMAL(38,0)),
-            CAST(st.ne + CAST(abs(e.cnt - lv) AS DECIMAL(38,0)) * 1048576
-                 AS DECIMAL(38,0)),
-            CAST(st.h + 1 AS BIGINT)),
-          st -> st) AS er
-        """,
-    )
-    return err.selectExpr(
-        "CAST(ntr AS BIGINT) AS n_train",
-        "CAST(n_test AS BIGINT) AS n_test",
-        "CAST((2 * 1000 * er.he + CAST(1048576 AS DECIMAL(38,0)) * n_test)"
-        " div (2 * CAST(1048576 AS DECIMAL(38,0)) * n_test) AS BIGINT)"
-        " AS holt_mae_milli",
-        "CAST((2 * 1000 * er.ne + CAST(1048576 AS DECIMAL(38,0)) * n_test)"
-        " div (2 * CAST(1048576 AS DECIMAL(38,0)) * n_test) AS BIGINT)"
-        " AS naive_mae_milli",
-    )
-
-
 def _scorecard_oracle_sql() -> str:
     return f"""
     WITH RECURSIVE tc AS (
@@ -11026,62 +8825,6 @@ def source_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT) AS lang_purity_ppm",
         )
         .orderBy("source")
-    )
-
-
-@query(
-    "interarrival_histogram",
-    """
-    WITH g AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-               PARTITION BY event_type, CAST(ts AS DATE)
-               ORDER BY ts, event_id) AS gap_us
-      FROM events),
-    b AS (
-      SELECT event_type,
-             CAST(CASE WHEN gap_us <= 0 THEN 0
-                  ELSE length(bin(gap_us)) - 1 END AS BIGINT)
-               AS log2_bucket
-      FROM g WHERE gap_us IS NOT NULL)
-    SELECT event_type, log2_bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_gaps
-    FROM b GROUP BY event_type, log2_bucket
-    ORDER BY event_type, log2_bucket
-    """,
-)
-def interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-arrival-time burstiness profile: per event type, the
-    histogram of log2(gap in microseconds) between consecutive events
-    — the heavy-tail readout (uniform traffic = one tight band;
-    bursty = mass in the low buckets plus a long-gap tail) behind
-    rate-limiter and watermark-delay tuning. The bucket is the
-    INTEGER floor log2 via bit length (length(bin(x)) - 1 — zero
-    libm, the fp_log2 family's cheap cousin), gaps ordered by the
-    (ts, event_id) total order. Scale: the lag window is partitioned
-    by (type, DAY) so partition width is bounded by daily volume, not
-    corpus history — day-boundary gaps are dropped by construction
-    (documented, deterministic). Counting is map-side combined;
-    output is |types| x ~40 buckets."""
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("event_type", F.to_date("ts")).orderBy(
-        "ts", "event_id"
-    )
-    g = ev.select(
-        "event_type",
-        (
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-        ).alias("gap_us"),
-    ).where(F.col("gap_us").isNotNull())
-    b = g.selectExpr(
-        "event_type",
-        "CAST(CASE WHEN gap_us <= 0 THEN 0"
-        " ELSE length(bin(gap_us)) - 1 END AS BIGINT) AS log2_bucket",
-    )
-    return (
-        b.groupBy("event_type", "log2_bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_gaps"))
-        .orderBy("event_type", "log2_bucket")
     )
 
 
@@ -11319,161 +9062,6 @@ def dedup_sensitivity_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rfm_oracle_sql() -> str:
-    dims = {"r": "rec", "f": "freq", "m": "mon"}
-    cuts = []
-    for d, col in dims.items():
-        cuts.append(f"""
-    g_{d} AS (
-      SELECT {col} AS v, CAST(COUNT(*) AS BIGINT) AS c
-      FROM rfm GROUP BY 1),
-    w_{d} AS (
-      SELECT v, SUM(c) OVER (ORDER BY v
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc
-      FROM g_{d}),
-    q_{d} AS (
-      SELECT
-        (SELECT MIN(v) FROM w_{d}
-          WHERE cc >= (1 * (SELECT nu FROM nn) + 3) // 4) AS q1,
-        (SELECT MIN(v) FROM w_{d}
-          WHERE cc >= (2 * (SELECT nu FROM nn) + 3) // 4) AS q2,
-        (SELECT MIN(v) FROM w_{d}
-          WHERE cc >= (3 * (SELECT nu FROM nn) + 3) // 4) AS q3)""")
-    return f"""
-    WITH ev AS (
-      SELECT user_id, CAST(ts AS DATE) AS day,
-             CAST(ROUND(value * 100) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'),
-    mx AS (SELECT MAX(day) AS maxd FROM ev),
-    rfm AS (
-      SELECT user_id,
-             date_diff('day', MAX(day), (SELECT maxd FROM mx)) AS rec,
-             CAST(COUNT(*) AS BIGINT) AS freq,
-             CAST(SUM(cents) AS BIGINT) AS mon
-      FROM ev GROUP BY user_id),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS nu FROM rfm),
-    {",".join(cuts)},
-    seg AS (
-      SELECT CAST(1 + (rec > q_r.q1)::INT + (rec > q_r.q2)::INT
-                    + (rec > q_r.q3)::INT AS BIGINT) AS r_q,
-             CAST(1 + (freq > q_f.q1)::INT + (freq > q_f.q2)::INT
-                    + (freq > q_f.q3)::INT AS BIGINT) AS f_q,
-             CAST(1 + (mon > q_m.q1)::INT + (mon > q_m.q2)::INT
-                    + (mon > q_m.q3)::INT AS BIGINT) AS m_q,
-             mon
-      FROM rfm CROSS JOIN q_r CROSS JOIN q_f CROSS JOIN q_m)
-    SELECT r_q, f_q, m_q,
-           CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(SUM(mon) AS BIGINT) AS total_cents
-    FROM seg GROUP BY r_q, f_q, m_q
-    ORDER BY r_q, f_q, m_q
-    """
-
-
-@query("rfm_user_segments", _rfm_oracle_sql())
-def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation — the classic marketing/behavioral cube:
-    every purchasing user scored by Recency (days since last
-    purchase), Frequency (purchase count), Monetary (exact total
-    cents), each quartiled, reported as (R,F,M) cell counts + revenue
-    mass. The quartile cuts are computed SCALE-SAFELY: per dimension
-    a distinct-VALUE histogram with one ordered prefix pass yields the
-    exact value holding rank ceil(k*n/4) — never an ntile window
-    over all users (which would single-partition a user-dimension
-    that grows with the data);
-    bucket assignment is then one broadcast-threshold map pass.
-    Quartile 1 = most recent / fewest / cheapest (ascending value
-    order; documented). Scale: user aggregation map-side combined;
-    ordered passes run over distinct R/F/M values (day-, count- and
-    price-domain bounded); output <= 64 cells."""
-    ev = (
-        load_tables(spark, sf_dir)["events"]
-        .where(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.to_date("ts").alias("day"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-    )
-    mx = ev.agg(F.max("day").alias("maxd"))
-    rfm = (
-        ev.crossJoin(F.broadcast(mx))
-        .groupBy("user_id")
-        .agg(
-            F.datediff(F.max("maxd"), F.max("day")).cast("long").alias(
-                "rec"
-            ),
-            F.count(F.lit(1)).cast("long").alias("freq"),
-            F.sum("cents").cast("long").alias("mon"),
-        )
-    )
-    nn = rfm.agg(F.count(F.lit(1)).cast("long").alias("nu"))
-
-    def cuts(col: str):
-        g = rfm.groupBy(F.col(col).alias("v")).agg(
-            F.count(F.lit(1)).cast("long").alias("c")
-        )
-        w = g.select(
-            "v",
-            F.sum("c")
-            .over(
-                Window.orderBy("v").rowsBetween(
-                    Window.unboundedPreceding, 0
-                )
-            )
-            .alias("cc"),
-        )
-        return (
-            w.crossJoin(F.broadcast(nn))
-            .agg(
-                F.min(
-                    F.when(
-                        F.col("cc") >= F.expr("(1 * nu + 3) div 4"),
-                        F.col("v"),
-                    )
-                ).alias(f"{col}_q1"),
-                F.min(
-                    F.when(
-                        F.col("cc") >= F.expr("(2 * nu + 3) div 4"),
-                        F.col("v"),
-                    )
-                ).alias(f"{col}_q2"),
-                F.min(
-                    F.when(
-                        F.col("cc") >= F.expr("(3 * nu + 3) div 4"),
-                        F.col("v"),
-                    )
-                ).alias(f"{col}_q3"),
-            )
-        )
-
-    seg = (
-        rfm.crossJoin(F.broadcast(cuts("rec")))
-        .crossJoin(F.broadcast(cuts("freq")))
-        .crossJoin(F.broadcast(cuts("mon")))
-        .selectExpr(
-            "CAST(1 + CAST(rec > rec_q1 AS INT)"
-            " + CAST(rec > rec_q2 AS INT)"
-            " + CAST(rec > rec_q3 AS INT) AS BIGINT) AS r_q",
-            "CAST(1 + CAST(freq > freq_q1 AS INT)"
-            " + CAST(freq > freq_q2 AS INT)"
-            " + CAST(freq > freq_q3 AS INT) AS BIGINT) AS f_q",
-            "CAST(1 + CAST(mon > mon_q1 AS INT)"
-            " + CAST(mon > mon_q2 AS INT)"
-            " + CAST(mon > mon_q3 AS INT) AS BIGINT) AS m_q",
-            "mon",
-        )
-    )
-    return (
-        seg.groupBy("r_q", "f_q", "m_q")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.sum("mon").cast("long").alias("total_cents"),
-        )
-        .orderBy("r_q", "f_q", "m_q")
-    )
-
-
 def _bigram_acc_oracle_sql() -> str:
     from rocketmq_flink_spark.functions.porthash import hash60_sql
 
@@ -11596,90 +9184,6 @@ def bigram_next_token_accuracy(
         " AS BIGINT) AS coverage_ppm",
         "CAST((2 * 1000000 * n_correct + n_covered) div (2 * n_covered)"
         " AS BIGINT) AS accuracy_ppm",
-    )
-
-
-def _markov_oracle_sql(iters: int = 32) -> str:
-    return f"""
-    WITH RECURSIVE s AS (
-      SELECT user_id, event_type AS t1,
-             LEAD(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS t2
-      FROM events),
-    m AS (
-      SELECT t1, t2, CAST(COUNT(*) AS BIGINT) AS c
-      FROM s WHERE t2 IS NOT NULL GROUP BY t1, t2),
-    rs AS (SELECT t1, CAST(SUM(c) AS BIGINT) AS r FROM m GROUP BY t1),
-    tt AS (SELECT DISTINCT t1 AS t FROM m),
-    nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM tt),
-    it AS (
-      SELECT 0 AS i, t, CAST(1000000 // (SELECT k FROM nt) AS BIGINT)
-               AS v
-      FROM tt
-      UNION ALL
-      SELECT nx.i, nx.t, nx.v FROM (
-        SELECT it.i + 1 AS i, m.t2 AS t,
-               CAST(SUM(it.v * m.c // rs.r) AS BIGINT) AS v
-        FROM it JOIN m ON m.t1 = it.t JOIN rs ON rs.t1 = it.t
-        WHERE it.i < {iters}
-        GROUP BY it.i + 1, m.t2) nx),
-    fin AS (SELECT t, v FROM it WHERE i = {iters})
-    SELECT fin.t AS event_type, rs.r AS n_transitions_out,
-           fin.v AS stationary_micro
-    FROM fin JOIN rs ON rs.t1 = fin.t
-    ORDER BY event_type
-    """
-
-
-@query("markov_stationary_eventtypes", _markov_oracle_sql())
-def markov_stationary_eventtypes(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Stationary distribution of the user-journey Markov chain — the
-    long-run share of each event type if sessions continued forever,
-    the summary statistic event_transition_matrix's raw counts don't
-    give you (it tells you where users go NEXT; this tells you where
-    the process SETTLES). Integer power iteration in micro units
-    (the PageRank discipline): v'(t2) = sum_t1 v(t1) * c(t1,t2) div
-    rowsum(t1), 32 synchronous rounds from uniform — every floor is
-    deterministic, both engines iterate the identical recurrence
-    (Spark joins == recursive CTE). Scale: transitions are one
-    user-partitioned window + map-side-combined count; the iteration
-    runs on the |types|^2 matrix (model-sized); zero driver sync.
-    One row per type."""
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        F.col("event_type").alias("t1"),
-        F.lead("event_type").over(w).alias("t2"),
-    ).where(F.col("t2").isNotNull())
-    m = s.groupBy("t1", "t2").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    rs = m.groupBy("t1").agg(F.sum("c").cast("long").alias("r"))
-    mm = m.join(rs, "t1").transform(cut)
-    tt = m.select(F.col("t1").alias("t")).distinct()
-    nt = tt.agg(F.count(F.lit(1)).alias("k"))
-    v = tt.crossJoin(F.broadcast(nt)).selectExpr(
-        "t", "CAST(1000000 div k AS BIGINT) AS v"
-    )
-    for i in range(1, 33):
-        v = (
-            v.join(mm, v["t"] == mm["t1"])
-            .selectExpr("t2", "CAST(v * c div r AS BIGINT) AS contrib")
-            .groupBy(F.col("t2").alias("t"))
-            .agg(F.sum("contrib").cast("long").alias("v"))
-        )
-        if i % 8 == 0:
-            v = v.transform(cut)
-    return (
-        v.join(rs, v["t"] == rs["t1"])
-        .selectExpr(
-            "t AS event_type",
-            "r AS n_transitions_out",
-            "v AS stationary_micro",
-        )
-        .orderBy("event_type")
     )
 
 
@@ -12000,120 +9504,6 @@ def simpson_diversity_by_source(
     ).orderBy("source")
 
 
-@query(
-    "weekday_effect_eta_squared",
-    """
-    WITH d AS (
-      SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 7
-               AS wd,
-             CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2),
-    g AS (
-      SELECT wd, CAST(SUM(x) AS HUGEINT) AS sg,
-             CAST(COUNT(*) AS HUGEINT) AS ng
-      FROM d GROUP BY wd),
-    tot AS (
-      SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(x) AS HUGEINT) AS s,
-             CAST(SUM(x * x) AS HUGEINT) AS sx2
-      FROM d),
-    pr AS (
-      -- list_aggregate(..., 'product') returns DOUBLE (poisons the
-      -- integer rational); list_reduce over HUGEINT stays exact
-      SELECT list_reduce(list(CAST(ng AS HUGEINT) ORDER BY wd),
-                         (a, b) -> a * b) AS prod
-      FROM g),
-    ap AS (
-      SELECT CAST(SUM((pr.prod // g.ng) * g.sg * g.sg) AS HUGEINT) AS a
-      FROM g CROSS JOIN pr),
-    eta AS (
-      SELECT CASE WHEN pr.prod * (tot.n * tot.sx2 - tot.s * tot.s) = 0
-             THEN 0
-             ELSE (2 * 1000000 * (tot.n * ap.a - pr.prod * tot.s * tot.s)
-                   + pr.prod * (tot.n * tot.sx2 - tot.s * tot.s))
-                  // (2 * pr.prod * (tot.n * tot.sx2 - tot.s * tot.s))
-             END AS e
-      FROM ap CROSS JOIN pr CROSS JOIN tot)
-    SELECT CAST(g.wd AS BIGINT) AS weekday_mod7,
-           CAST(g.ng AS BIGINT) AS n_days,
-           CAST((2 * 1000 * g.sg + g.ng) // (2 * g.ng) AS BIGINT)
-             AS mean_daily_milli,
-           CAST(eta.e AS BIGINT) AS eta2_ppm
-    FROM g CROSS JOIN eta ORDER BY weekday_mod7
-    """,
-)
-def weekday_effect_eta_squared(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Weekday seasonality strength as one-way ANOVA effect size —
-    eta^2 = SSB/SST of the daily event counts grouped by epoch-weekday
-    (epoch-day mod 7: calendar-convention-free, identical in both
-    engines) — the number that says how much of daily variance the
-    weekly cycle explains BEFORE anyone fits a seasonal model. Exact
-    rational: multiplying through by prod(n_g) clears every group
-    denominator, so eta^2_ppm = 1e6 * (n*A' - P*S^2) / (P*(n*SX2 -
-    S^2)) with A' = sum (P/n_g)*S_g^2 is pure integer arithmetic
-    (HUGEINT/DECIMAL38; P <= 7-group product of day counts). Per-
-    weekday mean in half-up milli alongside. Scale: everything folds
-    from the calendar-bounded daily table. One row per weekday class.
-    """
-    dec = "decimal(38,0)"
-    ev = load_tables(spark, sf_dir)["events"]
-    d = (
-        ev.select(
-            F.expr(
-                "CAST(datediff(to_date(ts), DATE '1970-01-01') % 7"
-                " AS BIGINT)"
-            ).alias("wd"),
-            F.to_date("ts").alias("day"),
-        )
-        .groupBy("wd", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    g = d.groupBy("wd").agg(
-        F.sum("x").cast(dec).alias("sg"),
-        F.count(F.lit(1)).cast(dec).alias("ng"),
-    )
-    tot = d.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("x").cast(dec).alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast(dec).alias("sx2"),
-    )
-    pr = g.agg(
-        F.expr(
-            "aggregate(sort_array(collect_list(struct(wd, ng))),"
-            " CAST(1 AS DECIMAL(38,0)),"
-            " (acc, e) -> CAST(acc * e.ng AS DECIMAL(38,0)))"
-        ).alias("prod")
-    )
-    ap = (
-        g.crossJoin(F.broadcast(pr))
-        .selectExpr("(prod div ng) * sg * sg AS term")
-        .agg(F.sum("term").cast(dec).alias("a"))
-    )
-    eta = (
-        ap.crossJoin(F.broadcast(pr))
-        .crossJoin(F.broadcast(tot))
-        .selectExpr(
-            "CASE WHEN prod * (n * sx2 - s * s) = 0 THEN 0"
-            " ELSE (2 * 1000000 * (n * a - prod * s * s)"
-            "       + prod * (n * sx2 - s * s))"
-            "      div (2 * prod * (n * sx2 - s * s)) END AS e"
-        )
-    )
-    return (
-        g.crossJoin(F.broadcast(eta))
-        .selectExpr(
-            "CAST(wd AS BIGINT) AS weekday_mod7",
-            "CAST(ng AS BIGINT) AS n_days",
-            "CAST((2 * 1000 * sg + ng) div (2 * ng) AS BIGINT)"
-            " AS mean_daily_milli",
-            "CAST(e AS BIGINT) AS eta2_ppm",
-        )
-        .orderBy("weekday_mod7")
-    )
-
-
 def _mcnemar_oracle_sql(buckets: int = 8192) -> str:
     """McNemar final over the shared NB pipeline (hash split, same as
     the AUC anchor): paired disagreement counts vs the majority-class
@@ -12213,293 +9603,6 @@ def mcnemar_nb_vs_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
         " WHEN 1000000 * (ABS(b - c) - 1) * (ABS(b - c) - 1)"
         "      > 3841459 * (b + c)"
         " THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct",
-    )
-
-
-@query(
-    "power_analysis_sample_size",
-    """
-    WITH u AS (
-      SELECT user_id,
-             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               AS conv
-      FROM events GROUP BY user_id),
-    base AS (
-      SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(conv) AS HUGEINT) AS k
-      FROM u),
-    p AS (
-      SELECT n, k,
-             (2 * 1000000 * k + n) // (2 * n) AS p1,
-             (2 * 1100000 * k + n) // (2 * n) AS p2
-      FROM base),
-    calc AS (
-      SELECT n, p1, p2,
-             CAST(2801584 AS HUGEINT) * 2801584
-               * (p1 * (1000000 - p1) + p2 * (1000000 - p2)) AS num,
-             CAST(1000000000000 AS HUGEINT) * (p2 - p1) * (p2 - p1)
-               AS den
-      FROM p)
-    SELECT CAST(n AS BIGINT) AS n_users_observed,
-           CAST(p1 AS BIGINT) AS baseline_ppm,
-           CAST(p2 AS BIGINT) AS target_ppm,
-           CAST((num + den - 1) // den AS BIGINT) AS n_per_arm
-    FROM calc
-    """,
-)
-def power_analysis_sample_size(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Experiment PLANNING: the sample size per arm needed to detect a
-    10% relative lift over the observed purchase-conversion baseline
-    at alpha = 0.05 (two-sided) and 80% power — the number every A/B
-    test must compute BEFORE launching (abtest_conversion_ztest is
-    the readout side; this is the design side). Standard two-
-    proportion formula n = ceil((z_{.975}+z_{.8})^2 * (p1 q1 + p2 q2)
-    / (p1-p2)^2) evaluated entirely in integers: proportions as
-    half-up ppm, (z_a+z_b) as the micro constant 2_801_584
-    (1.959964 + 0.841621), ceiling by (num + den - 1) div den —
-    engine-identical to the last user. Scale: one user-keyed
-    conversion flag (map-side combined), then constant arithmetic on
-    a single row."""
-    dec = "decimal(38,0)"
-    ev = load_tables(spark, sf_dir)["events"]
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("conv")
-    )
-    base = u.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("conv").cast(dec).alias("k"),
-    )
-    p = base.selectExpr(
-        "n",
-        "k",
-        "(2 * 1000000 * k + n) div (2 * n) AS p1",
-        "(2 * 1100000 * k + n) div (2 * n) AS p2",
-    )
-    calc = p.selectExpr(
-        "n",
-        "p1",
-        "p2",
-        "CAST(2801584 AS DECIMAL(38,0)) * 2801584"
-        " * (p1 * (1000000 - p1) + p2 * (1000000 - p2)) AS num",
-        "CAST(1000000000000 AS DECIMAL(38,0)) * (p2 - p1) * (p2 - p1)"
-        " AS den",
-    )
-    return calc.selectExpr(
-        "CAST(n AS BIGINT) AS n_users_observed",
-        "CAST(p1 AS BIGINT) AS baseline_ppm",
-        "CAST(p2 AS BIGINT) AS target_ppm",
-        "CAST((num + den - 1) div den AS BIGINT) AS n_per_arm",
-    )
-
-
-def _sprt_oracle_sql() -> str:
-    """DuckDB replay of the SPRT monitor: the two per-trial tick
-    constants come from the shared fp_log2 CTE over the exact integer
-    ratios; the cumulative LLR is then a plain prefix sum."""
-    return f"""
-    WITH RECURSIVE d AS (
-      SELECT CAST(ts AS DATE) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n_ev,
-             CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                      END) AS BIGINT) AS x
-      FROM events GROUP BY 1),
-    tot AS (SELECT CAST(SUM(n_ev) AS BIGINT) AS n,
-                   CAST(SUM(x) AS BIGINT) AS k FROM d),
-    dv AS (
-      SELECT DISTINCT v FROM (
-        SELECT 11 * k AS v FROM tot
-        UNION ALL SELECT 10 * k FROM tot
-        UNION ALL SELECT 10 * (n - k) FROM tot
-        UNION ALL SELECT 10 * n - 11 * k FROM tot
-        UNION ALL SELECT 19)),
-    {_fp_log2_cte('q', 'dv')},
-    cst AS (
-      SELECT
-        (SELECT lg FROM qlg WHERE v = (SELECT 11 * k FROM tot))
-          - (SELECT lg FROM qlg WHERE v = (SELECT 10 * k FROM tot))
-          AS c1,
-        (SELECT lg FROM qlg WHERE v = (SELECT 10 * (n - k) FROM tot))
-          - (SELECT lg FROM qlg
-             WHERE v = (SELECT 10 * n - 11 * k FROM tot)) AS c2,
-        (SELECT lg FROM qlg WHERE v = 19) - 2097152 AS lo_mag),
-    cum AS (
-      SELECT day, x, n_ev,
-             SUM(x) OVER (ORDER BY day) AS xc,
-             SUM(n_ev) OVER (ORDER BY day) AS nc
-      FROM d)
-    SELECT CAST(day AS VARCHAR) AS day,
-           CAST(xc AS BIGINT) AS conversions_cum,
-           CAST(nc AS BIGINT) AS events_cum,
-           CAST(cst.c1 * xc - cst.c2 * (nc - xc) AS BIGINT) AS llr_ticks,
-           CAST(CASE
-             WHEN cst.c1 * xc - cst.c2 * (nc - xc) >= 4194304 THEN 1
-             WHEN cst.c1 * xc - cst.c2 * (nc - xc) <= -cst.lo_mag THEN -1
-             ELSE 0 END AS BIGINT) AS decision
-    FROM cum CROSS JOIN cst ORDER BY day
-    """
-
-
-@query("sprt_conversion_monitor", _sprt_oracle_sql())
-def sprt_conversion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald SPRT sequential monitor over the daily conversion stream —
-    the always-valid alternative to the fixed-horizon z-test
-    (abtest_conversion_ztest peeks once; SPRT may stop ANY day with
-    alpha/beta = 0.05/0.2 guarantees): H1 = a 10% relative lift over
-    the observed global rate p0 = k/n. The per-trial log-likelihood
-    ratios are EXACT fp_log2 ticks of integer ratios — p1/p0 = 11/10
-    by construction, q1/q0 = (10n-11k)/(10(n-k)) — so the cumulative
-    LLR is a pure integer prefix sum C1*X - |C2|*(N-X); the upper
-    boundary log2((1-beta)/alpha) = log2(16) is EXACTLY 4*2^20 ticks,
-    the lower log2(beta/(1-alpha)) = log2(4/19) = 2*2^20 -
-    fp_log2(19) ticks. Per-day trajectory with -1/0/+1 decision
-    state (on the self-referential fixture the LLR drifts steeply
-    negative and locks in accept-H0 — the correct A/A outcome: with
-    ~100k trials, "no 10% lift" is decided early and stays decided).
-    Scale: one daily combine + a
-    calendar-bounded prefix window; the four log constants fold over
-    four integers."""
-    from rocketmq_flink_spark.operators.retrieval import fp_log2_sql
-
-    ev = load_tables(spark, sf_dir)["events"]
-    d = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_ev"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("x"),
-    )
-    tot = d.agg(
-        F.sum("n_ev").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("k"),
-    )
-    cst = tot.selectExpr(
-        f"({fp_log2_sql('11 * k', '1')})"
-        f" - ({fp_log2_sql('10 * k', '1')}) AS c1",
-        f"({fp_log2_sql('10 * (n - k)', '1')})"
-        f" - ({fp_log2_sql('10 * n - 11 * k', '1')}) AS c2",
-        f"({fp_log2_sql('19', '1')}) - 2097152 AS lo_mag",
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = d.select(
-        "day",
-        F.sum("x").over(w).alias("xc"),
-        F.sum("n_ev").over(w).alias("nc"),
-    )
-    return (
-        cum.crossJoin(F.broadcast(cst))
-        .selectExpr(
-            "CAST(day AS STRING) AS day",
-            "CAST(xc AS BIGINT) AS conversions_cum",
-            "CAST(nc AS BIGINT) AS events_cum",
-            "CAST(c1 * xc - c2 * (nc - xc) AS BIGINT) AS llr_ticks",
-            "CAST(CASE"
-            " WHEN c1 * xc - c2 * (nc - xc) >= 4194304 THEN 1"
-            " WHEN c1 * xc - c2 * (nc - xc) <= -lo_mag THEN -1"
-            " ELSE 0 END AS BIGINT) AS decision",
-        )
-        .orderBy("day")
-    )
-
-
-@query(
-    "attribution_model_comparison",
-    """
-    WITH e AS (SELECT user_id, event_id, event_type, value,
-                      epoch_us(ts) AS ts_us FROM events
-               WHERE event_type IN ('view', 'click', 'purchase')),
-    m AS (SELECT *,
-            LAST_VALUE(CASE WHEN event_type IN ('view', 'click')
-                            THEN event_type END IGNORE NULLS)
-              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS last_t,
-            FIRST_VALUE(CASE WHEN event_type IN ('view', 'click')
-                             THEN event_type END IGNORE NULLS)
-              OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS first_t
-          FROM e),
-    p AS (SELECT last_t, first_t,
-                 CAST(ROUND(value * 100) AS BIGINT) AS cents
-          FROM m WHERE event_type = 'purchase'),
-    uni AS (
-      SELECT 'a_first_touch' AS model,
-             COALESCE(first_t, 'direct') AS channel, cents FROM p
-      UNION ALL
-      SELECT 'b_last_touch', COALESCE(last_t, 'direct'), cents FROM p)
-    SELECT model, channel,
-           CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           CAST(SUM(cents) AS BIGINT) AS value_cents
-    FROM uni GROUP BY model, channel ORDER BY model, channel
-    """,
-)
-def attribution_model_comparison(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """First-touch vs last-touch attribution, side by side — the
-    sensitivity check a marketing-analytics review runs before
-    trusting EITHER model (when the two disagree materially, channel
-    budgets are model artifacts, not signal). Both credits come from
-    ONE user-keyed window pass (running FIRST_VALUE and LAST_VALUE
-    with IGNORE NULLS over the (ts, event_id) total order —
-    last_touch_attribution's machinery, extended); purchases with no
-    prior touch fall to 'direct' under both models by construction.
-    Exact integer cents. Scale: single sort-window over the three
-    relevant event types; the model axis is a 2x fan-out of
-    purchase-sized rows only."""
-    ev = (
-        load_tables(spark, sf_dir)["events"]
-        .where(F.col("event_type").isin("view", "click", "purchase"))
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "value",
-            F.unix_micros("ts").alias("ts_us"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    touch = F.when(
-        F.col("event_type").isin("view", "click"), F.col("event_type")
-    )
-    m = ev.select(
-        "event_type",
-        "value",
-        F.last(touch, ignorenulls=True).over(w).alias("last_t"),
-        F.first(touch, ignorenulls=True).over(w).alias("first_t"),
-    )
-    p = m.where(F.col("event_type") == "purchase").select(
-        "last_t",
-        "first_t",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    both = p.select(
-        F.lit("a_first_touch").alias("model"),
-        F.coalesce(F.col("first_t"), F.lit("direct")).alias("channel"),
-        "cents",
-    ).unionAll(
-        p.select(
-            F.lit("b_last_touch").alias("model"),
-            F.coalesce(F.col("last_t"), F.lit("direct")).alias("channel"),
-            "cents",
-        )
-    )
-    return (
-        both.groupBy("model", "channel")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_purchases"),
-            F.sum("cents").cast("long").alias("value_cents"),
-        )
-        .orderBy("model", "channel")
     )
 
 
@@ -12711,234 +9814,10 @@ def jaccard_threshold_sensitivity(
     )
 
 
-@query(
-    "conversion_window_sensitivity",
-    """
-    WITH ev AS (
-      SELECT user_id, CAST(ts AS DATE) AS day, event_type FROM events),
-    su AS (SELECT user_id, MIN(day) AS sday FROM ev
-           WHERE event_type = 'signup' GROUP BY user_id),
-    pu AS (SELECT ev.user_id, MIN(ev.day) AS pday
-           FROM ev JOIN su ON ev.user_id = su.user_id
-           WHERE ev.event_type = 'purchase' AND ev.day >= su.sday
-           GROUP BY ev.user_id),
-    mx AS (SELECT MAX(day) AS maxd FROM ev),
-    base AS (
-      SELECT su.user_id, su.sday, pu.pday
-      FROM su LEFT JOIN pu ON pu.user_id = su.user_id),
-    ks AS (SELECT unnest([1, 3, 7, 14]) AS k)
-    SELECT CAST(ks.k AS BIGINT) AS window_days,
-           CAST(SUM(CASE WHEN base.sday + ks.k * INTERVAL 1 DAY
-                              <= (SELECT maxd FROM mx)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_evaluable,
-           CAST(SUM(CASE WHEN base.sday + ks.k * INTERVAL 1 DAY
-                              <= (SELECT maxd FROM mx)
-                          AND base.pday IS NOT NULL
-                          AND base.pday <= base.sday
-                              + ks.k * INTERVAL 1 DAY
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_converted,
-           CAST((2 * 1000000
-                 * SUM(CASE WHEN base.sday + ks.k * INTERVAL 1 DAY
-                                 <= (SELECT maxd FROM mx)
-                             AND base.pday IS NOT NULL
-                             AND base.pday <= base.sday
-                                 + ks.k * INTERVAL 1 DAY
-                            THEN 1 ELSE 0 END)
-                 + SUM(CASE WHEN base.sday + ks.k * INTERVAL 1 DAY
-                                 <= (SELECT maxd FROM mx)
-                            THEN 1 ELSE 0 END))
-                // (2 * SUM(CASE WHEN base.sday + ks.k * INTERVAL 1 DAY
-                                      <= (SELECT maxd FROM mx)
-                                 THEN 1 ELSE 0 END)) AS BIGINT)
-             AS conversion_ppm
-    FROM ks CROSS JOIN base GROUP BY ks.k ORDER BY window_days
-    """,
-)
-def conversion_window_sensitivity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Conversion-window sensitivity: signup-to-purchase conversion at
-    attribution windows of 1/3/7/14 days — the label-DEFINITION study
-    that future_purchase_labels and kaplan_meier bracket (labels fix
-    one window; KM shows the whole curve; this prices the discrete
-    choices a team actually debates). Temporal hygiene throughout:
-    a user only counts as EVALUABLE for window k when signup+k lies
-    inside the observed range (a truncated window silently deflates
-    conversion — the unobserved-label leakage again). Exact integers,
-    half-up ppm. Scale: the signup/first-purchase table is two
-    map-side-combined aggregations (the KM construction); the 4-way
-    window fan-out touches user-sized rows only."""
-    ev = load_tables(spark, sf_dir)["events"].select(
-        "user_id", F.to_date("ts").alias("day"), "event_type"
-    )
-    su = (
-        ev.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("day").alias("sday"))
-    )
-    pu = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(su, "user_id")
-        .where(F.col("day") >= F.col("sday"))
-        .groupBy("user_id")
-        .agg(F.min("day").alias("pday"))
-    )
-    mx = ev.agg(F.max("day").alias("maxd"))
-    base = su.join(pu, "user_id", "left").crossJoin(F.broadcast(mx))
-    ks = ev.sparkSession.createDataFrame(
-        [(1,), (3,), (7,), (14,)], "k int"
-    )
-    j = ks.join(F.broadcast(base), F.lit(True), "left").select(
-        "k",
-        F.expr("date_add(sday, k) <= maxd").alias("evaluable"),
-        F.expr(
-            "pday IS NOT NULL AND pday <= date_add(sday, k)"
-        ).alias("conv"),
-    )
-    return (
-        j.groupBy("k")
-        .agg(
-            F.sum(F.when(F.col("evaluable"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_evaluable"),
-            F.sum(
-                F.when(F.col("evaluable") & F.col("conv"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_converted"),
-        )
-        .selectExpr(
-            "CAST(k AS BIGINT) AS window_days",
-            "n_evaluable",
-            "n_converted",
-            "CAST((2 * 1000000 * n_converted + n_evaluable)"
-            " div (2 * n_evaluable) AS BIGINT) AS conversion_ppm",
-        )
-        .orderBy("window_days")
-    )
-
-
 # ---------------------------------------------------------------------------
-# Continuation 4: weighted graph distance, local structure, data-quality
-# audits, causal readouts
+# Continuation 4: text and retrieval operators, embedding structure,
+# partition/schema audits and event-time features
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "did_treatment_effect",
-    """
-    WITH arm AS (
-      SELECT DISTINCT user_id,
-             CASE WHEN (('0x' || substr(md5('did:' ||
-                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT) % 2 = 0
-               THEN 'T' ELSE 'C' END AS arm
-      FROM events),
-    nu AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS n_users
-           FROM arm GROUP BY 1),
-    p AS (
-      SELECT a.arm,
-             CASE WHEN e.ts < TIMESTAMP '2024-01-16 00:00:00'
-               THEN 'pre' ELSE 'post' END AS period,
-             CAST(COUNT(*) AS BIGINT) AS n_purchases,
-             CAST(SUM(CAST(CAST(e.value AS DECIMAL(12,2)) * 100
-                           AS BIGINT)) AS BIGINT) AS sum_cents
-      FROM events e JOIN arm a ON a.user_id = e.user_id
-      WHERE e.event_type = 'purchase'
-      GROUP BY 1, 2),
-    m AS (
-      SELECT p.arm, p.period, p.n_purchases, p.sum_cents, nu.n_users,
-             CAST((1000 * p.sum_cents) // nu.n_users AS BIGINT) AS mean_mc
-      FROM p JOIN nu ON nu.arm = p.arm)
-    SELECT
-      MAX(CASE WHEN arm = 'T' THEN n_users END) AS n_users_t,
-      MAX(CASE WHEN arm = 'C' THEN n_users END) AS n_users_c,
-      MAX(CASE WHEN arm = 'T' AND period = 'pre' THEN mean_mc END)
-        AS pre_t_millicents,
-      MAX(CASE WHEN arm = 'T' AND period = 'post' THEN mean_mc END)
-        AS post_t_millicents,
-      MAX(CASE WHEN arm = 'C' AND period = 'pre' THEN mean_mc END)
-        AS pre_c_millicents,
-      MAX(CASE WHEN arm = 'C' AND period = 'post' THEN mean_mc END)
-        AS post_c_millicents,
-      (MAX(CASE WHEN arm = 'T' AND period = 'post' THEN mean_mc END)
-       - MAX(CASE WHEN arm = 'T' AND period = 'pre' THEN mean_mc END))
-      - (MAX(CASE WHEN arm = 'C' AND period = 'post' THEN mean_mc END)
-         - MAX(CASE WHEN arm = 'C' AND period = 'pre' THEN mean_mc END))
-        AS did_millicents
-    FROM m
-    """,
-)
-def did_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences readout — the causal-inference
-    companion to abtest_conversion_ztest: a deterministic hash split
-    assigns every user to treatment/control, the event horizon splits
-    at 2024-01-16 into pre/post, and the effect on per-user purchase
-    spend is (post_T - pre_T) - (post_C - pre_C). Per-user means are
-    exact milli-cent floor-div ticks over a FIXED per-arm user
-    denominator (distinct users ever seen in the arm), so period
-    composition shifts can't masquerade as effects; on this untreated
-    fixture the readout is the correct A/A near-zero. Scale: one
-    distinct-user pass + one filtered map-side-combinable (arm,
-    period) aggregate — 4 cells, no row-level state; the hash split
-    runs at one md5 per row."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    ev = load_tables(spark, sf_dir)["events"]
-    arm = ev.select("user_id").distinct().select(
-        "user_id",
-        F.when(
-            hash60(F.concat(F.lit("did:"), F.col("user_id").cast("string")))
-            % 2 == 0,
-            F.lit("T"),
-        ).otherwise(F.lit("C")).alias("arm"),
-    )
-    nu = arm.groupBy("arm").agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(arm, "user_id")
-        .select(
-            "arm",
-            F.when(
-                F.col("ts") < F.lit("2024-01-16 00:00:00").cast("timestamp"),
-                F.lit("pre"),
-            ).otherwise(F.lit("post")).alias("period"),
-            F.expr(
-                "CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"
-            ).alias("cents"),
-        )
-        .groupBy("arm", "period")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_purchases"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-        )
-    )
-    m = p.join(F.broadcast(nu), "arm").select(
-        "arm", "period", "n_users",
-        F.expr("CAST((1000 * sum_cents) div n_users AS BIGINT)").alias(
-            "mean_mc"
-        ),
-    )
-
-    def cell(a, per):
-        return F.max(
-            F.when(
-                (F.col("arm") == a) & (F.col("period") == per),
-                F.col("mean_mc"),
-            )
-        )
-
-    return m.agg(
-        F.max(F.when(F.col("arm") == "T", F.col("n_users"))).cast("long").alias("n_users_t"),
-        F.max(F.when(F.col("arm") == "C", F.col("n_users"))).cast("long").alias("n_users_c"),
-        cell("T", "pre").cast("long").alias("pre_t_millicents"),
-        cell("T", "post").cast("long").alias("post_t_millicents"),
-        cell("C", "pre").cast("long").alias("pre_c_millicents"),
-        cell("C", "post").cast("long").alias("post_c_millicents"),
-        (
-            (cell("T", "post") - cell("T", "pre"))
-            - (cell("C", "post") - cell("C", "pre"))
-        ).cast("long").alias("did_millicents"),
-    )
 
 
 @query(
@@ -13146,170 +10025,6 @@ def rake_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("phrase", "n_occ", "score_ticks")
         .orderBy(F.desc("score_ticks"), "phrase")
         .limit(20)
-    )
-
-
-@query(
-    "cuped_adjusted_abtest",
-    """
-    WITH arm AS (
-      SELECT DISTINCT user_id,
-             CASE WHEN (('0x' || substr(md5('did:' ||
-                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT) % 2 = 0
-               THEN 'T' ELSE 'C' END AS arm
-      FROM events),
-    ux AS (
-      SELECT a.user_id, a.arm,
-             CAST(COALESCE(SUM(CASE WHEN e.ts < TIMESTAMP
-                 '2024-01-16 00:00:00' THEN
-                 CAST(CAST(e.value AS DECIMAL(12,2)) * 100 AS BIGINT)
-               END), 0) AS BIGINT) AS x,
-             CAST(COALESCE(SUM(CASE WHEN e.ts >= TIMESTAMP
-                 '2024-01-16 00:00:00' THEN
-                 CAST(CAST(e.value AS DECIMAL(12,2)) * 100 AS BIGINT)
-               END), 0) AS BIGINT) AS y
-      FROM arm a LEFT JOIN events e
-        ON e.user_id = a.user_id AND e.event_type = 'purchase'
-      GROUP BY 1, 2),
-    m AS (
-      SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx,
-             CAST(SUM(y) AS HUGEINT) AS sy,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-             CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-             CAST(SUM(CASE WHEN arm = 'T' THEN 1 ELSE 0 END) AS HUGEINT)
-               AS nt,
-             CAST(SUM(CASE WHEN arm = 'C' THEN 1 ELSE 0 END) AS HUGEINT)
-               AS nc,
-             CAST(SUM(CASE WHEN arm = 'T' THEN x ELSE 0 END) AS HUGEINT)
-               AS sxt,
-             CAST(SUM(CASE WHEN arm = 'C' THEN x ELSE 0 END) AS HUGEINT)
-               AS sxc,
-             CAST(SUM(CASE WHEN arm = 'T' THEN y ELSE 0 END) AS HUGEINT)
-               AS syt,
-             CAST(SUM(CASE WHEN arm = 'C' THEN y ELSE 0 END) AS HUGEINT)
-               AS syc
-      FROM ux),
-    d AS (
-      SELECT nt, nc,
-             n * sxy - sx * sy AS a,
-             n * sxx - sx * sx AS b,
-             syt * nc - syc * nt AS dy,
-             sxt * nc - sxc * nt AS dx
-      FROM m)
-    SELECT CAST(nt AS BIGINT) AS n_users_t,
-           CAST(nc AS BIGINT) AS n_users_c,
-           CAST(CASE WHEN 1000 * dy >= 0
-                THEN (1000 * dy) // (nt * nc)
-                ELSE -((-(1000 * dy)) // (nt * nc)) END AS BIGINT)
-             AS diff_raw_milli,
-           CAST(CASE WHEN 1000000 * a >= 0
-                THEN (1000000 * a) // b
-                ELSE -((-(1000000 * a)) // b) END AS BIGINT)
-             AS theta_ppm,
-           CAST(CASE WHEN 1000 * (dy * b - a * dx) >= 0
-                THEN (1000 * (dy * b - a * dx)) // (nt * nc * b)
-                ELSE -((-(1000 * (dy * b - a * dx))) // (nt * nc * b)) END
-                AS BIGINT)
-             AS diff_adj_milli
-    FROM d
-    """,
-)
-def cuped_adjusted_abtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance-reduced experiment readout (Deng et al.) on the
-    same hash assignment and period split as did_treatment_effect:
-    pre-period spend X is the covariate, post-period spend Y the
-    outcome; theta = Cov(X,Y)/Var(X) fitted on the POOLED population
-    (assignment-independent, so the adjustment is unbiased), and the
-    adjusted lift is diff(Y) - theta * diff(X). Everything stays an
-    exact rational: theta = A/B with A = n*Sxy - Sx*Sy,
-    B = n*Sxx - Sx^2, and the adjusted difference is emitted over the
-    common denominator n_T*n_C*B as sign-split trunc milli-cents —
-    bit-identical across engines (products held in HUGEINT/decimal
-    width; bound |dy*B| < 10^38 documented, safe to ~10^6 users at
-    these spend scales, rank-reduce cents for more headroom). Scale:
-    one per-user two-period aggregate (map-side combinable), then a
-    single 11-moment global fold — no per-user state leaves the
-    executors."""
-    ev = load_tables(spark, sf_dir)["events"]
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    arm = ev.select("user_id").distinct().select(
-        "user_id",
-        F.when(
-            hash60(F.concat(F.lit("did:"), F.col("user_id").cast("string")))
-            % 2 == 0,
-            F.lit("T"),
-        ).otherwise(F.lit("C")).alias("arm"),
-    )
-    pur = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").alias(
-            "cents"
-        ),
-        F.col("ts"),
-    )
-    ux = (
-        arm.join(pur, "user_id", "left")
-        .groupBy("user_id", "arm")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("ts")
-                        < F.lit("2024-01-16 00:00:00").cast("timestamp"),
-                        F.col("cents"),
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("x"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("ts")
-                        >= F.lit("2024-01-16 00:00:00").cast("timestamp"),
-                        F.col("cents"),
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("y"),
-        )
-    )
-    D = "DECIMAL(38,0)"
-    m = ux.agg(
-        F.count(F.lit(1)).cast(D).alias("n"),
-        F.sum("x").cast(D).alias("sx"),
-        F.sum("y").cast(D).alias("sy"),
-        F.sum(F.expr(f"CAST(x AS {D}) * x")).cast(D).alias("sxx"),
-        F.sum(F.expr(f"CAST(x AS {D}) * y")).cast(D).alias("sxy"),
-        F.sum(F.when(F.col("arm") == "T", 1).otherwise(0)).cast(D).alias("nt"),
-        F.sum(F.when(F.col("arm") == "C", 1).otherwise(0)).cast(D).alias("nc"),
-        F.sum(F.when(F.col("arm") == "T", F.col("x")).otherwise(0)).cast(D).alias("sxt"),
-        F.sum(F.when(F.col("arm") == "C", F.col("x")).otherwise(0)).cast(D).alias("sxc"),
-        F.sum(F.when(F.col("arm") == "T", F.col("y")).otherwise(0)).cast(D).alias("syt"),
-        F.sum(F.when(F.col("arm") == "C", F.col("y")).otherwise(0)).cast(D).alias("syc"),
-    )
-    d = m.selectExpr(
-        "nt", "nc",
-        "n * sxy - sx * sy AS a",
-        "n * sxx - sx * sx AS b",
-        "syt * nc - syc * nt AS dy",
-        "sxt * nc - sxc * nt AS dx",
-    )
-    return d.selectExpr(
-        "CAST(nt AS BIGINT) AS n_users_t",
-        "CAST(nc AS BIGINT) AS n_users_c",
-        "CAST(CASE WHEN 1000 * dy >= 0"
-        " THEN (1000 * dy) div (nt * nc)"
-        " ELSE -((-(1000 * dy)) div (nt * nc)) END AS BIGINT)"
-        " AS diff_raw_milli",
-        "CAST(CASE WHEN 1000000 * a >= 0"
-        " THEN (1000000 * a) div b"
-        " ELSE -((-(1000000 * a)) div b) END AS BIGINT) AS theta_ppm",
-        "CAST(CASE WHEN 1000 * (dy * b - a * dx) >= 0"
-        " THEN (1000 * (dy * b - a * dx)) div (nt * nc * b)"
-        " ELSE -((-(1000 * (dy * b - a * dx))) div (nt * nc * b)) END"
-        " AS BIGINT) AS diff_adj_milli",
     )
 
 
@@ -13612,712 +10327,6 @@ def query_likelihood_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MARKOV_CHANNELS = ["click", "error", "signup", "view"]
-
-# Hard ceiling on the state vocabulary a driver-side absorption fold may
-# pull local. The event-type schema has 7 states (4 channels + START /
-# END / CONV); 64 leaves headroom for richer channel taxonomies while a
-# 64x64 count matrix is still trivially driver-sized.
-_MARKOV_MAX_STATES = 64
-
-
-def _collect_bounded_transition_matrix(trans: DataFrame):
-    """Collect an (s, t, count) transition edge list ONLY after proving
-    the state vocabulary is bounded — the distinct-state count is one
-    tiny aggregate, checked before any matrix row moves to the driver.
-    Raises ValueError on a high-cardinality state column instead of
-    silently materializing an unbounded matrix."""
-    n_states = (
-        trans.select(F.col("s").alias("st"))
-        .unionAll(trans.select(F.col("t").alias("st")))
-        .agg(F.countDistinct("st").alias("n"))
-        .collect()[0]["n"]
-    )
-    if n_states > _MARKOV_MAX_STATES:
-        raise ValueError(
-            f"transition matrix has {n_states} distinct states, above the"
-            f" driver-side absorption cap of {_MARKOV_MAX_STATES}; bucket"
-            " the state column (or raise _MARKOV_MAX_STATES deliberately)"
-            " before running removal attribution"
-        )
-    return [(r["s"], r["t"], int(r["c"])) for r in trans.collect()]
-
-
-def _markov_attr_oracle_sql(rounds: int = 16) -> str:
-    """DuckDB replay of Markov removal-effect attribution: journey
-    transition counts (cut at first purchase), per-scenario matrices
-    (full + each channel removed, its inbound edges redirected to the
-    END absorber), then `rounds` staged absorption-probability
-    iterations in floor-div ppm ticks."""
-    chans = ", ".join(f"('{c}')" for c in _MARKOV_CHANNELS)
-    parts = [f"""
-    WITH r0 AS (
-      SELECT user_id, event_id,
-             CASE WHEN event_type = 'purchase' THEN 'CONV'
-                  ELSE event_type END AS m,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY epoch_us(ts), event_id) AS rk
-      FROM events),
-    pk AS (SELECT user_id, MIN(rk) AS prk FROM r0 WHERE m = 'CONV'
-           GROUP BY 1),
-    j AS (
-      SELECT r0.user_id, r0.m, r0.rk, pk.prk
-      FROM r0 LEFT JOIN pk USING (user_id)
-      WHERE pk.prk IS NULL OR r0.rk <= pk.prk),
-    tr AS (
-      SELECT 'START' AS s, m AS t FROM j WHERE rk = 1
-      UNION ALL
-      SELECT a.m, b.m FROM j a JOIN j b
-        ON b.user_id = a.user_id AND b.rk = a.rk + 1
-      UNION ALL
-      SELECT m, 'END' FROM j x
-      WHERE prk IS NULL
-        AND rk = (SELECT MAX(rk) FROM j y WHERE y.user_id = x.user_id)),
-    base AS (
-      SELECT s, t, CAST(COUNT(*) AS BIGINT) AS c FROM tr GROUP BY 1, 2),
-    scen AS MATERIALIZED (
-      SELECT scen, s, t, CAST(SUM(c) AS BIGINT) AS c FROM (
-        SELECT 'full' AS scen, s, t, c FROM base
-        UNION ALL
-        SELECT ch.c2, b.s,
-               CASE WHEN b.t = ch.c2 THEN 'END' ELSE b.t END, b.c
-        FROM base b, (VALUES {chans}) ch(c2)
-        WHERE b.s <> ch.c2)
-      GROUP BY 1, 2, 3),
-    p0 AS (SELECT DISTINCT scen, s, CAST(0 AS BIGINT) AS p FROM scen)"""]
-    for k in range(1, rounds + 1):
-        parts.append(f"""
-    p{k} AS MATERIALIZED (
-      SELECT c.scen, c.s,
-             CAST(SUM(c.c * CASE WHEN c.t = 'CONV' THEN 1000000
-                            WHEN c.t = 'END' THEN 0
-                            ELSE COALESCE(pp.p, 0) END)
-                  // SUM(c.c) AS BIGINT) AS p
-      FROM scen c LEFT JOIN p{k - 1} pp
-        ON pp.scen = c.scen AND pp.s = c.t
-      GROUP BY 1, 2)""")
-    return ",".join(parts) + f"""
-    SELECT ch.c2 AS channel,
-           pf.p AS p_full_ppm,
-           pr.p AS p_removed_ppm,
-           pf.p - pr.p AS removal_effect_ppm
-    FROM (VALUES {chans}) ch(c2)
-      JOIN p{rounds} pf ON pf.scen = 'full' AND pf.s = 'START'
-      JOIN p{rounds} pr ON pr.scen = ch.c2 AND pr.s = 'START'
-    ORDER BY channel
-    """
-
-
-@query("markov_removal_attribution", _markov_attr_oracle_sql())
-def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markov removal-effect attribution — the data-driven model that
-    first/last-touch can't fake: journeys (cut at first purchase) fit
-    a transition matrix with START / END / CONV absorbers; each
-    channel's credit is how much the START -> CONV absorption
-    probability DROPS when that channel is removed (its inbound edges
-    redirected to END). Absorption runs 16 fixed floor-div ppm
-    iterations — engine-exact, no linear solve. Scale: the journey
-    window + transition count is the only data-scale pass (same shape
-    as event_transition_matrix); the five scenario matrices are
-    state-vocabulary bounded (<= 7x7 cells), so the fold is
-    model-sized arithmetic — computed once from a single driver sync
-    of the counts, the PCA/centroid precedent. The sync is guarded:
-    more than _MARKOV_MAX_STATES distinct states raises ValueError
-    BEFORE any matrix row reaches the driver, so a high-cardinality
-    state column can never silently pull an unbounded matrix local.
-    Oracle replays journey cut, removal redirects, and all 16 rounds
-    in staged CTEs."""
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    # r0 (the user-keyed window pass) and pk each feed two consumers:
-    # cuts so the events window runs once per action (optimization r08)
-    r0 = ev.select(
-        "user_id",
-        F.when(F.col("event_type") == "purchase", "CONV")
-        .otherwise(F.col("event_type"))
-        .alias("m"),
-        F.row_number().over(w).alias("rk"),
-    ).transform(_cut_big)
-    pk = (
-        r0.where(F.col("m") == "CONV")
-        .groupBy("user_id")
-        .agg(F.min("rk").alias("prk"))
-        .transform(_cut_big)
-    )
-    j = r0.join(pk, "user_id", "left").where(
-        F.col("prk").isNull() | (F.col("rk") <= F.col("prk"))
-    )
-    wj = Window.partitionBy("user_id").orderBy("rk")
-    jj = j.select(
-        "user_id", "m", "rk", "prk", F.lead("m").over(wj).alias("nxt")
-    )
-    trans = (
-        jj.where(F.col("rk") == 1)
-        .select(F.lit("START").alias("s"), F.col("m").alias("t"))
-        .unionAll(
-            jj.where(F.col("nxt").isNotNull()).select(
-                F.col("m").alias("s"), F.col("nxt").alias("t")
-            )
-        )
-        .unionAll(
-            jj.where(F.col("nxt").isNull() & F.col("prk").isNull()).select(
-                F.col("m").alias("s"), F.lit("END").alias("t")
-            )
-        )
-        .groupBy("s", "t")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    base = _collect_bounded_transition_matrix(trans)
-
-    def absorb(counts: list[tuple[str, str, int]], rounds: int = 16) -> int:
-        states = sorted({s for s, _, _ in counts})
-        p = {s: 0 for s in states}
-        for _ in range(rounds):
-            nxt = {}
-            for s in states:
-                num = den = 0
-                for ss, t, c in counts:
-                    if ss != s:
-                        continue
-                    den += c
-                    pt = (
-                        1_000_000
-                        if t == "CONV"
-                        else (0 if t == "END" else p.get(t, 0))
-                    )
-                    num += c * pt
-                nxt[s] = num // den if den else 0
-            p = nxt
-        return p.get("START", 0)
-
-    p_full = absorb(base)
-    rows = []
-    for ch in _MARKOV_CHANNELS:
-        removed = {}
-        for s, t, c in base:
-            if s == ch:
-                continue
-            t2 = "END" if t == ch else t
-            removed[(s, t2)] = removed.get((s, t2), 0) + c
-        p_rem = absorb([(s, t, c) for (s, t), c in removed.items()])
-        rows.append((ch, p_full, p_rem, p_full - p_rem))
-    return (
-        spark.createDataFrame(
-            rows,
-            "channel STRING, p_full_ppm LONG, p_removed_ppm LONG,"
-            " removal_effect_ppm LONG",
-        )
-        .orderBy("channel")
-    )
-
-
-def _chash_oracle_sql() -> str:
-    from rocketmq_flink_spark.functions.porthash import hash60_sql
-
-    kh = hash60_sql("'key:' || CAST(k AS VARCHAR)")
-    ph = (
-        "('0x' || substr(md5('ring:' || CAST(shard AS VARCHAR) || ':'"
-        " || CAST(vn AS VARCHAR)), 1, 15))::BIGINT"
-    )
-    return f"""
-    WITH keys AS (SELECT DISTINCT user_id AS k FROM events),
-    kh AS (SELECT k, {kh} AS h FROM keys),
-    pts8 AS (SELECT s.g AS shard, v.g AS vn, {ph.replace('shard', 's.g').replace('vn', 'v.g')} AS p
-             FROM range(8) s(g), range(8) v(g)),
-    pts9 AS (SELECT s.g AS shard, v.g AS vn, {ph.replace('shard', 's.g').replace('vn', 'v.g')} AS p
-             FROM range(9) s(g), range(8) v(g)),
-    a8 AS (
-      SELECT k, arg_min(shard, CASE WHEN p >= h THEN p
-                                    ELSE p + (CAST(1 AS BIGINT) << 60)
-                               END) AS shard
-      FROM kh CROSS JOIN pts8 GROUP BY k),
-    a9 AS (
-      SELECT k, arg_min(shard, CASE WHEN p >= h THEN p
-                                    ELSE p + (CAST(1 AS BIGINT) << 60)
-                               END) AS shard
-      FROM kh CROSS JOIN pts9 GROUP BY k),
-    ring AS (
-      SELECT 'ring' AS scheme, CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(SUM(CASE WHEN a8.shard <> a9.shard THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_moved
-      FROM a8 JOIN a9 USING (k)),
-    md AS (
-      SELECT 'mod' AS scheme, CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(SUM(CASE WHEN k % 8 <> k % 9 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_moved
-      FROM keys)
-    SELECT scheme, n_keys, n_moved,
-           CAST((2 * 1000000 * n_moved + n_keys) // (2 * n_keys)
-                AS BIGINT) AS moved_ppm
-    FROM (SELECT * FROM ring UNION ALL SELECT * FROM md)
-    ORDER BY scheme
-    """
-
-
-@query("consistent_hash_rebalance", _chash_oracle_sql())
-def consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consistent-hashing rebalance study: assign every distinct user
-    to 8 shards by (a) a 64-point hash ring (8 virtual nodes per
-    shard) and (b) plain modulo, then grow to 9 shards and measure
-    the moved-key fraction (half-up ppm). The readout IS the
-    consistent-hashing theorem in numbers: the ring moves ~1/9 of
-    keys, modulo moves ~8/9 — the difference between a cache/shard
-    expansion that warms gently and one that invalidates everything.
-    All ring points and key hashes are the portable md5-60bit hash,
-    so both engines compute identical assignments (arg-min over the
-    clockwise-adjusted ring, no floats anywhere). Scale: the ring is
-    a 64/72-point broadcast grid (a real deployment binary-searches a
-    sorted broadcast array; the grid keeps the oracle replayable);
-    one distinct-user pass, one key-local map-side argmin — no
-    row-level state."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    ev = load_tables(spark, sf_dir)["events"]
-    keys = ev.select(F.col("user_id").alias("k")).distinct()
-    kh = keys.select(
-        "k",
-        hash60(F.concat(F.lit("key:"), F.col("k").cast("string"))).alias(
-            "h"
-        ),
-    )
-
-    def points(n_shards: int):
-        return (
-            spark.range(n_shards)
-            .select(F.col("id").alias("shard"))
-            .crossJoin(spark.range(8).select(F.col("id").alias("vn")))
-            .select(
-                "shard",
-                hash60(
-                    F.concat(
-                        F.lit("ring:"),
-                        F.col("shard").cast("string"),
-                        F.lit(":"),
-                        F.col("vn").cast("string"),
-                    )
-                ).alias("p"),
-            )
-        )
-
-    def assign(pts):
-        return (
-            kh.crossJoin(F.broadcast(pts))
-            .groupBy("k")
-            .agg(
-                F.expr(
-                    "min_by(shard, CASE WHEN p >= h THEN p"
-                    " ELSE p + (CAST(1 AS BIGINT) << 60) END)"
-                ).alias("shard")
-            )
-        )
-
-    a8 = assign(points(8)).withColumnRenamed("shard", "s8")
-    a9 = assign(points(9)).withColumnRenamed("shard", "s9")
-    ring = a8.join(a9, "k").agg(
-        F.lit("ring").alias("scheme"),
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum(
-            F.when(F.col("s8") != F.col("s9"), 1).otherwise(0)
-        ).cast("long").alias("n_moved"),
-    )
-    md = keys.agg(
-        F.lit("mod").alias("scheme"),
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum(
-            F.when(F.col("k") % 8 != F.col("k") % 9, 1).otherwise(0)
-        ).cast("long").alias("n_moved"),
-    )
-    return (
-        ring.unionAll(md)
-        .selectExpr(
-            "scheme", "n_keys", "n_moved",
-            "CAST((2 * 1000000 * n_moved + n_keys) div (2 * n_keys)"
-            " AS BIGINT) AS moved_ppm",
-        )
-        .orderBy("scheme")
-    )
-
-
-@query(
-    "shapley_attribution",
-    """
-    WITH r0 AS (
-      SELECT user_id, event_id,
-             CASE WHEN event_type = 'purchase' THEN 'CONV'
-                  ELSE event_type END AS m,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY epoch_us(ts), event_id) AS rk
-      FROM events),
-    pk AS (SELECT user_id, MIN(rk) AS prk FROM r0 WHERE m = 'CONV'
-           GROUP BY 1),
-    um AS (
-      SELECT r0.user_id,
-             CAST(COALESCE(SUM(DISTINCT CASE r0.m
-                 WHEN 'click' THEN 1 WHEN 'error' THEN 2
-                 WHEN 'signup' THEN 4 WHEN 'view' THEN 8 END), 0)
-               AS BIGINT) AS mask,
-             CAST(MAX(CASE WHEN pk.prk IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS conv
-      FROM r0 LEFT JOIN pk USING (user_id)
-      WHERE (pk.prk IS NULL OR r0.rk < pk.prk) AND r0.m <> 'CONV'
-      GROUP BY 1
-      UNION ALL
-      SELECT pk.user_id, 0, 1 FROM pk
-      WHERE pk.prk = 1),
-    mc AS (SELECT mask, CAST(SUM(conv) AS BIGINT) AS n_conv
-           FROM um GROUP BY 1),
-    grid AS (SELECT CAST(g AS BIGINT) AS s FROM range(16) t(g)),
-    v AS (
-      SELECT grid.s,
-             CAST(COALESCE(SUM(mc.n_conv), 0) AS BIGINT) AS v
-      FROM grid LEFT JOIN mc ON (mc.mask & grid.s) = mc.mask
-      GROUP BY grid.s),
-    ch AS (SELECT * FROM (VALUES ('click', 1), ('error', 2),
-                                 ('signup', 4), ('view', 8)) c(name, bit)),
-    phi AS (
-      SELECT ch.name AS channel,
-             CAST(SUM((CASE bit_count(v0.s)
-                         WHEN 0 THEN 6 WHEN 1 THEN 2
-                         WHEN 2 THEN 2 ELSE 6 END)
-                      * (v1.v - v0.v)) AS BIGINT) AS phi24
-      FROM ch JOIN v v0 ON (v0.s & ch.bit) = 0
-              JOIN v v1 ON v1.s = v0.s + ch.bit
-      GROUP BY ch.name),
-    tot AS (SELECT CAST(SUM(phi24) AS BIGINT) AS t FROM phi)
-    SELECT p.channel, p.phi24,
-           CAST(CASE WHEN tot.t > 0 THEN (1000000 * p.phi24) // tot.t
-                ELSE 0 END AS BIGINT) AS share_ppm
-    FROM phi p CROSS JOIN tot
-    ORDER BY channel
-    """,
-)
-def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT Shapley-value attribution over the four pre-purchase
-    channels — the game-theoretic model that completes the attribution
-    family (first/last touch = positional, Markov removal = path
-    counterfactual, Shapley = coalition counterfactual). Each
-    converted user's pre-purchase channel set is a 4-bit mask; the
-    coalition value v(S) counts conversions reachable with channels
-    in S (mask subset-sum, a 16-cell zeta transform); each channel's
-    Shapley value uses the n=4 weights {6,2,2,6}/24, kept as integer
-    24ths so efficiency (sum phi24 = 24*(v(full) - v(empty))) is an
-    exact identity both engines reproduce bit-for-bit. Scale: ONE
-    user-keyed window + distinct-channel aggregate at data scale;
-    everything after is a 16-row grid — no driver sync at all.
-    Share is floor-div ppm of the phi24 total."""
-    ev = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    # r0 (the user-keyed window pass) and pk each feed two consumers:
-    # cuts so the events window runs once per action (optimization r08)
-    r0 = ev.select(
-        "user_id",
-        F.when(F.col("event_type") == "purchase", "CONV")
-        .otherwise(F.col("event_type"))
-        .alias("m"),
-        F.row_number().over(w).alias("rk"),
-    ).transform(_cut_big)
-    # pk is NOT cut: as an RDD leaf its size statistics vanish and the
-    # r0 x pk left join degrades from broadcast to sort-merge (measured
-    # 1.6 -> 8.5 s with pk/v cut); recomputing pk from the r0 leaf is
-    # one cheap aggregation (optimization r08 — see the A/B note in
-    # OPTIMIZATION_r08.md)
-    pk = (
-        r0.where(F.col("m") == "CONV")
-        .groupBy("user_id")
-        .agg(F.min("rk").alias("prk"))
-    )
-    bit = (
-        F.when(F.col("m") == "click", 1)
-        .when(F.col("m") == "error", 2)
-        .when(F.col("m") == "signup", 4)
-        .when(F.col("m") == "view", 8)
-    )
-    um = (
-        r0.join(pk, "user_id", "left")
-        .where(
-            (F.col("prk").isNull() | (F.col("rk") < F.col("prk")))
-            & (F.col("m") != "CONV")
-        )
-        .groupBy("user_id")
-        .agg(
-            F.coalesce(F.sum_distinct(bit), F.lit(0)).cast("long").alias(
-                "mask"
-            ),
-            F.max(
-                F.when(F.col("prk").isNotNull(), 1).otherwise(0)
-            ).cast("long").alias("conv"),
-        )
-        .unionAll(
-            pk.where(F.col("prk") == 1).select(
-                "user_id",
-                F.lit(0).cast("long").alias("mask"),
-                F.lit(1).cast("long").alias("conv"),
-            )
-        )
-    )
-    mc = um.groupBy("mask").agg(F.sum("conv").cast("long").alias("n_conv"))
-    grid = spark.range(16).select(F.col("id").cast("long").alias("s"))
-    v = (
-        grid.join(
-            F.broadcast(mc),
-            (F.col("mask").bitwiseAND(F.col("s")) == F.col("mask")),
-            "left",
-        )
-        .groupBy("s")
-        .agg(
-            F.coalesce(F.sum("n_conv"), F.lit(0)).cast("long").alias("v")
-        )
-    )
-    ch = spark.createDataFrame(
-        [("click", 1), ("error", 2), ("signup", 4), ("view", 8)],
-        "name STRING, bit LONG",
-    )
-    v0 = v.select(F.col("s").alias("s0"), F.col("v").alias("vv0"))
-    v1 = v.select(F.col("s").alias("s1"), F.col("v").alias("vv1"))
-    phi = (
-        ch.join(v0, F.col("s0").bitwiseAND(F.col("bit")) == 0)
-        .join(v1, F.col("s1") == F.col("s0") + F.col("bit"))
-        .groupBy(F.col("name").alias("channel"))
-        .agg(
-            F.sum(
-                F.expr(
-                    "(CASE bit_count(s0) WHEN 0 THEN 6 WHEN 1 THEN 2"
-                    " WHEN 2 THEN 2 ELSE 6 END)"
-                )
-                * (F.col("vv1") - F.col("vv0"))
-            ).cast("long").alias("phi24")
-        )
-    )
-    tot = phi.agg(F.sum("phi24").cast("long").alias("t"))
-    return (
-        phi.crossJoin(F.broadcast(tot))
-        .selectExpr(
-            "channel",
-            "phi24",
-            "CAST(CASE WHEN t > 0 THEN (1000000 * phi24) div t"
-            " ELSE 0 END AS BIGINT) AS share_ppm",
-        )
-        .orderBy("channel")
-    )
-
-
-@query(
-    "cohort_ltv_curve",
-    """
-    WITH su AS (
-      SELECT user_id,
-             MIN(epoch_us(ts) // 86400000000 // 7) AS cw
-      FROM events WHERE event_type = 'signup' GROUP BY 1),
-    mx AS (SELECT MAX(epoch_us(ts) // 86400000000 // 7) AS mw FROM events),
-    coh AS (
-      SELECT su.user_id, su.cw FROM su CROSS JOIN mx
-      WHERE su.cw + 3 <= mx.mw),
-    cs AS (SELECT cw, CAST(COUNT(*) AS BIGINT) AS n_users
-           FROM coh GROUP BY 1),
-    pur AS (
-      SELECT c.cw, epoch_us(e.ts) // 86400000000 // 7 AS pw,
-             CAST(CAST(e.value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
-      FROM events e JOIN coh c ON c.user_id = e.user_id
-      WHERE e.event_type = 'purchase'
-        AND epoch_us(e.ts) // 86400000000 // 7 >= c.cw),
-    grid AS (
-      SELECT cs.cw, cs.n_users, CAST(a.g AS BIGINT) AS age
-      FROM cs, range(4) a(g)),
-    agg AS (
-      SELECT g.cw, g.age, g.n_users,
-             CAST(COALESCE(SUM(CASE WHEN p.pw <= g.cw + g.age
-                                    THEN p.cents END), 0) AS BIGINT)
-               AS cum_revenue_cents
-      FROM grid g LEFT JOIN pur p ON p.cw = g.cw
-      GROUP BY 1, 2, 3)
-    SELECT cw AS cohort_week, age AS age_weeks, n_users,
-           cum_revenue_cents,
-           CAST((1000 * cum_revenue_cents) // n_users AS BIGINT)
-             AS ltv_millicents
-    FROM agg ORDER BY cohort_week, age_weeks
-    """,
-)
-def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value curve: users cohorted by signup week
-    (calendar-free epoch-week, the weekday_effect discipline),
-    cumulative post-signup purchase revenue per user at cohort ages
-    0-3 weeks — the revenue-side completion of retention_cohorts
-    (retention counts who comes back; LTV counts what they're worth),
-    with the future_purchase_labels truncation guard: cohorts whose
-    3-week horizon isn't fully observed are dropped rather than
-    reported short. Exact cents throughout; per-user LTV in floor-div
-    milli-cents. Scale: one min-aggregate per user, one cohort-keyed
-    purchase join (both SF-scaled — shuffle join is correct), a
-    4-cell-per-cohort grid; no row-level state."""
-    ev = load_tables(spark, sf_dir)["events"]
-    week = F.expr("unix_micros(ts) div 86400000000 div 7")
-    su = (
-        ev.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min(week).alias("cw"))
-    )
-    mx = ev.agg(F.max(week).alias("mw"))
-    coh = su.crossJoin(F.broadcast(mx)).where(
-        F.col("cw") + 3 <= F.col("mw")
-    ).select("user_id", "cw")
-    cs = coh.groupBy("cw").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users")
-    )
-    pur = (
-        ev.where(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            week.alias("pw"),
-            F.expr(
-                "CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"
-            ).alias("cents"),
-        )
-        .join(coh, "user_id")
-        .where(F.col("pw") >= F.col("cw"))
-        .select("cw", "pw", "cents")
-    )
-    ages = spark.range(4).select(F.col("id").cast("long").alias("age"))
-    grid = cs.crossJoin(F.broadcast(ages))
-    agg = (
-        grid.join(pur, "cw", "left")
-        .groupBy("cw", "age", "n_users")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("pw") <= F.col("cw") + F.col("age"),
-                        F.col("cents"),
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("cum_revenue_cents")
-        )
-    )
-    return agg.selectExpr(
-        "cw AS cohort_week",
-        "age AS age_weeks",
-        "n_users",
-        "cum_revenue_cents",
-        "CAST((1000 * cum_revenue_cents) div n_users AS BIGINT)"
-        " AS ltv_millicents",
-    ).orderBy("cohort_week", "age_weeks")
-
-
-_LOF_VE_DUCK = (
-    "list_transform(CAST(embedding AS DOUBLE[]),"
-    " x -> CAST(CAST(floor(x * 1e10 + 0.5) AS BIGINT)"
-    " * CAST(0.0000000001 AS DECIMAL(11,10)) AS DECIMAL(12,10)))"
-)
-
-
-@query(
-    "lof_outlier_panel",
-    f"""
-    WITH pan AS (
-      SELECT vec_id, {_LOF_VE_DUCK} AS ve
-      FROM embeddings WHERE vec_id % 97 = 0),
-    pd AS (
-      SELECT a.vec_id AS p, b.vec_id AS o,
-             CAST(ROUND(list_sum(list_transform(list_zip(a.ve, b.ve),
-                  q -> (q[1]-q[2])*(q[1]-q[2]))) * 1000000000000, 0)
-                  AS BIGINT) AS d2t
-      FROM pan a JOIN pan b ON a.vec_id <> b.vec_id),
-    rk AS (
-      SELECT p, o, d2t,
-             ROW_NUMBER() OVER (PARTITION BY p ORDER BY d2t, o) AS rn
-      FROM pd),
-    kd AS (SELECT p, d2t AS kdist FROM rk WHERE rn = 3),
-    nb AS (SELECT p, o, d2t FROM rk WHERE rn <= 3),
-    reach AS (
-      SELECT nb.p, nb.o, GREATEST(kd.kdist, nb.d2t) AS r
-      FROM nb JOIN kd ON kd.p = nb.o),
-    lrd AS (
-      SELECT p, CAST((CAST(3 AS HUGEINT) * 1000000000000000000)
-                     // GREATEST(SUM(r), 1) AS BIGINT) AS lrd_t
-      FROM reach GROUP BY p),
-    lof AS (
-      SELECT nb.p,
-             CAST((CAST(1000000 AS HUGEINT) * SUM(lo.lrd_t))
-                  // (3 * CAST(lp.lrd_t AS HUGEINT)) AS BIGINT) AS lof_ppm
-      FROM nb JOIN lrd lo ON lo.p = nb.o
-              JOIN lrd lp ON lp.p = nb.p
-      GROUP BY nb.p, lp.lrd_t)
-    SELECT CAST(p AS BIGINT) AS vec_id, lof_ppm
-    FROM lof ORDER BY lof_ppm DESC, vec_id LIMIT 10
-    """,
-)
-def lof_outlier_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local Outlier Factor (Breunig et al., k = 3) over a
-    deterministic 1-in-97 embedding panel — the MULTIVARIATE density
-    anomaly detector next to the univariate family (MAD days, CUSUM,
-    event-rate): LOF compares each point's local reachability density
-    to its neighbors' (lof ~ 1e6 ppm = inlier, >> 1e6 = isolated),
-    catching outliers that are normal in every single coordinate.
-    Exact pipeline: decimal-quantized L2^2 rounded to 1e-12 ticks
-    (half-up — identical in both engines on non-negative values),
-    deterministic (dist, id) neighbor ranking, reach-dist =
-    max(k-dist(o), d(p,o)), lrd and the final ratio as floor-div
-    ticks — the whole chain replayed by the oracle. Scale: LOF is
-    inherently O(panel^2) pairwise — the panel IS the design (an
-    audit probe, like the harmonic-centrality seeds); at 100 TB the
-    candidate pairs come from the LSH/IVF bucket index instead of a
-    cross join, same downstream arithmetic. Top-10 by (LOF, id)."""
-    from rocketmq_flink_spark.operators.similarity import _dec, l2_sq
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    pan = emb.where(F.col("vec_id") % 97 == 0).select(
-        "vec_id", _dec(F.col("embedding")).alias("ve")
-    )
-    a = pan.select(F.col("vec_id").alias("p"), F.col("ve").alias("va"))
-    b = pan.select(F.col("vec_id").alias("o"), F.col("ve").alias("vb"))
-    pd_ = (
-        a.join(b, F.col("p") != F.col("o"))
-        .select(
-            "p",
-            "o",
-            F.round(
-                l2_sq(F.col("va"), F.col("vb")) * 1_000_000_000_000, 0
-            ).cast("long").alias("d2t"),
-        )
-    )
-    w = Window.partitionBy("p").orderBy("d2t", "o")
-    rk = pd_.withColumn("rn", F.row_number().over(w))
-    kd = rk.where(F.col("rn") == 3).select("p", F.col("d2t").alias("kdist"))
-    nb = rk.where(F.col("rn") <= 3).select("p", "o", "d2t")
-    reach = nb.join(
-        kd.select(F.col("p").alias("o"), "kdist"), "o"
-    ).select("p", "o", F.greatest("kdist", "d2t").alias("r"))
-    lrd = reach.groupBy("p").agg(
-        F.expr(
-            "CAST((CAST(3 AS DECIMAL(38,0)) * 1000000000000000000)"
-            " div GREATEST(SUM(r), 1) AS BIGINT)"
-        ).alias("lrd_t")
-    )
-    lof = (
-        nb.join(lrd.select(F.col("p").alias("o"), F.col("lrd_t").alias("lo_t")), "o")
-        .join(lrd, "p")
-        .groupBy("p", "lrd_t")
-        .agg(
-            F.expr(
-                "CAST((CAST(1000000 AS DECIMAL(38,0)) * SUM(lo_t))"
-                " div (3 * CAST(FIRST(lrd_t) AS DECIMAL(38,0)))"
-                " AS BIGINT)"
-            ).alias("lof_ppm")
-        )
-    )
-    return (
-        lof.select(
-            F.col("p").cast("long").alias("vec_id"), "lof_ppm"
-        )
-        .orderBy(F.desc("lof_ppm"), "vec_id")
-        .limit(10)
-    )
-
-
 @query(
     "trailing_window_range_frame",
     """
@@ -14521,352 +10530,6 @@ def kmeans_silhouette_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_sil_micro", "max_sil_micro",
         )
         .orderBy("cid")
-    )
-
-
-def _ecod_oracle_sql(k: int = 10) -> str:
-    """DuckDB replay of ECOD: per-dim two-sided ECDF tail ranks over
-    quantized ticks, -log2(n/r) per dim via the fixed-point fold over
-    distinct (r) values, summed per vector."""
-    return f"""
-    WITH RECURSIVE ex AS (
-      SELECT vec_id, z[2] AS d,
-             CAST(floor(z[1] * 1e10 + 0.5) AS BIGINT) AS xq
-      FROM (SELECT vec_id,
-                   unnest(list_zip(CAST(embedding AS DOUBLE[]),
-                                   range(0, 64))) AS z
-            FROM embeddings)),
-    nn AS (SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n
-           FROM ex),
-    rk AS (
-      SELECT vec_id, d, xq,
-             COUNT(*) OVER (PARTITION BY d ORDER BY xq
-               RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS le,
-             COUNT(*) OVER (PARTITION BY d ORDER BY xq DESC
-               RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ge
-      FROM ex),
-    rr AS (
-      SELECT vec_id, d, LEAST(le, ge) AS r FROM rk),
-    dv AS (SELECT DISTINCT r AS v FROM rr
-           WHERE r < (SELECT n FROM nn)),
-    b AS (SELECT v, (SELECT n FROM nn) AS p0,
-                 length(bin((SELECT n FROM nn) // v)) - 1 AS kk
-          FROM dv),
-    it AS (
-      SELECT v, kk, 0 AS i, p0 AS p, (v << kk) AS q,
-             CAST(0 AS BIGINT) AS acc
-      FROM b
-      UNION ALL
-      SELECT v, kk, i + 1,
-             (p >> s)*(p >> s),
-             CASE WHEN (p >> s)*(p >> s) >= 2*((q >> s)*(q >> s))
-                  THEN ((q >> s)*(q >> s)) << 1
-                  ELSE (q >> s)*(q >> s) END,
-             acc*2 + CASE WHEN (p >> s)*(p >> s) >= 2*((q >> s)*(q >> s))
-                     THEN 1 ELSE 0 END
-      FROM (SELECT *, greatest(0, length(bin(q)) - 30) AS s FROM it)
-      WHERE i < 20),
-    lg AS (SELECT v, acc + (CAST(kk AS BIGINT) << 20) AS tick
-           FROM it WHERE i = 20),
-    sc AS (
-      SELECT rr.vec_id,
-             CAST(SUM(COALESCE(lg.tick, 0)) AS BIGINT) AS score_ticks
-      FROM rr LEFT JOIN lg ON lg.v = rr.r
-      GROUP BY rr.vec_id)
-    SELECT CAST(vec_id AS BIGINT) AS vec_id, score_ticks
-    FROM sc ORDER BY score_ticks DESC, vec_id LIMIT {k}
-    """
-
-
-@query("ecod_anomaly_scores", _ecod_oracle_sql())
-def ecod_anomaly_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ECOD anomaly scoring (Li et al. 2022) over the FULL embedding
-    corpus: per dimension, each value's two-sided empirical tail rank
-    r = min(#<=, #>=); the outlier score sums -log2 of the tail
-    probability, i.e. fp_log2(n, r) ticks across the 64 dims — points
-    extreme in MANY dimensions float to the top. The parameter-free,
-    full-corpus complement to lof_outlier_panel (LOF measures local
-    density on a probe panel; ECOD measures marginal extremity
-    everywhere): no pairwise distances at all, so it scales where LOF
-    can't. Ranks are value-frame window counts over quantized 1e-10
-    ticks (tie-inclusive RANGE frames, engine-identical); the log is
-    the shared fixed-point fold over the DISTINCT rank values only.
-    Scale: one explode to (dim, value), 64 dimension-partitioned
-    windows, one vocabulary-sized log join — every stage
-    map-side-combinable or windowed, zero driver sync. Top-10 by
-    (score, id)."""
-    from rocketmq_flink_spark.operators.retrieval import fp_log2_sql
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    ex = emb.select(
-        "vec_id",
-        F.posexplode(F.expr("CAST(embedding AS ARRAY<DOUBLE>)")).alias(
-            "d", "x"
-        ),
-    ).select(
-        "vec_id",
-        "d",
-        F.expr("CAST(floor(x * 1e10 + 0.5) AS BIGINT)").alias("xq"),
-    )
-    nn = emb.agg(F.countDistinct("vec_id").cast("long").alias("n"))
-    wle = (
-        Window.partitionBy("d")
-        .orderBy("xq")
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    wge = (
-        Window.partitionBy("d")
-        .orderBy(F.col("xq").desc())
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    rr = ex.select(
-        "vec_id",
-        "d",
-        F.least(
-            F.count(F.lit(1)).over(wle), F.count(F.lit(1)).over(wge)
-        ).alias("r"),
-    )
-    # fold once per DISTINCT rank value (<= n/2 of them), never per
-    # exploded (vec, dim) row — mirrors the oracle's dv CTE; the join
-    # back is rank-vocabulary sized and broadcasts
-    ticks = (
-        rr.select("r")
-        .distinct()
-        .crossJoin(F.broadcast(nn))
-        .selectExpr(
-            "r",
-            "CASE WHEN r >= n THEN CAST(0 AS BIGINT) ELSE "
-            + fp_log2_sql("n", "r")
-            + " END AS tick",
-        )
-    )
-    sc = (
-        rr.join(F.broadcast(ticks), "r")
-        .groupBy("vec_id")
-        .agg(F.sum("tick").cast("long").alias("score_ticks"))
-    )
-    return (
-        sc.select(F.col("vec_id").cast("long").alias("vec_id"), "score_ticks")
-        .orderBy(F.desc("score_ticks"), "vec_id")
-        .limit(10)
-    )
-
-
-@query(
-    "conformal_spend_interval",
-    """
-    WITH mw AS (SELECT MAX(epoch_us(ts) // 86400000000 // 7) AS w
-                FROM events),
-    us AS (
-      SELECT e.user_id,
-             CAST(COALESCE(SUM(CASE WHEN epoch_us(e.ts) // 86400000000 // 7
-                     BETWEEN mw.w - 3 AND mw.w - 1
-                     AND e.event_type = 'purchase' THEN
-                     CAST(CAST(e.value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                   END), 0) AS BIGINT) AS hist,
-             CAST(COALESCE(SUM(CASE WHEN epoch_us(e.ts) // 86400000000 // 7
-                     = mw.w AND e.event_type = 'purchase' THEN
-                     CAST(CAST(e.value AS DECIMAL(12,2)) * 100 AS BIGINT)
-                   END), 0) AS BIGINT) AS actual
-      FROM events e CROSS JOIN mw GROUP BY 1),
-    r AS (
-      SELECT user_id,
-             ABS(actual - hist // 3) AS res,
-             (('0x' || substr(md5('conf:' || CAST(user_id AS VARCHAR)),
-               1, 15))::BIGINT) % 2 = 0 AS is_cal
-      FROM us),
-    cal AS (
-      SELECT res, ROW_NUMBER() OVER (ORDER BY res, user_id) AS rn
-      FROM r WHERE is_cal),
-    nc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM cal),
-    qq AS (
-      SELECT res AS q FROM cal CROSS JOIN nc
-      WHERE rn = LEAST((9 * nc.n + 18) // 10, nc.n)),
-    tst AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
-             CAST(SUM(CASE WHEN r.res <= qq.q THEN 1 ELSE 0 END)
-                  AS BIGINT) AS covered
-      FROM r CROSS JOIN qq WHERE NOT r.is_cal)
-    SELECT nc.n AS n_cal, tst.n_test, qq.q AS q_cents,
-           CAST((2 * 1000000 * tst.covered + tst.n_test)
-                // (2 * tst.n_test) AS BIGINT) AS coverage_ppm
-    FROM nc CROSS JOIN qq CROSS JOIN tst
-    """,
-)
-def conformal_spend_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal prediction interval (alpha = 0.1) for next-week
-    user spend: the point predictor is the trailing-3-week floor-div
-    mean, the calibration half (hash split) supplies the
-    ceil(0.9*(n+1))-th smallest absolute residual as the
-    distribution-free interval half-width q, and the held-out half
-    measures empirical coverage — the finite-sample guarantee
-    (coverage >= 90% in expectation) that no parametric interval
-    gives, and the uncertainty layer the point forecasts
-    (holt_linear_forecast) lack. Everything rank-exact integer cents;
-    coverage in half-up ppm. Scale: one per-user two-column aggregate,
-    then the calibration quantile is selected rank-exactly over the
-    DISTINCT-RESIDUAL HISTOGRAM via distributed_prefix (bucketed
-    prefix sums — no partition-less window; a user-scale row_number
-    here would sort the whole user dimension in one task), two scalar
-    broadcasts."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    ev = load_tables(spark, sf_dir)["events"]
-    week = F.expr("unix_micros(ts) div 86400000000 div 7")
-    mw = ev.agg(F.max(week).alias("w"))
-    cents = F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-    us = (
-        ev.crossJoin(F.broadcast(mw))
-        .groupBy("user_id")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        week.between(F.col("w") - 3, F.col("w") - 1)
-                        & (F.col("event_type") == "purchase"),
-                        cents,
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("hist"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        (week == F.col("w"))
-                        & (F.col("event_type") == "purchase"),
-                        cents,
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("actual"),
-        )
-    )
-    r = us.select(
-        "user_id",
-        F.abs(F.col("actual") - F.expr("hist div 3")).alias("res"),
-        (
-            hash60(F.concat(F.lit("conf:"), F.col("user_id").cast("string")))
-            % 2
-            == 0
-        ).alias("is_cal"),
-    )
-    # the per-user residuals feed FOUR consumers (the histogram's
-    # bounds + main prefix passes, the test-coverage half, the final
-    # join); localCheckpoint materializes the events aggregate once —
-    # tiny: three columns x users
-    r = r.transform(_cut_big)
-    from rocketmq_flink_spark.operators.ranking import distributed_prefix
-
-    # Rank-exact quantile over the distinct-residual histogram: the
-    # k-th smallest residual (counting multiplicity) is the value
-    # whose inclusive prefix count first reaches k. cum_c comes from
-    # bucketed prefix sums, so no single task ever sees more than one
-    # bucket of the histogram; n (the calibration count) rides the
-    # bounds pass for free.
-    v = (
-        r.where("is_cal")
-        .groupBy("res")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    vp = distributed_prefix(
-        v,
-        ["res"],
-        "res",
-        sum_cols=["c"],
-        extra_agg={"n": F.sum("c").cast("long")},
-    ).withColumn(
-        "k", F.least(F.expr("(9 * n + 18) div 10"), F.col("n"))
-    )
-    qq = vp.where(
-        (F.col("cum_c") >= F.col("k"))
-        & (F.col("cum_c") - F.col("c") < F.col("k"))
-    ).select(F.col("n"), F.col("res").alias("q"))
-    tst = (
-        r.where(~F.col("is_cal"))
-        .crossJoin(F.broadcast(qq.select("q")))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_test"),
-            F.sum(
-                F.when(F.col("res") <= F.col("q"), 1).otherwise(0)
-            ).cast("long").alias("covered"),
-        )
-    )
-    return (
-        qq.crossJoin(F.broadcast(tst))
-        .selectExpr(
-            "n AS n_cal",
-            "n_test",
-            "q AS q_cents",
-            "CAST((2 * 1000000 * covered + n_test) div (2 * n_test)"
-            " AS BIGINT) AS coverage_ppm",
-        )
-    )
-
-
-@query(
-    "srm_assignment_check",
-    """
-    WITH arm AS (
-      SELECT DISTINCT user_id,
-             CASE WHEN (('0x' || substr(md5('did:' ||
-                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT) % 2 = 0
-               THEN 'T' ELSE 'C' END AS arm
-      FROM events),
-    c AS (
-      SELECT CAST(SUM(CASE WHEN arm = 'T' THEN 1 ELSE 0 END) AS BIGINT)
-               AS nt,
-             CAST(SUM(CASE WHEN arm = 'C' THEN 1 ELSE 0 END) AS BIGINT)
-               AS nc
-      FROM arm)
-    SELECT nt AS n_users_t, nc AS n_users_c,
-           CAST((1000000 * (nt - nc) * (nt - nc)) // (nt + nc) AS BIGINT)
-             AS chi2_micro,
-           CAST(CASE WHEN 1000000 * (nt - nc) * (nt - nc)
-                     > 3841459 * (nt + nc) THEN 1 ELSE 0 END AS BIGINT)
-             AS srm_detected
-    FROM c
-    """,
-)
-def srm_assignment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch guard — the experiment-ops check that
-    must pass BEFORE any readout (CUPED, DiD, z-test) is trusted: a
-    chi-squared test of the observed 50/50 hash-assignment counts,
-    chi2 = (n_T - n_C)^2/(n_T + n_C) in exact micro ticks against the
-    3.841459 alpha = 0.05 critical value (the McNemar tick
-    discipline — even the reject bit hash-certifies). A detected SRM
-    means the assignment or logging pipeline is dropping one arm's
-    users, which silently biases every downstream estimate. On the
-    healthy fixture the bit is 0 — like the integrity audit, the
-    value is the check running. Scale: one distinct-user pass, one
-    2-cell fold."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    ev = load_tables(spark, sf_dir)["events"]
-    arm = ev.select("user_id").distinct().select(
-        F.when(
-            hash60(F.concat(F.lit("did:"), F.col("user_id").cast("string")))
-            % 2 == 0,
-            F.lit("T"),
-        ).otherwise(F.lit("C")).alias("arm")
-    )
-    return (
-        arm.agg(
-            F.sum(F.when(F.col("arm") == "T", 1).otherwise(0))
-            .cast("long")
-            .alias("nt"),
-            F.sum(F.when(F.col("arm") == "C", 1).otherwise(0))
-            .cast("long")
-            .alias("nc"),
-        )
-        .selectExpr(
-            "nt AS n_users_t",
-            "nc AS n_users_c",
-            "CAST((1000000 * (nt - nc) * (nt - nc)) div (nt + nc)"
-            " AS BIGINT) AS chi2_micro",
-            "CAST(CASE WHEN 1000000 * (nt - nc) * (nt - nc)"
-            " > 3841459 * (nt + nc) THEN 1 ELSE 0 END AS BIGINT)"
-            " AS srm_detected",
-        )
     )
 
 
@@ -15151,95 +10814,6 @@ def feature_hash_collision_report(spark: SparkSession, sf_dir: str) -> DataFrame
     for o in outs[1:]:
         out = out.unionAll(o)
     return out.orderBy("n_buckets")
-
-
-@query(
-    "quantile_treatment_effect",
-    """
-    WITH p AS (
-      SELECT CASE WHEN (('0x' || substr(md5('did:' ||
-                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT) % 2 = 0
-               THEN 'T' ELSE 'C' END AS arm,
-             CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'),
-    h AS (SELECT arm, cents, CAST(COUNT(*) AS BIGINT) AS c
-          FROM p GROUP BY 1, 2),
-    w AS (
-      SELECT arm, cents,
-             SUM(c) OVER (PARTITION BY arm ORDER BY cents) AS cc,
-             SUM(c) OVER (PARTITION BY arm) AS n
-      FROM h),
-    qs AS (SELECT unnest([25, 50, 75, 90]) AS q),
-    qv AS (
-      SELECT qs.q, w.arm, MIN(w.cents) AS v
-      FROM qs JOIN w ON 100 * w.cc >= qs.q * w.n
-      GROUP BY 1, 2)
-    SELECT t.q AS percentile, t.v AS t_cents, c.v AS c_cents,
-           t.v - c.v AS qte_cents
-    FROM (SELECT q, v FROM qv WHERE arm = 'T') t
-    JOIN (SELECT q, v FROM qv WHERE arm = 'C') c USING (q)
-    ORDER BY percentile
-    """,
-)
-def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile treatment effects at p25/50/75/90 — the readout that
-    catches what mean-based estimates (z-test, CUPED, DiD) average
-    away: a treatment that moves only the tail shows a flat median
-    and a large p90 effect. Per-arm purchase-value quantiles are
-    rank-EXACT (smallest value whose cumulative count crosses the
-    rank, from the per-arm distinct-value histogram, never
-    percentile_approx), so the
-    per-quantile difference is exact cents. On the untreated fixture
-    the effects are the A/A noise floor. Scale: one (arm, value)
-    histogram then arm-partitioned cumulative windows over DISTINCT
-    values — no row-level sort."""
-    from rocketmq_flink_spark.functions.porthash import hash60
-
-    ev = load_tables(spark, sf_dir)["events"]
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.when(
-            hash60(F.concat(F.lit("did:"), F.col("user_id").cast("string")))
-            % 2 == 0,
-            F.lit("T"),
-        ).otherwise(F.lit("C")).alias("arm"),
-        F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").alias(
-            "cents"
-        ),
-    )
-    h = p.groupBy("arm", "cents").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    wcum = (
-        Window.partitionBy("arm")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("arm")
-    w = h.select(
-        "arm",
-        "cents",
-        F.sum("c").over(wcum).alias("cc"),
-        F.sum("c").over(wall).alias("n"),
-    )
-    qs = spark.createDataFrame([(25,), (50,), (75,), (90,)], "q LONG")
-    qv = (
-        F.broadcast(qs)
-        .join(w, 100 * F.col("cc") >= F.col("q") * F.col("n"))
-        .groupBy("q", "arm")
-        .agg(F.min("cents").alias("v"))
-    )
-    t = qv.where(F.col("arm") == "T").select("q", F.col("v").alias("t_cents"))
-    c = qv.where(F.col("arm") == "C").select("q", F.col("v").alias("c_cents"))
-    return (
-        t.join(c, "q")
-        .select(
-            F.col("q").alias("percentile"),
-            "t_cents",
-            "c_cents",
-            (F.col("t_cents") - F.col("c_cents")).alias("qte_cents"),
-        )
-        .orderBy("percentile")
-    )
 
 
 @query(

@@ -199,9 +199,3 @@ def spread_for_compute(df, min_partitions: int | None = None):
         return df  # streaming plan: leave as-is
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target) if n < target else df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each fixture table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

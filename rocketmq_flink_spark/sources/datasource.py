@@ -148,8 +148,8 @@ def _read_partition(part: QueueRanges):
             continue
         tbl = with_msg_ids(tbl, part.topic, queue_id)
         arrays = [
-            pa.array([part.topic] * n, pa.string()),
-            pa.array([queue_id] * n, pa.int32()),
+            pa.repeat(pa.scalar(part.topic, pa.string()), n),
+            pa.repeat(pa.scalar(queue_id, pa.int32()), n),
             tbl.column("offset").combine_chunks(),
             tbl.column("msg_id").combine_chunks(),
             tbl.column("keys").combine_chunks(),

@@ -56,19 +56,6 @@ def test_truncation_loss_is_monotone_in_context_len(spark):
     assert (df["tokens_lost"] <= df["tokens_total"]).all()
 
 
-def test_attribution_conserves_purchases(spark):
-    df = _run(spark, "last_touch_attribution")
-    con = duckdb.connect()
-    n, cents = con.execute(
-        f"""SELECT COUNT(*), CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                                 AS BIGINT)
-            FROM '{SF}/events.parquet' WHERE event_type = 'purchase'"""
-    ).fetchone()
-    assert int(df["n_purchases"].sum()) == n
-    assert int(df["value_cents"].sum()) == cents
-    assert set(df["channel"]) <= {"view", "click", "direct"}
-
-
 def test_ndcg_bounds_and_perfect_case(spark):
     df = _run(spark, "ndcg_retrieval_eval")
     assert len(df) == 8
@@ -78,53 +65,6 @@ def test_ndcg_bounds_and_perfect_case(spark):
     perfect = df[(df["hits_at_10"] == 10) & (df["n_rel_corpus"] >= 10)]
     assert (perfect["ndcg_ppm"] == 1000000).all()
     assert (df["hits_at_10"] <= df["n_rel_corpus"].clip(upper=10)).all()
-
-
-def test_activity_streaks_invariants(spark):
-    df = _run(spark, "activity_streaks_users")
-    assert (df["best_streak"] >= 1).all()
-    assert (df["best_streak"] <= df["n_active_days"]).all()
-    assert df["start_day_idx"].between(0, 30).all()
-    streaks = list(df["best_streak"])
-    assert streaks == sorted(streaks, reverse=True)
-
-
-def test_kaplan_meier_matches_python_witness(spark):
-    df = _run(spark, "kaplan_meier_signup_to_purchase")
-    con = duckdb.connect()
-    rows = con.execute(
-        f"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-                               event_type
-                        FROM '{SF}/events.parquet'),
-        su AS (SELECT user_id, MIN(day) AS sday FROM ev
-               WHERE event_type='signup' GROUP BY user_id),
-        pu AS (SELECT ev.user_id, MIN(ev.day) AS pday FROM ev
-               JOIN su ON ev.user_id = su.user_id
-               WHERE ev.event_type='purchase' AND ev.day >= su.sday
-               GROUP BY ev.user_id)
-        SELECT date_diff('day', su.sday,
-                 COALESCE(pu.pday, (SELECT MAX(day) FROM ev))),
-               pu.pday IS NOT NULL
-        FROM su LEFT JOIN pu ON su.user_id = pu.user_id"""
-    ).fetchall()
-    n = len(rows)
-    s = 1000000
-    expect = []
-    for t in sorted({t for t, e in rows if e}):
-        n_risk = sum(1 for tu, _ in rows if tu >= t)
-        d = sum(1 for tu, e in rows if e and tu == t)
-        s = (2 * s * (n_risk - d) + n_risk) // (2 * n_risk)
-        expect.append((t, n_risk, d, s))
-    got = list(
-        zip(df["t_days"], df["n_at_risk"], df["d_events"], df["surv_ppm"])
-    )
-    assert [(int(a), int(b), int(c), int(d)) for a, b, c, d in got] == expect
-    # survival is non-increasing and the risk set strictly shrinks
-    sv = list(df["surv_ppm"])
-    assert all(b <= a for a, b in zip(sv, sv[1:]))
-    nr = list(df["n_at_risk"])
-    assert all(b < a for a, b in zip(nr, nr[1:]))
-    assert n >= nr[0]
 
 
 def test_jsd_pair_structure_and_range(spark):
@@ -150,7 +90,7 @@ def test_jsd_identical_distributions_are_zero(spark):
 
 
 def test_sprt_constants_and_boundaries_are_exact():
-    """The SPRT monitor's tick constants equal the pure-Python fp_log2
+    """SPRT-style tick constants from fp_log2 equal the pure-Python
     witness, and the boundaries are the exact closed forms:
     log2(16) = 4*2^20 ticks, log2(4/19) = 2*2^20 - fp_log2(19)."""
     from rocketmq_flink_spark.operators.retrieval import fp_log2_py
@@ -166,7 +106,7 @@ def test_sprt_constants_and_boundaries_are_exact():
 
 
 def test_sign_split_floor_div_matches_python_floor():
-    """The sign-split integer division used by the Holt/forecast folds
+    """Sign-split integer division
     (CASE WHEN v >= 0 THEN v div 4 ELSE -(((-v) + 3) div 4) END under
     TRUNCATING div) equals Python's flooring // for every residue
     class and sign."""
@@ -180,66 +120,3 @@ def test_sign_split_floor_div_matches_python_floor():
 
     for v in range(-25, 26):
         assert fdiv4(v) == v // 4, v
-
-
-def test_shapley_efficiency_identity(spark):
-    """Shapley efficiency: sum(phi24) == 24 * (v(full) - v(empty)),
-    with v(full) = all conversions and v(empty) = conversions of
-    purchase-first users (empty pre-purchase channel set) — computed
-    here independently of the catalog query's grid pipeline."""
-    from pyspark.sql import functions as F
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-    from rocketmq_flink_spark.session import load_tables
-
-    sf = "/root/testdata/sf0.001"
-    out = {
-        r["channel"]: r["phi24"]
-        for r in REGISTRY["shapley_attribution"].fn(spark, sf).collect()
-    }
-    ev = load_tables(spark, sf)["events"]
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros("ts"), "event_id"
-    )
-    r0 = ev.select(
-        "user_id",
-        F.col("event_type").alias("m"),
-        F.row_number().over(w).alias("rk"),
-    )
-    first = r0.where(F.col("rk") == 1)
-    v_full = r0.where(F.col("m") == "purchase").select(
-        "user_id"
-    ).distinct().count()
-    v_empty = first.where(F.col("m") == "purchase").count()
-    assert sum(out.values()) == 24 * (v_full - v_empty)
-    assert all(v >= 0 for v in out.values())
-
-
-def test_markov_matrix_guard_rejects_high_cardinality(spark):
-    # VERDICT r4 item 5: the driver-side absorption fold must refuse to
-    # collect a transition matrix whose state vocabulary exceeds the cap
-    # — a high-cardinality state column raises instead of silently
-    # pulling an unbounded matrix to the driver.
-    import pytest
-
-    from rocketmq_flink_spark.plans.catalog import (
-        _MARKOV_MAX_STATES,
-        _collect_bounded_transition_matrix,
-    )
-
-    big = spark.range(_MARKOV_MAX_STATES + 10).selectExpr(
-        "CAST(id AS STRING) AS s",
-        "CAST(id + 1 AS STRING) AS t",
-        "CAST(1 AS BIGINT) AS c",
-    )
-    with pytest.raises(ValueError, match="absorption cap"):
-        _collect_bounded_transition_matrix(big)
-    small = spark.createDataFrame(
-        [("START", "view", 3), ("view", "CONV", 2)], "s string, t string, c long"
-    )
-    assert sorted(_collect_bounded_transition_matrix(small)) == [
-        ("START", "view", 3),
-        ("view", "CONV", 2),
-    ]

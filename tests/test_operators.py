@@ -347,39 +347,6 @@ def test_resize_media_stub(spark, docs):
     assert bad == 0
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    from rocketmq_flink_spark.operators.bucketing import (
-        bucketed_join,
-        exchange_count,
-        write_bucketed,
-    )
-
-    li = load_tables(spark, "/root/testdata/sf0.001")["lineitem"].select(
-        "l_orderkey", "l_quantity"
-    )
-    orders = load_tables(spark, "/root/testdata/sf0.001")["orders"].select(
-        "o_orderkey", "o_totalprice"
-    ).withColumnRenamed("o_orderkey", "l_orderkey")
-    write_bucketed(li, "li_b", "l_orderkey", num_buckets=8, sort_cols="l_orderkey")
-    write_bucketed(orders, "ord_b", "l_orderkey", num_buckets=8,
-                   sort_cols="l_orderkey")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force a sort-merge join so the test exercises the co-located
-        # path (tiny test tables would otherwise broadcast)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "li_b", "ord_b", "l_orderkey")
-        # co-located buckets: no shuffle on either side
-        assert exchange_count(joined) == 0
-        # and the result matches the plain join
-        plain = li.join(orders, "l_orderkey")
-        assert joined.count() == plain.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS ord_b")
-
-
 def test_asof_join_null_value_in_latest_right_row_survives(spark):
     from rocketmq_flink_spark.operators.joins import asof_join
 

@@ -122,11 +122,6 @@ def test_corpus_shuffle_and_funnel_shapes(spark):
     # the corpus shuffle is ONE global sort on the 8-byte hash key
     plan = _plan(REGISTRY["deterministic_corpus_shuffle"].fn(spark, SF))
     assert "EvalPython" not in plan
-    # funnel: per-stage aggregates ride broadcast joins, no window over
-    # the raw event stream
-    plan = _plan(REGISTRY["conversion_funnel"].fn(spark, SF))
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_semantic_dedup_pairs_are_cid_hash_join(spark):
@@ -192,11 +187,9 @@ def test_rrf_fusion_no_cartesian(spark):
 
 
 def test_behavioral_and_stats_ops_no_cartesian_no_python(spark):
-    # funnel-family + Heaps + calibration + truncation: all must stay
-    # JVM-side with no cartesian blowup; the funnel stage tables reach
-    # their joins as broadcasts
+    # Heaps + calibration + truncation: all must stay JVM-side with no
+    # cartesian blowup
     for name in (
-        "last_touch_attribution",
         "heaps_law_vocab_growth",
         "source_quality_calibration",
         "truncation_loss_report",
@@ -219,31 +212,6 @@ def test_ndcg_reuses_broadcast_knn_no_python(spark):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "BroadcastHashJoin" in plan  # label counts + rcnt reach as broadcasts
-
-
-def test_psi_and_kanonymity_no_cartesian_no_python(spark):
-    plan = _plan(REGISTRY["k_anonymity_report"].fn(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_round4c3_stats_ops_no_cartesian_no_python(spark):
-    # MK/Spearman run on the daily table; trigrams on a
-    # user-partitioned window — all JVM-side, no cartesian blowup
-    for name in (
-        "mann_kendall_trend_daily",
-        "spearman_daily_activity_value",
-        "event_trigram_patterns",
-        "holt_linear_forecast",
-        "user_type_entropy",
-        "future_purchase_labels",
-        "clipped_contribution_report",
-    ):
-        plan = _plan(REGISTRY[name].fn(spark, SF))
-        assert "CartesianProduct" not in plan, name
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
 
 
 def test_nb_auc_model_broadcasts(spark):
@@ -280,12 +248,9 @@ def test_round4c3_pipeline_ops_no_cartesian_no_python(spark):
         "source_quality_scorecard",
         "dedup_sensitivity_curve",
         "readability_by_source",
-        "rfm_user_segments",
         "bigram_next_token_accuracy",
         "token_budget_waterfill",
-        "interarrival_histogram",
         "embedding_dim_variance",
-        "holt_backtest_mae",
     ):
         plan = _plan(REGISTRY[name].fn(spark, SF))
         assert "CartesianProduct" not in plan, name
@@ -307,19 +272,14 @@ def test_mmr_pool_cut_is_take_ordered(spark):
 
 
 def test_round4c3_final_wave_no_cartesian_no_python(spark):
-    # sensitivity studies, sequential tests, ops analytics: all
+    # diversity, paired tests, mixture and sensitivity studies: all
     # JVM-side; literal-axis broadcasts compile to BNLJ, never
     # CartesianProduct
     for name in (
         "simpson_diversity_by_source",
-        "weekday_effect_eta_squared",
         "mcnemar_nb_vs_majority",
-        "power_analysis_sample_size",
-        "sprt_conversion_monitor",
-        "attribution_model_comparison",
         "post_dedup_mixture_weights",
         "jaccard_threshold_sensitivity",
-        "conversion_window_sensitivity",
     ):
         plan = _plan(REGISTRY[name].fn(spark, SF))
         assert "CartesianProduct" not in plan, name
@@ -328,18 +288,13 @@ def test_round4c3_final_wave_no_cartesian_no_python(spark):
 
 
 def test_session_c4_ops_no_cartesian_no_python(spark):
-    # continuation-4 wave: audits, causal readouts, retrieval — all
-    # JVM-side; the only Python in any of these plans is
-    # the model-sized driver fold in markov_removal_attribution
-    # (excluded here: its output is a literal frame by design)
+    # continuation-4 wave: text statistics, bitmaps, retrieval — all
+    # JVM-side, no cartesian blowup
     for name in (
-        "did_treatment_effect",
         "token_burstiness_report",
         "rake_keyword_extraction",
-        "cuped_adjusted_abtest",
         "bitmap_segment_intersections",
         "query_likelihood_search",
-        "consistent_hash_rebalance",
     ):
         plan = _plan(REGISTRY[name].fn(spark, SF))
         assert "CartesianProduct" not in plan, name
@@ -355,15 +310,8 @@ def test_matryoshka_no_corpus_grid(spark):
 
 
 def test_session_c4_second_wave_no_cartesian_no_python(spark):
-    # optimizer audits, anomaly scores, intervals, planners: all
-    # JVM-side (LOF's panel pair join is an inequality hash-range
-    # join, never CartesianProduct; ECOD is windows + one log join)
+    # range-frame windows and cluster scoring: both JVM-side
     for name in (
-        "shapley_attribution",
-        "cohort_ltv_curve",
-        "ecod_anomaly_scores",
-        "conformal_spend_interval",
-        "srm_assignment_check",
         "trailing_window_range_frame",
         "kmeans_silhouette_score",
     ):
@@ -392,7 +340,6 @@ def test_session_c4_third_wave_no_cartesian_no_python(spark):
         "retrieval_model_comparison",
         "schema_evolution_merge",
         "feature_hash_collision_report",
-        "quantile_treatment_effect",
         "point_in_time_features",
         "event_lateness_profile",
         "late_data_router_audit",
@@ -470,23 +417,13 @@ def test_ranked_queries_no_base_table_single_partition_window(spark):
 # a calendar axis, a fixed bucket census, or a small vocabulary — never
 # an entity key (user/order/doc id) that grows with the data. An
 # arbitrary Aggregate is NOT bounded (round-6 verdict: a groupBy over
-# user_id is an Aggregate but user-scale — exactly how the pre-fix
-# conformal_spend_interval slipped past the old heuristic); every entry
-# here names WHY its axis stays small at 100x the rows.
+# user_id is an Aggregate but user-scale, and a per-user ranking once
+# slipped past the old heuristic that way); every entry here names WHY
+# its axis stays small at 100x the rows.
 _BOUNDED_GROUPED_WINDOW_AXES = {
     "contiguous_id_assignment": "fixed B=32 bucket census",
     "event_lateness_profile": "distinct-lateness (ms value) histogram",
     "heaps_law_vocab_growth": "ten-checkpoint corpus decile axis",
-    "kaplan_meier_signup_to_purchase": (
-        "observation-window day-offset step table (~tens of rows)"
-    ),
-    "mannwhitney_value_drift": "distinct event-value cents histogram",
-    "rfm_user_segments": (
-        "distinct R/F/M value histograms (day/count/cents domains)"
-    ),
-    "spearman_daily_activity_value": "calendar-day axis",
-    "sprt_conversion_monitor": "calendar-day axis",
-    "theil_sen_trend_daily": "calendar-day axis",
     "token_budget_waterfill": "corpus source vocabulary",
 }
 
@@ -504,12 +441,12 @@ def _subtree_bounded(node, allow_grouped_agg=False):
     one row), or, only for allowlisted queries, a grouped aggregate
     over a certified-bounded axis. A grouped aggregate outside the
     allowlist does NOT bound (its output is group-count-sized, which
-    can be entity-scale — the pre-fix conformal ranked one row per
-    USER); a Limit below it still does. Everything else — joins,
+    can be entity-scale, such as one row per USER); a Limit below it
+    still does. Everything else — joins,
     unions, projections, filters, exchanges — is bounded only if ALL
     its inputs are: `any` semantics here let a 1-row broadcast side
     of a crossJoin "bound" an entity-scale probe side, which is
-    exactly the false negative that hid the conformal finding."""
+    exactly the false negative that once hid a per-user ranking."""
     name = node.getClass().getSimpleName()
     if "Limit" in name or "TakeOrdered" in name:
         return True
@@ -540,9 +477,9 @@ def test_registry_wide_no_unbounded_single_partition_windows(spark):
     — a global window directly over a scan-sized OR entity-keyed
     stream moves the whole dimension through one task. The round-4
     verdict named five such queries; a full-plan sweep found six more;
-    round 6 found conformal_spend_interval ranking the user dimension
-    through an Aggregate the old heuristic wrongly accepted as
-    bounded. This sweep keeps the class extinct."""
+    round 6 found a query ranking the user dimension through an
+    Aggregate the old heuristic wrongly accepted as bounded. This sweep
+    keeps the class extinct."""
     bad = []
     for name in REGISTRY:
         allow = name in _BOUNDED_GROUPED_WINDOW_AXES

@@ -497,61 +497,6 @@ def test_isqrt_engine_parity(spark, xs):
 
 @settings(**SETTINGS)
 @given(
-    xs=st.lists(
-        st.integers(min_value=1, max_value=30), min_size=3, max_size=40
-    )
-)
-def test_mann_kendall_oracle_matches_python_witness(xs):
-    """The mann_kendall_trend_daily ORACLE equals a direct pairwise
-    pure-Python computation (S, tie-corrected var18, tau ppm, squared
-    continuity-corrected decision) on an arbitrary daily-count series
-    — one synthetic event row per day per count unit."""
-    import datetime
-
-    import duckdb
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    rows = []
-    eid = 0
-    for d, c in enumerate(xs):
-        day = datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)
-        for _ in range(c):
-            rows.append((eid, day))
-            eid += 1
-    con = duckdb.connect()
-    con.execute("CREATE TABLE events(event_id BIGINT, ts TIMESTAMP)")
-    con.executemany("INSERT INTO events VALUES (?, ?)", rows)
-    got = con.execute(REGISTRY["mann_kendall_trend_daily"].oracle).fetchone()
-
-    n = len(xs)
-    s = sum(
-        (1 if b > a else -1 if b < a else 0)
-        for i, a in enumerate(xs)
-        for b in xs[i + 1:]
-    )
-    from collections import Counter
-
-    ties = Counter(xs)
-    var18 = n * (n - 1) * (2 * n + 5) - sum(
-        t * (t - 1) * (2 * t + 5) for t in ties.values()
-    )
-    pairs = n * (n - 1) // 2
-    tau = (
-        (2 * 1_000_000 * s + pairs) // (2 * pairs)
-        if s >= 0
-        else -((2 * 1_000_000 * (-s) + pairs) // (2 * pairs))
-    )
-    reject = (
-        0
-        if s == 0
-        else int(18_000_000 * (abs(s) - 1) ** 2 > 3_841_600 * var18)
-    )
-    assert got == (n, s, var18, tau, reject)
-
-
-@settings(**SETTINGS)
-@given(
     masses=st.lists(
         st.integers(min_value=1, max_value=400), min_size=2, max_size=12
     )
@@ -703,77 +648,6 @@ def test_simpson_oracle_matches_fraction_witness(masses, dups):
 
 @settings(**SETTINGS)
 @given(
-    users=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=12),  # user_id
-            st.integers(min_value=0, max_value=500000),  # pre cents
-            st.integers(min_value=0, max_value=500000),  # post cents
-        ),
-        min_size=2,
-        max_size=25,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_cuped_oracle_matches_fraction_witness(users):
-    """The cuped_adjusted_abtest ORACLE equals a Fraction-exact CUPED
-    witness (pooled theta = Cov/Var, sign-split trunc divisions) on
-    arbitrary per-user pre/post spends."""
-    import duckdb
-    import hashlib
-
-    from hypothesis import assume
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    def arm(uid):
-        h = int(hashlib.md5(f"did:{uid}".encode()).hexdigest()[:15], 16)
-        return "T" if h % 2 == 0 else "C"
-
-    assume(len({arm(u) for u, _, _ in users}) == 2)  # both arms present
-    # variance of X must be nonzero for theta to exist
-    xs = [x for _, x, _ in users]
-    assume(len(set(xs)) > 1)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE events(user_id BIGINT, event_type VARCHAR,"
-        " ts TIMESTAMP, value DOUBLE)"
-    )
-    ins = []
-    for uid, pre, post in users:
-        if pre:
-            ins.append((uid, "purchase", "2024-01-05 00:00:00", pre / 100.0))
-        if post:
-            ins.append((uid, "purchase", "2024-01-20 00:00:00", post / 100.0))
-        ins.append((uid, "view", "2024-01-02 00:00:00", 1.0))
-    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", ins)
-    got = con.execute(REGISTRY["cuped_adjusted_abtest"].oracle).fetchone()
-
-    def trunc_div(a, b):
-        return a // b if a >= 0 else -((-a) // b)
-
-    n = len(users)
-    sx = sum(x for _, x, _ in users)
-    sy = sum(y for _, _, y in users)
-    sxx = sum(x * x for _, x, _ in users)
-    sxy = sum(x * y for _, x, y in users)
-    a_ = n * sxy - sx * sy
-    b_ = n * sxx - sx * sx
-    t = [(x, y) for u, x, y in users if arm(u) == "T"]
-    c = [(x, y) for u, x, y in users if arm(u) == "C"]
-    nt, nc = len(t), len(c)
-    dy = sum(y for _, y in t) * nc - sum(y for _, y in c) * nt
-    dx = sum(x for x, _ in t) * nc - sum(x for x, _ in c) * nt
-    assert got == (
-        nt,
-        nc,
-        trunc_div(1000 * dy, nt * nc),
-        trunc_div(1_000_000 * a_, b_),
-        trunc_div(1000 * (dy * b_ - a_ * dx), nt * nc * b_),
-    )
-
-
-@settings(**SETTINGS)
-@given(
     pairs=st.lists(
         st.tuples(
             st.sampled_from(["view", "click", "purchase"]),
@@ -815,279 +689,6 @@ def test_bitmap_intersections_oracle_matches_set_witness(pairs):
                     (a, b, na, nb, ni, (2 * 1_000_000 * ni + un) // (2 * un))
                 )
     assert got == want
-
-
-@settings(**SETTINGS)
-@given(
-    users=st.lists(
-        st.integers(min_value=0, max_value=10**6),
-        min_size=1,
-        max_size=80,
-        unique=True,
-    )
-)
-def test_consistent_hash_oracle_matches_ring_witness(users):
-    """The consistent_hash_rebalance ORACLE equals a pure-Python ring
-    (same md5 points, clockwise arg-min) and modulo model."""
-    import duckdb
-    import hashlib
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    def assign(uid, n_shards):
-        kh = h60(f"key:{uid}")
-        best, bestadj = None, None
-        for shard in range(n_shards):
-            for vn in range(8):
-                p = h60(f"ring:{shard}:{vn}")
-                adj = p if p >= kh else p + (1 << 60)
-                if bestadj is None or adj < bestadj:
-                    best, bestadj = shard, adj
-        return best
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE events(user_id BIGINT)")
-    con.executemany("INSERT INTO events VALUES (?)", [(u,) for u in users])
-    got = {r[0]: r for r in con.execute(
-        REGISTRY["consistent_hash_rebalance"].oracle
-    ).fetchall()}
-    n = len(users)
-    ring_moved = sum(1 for u in users if assign(u, 8) != assign(u, 9))
-    mod_moved = sum(1 for u in users if u % 8 != u % 9)
-    assert got["ring"] == (
-        "ring", n, ring_moved, (2 * 1_000_000 * ring_moved + n) // (2 * n)
-    )
-    assert got["mod"] == (
-        "mod", n, mod_moved, (2 * 1_000_000 * mod_moved + n) // (2 * n)
-    )
-
-
-@settings(**SETTINGS)
-@given(
-    vecs=st.lists(
-        st.lists(
-            st.integers(min_value=-512, max_value=511),  # k/1024: exact f32
-            min_size=64,
-            max_size=64,
-        ),
-        min_size=2,
-        max_size=6,
-    )
-)
-def test_ecod_oracle_matches_fp_log2_witness(vecs):
-    """The ecod_anomaly_scores ORACLE equals a pure-Python witness:
-    quantized tie-inclusive two-sided ranks per dim, fp_log2_py(n, r)
-    ticks summed — on arbitrary float32-exact vectors."""
-    import duckdb
-    import math
-
-    from rocketmq_flink_spark.operators.retrieval import fp_log2_py
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    rows = [(i, [k / 1024.0 for k in v]) for i, v in enumerate(vecs)]
-    con = duckdb.connect()
-    con.execute("CREATE TABLE embeddings(vec_id BIGINT, embedding FLOAT[])")
-    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
-    got = con.execute(REGISTRY["ecod_anomaly_scores"].oracle).fetchall()
-
-    n = len(rows)
-    scores = {}
-    for vid, v in rows:
-        total = 0
-        for d in range(64):
-            xq = math.floor(v[d] * 1e10 + 0.5)
-            col = [math.floor(w[d] * 1e10 + 0.5) for _, w in rows]
-            le = sum(1 for y in col if y <= xq)
-            ge = sum(1 for y in col if y >= xq)
-            r = min(le, ge)
-            if r < n:
-                total += fp_log2_py(n, r)
-        scores[vid] = total
-    want = sorted(
-        ((vid, s) for vid, s in scores.items()),
-        key=lambda t: (-t[1], t[0]),
-    )[:10]
-    assert got == want
-
-
-@settings(**SETTINGS)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=30),       # user
-            st.integers(min_value=1, max_value=100000),   # cents
-        ),
-        min_size=4,
-        max_size=60,
-    )
-)
-def test_qte_oracle_matches_rank_witness(rows):
-    """The quantile_treatment_effect ORACLE equals the direct sorted
-    rank-quantile definition per arm on arbitrary purchases."""
-    import duckdb
-    import hashlib
-
-    from hypothesis import assume
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    def arm(uid):
-        h = int(hashlib.md5(f"did:{uid}".encode()).hexdigest()[:15], 16)
-        return "T" if h % 2 == 0 else "C"
-
-    t = sorted(c for u, c in rows if arm(u) == "T")
-    c_ = sorted(c for u, c in rows if arm(u) == "C")
-    assume(t and c_)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE events(user_id BIGINT, event_type VARCHAR,"
-        " value DOUBLE)"
-    )
-    con.executemany(
-        "INSERT INTO events VALUES (?, 'purchase', ?)",
-        [(u, c / 100.0) for u, c in rows],
-    )
-    got = con.execute(
-        REGISTRY["quantile_treatment_effect"].oracle
-    ).fetchall()
-
-    def q(sorted_vals, pct):
-        n = len(sorted_vals)
-        for i, v in enumerate(sorted_vals, start=1):
-            if 100 * i >= pct * n:
-                return v
-
-    want = []
-    for pct in (25, 50, 75, 90):
-        tv, cv = q(t, pct), q(c_, pct)
-        want.append((pct, tv, cv, tv - cv))
-    assert got == want
-
-
-@settings(**SETTINGS)
-@given(
-    events=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=8),    # user
-            st.integers(min_value=0, max_value=400),  # minute offset
-            st.sampled_from(
-                ["view", "click", "signup", "error", "purchase"]
-            ),
-        ),
-        min_size=3,
-        max_size=50,
-        unique_by=lambda t: (t[0], t[1]),  # unique (user, ts)
-    )
-)
-def test_attribution_oracles_match_python_witness(events):
-    """The markov_removal_attribution AND shapley_attribution ORACLES
-    equal independent pure-Python models (journey cut at first
-    purchase; 16 floor-div absorption rounds per removal scenario;
-    coalition subset-sums with {6,2,2,6}/24 weights) on arbitrary
-    event streams."""
-    import duckdb
-    from collections import defaultdict
-
-    from rocketmq_flink_spark.plans.catalog import (
-        _MARKOV_CHANNELS,
-        REGISTRY,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE events(user_id BIGINT, event_id BIGINT,"
-        " event_type VARCHAR, ts TIMESTAMP)"
-    )
-    con.executemany(
-        "INSERT INTO events VALUES (?, ?, ?,"
-        " TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (?) MINUTE)",
-        [(u, i, t, m) for i, (u, m, t) in enumerate(events)],
-    )
-    # --- python journeys: per user ordered by (ts, event_id), cut at
-    # first purchase (inclusive)
-    by_user = defaultdict(list)
-    for i, (u, m, t) in enumerate(events):
-        by_user[u].append((m, i, "CONV" if t == "purchase" else t))
-    journeys = {}
-    for u, evs in by_user.items():
-        evs.sort()
-        seq = [t for _, _, t in evs]
-        if "CONV" in seq:
-            seq = seq[: seq.index("CONV") + 1]
-        journeys[u] = seq
-    # --- markov witness
-    counts = defaultdict(int)
-    for seq in journeys.values():
-        counts[("START", seq[0])] += 1
-        for a, b in zip(seq, seq[1:]):
-            counts[(a, b)] += 1
-        if seq[-1] != "CONV":
-            counts[(seq[-1], "END")] += 1
-
-    def absorb(cnt):
-        states = sorted({s for s, _ in cnt})
-        p = {s: 0 for s in states}
-        for _ in range(16):
-            nxt = {}
-            for s in states:
-                num = den = 0
-                for (ss, t2), c in cnt.items():
-                    if ss != s:
-                        continue
-                    den += c
-                    pt = (
-                        1_000_000 if t2 == "CONV"
-                        else (0 if t2 == "END" else p.get(t2, 0))
-                    )
-                    num += c * pt
-                nxt[s] = num // den if den else 0
-            p = nxt
-        return p.get("START", 0)
-
-    p_full = absorb(counts)
-    want_m = []
-    for ch in _MARKOV_CHANNELS:
-        rem = defaultdict(int)
-        for (s, t2), c in counts.items():
-            if s == ch:
-                continue
-            rem[(s, "END" if t2 == ch else t2)] += c
-        pr = absorb(rem)
-        want_m.append((ch, p_full, pr, p_full - pr))
-    got_m = con.execute(
-        REGISTRY["markov_removal_attribution"].oracle
-    ).fetchall()
-    assert got_m == want_m
-    # --- shapley witness
-    bits = {"click": 1, "error": 2, "signup": 4, "view": 8}
-    mc = defaultdict(int)
-    for seq in journeys.values():
-        conv = 1 if seq[-1] == "CONV" else 0
-        mask = 0
-        for t2 in (seq[:-1] if conv else seq):
-            mask |= bits[t2]
-        mc[mask] += conv
-    v = {S: sum(c for m, c in mc.items() if (m & S) == m)
-         for S in range(16)}
-    wgt = {0: 6, 1: 2, 2: 2, 3: 6}
-    want_s = []
-    for name in sorted(bits):
-        b = bits[name]
-        phi = sum(
-            wgt[bin(S).count("1")] * (v[S + b] - v[S])
-            for S in range(16)
-            if not S & b
-        )
-        want_s.append((name, phi))
-    tot = sum(p for _, p in want_s)
-    got_s = con.execute(REGISTRY["shapley_attribution"].oracle).fetchall()
-    assert [
-        (n, p, (1_000_000 * p) // tot if tot > 0 else 0)
-        for n, p in want_s
-    ] == got_s
 
 
 @settings(**SETTINGS)
@@ -1355,72 +956,6 @@ def test_late_router_oracle_matches_merge_witness(events):
     assert total == len(events)
 
 
-@settings(**SETTINGS)
-@given(
-    users=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=40),       # user
-            st.integers(min_value=0, max_value=200000),   # hist cents
-            st.integers(min_value=0, max_value=200000),   # target cents
-        ),
-        min_size=4,
-        max_size=30,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_conformal_oracle_matches_rank_witness(users):
-    """The conformal_spend_interval ORACLE equals a pure-Python
-    split-conformal witness: trailing-3-week floor mean predictor,
-    ceil(0.9*(n+1))-th smallest calibration residual, held-out
-    coverage ppm."""
-    import duckdb
-    import hashlib
-
-    from hypothesis import assume
-
-    from rocketmq_flink_spark.plans.catalog import REGISTRY
-
-    def cal(uid):
-        h = int(hashlib.md5(f"conf:{uid}".encode()).hexdigest()[:15], 16)
-        return h % 2 == 0
-
-    assume(any(cal(u) for u, _, _ in users))
-    assume(any(not cal(u) for u, _, _ in users))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE events(user_id BIGINT, event_type VARCHAR,"
-        " ts TIMESTAMP, value DOUBLE)"
-    )
-    ins = []
-    # weeks: put history purchases 2 weeks before max, targets at max;
-    # anchor the max week with a view event for every user
-    for u, h, y in users:
-        if h:
-            ins.append((u, "purchase", "2024-01-10 00:00:00", h / 100.0))
-        if y:
-            ins.append((u, "purchase", "2024-01-24 00:00:00", y / 100.0))
-        ins.append((u, "view", "2024-01-24 01:00:00", 1.0))
-    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", ins)
-    got = con.execute(REGISTRY["conformal_spend_interval"].oracle).fetchone()
-
-    res = {u: abs(y - h // 3) for u, h, y in users}
-    cal_res = sorted(
-        (res[u], u) for u, _, _ in users if cal(u)
-    )
-    n_cal = len(cal_res)
-    rn = min((9 * n_cal + 18) // 10, n_cal)
-    q = cal_res[rn - 1][0]
-    tst = [(res[u]) for u, _, _ in users if not cal(u)]
-    covered = sum(1 for r in tst if r <= q)
-    n_test = len(tst)
-    assert got == (
-        n_cal,
-        n_test,
-        q,
-        (2 * 1_000_000 * covered + n_test) // (2 * n_test),
-    )
-
-
 def test_partitioning_invariance_representative_queries(spark):
     """The engine's core determinism claim: results are BIT-IDENTICAL
     under different parallelism. Run one representative query per major
@@ -1435,7 +970,7 @@ def test_partitioning_invariance_representative_queries(spark):
         "kmeans_cluster_profile",      # iterative fold (quantized)
         "minhash_dedup_groups",        # dedup banding
         "bm25_search_docs",            # fixed-point retrieval
-        "scd2_user_event_history",     # window/versioning
+        "log_compaction_latest_per_key",  # window/versioning
         "deterministic_corpus_shuffle",  # distributed exact rank
     ]
     sf = SF_TINY

@@ -31,6 +31,77 @@ def test_doc_query_counts_match_registry():
     assert m and int(m.group(1)) == n, f"README.md says {m and m.group(1)}, registry has {n}"
 
 
+def test_catalog_has_no_orphan_helpers():
+    """Every module-level definition in plans/catalog.py is reachable,
+    by name reference, from a @query function, a module-level statement
+    that is not a definition (REGISTRY[...] patches), or a name another
+    file imports from the catalog. Deleting a query without its oracle
+    or helper functions fails here instead of leaving dead code."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    catalog = root / "rocketmq_flink_spark" / "plans" / "catalog.py"
+    tree = ast.parse(catalog.read_text())
+
+    def is_query(node):
+        return isinstance(node, ast.FunctionDef) and any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+            for d in node.decorator_list
+        )
+
+    def bound_names(node):
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            return [node.name]
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            return [
+                n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+            ]
+        return []
+
+    defs: dict[str, list[ast.stmt]] = {}
+    roots: list[ast.stmt] = []
+    for node in tree.body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        names = [] if is_query(node) else bound_names(node)
+        for n in names:
+            defs.setdefault(n, []).append(node)
+        if not names:
+            roots.append(node)
+
+    imported: set[str] = set()
+    sources = [root / "__spark_entry__.py"]
+    for d in ("rocketmq_flink_spark", "tools", "examples", "tests"):
+        sources += sorted((root / d).rglob("*.py"))
+    for path in sources:
+        if path == catalog:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "rocketmq_flink_spark.plans.catalog"
+            ):
+                imported.update(a.name for a in node.names)
+
+    todo = set(imported)
+    for node in roots:
+        todo.update(n.id for n in ast.walk(node) if isinstance(n, ast.Name))
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in reached or name not in defs:
+            continue
+        reached.add(name)
+        for node in defs[name]:
+            todo.update(n.id for n in ast.walk(node) if isinstance(n, ast.Name))
+
+    orphans = sorted(set(defs) - reached)
+    assert not orphans, f"catalog definitions no query or caller reaches: {orphans}"
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as e
 
