@@ -7758,6 +7758,180 @@ def lang_similarity_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
+    "k_anonymity_report",
+    """
+    WITH g AS (
+      SELECT lang, source, n_chars // 100 AS len_bucket,
+             CAST(COUNT(*) AS BIGINT) AS sz
+      FROM documents GROUP BY lang, source, len_bucket),
+    t AS (SELECT CAST(SUM(sz) AS BIGINT) AS n,
+                 CAST(COUNT(*) AS BIGINT) AS n_groups,
+                 CAST(MIN(sz) AS BIGINT) AS min_group FROM g),
+    ks AS (SELECT unnest([2, 5, 10]) AS k)
+    SELECT CAST(ks.k AS INTEGER) AS k,
+           t.n_groups, t.min_group,
+           CAST(COALESCE(SUM(CASE WHEN g.sz < ks.k THEN g.sz END), 0)
+                AS BIGINT) AS n_docs_violating,
+           CAST((2 * 1000000
+                 * COALESCE(SUM(CASE WHEN g.sz < ks.k THEN g.sz END), 0)
+                 + t.n) // (2 * t.n) AS BIGINT) AS violating_ppm
+    FROM ks CROSS JOIN t LEFT JOIN g ON TRUE
+    GROUP BY ks.k, t.n, t.n_groups, t.min_group
+    ORDER BY k
+    """,
+)
+def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-anonymity audit of the corpus' quasi-identifier combination
+    (lang, source, length-bucket-of-100-chars): for each privacy level
+    k in {2, 5, 10}, how many documents sit in an equivalence class
+    smaller than k — i.e. are re-identifiable by metadata alone (the
+    release-gate number privacy review asks for BEFORE the text is
+    even considered; complements pii_redaction, which audits the text
+    itself). Exact integer class sizes, violating share in half-up
+    ppm, plus the global class count and the smallest class. Scale:
+    ONE map-side-combinable group-by over the quasi-identifier tuple
+    (class-vocabulary bounded output), then a 3-literal-row summary —
+    nothing downstream grows with corpus size."""
+    docs = load_tables(spark, sf_dir)["documents"]
+    g = (
+        docs.selectExpr(
+            "lang", "source", "n_chars div 100 AS len_bucket"
+        )
+        .groupBy("lang", "source", "len_bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("sz"))
+    )
+    t = g.agg(
+        F.sum("sz").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("n_groups"),
+        F.min("sz").cast("long").alias("min_group"),
+    )
+    ks = load_tables(spark, sf_dir)["documents"].sparkSession.createDataFrame(
+        [(2,), (5,), (10,)], "k int"
+    )
+    return (
+        ks.crossJoin(F.broadcast(t))
+        .join(F.broadcast(g), F.lit(True), "left")
+        .groupBy("k", "n", "n_groups", "min_group")
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("sz") < F.col("k"), F.col("sz"))),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("n_docs_violating")
+        )
+        .selectExpr(
+            "CAST(k AS INT) AS k",
+            "n_groups",
+            "min_group",
+            "n_docs_violating",
+            "CAST((2 * 1000000 * n_docs_violating + n) div (2 * n)"
+            " AS BIGINT) AS violating_ppm",
+        )
+        .orderBy("k")
+    )
+
+
+@query(
+    "mann_kendall_trend_daily",
+    """
+    WITH d AS (
+      SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
+      FROM events GROUP BY 1),
+    nn AS (SELECT CAST(COUNT(*) AS HUGEINT) AS nd FROM d),
+    ss AS (
+      SELECT CAST(SUM(CASE WHEN b.x > a.x THEN 1
+                           WHEN b.x < a.x THEN -1 ELSE 0 END)
+                  AS HUGEINT) AS s
+      FROM d a JOIN d b ON a.day < b.day),
+    tt AS (
+      SELECT COALESCE(CAST(SUM(t * (t - 1) * (2 * t + 5)) AS HUGEINT),
+                      0) AS tie
+      FROM (SELECT CAST(COUNT(*) AS HUGEINT) AS t FROM d GROUP BY x) z),
+    f AS (
+      SELECT (SELECT nd FROM nn) AS nd, (SELECT s FROM ss) AS s,
+             (SELECT tie FROM tt) AS tie)
+    SELECT CAST(nd AS BIGINT) AS n_days,
+           CAST(s AS BIGINT) AS s_stat,
+           CAST(nd * (nd - 1) * (2 * nd + 5) - tie AS BIGINT) AS var18,
+           CAST(CASE WHEN s >= 0 THEN
+                  (2 * 1000000 * s + nd * (nd - 1) // 2)
+                    // (2 * (nd * (nd - 1) // 2))
+                ELSE -((2 * 1000000 * (-s) + nd * (nd - 1) // 2)
+                    // (2 * (nd * (nd - 1) // 2))) END AS BIGINT)
+             AS tau_ppm,
+           CAST(CASE WHEN s = 0 THEN 0
+                WHEN 18000000 * (abs(s) - 1) * (abs(s) - 1)
+                     > 3841600 * (nd * (nd - 1) * (2 * nd + 5) - tie)
+                THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct
+    FROM f
+    """,
+)
+def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Kendall trend test on the daily event-count series — the
+    nonparametric answer to "IS there a monotone trend" (a slope
+    estimator would answer "how steep"). Everything integer-exact:
+    S = sum of pairwise sign(x_b - x_a); the tie-corrected variance is
+    reported as
+    var18 = 18*Var = n(n-1)(2n+5) - sum_t t(t-1)(2t+5); Kendall tau_a
+    in half-up ppm; and the alpha=0.05 two-sided decision uses the
+    continuity-corrected z SQUARED so no sqrt is ever taken:
+    reject iff 18e6*(|S|-1)^2 > 3841600*var18 (z_crit^2 = 3.8416
+    exactly). Scale: the pairwise stage is CALENDAR-bounded (days^2),
+    the daily series one map-side-combined count; nothing grows with
+    raw event volume. One row."""
+    ev = load_tables(spark, sf_dir)["events"]
+    dec = "decimal(38,0)"
+    d = (
+        ev.select(F.to_date("ts").alias("day"))
+        .groupBy("day")
+        .agg(F.count(F.lit(1)).cast("long").alias("x"))
+    )
+    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"))
+    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"))
+    s = (
+        a.join(b, F.col("da") < F.col("db"))
+        .select(
+            F.when(F.col("xb") > F.col("xa"), F.lit(1))
+            .when(F.col("xb") < F.col("xa"), F.lit(-1))
+            .otherwise(F.lit(0))
+            .alias("sg")
+        )
+        .agg(F.sum("sg").cast(dec).alias("s"))
+    )
+    nn = d.agg(F.count(F.lit(1)).cast(dec).alias("nd"))
+    tie = (
+        d.groupBy("x")
+        .agg(F.count(F.lit(1)).cast(dec).alias("t"))
+        .agg(
+            F.coalesce(
+                F.sum(
+                    F.col("t")
+                    * (F.col("t") - 1)
+                    * (2 * F.col("t") + 5)
+                ),
+                F.lit(0).cast(dec),
+            ).alias("tie")
+        )
+    )
+    f = nn.crossJoin(s).crossJoin(tie)
+    return f.selectExpr(
+        "CAST(nd AS BIGINT) AS n_days",
+        "CAST(s AS BIGINT) AS s_stat",
+        "CAST(nd * (nd - 1) * (2 * nd + 5) - tie AS BIGINT) AS var18",
+        "CAST(CASE WHEN s >= 0 THEN"
+        "  (2 * 1000000 * s + nd * (nd - 1) div 2)"
+        "    div (2 * (nd * (nd - 1) div 2))"
+        " ELSE -((2 * 1000000 * (-s) + nd * (nd - 1) div 2)"
+        "    div (2 * (nd * (nd - 1) div 2))) END AS BIGINT) AS tau_ppm",
+        "CAST(CASE WHEN s = 0 THEN 0"
+        " WHEN 18000000 * (abs(s) - 1) * (abs(s) - 1)"
+        "      > 3841600 * (nd * (nd - 1) * (2 * nd + 5) - tie)"
+        " THEN 1 ELSE 0 END AS BIGINT) AS reject_5pct",
+    )
+
+
+@query(
     "domain_cap_sample",
     """
     WITH r AS (
@@ -7825,6 +7999,87 @@ def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST((2 * 1000000 * chars_kept + chars_total)"
         " div (2 * chars_total) AS BIGINT) AS retention_ppm",
     ).orderBy("source")
+
+
+@query(
+    "l_diversity_report",
+    """
+    WITH g AS (
+      SELECT source, n_chars // 100 AS len_bucket,
+             CAST(COUNT(*) AS BIGINT) AS sz,
+             CAST(COUNT(DISTINCT lang) AS BIGINT) AS d
+      FROM documents GROUP BY source, len_bucket),
+    t AS (SELECT CAST(SUM(sz) AS BIGINT) AS n,
+                 CAST(COUNT(*) AS BIGINT) AS n_classes,
+                 CAST(MIN(d) AS BIGINT) AS min_diversity FROM g),
+    ls AS (SELECT unnest([2, 3]) AS l)
+    SELECT CAST(ls.l AS INTEGER) AS l,
+           t.n_classes, t.min_diversity,
+           CAST(COALESCE(SUM(CASE WHEN g.d < ls.l THEN 1 END), 0)
+                AS BIGINT) AS classes_violating,
+           CAST(COALESCE(SUM(CASE WHEN g.d < ls.l THEN g.sz END), 0)
+                AS BIGINT) AS docs_violating,
+           CAST((2 * 1000000
+                 * COALESCE(SUM(CASE WHEN g.d < ls.l THEN g.sz END), 0)
+                 + t.n) // (2 * t.n) AS BIGINT) AS violating_ppm
+    FROM ls CROSS JOIN t LEFT JOIN g ON TRUE
+    GROUP BY ls.l, t.n, t.n_classes, t.min_diversity
+    ORDER BY l
+    """,
+)
+def l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """l-diversity audit — k-anonymity's sharper sibling
+    (k_anonymity_report counts SMALL quasi-identifier classes; this
+    counts classes whose SENSITIVE attribute is near-constant, the
+    homogeneity attack k-anonymity misses). Quasi-identifier =
+    (source, 100-char length bucket), sensitive = lang; for l in
+    {2, 3}, report the classes with fewer than l distinct sensitive
+    values and the documents they expose (half-up ppm share). Scale:
+    one map-side group-by over the QI tuple with a distinct-count
+    (class-vocabulary bounded), then a 2-literal-row summary."""
+    docs = load_tables(spark, sf_dir)["documents"]
+    g = (
+        docs.selectExpr("source", "n_chars div 100 AS len_bucket", "lang")
+        .groupBy("source", "len_bucket")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("sz"),
+            F.countDistinct("lang").cast("long").alias("d"),
+        )
+    )
+    t = g.agg(
+        F.sum("sz").cast("long").alias("n"),
+        F.count(F.lit(1)).cast("long").alias("n_classes"),
+        F.min("d").cast("long").alias("min_diversity"),
+    )
+    ls = docs.sparkSession.createDataFrame([(2,), (3,)], "l int")
+    return (
+        ls.crossJoin(F.broadcast(t))
+        .join(F.broadcast(g), F.lit(True), "left")
+        .groupBy("l", "n", "n_classes", "min_diversity")
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("d") < F.col("l"), 1)), F.lit(0)
+            )
+            .cast("long")
+            .alias("classes_violating"),
+            F.coalesce(
+                F.sum(F.when(F.col("d") < F.col("l"), F.col("sz"))),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("docs_violating"),
+        )
+        .selectExpr(
+            "CAST(l AS INT) AS l",
+            "n_classes",
+            "min_diversity",
+            "classes_violating",
+            "docs_violating",
+            "CAST((2 * 1000000 * docs_violating + n) div (2 * n)"
+            " AS BIGINT) AS violating_ppm",
+        )
+        .orderBy("l")
+    )
 
 
 @query(
@@ -10814,6 +11069,95 @@ def feature_hash_collision_report(spark: SparkSession, sf_dir: str) -> DataFrame
     for o in outs[1:]:
         out = out.unionAll(o)
     return out.orderBy("n_buckets")
+
+
+@query(
+    "quantile_treatment_effect",
+    """
+    WITH p AS (
+      SELECT CASE WHEN (('0x' || substr(md5('did:' ||
+                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT) % 2 = 0
+               THEN 'T' ELSE 'C' END AS arm,
+             CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
+      FROM events WHERE event_type = 'purchase'),
+    h AS (SELECT arm, cents, CAST(COUNT(*) AS BIGINT) AS c
+          FROM p GROUP BY 1, 2),
+    w AS (
+      SELECT arm, cents,
+             SUM(c) OVER (PARTITION BY arm ORDER BY cents) AS cc,
+             SUM(c) OVER (PARTITION BY arm) AS n
+      FROM h),
+    qs AS (SELECT unnest([25, 50, 75, 90]) AS q),
+    qv AS (
+      SELECT qs.q, w.arm, MIN(w.cents) AS v
+      FROM qs JOIN w ON 100 * w.cc >= qs.q * w.n
+      GROUP BY 1, 2)
+    SELECT t.q AS percentile, t.v AS t_cents, c.v AS c_cents,
+           t.v - c.v AS qte_cents
+    FROM (SELECT q, v FROM qv WHERE arm = 'T') t
+    JOIN (SELECT q, v FROM qv WHERE arm = 'C') c USING (q)
+    ORDER BY percentile
+    """,
+)
+def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantile treatment effects at p25/50/75/90 — the readout that
+    catches what mean-based estimates (a z-test of means, CUPED,
+    diff-in-differences) average away: a treatment that moves only
+    the tail shows a flat median and a large p90 effect. Per-arm purchase-value quantiles are
+    rank-EXACT (smallest value whose cumulative count crosses the
+    rank, from the per-arm distinct-value histogram, never
+    percentile_approx), so the
+    per-quantile difference is exact cents. On the untreated fixture
+    the effects are the A/A noise floor. Scale: one (arm, value)
+    histogram then arm-partitioned cumulative windows over DISTINCT
+    values — no row-level sort."""
+    from rocketmq_flink_spark.functions.porthash import hash60
+
+    ev = load_tables(spark, sf_dir)["events"]
+    p = ev.where(F.col("event_type") == "purchase").select(
+        F.when(
+            hash60(F.concat(F.lit("did:"), F.col("user_id").cast("string")))
+            % 2 == 0,
+            F.lit("T"),
+        ).otherwise(F.lit("C")).alias("arm"),
+        F.expr("CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)").alias(
+            "cents"
+        ),
+    )
+    h = p.groupBy("arm", "cents").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    wcum = (
+        Window.partitionBy("arm")
+        .orderBy("cents")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wall = Window.partitionBy("arm")
+    w = h.select(
+        "arm",
+        "cents",
+        F.sum("c").over(wcum).alias("cc"),
+        F.sum("c").over(wall).alias("n"),
+    )
+    qs = spark.createDataFrame([(25,), (50,), (75,), (90,)], "q LONG")
+    qv = (
+        F.broadcast(qs)
+        .join(w, 100 * F.col("cc") >= F.col("q") * F.col("n"))
+        .groupBy("q", "arm")
+        .agg(F.min("cents").alias("v"))
+    )
+    t = qv.where(F.col("arm") == "T").select("q", F.col("v").alias("t_cents"))
+    c = qv.where(F.col("arm") == "C").select("q", F.col("v").alias("c_cents"))
+    return (
+        t.join(c, "q")
+        .select(
+            F.col("q").alias("percentile"),
+            "t_cents",
+            "c_cents",
+            (F.col("t_cents") - F.col("c_cents")).alias("qte_cents"),
+        )
+        .orderBy("percentile")
+    )
 
 
 @query(

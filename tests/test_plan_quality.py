@@ -214,6 +214,23 @@ def test_ndcg_reuses_broadcast_knn_no_python(spark):
     assert "BroadcastHashJoin" in plan  # label counts + rcnt reach as broadcasts
 
 
+def test_psi_and_kanonymity_no_cartesian_no_python(spark):
+    plan = _plan(REGISTRY["k_anonymity_report"].fn(spark, SF))
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_round4c3_stats_ops_no_cartesian_no_python(spark):
+    # MK runs on the daily table (a calendar-bounded pair join) —
+    # JVM-side, no cartesian blowup
+    for name in ("mann_kendall_trend_daily",):
+        plan = _plan(REGISTRY[name].fn(spark, SF))
+        assert "CartesianProduct" not in plan, name
+        assert "BatchEvalPython" not in plan, name
+        assert "ArrowEvalPython" not in plan, name
+
+
 def test_nb_auc_model_broadcasts(spark):
     plan = _plan(REGISTRY["nb_auc_eval"].fn(spark, SF))
     assert "CartesianProduct" not in plan
@@ -340,6 +357,7 @@ def test_session_c4_third_wave_no_cartesian_no_python(spark):
         "retrieval_model_comparison",
         "schema_evolution_merge",
         "feature_hash_collision_report",
+        "quantile_treatment_effect",
         "point_in_time_features",
         "event_lateness_profile",
         "late_data_router_audit",

@@ -497,6 +497,61 @@ def test_isqrt_engine_parity(spark, xs):
 
 @settings(**SETTINGS)
 @given(
+    xs=st.lists(
+        st.integers(min_value=1, max_value=30), min_size=3, max_size=40
+    )
+)
+def test_mann_kendall_oracle_matches_python_witness(xs):
+    """The mann_kendall_trend_daily ORACLE equals a direct pairwise
+    pure-Python computation (S, tie-corrected var18, tau ppm, squared
+    continuity-corrected decision) on an arbitrary daily-count series
+    — one synthetic event row per day per count unit."""
+    import datetime
+
+    import duckdb
+
+    from rocketmq_flink_spark.plans.catalog import REGISTRY
+
+    rows = []
+    eid = 0
+    for d, c in enumerate(xs):
+        day = datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)
+        for _ in range(c):
+            rows.append((eid, day))
+            eid += 1
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events(event_id BIGINT, ts TIMESTAMP)")
+    con.executemany("INSERT INTO events VALUES (?, ?)", rows)
+    got = con.execute(REGISTRY["mann_kendall_trend_daily"].oracle).fetchone()
+
+    n = len(xs)
+    s = sum(
+        (1 if b > a else -1 if b < a else 0)
+        for i, a in enumerate(xs)
+        for b in xs[i + 1:]
+    )
+    from collections import Counter
+
+    ties = Counter(xs)
+    var18 = n * (n - 1) * (2 * n + 5) - sum(
+        t * (t - 1) * (2 * t + 5) for t in ties.values()
+    )
+    pairs = n * (n - 1) // 2
+    tau = (
+        (2 * 1_000_000 * s + pairs) // (2 * pairs)
+        if s >= 0
+        else -((2 * 1_000_000 * (-s) + pairs) // (2 * pairs))
+    )
+    reject = (
+        0
+        if s == 0
+        else int(18_000_000 * (abs(s) - 1) ** 2 > 3_841_600 * var18)
+    )
+    assert got == (n, s, var18, tau, reject)
+
+
+@settings(**SETTINGS)
+@given(
     masses=st.lists(
         st.integers(min_value=1, max_value=400), min_size=2, max_size=12
     )
@@ -688,6 +743,60 @@ def test_bitmap_intersections_oracle_matches_set_witness(pairs):
                 want.append(
                     (a, b, na, nb, ni, (2 * 1_000_000 * ni + un) // (2 * un))
                 )
+    assert got == want
+
+
+@settings(**SETTINGS)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=30),       # user
+            st.integers(min_value=1, max_value=100000),   # cents
+        ),
+        min_size=4,
+        max_size=60,
+    )
+)
+def test_qte_oracle_matches_rank_witness(rows):
+    """The quantile_treatment_effect ORACLE equals the direct sorted
+    rank-quantile definition per arm on arbitrary purchases."""
+    import duckdb
+    import hashlib
+
+    from hypothesis import assume
+
+    from rocketmq_flink_spark.plans.catalog import REGISTRY
+
+    def arm(uid):
+        h = int(hashlib.md5(f"did:{uid}".encode()).hexdigest()[:15], 16)
+        return "T" if h % 2 == 0 else "C"
+
+    t = sorted(c for u, c in rows if arm(u) == "T")
+    c_ = sorted(c for u, c in rows if arm(u) == "C")
+    assume(t and c_)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events(user_id BIGINT, event_type VARCHAR,"
+        " value DOUBLE)"
+    )
+    con.executemany(
+        "INSERT INTO events VALUES (?, 'purchase', ?)",
+        [(u, c / 100.0) for u, c in rows],
+    )
+    got = con.execute(
+        REGISTRY["quantile_treatment_effect"].oracle
+    ).fetchall()
+
+    def q(sorted_vals, pct):
+        n = len(sorted_vals)
+        for i, v in enumerate(sorted_vals, start=1):
+            if 100 * i >= pct * n:
+                return v
+
+    want = []
+    for pct in (25, 50, 75, 90):
+        tv, cv = q(t, pct), q(c_, pct)
+        want.append((pct, tv, cv, tv - cv))
     assert got == want
 
 
